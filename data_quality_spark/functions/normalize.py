@@ -198,13 +198,20 @@ def iso_to_hijri_umalqura(c: Column) -> Column:
     subtree exponentially and overflow the JVM stack at plan
     (de)serialization.  Dates outside the table → null (the chronology
     itself is undefined there; the arithmetic `iso_to_hijri_tabular`
-    remains for unbounded input)."""
+    remains for unbounded input).
+
+    The 3,612-entry table is ONE folded literal (`literals.lit_array`).
+    Built one `F.lit` per entry, `umalqura_convert_orders` took 1.62 s to
+    build (15,000+ py4j calls); now 0.18 s (~550), with plan 0.085 →
+    0.028 s and execute unchanged (sf0.01, local[4], 4-vCPU Xeon, warm
+    medians; BENCH/BASELINE.md "Driver literal build")."""
+    from .literals import lit_array
     from .umalqura_table import MAX_IDX_DRIFT, MEAN_LUNATION, MONTH_STARTS, START_HY
 
     assert MAX_IDX_DRIFT <= 1, "three-way select needs regeneration for drift > 1"
     n = len(MONTH_STARTS)
     t0 = MONTH_STARTS[0]
-    arr = F.lit(list(MONTH_STARTS))
+    arr = lit_array(MONTH_STARTS, "int")
     d = F.unix_date(F.to_date(c))
     g = F.floor((d - F.lit(t0)) / F.lit(MEAN_LUNATION)).cast("int")
     g = F.greatest(F.lit(0), F.least(F.lit(n - 1), g))

@@ -28,6 +28,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .emailphone import is_valid_phone, phone_digits
+from .literals import lit_map
 
 # Public NANPA assignments (place, IANA tz).  Broad coverage of the
 # geographic US / Canada / Caribbean plan (~230 codes); codes assigned
@@ -436,13 +437,6 @@ def get_country_code_for_region(region: str) -> int | None:
     return _REGION_TO_CODE.get(region.upper())
 
 
-def _lit_map(d: dict) -> Column:
-    pairs = []
-    for k, v in sorted(d.items()):
-        pairs.extend([F.lit(k), F.lit(v)])
-    return F.create_map(*pairs)
-
-
 def _nanp_area_code(c: Column) -> Column:
     """Area code of a valid NANP number, else null."""
     d = phone_digits(c)
@@ -492,11 +486,11 @@ def phone_geocoder_description(c: Column) -> Column:
     fallback behavior)."""
     area = _nanp_area_code(c)
     cc = phone_country_code(c)
-    places = _lit_map({k: v[0] for k, v in NANP_AREA_CODES.items()})
-    countries = _lit_map({k: v[1] for k, v in COUNTRY_CODES.items()})
+    places = lit_map({k: v[0] for k, v in NANP_AREA_CODES.items()}, "int", "string")
+    countries = lit_map({k: v[1] for k, v in COUNTRY_CODES.items()}, "int", "string")
     return (
-        F.when(area.isNotNull(), F.coalesce(places.getItem(area), F.lit("United States/Canada")))
-        .when(cc.isNotNull(), countries.getItem(cc))
+        F.when(area.isNotNull(), F.coalesce(places[area], F.lit("United States/Canada")))
+        .when(cc.isNotNull(), countries[cc])
         .otherwise(F.lit(None).cast("string"))
     )
 
@@ -507,11 +501,11 @@ def phone_timezones(c: Column) -> Column:
     fallback 'America/New_York' for NANP (the mapper's plan default)."""
     area = _nanp_area_code(c)
     cc = phone_country_code(c)
-    zones = _lit_map({k: v[1] for k, v in NANP_AREA_CODES.items()})
-    country_zones = _lit_map({k: v[2] for k, v in COUNTRY_CODES.items()})
+    zones = lit_map({k: v[1] for k, v in NANP_AREA_CODES.items()}, "int", "string")
+    country_zones = lit_map({k: v[2] for k, v in COUNTRY_CODES.items()}, "int", "string")
     return (
-        F.when(area.isNotNull(), F.coalesce(zones.getItem(area), F.lit("America/New_York")))
-        .when(cc.isNotNull(), country_zones.getItem(cc))
+        F.when(area.isNotNull(), F.coalesce(zones[area], F.lit("America/New_York")))
+        .when(cc.isNotNull(), country_zones[cc])
         .otherwise(F.lit(None).cast("string"))
     )
 

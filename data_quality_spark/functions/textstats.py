@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .literals import lit_array
+
 # Stop-word list — the analog of the reference's dictionary-membership rule
 # (WordNetDictionary.isValidTerm, `dataquality-wordnet/.../WordNetDictionary.
 # java:112`): membership of tokens in a broadcast set.  Union of the most
@@ -72,7 +74,7 @@ def symbol_ratio(col: Column) -> Column:
 
 def stopword_count(col: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
     """Number of words whose lower-case form is in the stop-word set."""
-    stop_arr = F.array(*[F.lit(s) for s in stopwords])
+    stop_arr = lit_array(stopwords, "string")
     return F.size(F.filter(words(col), lambda w: F.array_contains(stop_arr, F.lower(w))))
 
 
@@ -201,7 +203,7 @@ def with_text_features_native(df, text_col: str = "text"):
         F.size(F.filter(lines, lambda l: l.rlike(r"(\.\.\.|…)\s*$"))).alias("_n_ellipsis"),
     )
     lws = F.col("__lws")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
+    stop_arr = lit_array(STOPWORDS, "string")
     step3 = step2.select(
         "*",
         F.size(F.filter(lws, lambda x: F.array_contains(stop_arr, x))).alias("_n_stop"),

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.literals import lit_array
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Sequential-fold double dot product (deterministic, oracle-matched)."""
@@ -171,7 +173,7 @@ def lsh_plane_dots_expr(vec_col: Column, planes) -> list[Column]:
 
     dots = []
     for row in planes:
-        arr = F.array(*[F.lit(float(x)) for x in row])
+        arr = lit_array(row, "double")
         prod = F.transform(vec_col, _times_plane(arr))
         dots.append(F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v))
     return dots
@@ -194,7 +196,7 @@ def lsh_probe_keys_expr(dots: list[Column], probes: int) -> Column:
     ms = F.array(
         *[F.struct(F.abs(d).alias("m"), F.lit(p).alias("p")) for p, d in enumerate(dots)]
     )
-    bit_values = F.array(*[F.lit(1 << p).cast("long") for p in range(len(dots))])
+    bit_values = lit_array([1 << p for p in range(len(dots))], "bigint")
     flips = F.slice(F.array_sort(ms), 1, probes)
     probe_keys = F.transform(
         flips, lambda s: base.bitwiseXOR(F.element_at(bit_values, s["p"] + 1))

@@ -115,23 +115,6 @@ def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
     return F.array(*sigs)
 
 
-def minhash_signature_fast(shingles: Column, num_hashes: int = 16) -> Column:
-    """Scale-path MinHash: xxhash64 with per-hash salt prefix (bigint
-    signature).  ~10× cheaper than the md5-hex variant (no hex string
-    materialization); used where engine-portability of the exact hash
-    values is not required (the md5 variant remains the oracle-checked
-    contract)."""
-
-    def _hasher(salt: str):
-        return lambda s: F.xxhash64(F.concat(F.lit(salt), s))
-
-    sigs = [
-        F.array_min(F.transform(shingles, _hasher(f"{i}:")))
-        for i in range(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
 def lsh_band_keys(sig: Column, num_bands: int, rows_per_band: int) -> Column:
     """Array of band keys: band_id || md5(concat of that band's rows)."""
     keys = []
@@ -214,30 +197,6 @@ def minhash_signature_df_portable(
     )
     return agg.select(
         "id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"), "sh"
-    )
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    num_bands: int = 4,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Candidate near-dup pairs via MinHash banding.
-
-    Output: (id_a, id_b, n_shared_bands) with id_a < id_b.  The join runs
-    bucket-by-bucket (explode band keys → self-join on key), so cost is
-    Σ B_k² over buckets, never n².  Buckets larger than `max_bucket` are
-    dropped (explosion guard — mirrors the reference's 1000-record block
-    cap; at web scale a giant bucket means degenerate boilerplate, not
-    real near-dups).
-    """
-    sigs = minhash_signature_df(df, text_col, id_col, shingle_n, num_hashes)
-    return _lsh_pairs_from_sigs(sigs, num_hashes, num_bands, max_bucket).select(
-        "id_a", "id_b", "n_shared_bands"
     )
 
 

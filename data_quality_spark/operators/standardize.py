@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.literals import lit_map
+
 
 def _synonym_to_standard(synonyms: dict[str, list[str]]) -> dict[str, str]:
     """Invert standard→synonyms to synonym→standard (all lower-cased);
@@ -41,12 +43,8 @@ def standardize_expr(col: Column, synonyms: dict[str, list[str]]) -> Column:
     """Exact lookup: value → standard form, original kept when unknown
     (SynonymReplaceAction semantics).  The literal map is broadcast with
     the plan — zero shuffle."""
-    lookup = _synonym_to_standard(synonyms)
-    pairs = []
-    for k, v in sorted(lookup.items()):
-        pairs.extend([F.lit(k), F.lit(v)])
-    m = F.create_map(*pairs)
-    return F.coalesce(m.getItem(F.lower(col)), col)
+    m = lit_map(_synonym_to_standard(synonyms), "string", "string")
+    return F.coalesce(m[F.lower(col)], col)
 
 
 def standardize_fuzzy(

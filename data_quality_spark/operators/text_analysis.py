@@ -13,7 +13,8 @@ from ..functions import textstats as ts
 
 # BPE-ish pre-tokenization regex (GPT-2 style, simplified to the Java/RE2
 # common subset): word pieces, numbers, punctuation runs, whitespace runs.
-BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
+# The whitespace class is Java's `\s` spelled out: RE2's `\s` lacks VT.
+BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0B\f\r]+"
 
 
 def whitespace_token_count(col: Column) -> Column:
@@ -62,11 +63,6 @@ def char_shingle_fingerprint(
         positions, lambda p: F.md5(F.substring(col, p, shingle_len))
     )
     return F.slice(F.array_sort(F.array_distinct(hashes)), 1, keep)
-
-
-def fingerprint_overlap(a: Column, b: Column) -> Column:
-    """Shared fingerprint minima count between two fingerprint arrays."""
-    return F.size(F.array_intersect(a, b))
 
 
 def benchmark_contamination(

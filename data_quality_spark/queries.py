@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from .functions import textstats as ts
 from .functions import typeinfer as ti
+from .functions.literals import lit_array
 from .operators import profiling as prof
 from .rules import (
     MAX_DUP_2GRAM_FRACTION,
@@ -1627,8 +1628,8 @@ def matcher_weights_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = _read(spark, sf_dir, "customer").filter(F.col("c_custkey") < len(_MATCHER_PAIRS))
     idx = F.col("c_custkey").cast("int")
-    a = F.element_at(F.array(*[F.lit(x) for x, _ in _MATCHER_PAIRS]), idx + 1)
-    b = F.element_at(F.array(*[F.lit(y) for _, y in _MATCHER_PAIRS]), idx + 1)
+    a = F.element_at(lit_array([x for x, _ in _MATCHER_PAIRS], "string"), idx + 1)
+    b = F.element_at(lit_array([y for _, y in _MATCHER_PAIRS], "string"), idx + 1)
     pairs = cust.select(idx.alias("idx"), a.alias("a"), b.alias("b"))
     return pairs.select(
         "idx",
@@ -1961,7 +1962,7 @@ def phone_metadata_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("idx")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    p = F.element_at(F.array(*[F.lit(v) for v in _PHONE_VOCAB]), F.col("idx") + 1)
+    p = F.element_at(lit_array(_PHONE_VOCAB, "string"), F.col("idx") + 1)
     none = F.lit("NONE")
     return grouped.select(
         "idx",
@@ -2156,7 +2157,7 @@ def phonetic_codes_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = _read(spark, sf_dir, "customer")
     name = F.element_at(
-        F.array(*[F.lit(v) for v in _PHONETIC_VOCAB]),
+        lit_array(_PHONETIC_VOCAB, "string"),
         (F.col("c_custkey") % len(_PHONETIC_VOCAB)).cast("int") + 1,
     )
     named = cust.select(name.alias("name"))
@@ -2204,7 +2205,7 @@ def phonetic_linkage_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = _read(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 500)
     name = F.element_at(
-        F.array(*[F.lit(v) for v in _PHONETIC_VOCAB]),
+        lit_array(_PHONETIC_VOCAB, "string"),
         (F.col("c_custkey") % len(_PHONETIC_VOCAB)).cast("int") + 1,
     )
     named = cust.select(F.col("c_custkey").alias("id"), name.alias("name"))
@@ -2583,20 +2584,14 @@ def japanese_normalize_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = len(_JP_VOCAB)
     cust = _read(spark, sf_dir, "customer").filter(F.col("c_custkey") < 280)
     idx = (F.col("c_custkey") % n).cast("int")
-    val = F.element_at(F.array(*[F.lit(v) for v in _JP_VOCAB]), idx + 1)
-    rows = cust.select(idx.alias("idx"), val.alias("v"))
+    rows = cust.select(idx.alias("idx"))
+    val = F.element_at(lit_array(_JP_VOCAB, "string"), F.col("idx") + 1)
     return rows.groupBy("idx").agg(F.count(F.lit(1)).cast("long").alias("cnt")).select(
         "idx",
         "cnt",
-        normalize_japanese_numbers(
-            F.element_at(F.array(*[F.lit(v) for v in _JP_VOCAB]), F.col("idx") + 1)
-        ).alias("numbers_norm"),
-        katakana_to_romaji(
-            F.element_at(F.array(*[F.lit(v) for v in _JP_VOCAB]), F.col("idx") + 1)
-        ).alias("romaji"),
-        nfkc_normalize(
-            F.element_at(F.array(*[F.lit(v) for v in _JP_VOCAB]), F.col("idx") + 1)
-        ).alias("nfkc"),
+        normalize_japanese_numbers(val).alias("numbers_norm"),
+        katakana_to_romaji(val).alias("romaji"),
+        nfkc_normalize(val).alias("nfkc"),
     )
 
 
@@ -2709,7 +2704,7 @@ def synonym_search_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("idx")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .withColumn(
-            "q", F.element_at(F.array(*[F.lit(s) for s in _SYN_SEARCH_QUERIES]), F.col("idx") + 1)
+            "q", F.element_at(lit_array(_SYN_SEARCH_QUERIES, "string"), F.col("idx") + 1)
         )
     )
     out = grouped
@@ -4236,12 +4231,12 @@ def robots_meta_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _token_budget_oracle_sql() -> str:
     from .operators.text_analysis import BPE_TOKEN_PATTERN
 
-    # the established _SQL_WORDS device ('\s+'): Java \s and RE2 \s agree
-    # on the ASCII whitespace set, while a hand-rolled '[ \t\n]+' class
-    # would diverge from the Spark side on \r / \f / \x0B (round-5
-    # review finding — the sf0.01 fixture happens to contain none, but
-    # the driver's value-hash gate must not depend on that)
-    ws = "len(list_filter(regexp_split_to_array(coalesce(text, ''), '\\s+'), x -> x <> ''))"
+    # Java's `\s` (the Spark side's word split) is exactly [ \t\n\x0B\f\r];
+    # RE2's `\s` lacks \x0B, so the class is spelled out here.  The sf0.01
+    # fixture holds no VT, but the driver's value-hash gate must not
+    # depend on that (tests/test_oracle_parity.py holds a VT row).
+    split = r"regexp_split_to_array(coalesce(text, ''), '[ \t\n\x0B\f\r]+')"
+    ws = f"len(list_filter({split}, x -> x <> ''))"
     bpe = f"len(regexp_extract_all(coalesce(text, ''), '{BPE_TOKEN_PATTERN}'))"
     return f"""
     SELECT lang,

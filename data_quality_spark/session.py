@@ -46,22 +46,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Register the driver testdata parquet files as temp views.
-
-    Returns dict name -> DataFrame. Column pruning + predicate pushdown reach
-    the parquet scan because these are plain `spark.read.parquet` relations.
-    """
-    if names is None:
-        names = [
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        ]
-    out = {}
-    for n in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out

@@ -35,3 +35,31 @@ def test_contract_outputs_are_scalar(spark):
             assert not isinstance(field.dataType, (ArrayType, MapType, StructType)), (
                 f"{name}.{field.name} is {field.dataType.simpleString()}"
             )
+
+
+def test_token_budget_parity_on_vertical_tab(spark, tmp_path):
+    """Java `\\s` matches VT and RE2's does not: `token_budget_by_lang`
+    keeps oracle parity on documents holding `\\x0B` between words, inside
+    punctuation runs and at the ends."""
+    import os
+
+    import duckdb
+
+    for name in os.listdir(SF_DIR):
+        if name != "documents.parquet":
+            (tmp_path / name).symlink_to(os.path.join(SF_DIR, name))
+    duckdb.execute(
+        f"""COPY (
+          SELECT doc_id,
+            CASE doc_id % 4
+              WHEN 0 THEN replace(text, ' ', chr(11))
+              WHEN 1 THEN chr(11) || text || '!' || chr(11) || '?x' || chr(11)
+              WHEN 2 THEN replace(text, '.', '.' || chr(11) || ',')
+              ELSE text END AS text,
+            lang, source, n_chars
+          FROM '{SF_DIR}/documents.parquet'
+        ) TO '{tmp_path}/documents.parquet' (FORMAT parquet)"""
+    )
+    name = "token_budget_by_lang"
+    problems = compare(spark, name, QUERIES[name], ORACLES[name], str(tmp_path))
+    assert not problems, problems
