@@ -20,7 +20,6 @@ column; results are invariant under repartitioning and parallelism level.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -156,16 +155,16 @@ def ellipsis_line_fraction(col: Column) -> Column:
 
 # Scalar feature columns shared by the rule registry.  Two implementations
 # produce them identically:
-# - 'native': Catalyst expressions (used by the oracle-checked profiling
-#   queries — every value reproducible in DuckDB SQL);
-# - 'arrow':  ONE vectorized pandas UDF computing all features per batch
-#   (the pipeline hot path).  Spark's higher-order array functions are
-#   interpreted, ~µs per array element; thirteen features × hundreds of
-#   words per doc made the native rule stage the scaling bottleneck
-#   (it alone ran 3-5× slower than langid+ppl+scrub combined and scaled at
-#   1.5×/4-cores vs their 2.5×).  The Arrow pass restores UDF-stage scaling.
+# - `with_text_features`: Catalyst expressions (used by the oracle-checked
+#   profiling queries — every value reproducible in DuckDB SQL);
+# - `compute_features_py`: the per-page Python kernel the fused Arrow UDF
+#   `analyze.analyze_text` runs (the pipeline hot path).  Spark's
+#   higher-order array functions are interpreted, ~µs per array element;
+#   thirteen features × hundreds of words per doc made the native rule
+#   stage the scaling bottleneck (it alone ran 3-5× slower than
+#   langid+ppl+scrub combined and scaled at 1.5×/4-cores vs their 2.5×).
 # Equality of the two implementations is pytest-asserted on the fixture
-# corpus (test_rules_feature_parity).
+# corpus (test_rules_feature_parity) and a fuzz corpus.
 FEATURE_COLS: tuple[str, ...] = (
     "_nchars", "_nw", "_sum_wlen", "_n_stop", "_n_distinct",
     "_n_g2", "_n_g2_distinct", "_n_g3", "_n_g3_distinct",
@@ -174,14 +173,14 @@ FEATURE_COLS: tuple[str, ...] = (
 
 _CJK_CLASS = r"[\x{3040}-\x{30FF}\x{4E00}-\x{9FFF}\x{AC00}-\x{D7AF}]"
 
-def with_text_features_native(df, text_col: str = "text"):
-    """Native-expression feature computation (chained projections so each
-    expensive array is built once)."""
+def with_text_features(df, text_col: str = "text"):
+    """Attach the scalar text-feature columns (see FEATURE_COLS) as native
+    expressions (chained projections so each expensive array is built once)."""
     c = F.col(text_col)
     cjk_count = F.when(
         c.rlike(_CJK_CLASS),
         F.length(c) - F.length(F.regexp_replace(c, _CJK_CLASS, "")),
-    ).otherwise(F.lit(0))
+    ).when(c.isNotNull(), F.lit(0))
     step1 = df.select(
         "*",
         F.length(c).alias("_nchars"),
@@ -208,8 +207,9 @@ def with_text_features_native(df, text_col: str = "text"):
         "*",
         F.size(F.filter(lws, lambda x: F.array_contains(stop_arr, x))).alias("_n_stop"),
         F.size(F.array_distinct(lws)).alias("_n_distinct"),
-        ngrams_from_words(lws, 2).alias("__g2"),
-        ngrams_from_words(lws, 3).alias("__g3"),
+        # NULL text keeps NULL n-gram counts, as in compute_features_py
+        F.when(lws.isNotNull(), ngrams_from_words(lws, 2)).alias("__g2"),
+        F.when(lws.isNotNull(), ngrams_from_words(lws, 3)).alias("__g3"),
     )
     step4 = step3.select(
         "*",
@@ -221,12 +221,22 @@ def with_text_features_native(df, text_col: str = "text"):
     return step4.drop("__ws", "__lws", "__g2", "__g3", "__lines")
 
 
-# --- Arrow implementation ---------------------------------------------------
+# --- Python kernel ----------------------------------------------------------
 
 import re as _re
+import string as _string
+from itertools import repeat
 
 _RE_WS = _re.compile(r"[ \t\n\x0b\f\r]+")          # Java \s (ASCII)
+# characters str.split() splits on that Java \s does not
+_RE_PY_ONLY_WS = _re.compile(
+    "[\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+)
 _RE_SYM = _re.compile(r"[^\w \t\n\x0b\f\r]|_")      # ≈ Java [^\p{L}\p{N}\s]
+# deletes every ASCII character _RE_SYM does not match
+_ASCII_NON_SYM = str.maketrans(
+    "", "", _string.ascii_letters + _string.digits + " \t\n\x0b\f\r"
+)
 _RE_CJK = _re.compile("[\u3040-\u30FF\u4E00-\u9FFF\uAC00-\uD7AF]")
 _RE_LETTER_ANY = _re.compile(r"[^\W\d_]")           # ≈ Java \p{L}
 _RE_BULLET = _re.compile(r"^[-*•]")
@@ -236,54 +246,47 @@ _STOPSET = frozenset(STOPWORDS)
 
 def compute_features_py(t: str | None) -> tuple:
     """Pure-Python feature kernel — must match the native expressions
-    exactly (pytest-asserted).  One pass over the text."""
+    exactly (pytest-asserted).  Fast paths apply only where a property of
+    the text makes them exact."""
     if t is None:
         return tuple([None] * len(FEATURE_COLS))
-    ws = [w for w in _RE_WS.split(t) if w]
-    lws = [w.lower() for w in ws]
+    if _RE_PY_ONLY_WS.search(t) is None:
+        # every separator str.split() sees is a Java \s one; lower-casing
+        # never makes or removes whitespace, and final-sigma context stops
+        # at whitespace, so the whole-text lower splits into the words' lowers
+        ws = t.split()
+        lws = t.lower().split()
+    else:
+        ws = [w for w in _RE_WS.split(t) if w]
+        lws = [w.lower() for w in ws]
+    if t.isascii():
+        # an ASCII word has a letter iff its lower form has a cased char
+        n_alpha = sum(map(str.islower, lws))
+        n_sym = len(t.translate(_ASCII_NON_SYM))
+        n_cjk = 0
+    else:
+        n_alpha = sum(map(bool, map(_RE_LETTER_ANY.search, ws)))
+        n_sym = _RE_SYM.subn("", t)[1]
+        n_cjk = len(_RE_CJK.findall(t))
     nw = len(ws)
-    g2 = list(zip(lws, lws[1:])) if nw >= 2 else []
-    g3 = list(zip(lws, lws[1:], lws[2:])) if nw >= 3 else []
     lines = t.split("\n")
     return (
         len(t),
         nw,
-        sum(len(w) for w in ws),
-        sum(1 for w in lws if w in _STOPSET),
+        sum(map(len, ws)),
+        sum(map(_STOPSET.__contains__, lws)),
         len(set(lws)),
-        len(g2),
-        len(set(g2)),
-        len(g3),
-        len(set(g3)),
-        len(_RE_SYM.findall(t)),
-        len(_RE_CJK.findall(t)),
-        sum(1 for w in ws if _RE_LETTER_ANY.search(w)),
+        max(nw - 1, 0),
+        len(set(zip(lws, lws[1:]))),
+        max(nw - 2, 0),
+        len(set(zip(lws, lws[1:], lws[2:]))),
+        n_sym,
+        n_cjk,
+        n_alpha,
         len(lines),
-        sum(1 for l in lines if _RE_BULLET.match(l.strip(" "))),
-        sum(1 for l in lines if _RE_ELLIPSIS.search(l)),
+        sum(map(bool, map(_RE_BULLET.match, map(str.strip, lines, repeat(" "))))),
+        sum(map(bool, map(_RE_ELLIPSIS.search, lines))),
     )
-
-
-def with_text_features_arrow(df, text_col: str = "text"):
-    """Arrow-batched feature computation: one pandas UDF → struct → expand."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    schema = StructType([StructField(n, IntegerType()) for n in FEATURE_COLS])
-
-    @F.pandas_udf(schema)
-    def _features(texts: pd.Series) -> pd.DataFrame:
-        rows = [compute_features_py(t) for t in texts]
-        return pd.DataFrame(rows, columns=list(FEATURE_COLS))
-
-    out = df.withColumn("__feat", _features(F.col(text_col)))
-    return out.select("*", "__feat.*").drop("__feat")
-
-
-def with_text_features(df, text_col: str = "text", impl: str = "arrow"):
-    """Attach the scalar text-feature columns (see FEATURE_COLS)."""
-    if impl == "native":
-        return with_text_features_native(df, text_col)
-    return with_text_features_arrow(df, text_col)
 
 
 def cjk_ratio(col: Column) -> Column:

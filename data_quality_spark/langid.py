@@ -1,25 +1,20 @@
-"""Language identification as a vectorized Arrow pandas UDF.
+"""Language identification kernel of the fused analysis UDF.
 
 Production path: fastText `lid.176.bin` loaded lazily once per executor
 (the reference's lazy-singleton tokenizer pattern,
-`dataquality-text-japanese/.../TextTokenizer.java:25-44`), wrapped in an
-iterator-of-series pandas UDF so the model loads once per task stream and
-Arrow batches bound memory.
+`dataquality-text-japanese/.../TextTokenizer.java:25-44`); the fused
+`analyze.analyze_text` UDF calls `_get_model()._classify(text)` per page.
 
 Sandbox path (no fastText wheel in this container): a deterministic
-character-range + stop-word-profile classifier with the SAME interface and
-the same iterator-UDF plumbing, so swapping the model is a one-line change.
+character-range + stop-word-profile classifier with the SAME `_classify`
+interface, so swapping the model is a one-line change.
 Pure function of the input text — invariant under partitioning/parallelism.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType
+import re
+from itertools import repeat
 
 # Per-language marker words (function words, frozen).  Deliberately small:
 # this is a deterministic sandbox stand-in, not a linguistics claim.
@@ -33,8 +28,6 @@ _MARKERS: dict[str, tuple[str, ...]] = {
     "nl": ("de", "het", "een", "en", "is", "van", "dat", "niet", "met", "voor", "zijn", "ik"),
 }
 
-import re
-
 _CHAR_RANGES: tuple[tuple[str, int, int], ...] = (
     # (lang, lo, hi) — if >30% of letters fall in the range, classify directly.
     ("zh", 0x4E00, 0x9FFF),
@@ -45,59 +38,62 @@ _CHAR_RANGES: tuple[tuple[str, int, int], ...] = (
     ("el", 0x0370, 0x03FF),
     ("he", 0x0590, 0x05FF),
 )
+_SCRIPT_SHARE = 0.30
 # compiled once — classification runs at C speed (findall), not per-char Python
-_RE_LETTER = re.compile(r"[^\W\d_]")
+_RE_NON_LETTER = re.compile(r"[\W\d_]")  # complement of the letters [^\W\d_]
 _RE_RANGE: tuple[tuple[str, re.Pattern], ...] = tuple(
     (lang, re.compile(f"[{chr(lo)}-{chr(hi)}]")) for lang, lo, hi in _CHAR_RANGES
 )
+# The ranges are disjoint, so the union's hit count bounds each range's: a
+# union share <= _SCRIPT_SHARE means no single range can exceed it.  Every
+# range lies above U+036F, so ASCII text never hits any of them, and text
+# with no hit in the union needs no letter count.
+_RE_ANY_RANGE = re.compile(
+    "[" + "".join(f"{chr(lo)}-{chr(hi)}" for _, lo, hi in _CHAR_RANGES) + "]"
+)
 _TOK_STRIP = ".,;:!?()[]\"'"
-_MARKER_SETS: dict[str, frozenset[str]] = {k: frozenset(v) for k, v in _MARKERS.items()}
+_LANGS: tuple[str, ...] = tuple(_MARKERS)
+# normalized token → one _HIT_BITS-wide counter field per language it marks
+# (field i = i-th language of _MARKERS): summing the values of at most 400
+# tokens counts every language's hits at once, and no field can overflow
+_HIT_BITS = 10
+_TOKEN_HITS: dict[str, int] = {}
+for _i, _words in enumerate(_MARKERS.values()):
+    for _w in set(_words):
+        _TOKEN_HITS[_w] = _TOKEN_HITS.get(_w, 0) + (1 << (_HIT_BITS * _i))
 
 UNKNOWN = "und"
 
 
 class _HeuristicLangModel:
-    """Deterministic fallback model. predict(batch: pd.Series) -> (lang, conf)."""
-
-    def predict(self, texts: pd.Series) -> pd.DataFrame:
-        langs: list[str] = []
-        confs: list[float] = []
-        for t in texts:
-            if t is None or not str(t).strip():
-                langs.append(UNKNOWN)
-                confs.append(0.0)
-                continue
-            s = str(t)
-            lang, conf = self._classify(s)
-            langs.append(lang)
-            confs.append(conf)
-        return pd.DataFrame({"lang": langs, "conf": confs})
+    """Deterministic fallback model: `_classify(text) -> (lang, conf)`."""
 
     @staticmethod
     def _classify(s: str) -> tuple[str, float]:
         # 1. script detection over the first 2000 code points
         head = s[:2000]
-        n = len(_RE_LETTER.findall(head))
-        if n:
-            for lang, rex in _RE_RANGE:
-                hits = len(rex.findall(head))
-                if hits / n > 0.30:
-                    return lang, round(hits / n, 4)
-        # 2. marker-word profile over the first 400 tokens
+        if not head.isascii() and _RE_ANY_RANGE.search(head):
+            n = len(head) - len(_RE_NON_LETTER.findall(head))  # letters
+            if n and len(_RE_ANY_RANGE.findall(head)) / n > _SCRIPT_SHARE:
+                for lang, rex in _RE_RANGE:
+                    hits = len(rex.findall(head))
+                    if hits / n > _SCRIPT_SHARE:
+                        return lang, round(hits / n, 4)
+        # 2. marker-word profile over the first 400 tokens: each token is
+        # normalized once and looked up once
         toks = head.split()[:400]
         if not toks:
             return UNKNOWN, 0.0
-        best_lang, best_hits = UNKNOWN, 0
-        for lang, mset in _MARKER_SETS.items():
-            hits = 0
-            for w in toks:
-                if w.strip(_TOK_STRIP).lower() in mset:
-                    hits += 1
-            if hits > best_hits:
-                best_lang, best_hits = lang, hits
+        norm = map(str.lower, map(str.strip, toks, repeat(_TOK_STRIP)))
+        packed = sum(map(_TOKEN_HITS.get, norm, repeat(0)))
+        mask = (1 << _HIT_BITS) - 1
+        hits = [(packed >> (_HIT_BITS * i)) & mask for i in range(len(_LANGS))]
+        best_hits = max(hits)
         if best_hits == 0:
             return UNKNOWN, 0.0
-        return best_lang, round(min(1.0, best_hits / max(1, len(toks)) * 5.0), 4)
+        # first language in _MARKERS order with the most hits
+        best_lang = _LANGS[hits.index(best_hits)]
+        return best_lang, round(min(1.0, best_hits / len(toks) * 5.0), 4)
 
 
 _MODEL = None
@@ -114,35 +110,11 @@ def _get_model():
                 def __init__(self):
                     self._m = fasttext.load_model("lid.176.bin")
 
-                def predict(self, texts: pd.Series) -> pd.DataFrame:
-                    labels, confs = [], []
-                    for t in texts:
-                        s = (t or "").replace("\n", " ")
-                        lab, p = self._m.predict(s)
-                        labels.append(lab[0].replace("__label__", ""))
-                        confs.append(float(p[0]))
-                    return pd.DataFrame({"lang": labels, "conf": confs})
+                def _classify(self, s: str) -> tuple[str, float]:
+                    lab, p = self._m.predict(s.replace("\n", " "))
+                    return lab[0].replace("__label__", ""), float(p[0])
 
             _MODEL = _FastTextModel()
         except ImportError:
             _MODEL = _HeuristicLangModel()
     return _MODEL
-
-
-@F.pandas_udf(StringType())
-def detect_lang(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Iterator-of-series pandas UDF: model loaded once per task stream."""
-    model = _get_model()
-    for texts in batches:
-        yield model.predict(texts)["lang"]
-
-
-@F.pandas_udf(DoubleType())
-def detect_lang_conf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    model = _get_model()
-    for texts in batches:
-        yield model.predict(texts)["conf"]
-
-
-def lang_expr(text_col: Column) -> Column:
-    return detect_lang(text_col)

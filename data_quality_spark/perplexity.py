@@ -1,9 +1,10 @@
-"""N-gram language-model perplexity scoring as a vectorized pandas UDF.
+"""N-gram language-model perplexity kernel of the fused analysis UDF.
 
 Production path: a KenLM binary model memory-mapped once per executor
 (lazy singleton, same pattern as langid).  Sandbox path: a deterministic
 interpolated character-bigram model with frozen English letter-transition
-statistics — same interface, same Arrow plumbing.
+statistics — same interface: `_ppl(text)` per page and `_ppl_batch(texts)`
+for the Arrow batches of `analyze.analyze_text`.
 
 Perplexity here = exp(-mean log2... ) convention: we report
 ``ppl = 2 ** (-avg_log2_prob_per_char)``; junk (symbol soup, repeated
@@ -13,12 +14,7 @@ per-row function — deterministic under any partitioning.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
+import numpy as np
 
 # Frozen English letter-bigram log-probabilities (coarse, derived from
 # classic letter-frequency tables; smoothed).  Keys: 'ab' etc. over
@@ -65,21 +61,28 @@ _NON_ALPHA = -8.5   # bigram touching a non [a-z ] char — junk signal
 _MAX_CHARS = 4000   # score a bounded prefix; cost O(1) per doc at 100 TB
 
 
+def _normalize(s: str) -> str:
+    """Lowercase and collapse every whitespace run to one '_'.  str.split()
+    splits on exactly the runs of str.isspace() characters, the per-char
+    collapse rule; a leading or trailing run keeps its '_'."""
+    s = s.lower()
+    words = s.split()
+    if not words:
+        return "_" if s else ""
+    ns = "_".join(words)
+    if s[0].isspace():
+        ns = "_" + ns
+    if s[-1].isspace():
+        ns += "_"
+    return ns
+
+
 # 28-class alphabet: a-z → 0-25, '_' (collapsed whitespace) → 26, other → 27.
 # _TABLE[i,j] = log2 prob of the bigram — built once; scoring is a pair of
 # vectorized numpy lookups (the per-char Python loop was the dominant cost
 # of the fused analysis stage).
-import re as _re
-
-import numpy as _np
-
-# Unicode \s matches what str.isspace() matches - preserves the
-# original per-char collapse semantics
-_RE_WS_RUN = _re.compile(r"\s+", _re.UNICODE)
-
-
-def _build_table() -> "_np.ndarray":
-    t = _np.full((28, 28), _NON_ALPHA, dtype="float64")
+def _build_table() -> np.ndarray:
+    t = np.full((28, 28), _NON_ALPHA, dtype="float64")
     t[:27, :27] = _FLOOR
     for bg, lp in _COMMON_BIGRAMS.items():
         i = 26 if bg[0] == "_" else ord(bg[0]) - 97
@@ -89,41 +92,55 @@ def _build_table() -> "_np.ndarray":
 
 
 _TABLE = _build_table()
+# class of every utf-16 code unit (astral chars appear as surrogates —
+# class 27, exactly what "other" means)
+_CLASS = np.full(65536, 27, dtype=np.uint8)
+_CLASS[97:123] = np.arange(26)
+_CLASS[95] = 26
+# pages scored in one numpy pass; with _MAX_CHARS prefixes this bounds the
+# arrays of one pass at a few MB whatever the Arrow batch size
+_GROUP = 256
+
+
+def _ppl_group(texts: list[str]) -> list[float]:
+    """Perplexity of each text.  The code units of all texts are classified
+    and their bigram log-probs gathered in one pass; each text then sums its
+    own contiguous slice, which gives the same pairwise sum as summing that
+    slice alone."""
+    norm = list(map(_normalize, texts))
+    units = [x.encode("utf-16-le") for x in norm]
+    cls = _CLASS[np.frombuffer(b"".join(units), dtype="<u2")]
+    lp = _TABLE[cls[:-1], cls[1:]]
+    out: list[float] = []
+    start = 0
+    for x, b in zip(norm, units):
+        n = len(b) // 2
+        if len(x) < 2:
+            out.append(float("inf"))
+        else:
+            # denominator = number of code-unit transitions (astral chars
+            # occupy two units; numerator and denominator must count the
+            # same pairs)
+            avg_log2 = float(lp[start : start + n - 1].sum()) / (n - 1)
+            out.append(round(2.0 ** (-avg_log2), 4))
+        start += n
+    return out
 
 
 class _CharBigramLM:
-    """Deterministic fallback LM. score(batch) -> pd.Series of perplexity."""
-
-    def score(self, texts: pd.Series) -> pd.Series:
-        out: list[float] = []
-        for t in texts:
-            if t is None or not str(t).strip():
-                out.append(float("inf"))
-                continue
-            out.append(self._ppl(str(t)[:_MAX_CHARS]))
-        return pd.Series(out, dtype="float64")
+    """Deterministic fallback LM: `_ppl(text)` per page, `_ppl_batch(texts)`
+    for the fused UDF's Arrow batches — the same values."""
 
     @staticmethod
     def _ppl(s: str) -> float:
-        # normalize: lowercase, collapse whitespace runs to one '_'
-        ns = _RE_WS_RUN.sub("_", s.lower())
-        if len(ns) < 2:
-            return float("inf")
-        # classify code units: a-z → 0-25, '_' → 26, everything else → 27
-        # (utf-16 code units: astral chars appear as surrogates — class 27,
-        # exactly what "other" means)
-        u = _np.frombuffer(ns.encode("utf-16-le"), dtype="<u2").astype("int64")
-        if len(u) < 2:
-            return float("inf")
-        cls = _np.full(u.shape, 27, dtype="int64")
-        alpha = (u >= 97) & (u <= 122)
-        cls[alpha] = u[alpha] - 97
-        cls[u == 95] = 26
-        lp = _TABLE[cls[:-1], cls[1:]]
-        # denominator = number of code-unit transitions (astral chars occupy
-        # two units; numerator and denominator must count the same pairs)
-        avg_log2 = float(lp.sum()) / (len(u) - 1)
-        return round(2.0 ** (-avg_log2), 4)
+        return _ppl_group([s])[0]
+
+    @staticmethod
+    def _ppl_batch(texts: list[str]) -> list[float]:
+        out: list[float] = []
+        for k in range(0, len(texts), _GROUP):
+            out += _ppl_group(texts[k : k + _GROUP])
+        return out
 
 
 _LM = None
@@ -142,31 +159,18 @@ def _get_lm():
                     path = os.environ.get("DQS_KENLM_MODEL", "")
                     self._m = kenlm.Model(path)
 
-                def score(self, texts: pd.Series) -> pd.Series:
-                    vals = []
-                    for t in texts:
-                        s = (t or "").replace("\n", " ")
-                        words = s.split()
-                        if not words:
-                            vals.append(float("inf"))
-                            continue
-                        lp = self._m.score(s, bos=True, eos=True)
-                        vals.append(10.0 ** (-lp / max(1, len(words) + 1)))
-                    return pd.Series(vals, dtype="float64")
+                def _ppl(self, s: str) -> float:
+                    s = s.replace("\n", " ")
+                    words = s.split()
+                    if not words:
+                        return float("inf")
+                    lp = self._m.score(s, bos=True, eos=True)
+                    return 10.0 ** (-lp / max(1, len(words) + 1))
+
+                def _ppl_batch(self, texts: list[str]) -> list[float]:
+                    return [self._ppl(s) for s in texts]
 
             _LM = _KenLM()
         except ImportError:
             _LM = _CharBigramLM()
     return _LM
-
-
-@F.pandas_udf(DoubleType())
-def perplexity(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Iterator pandas UDF: LM loaded once per task stream, Arrow-batched."""
-    lm = _get_lm()
-    for texts in batches:
-        yield lm.score(texts)
-
-
-def perplexity_expr(text_col: Column) -> Column:
-    return perplexity(text_col)

@@ -1,6 +1,6 @@
 """End-to-end quality-filter pipeline: rules → langid → perplexity → scrub →
 decide, composed as ONE logical plan (single scan; Catalyst collapses the
-projections; the two pandas UDFs run in one ArrowEvalPython stage each).
+projections; the fused analysis UDF runs in one ArrowEvalPython stage).
 
 spark-submit entry:
     spark-submit --py-files dq.zip -m data_quality_spark.pipeline \

@@ -111,7 +111,7 @@ _SQL_STOPLIST = "[" + ", ".join(f"'{w}'" for w in ts.STOPWORDS) + "]"
 )
 def doc_textstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read_wide(spark, sf_dir, "documents")
-    feat = ts.with_text_features(docs, "text", impl="native")
+    feat = ts.with_text_features(docs, "text")
     return feat.select(
         "doc_id",
         F.col("_nchars").cast("long").alias("n_chars"),
@@ -155,7 +155,7 @@ def doc_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-expressible subset of the rule registry over `documents`
     (the full registry incl. CJK gating runs in the pipeline query)."""
     docs = _read_wide(spark, sf_dir, "documents")
-    feat = ts.with_text_features(docs, "text", impl="native")
+    feat = ts.with_text_features(docs, "text")
     nw, nchars = F.col("_nw"), F.col("_nchars")
     mwl = F.col("_sum_wlen") / nw
     ng2, dg2 = F.col("_n_g2"), F.col("_n_g2_distinct")
@@ -187,7 +187,7 @@ def doc_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_rule_hit_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ValueQualityStatistics-style accounting: one partial+final aggregate."""
     docs = _read_wide(spark, sf_dir, "documents")
-    feat = ts.with_text_features(docs, "text", impl="native")
+    feat = ts.with_text_features(docs, "text")
     nw = F.col("_nw")
     return feat.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -3630,7 +3630,7 @@ def domain_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.urltools import domain_quality_profile
 
     docs = _read_wide(spark, sf_dir, "documents")
-    feat = ts.with_text_features(docs, "text", impl="native")
+    feat = ts.with_text_features(docs, "text")
     nw, nchars = F.col("_nw"), F.col("_nchars")
     mwl = F.col("_sum_wlen") / nw
     ng2, dg2 = F.col("_n_g2"), F.col("_n_g2_distinct")

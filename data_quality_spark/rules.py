@@ -62,7 +62,8 @@ def _gated(rule: Column) -> Column:
 
 
 # Each builder returns a Column over the scalar feature columns
-# (ts.FEATURE_COLS, attached by ts.with_text_features) + the raw text column.
+# (ts.FEATURE_COLS, attached by analyze.with_analysis or ts.with_text_features)
+# + the raw text column.
 
 
 def _r_word_count(c: Column) -> Column:
@@ -126,8 +127,9 @@ def _r_ellipsis_lines(c: Column) -> Column:
 
 def _r_non_empty(c: Column) -> Column:
     # Reference empty semantics: null or all-whitespace is "empty"
-    # (`TypeInferenceUtils.java:157-159`).
-    return c.isNotNull() & (F.trim(c) != F.lit(""))
+    # (`TypeInferenceUtils.java:157-159`), whitespace being Java's \s
+    # (`F.trim` strips only U+0020).
+    return c.isNotNull() & c.rlike(r"[^ \t\n\x0B\f\r]")
 
 
 RULES: tuple[Rule, ...] = (
@@ -157,23 +159,15 @@ def attach_rules(
     """Rule booleans from already-attached feature columns (cheap scalar
     expressions — one projection, codegen'd)."""
     c = F.col(text_col)
-    cols = [F.coalesce(r.expr(c), F.lit(False)).alias(prefix + r.name) for r in RULES]
+    # a NULL page fails every rule, including those that pass empty text
+    cols = [
+        (c.isNotNull() & F.coalesce(r.expr(c), F.lit(False))).alias(prefix + r.name)
+        for r in RULES
+    ]
     out = df_with_features.select("*", *cols)
     if drop_features:
         out = out.drop(*ts.FEATURE_COLS)
     return out
-
-
-def with_rule_columns(
-    df: DataFrame, text_col: str = "text", prefix: str = "rule_", impl: str = "arrow"
-) -> DataFrame:
-    """Attach one boolean column per rule in a single projection.
-
-    Catalyst collapses the N rule expressions into one scan — the Spark
-    analog of `Analyzers.with(...)` one-pass composition
-    (`common/inference/Analyzers.java:48-67`).
-    """
-    return attach_rules(ts.with_text_features(df, text_col, impl=impl), text_col, prefix)
 
 
 def keep_expr(prefix: str = "rule_") -> Column:

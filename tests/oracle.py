@@ -3,9 +3,13 @@
 Independent re-implementation of the per-row semantics (words, ratios,
 n-grams, CJK gating, decision) used to golden-check the distributed Spark
 implementation: same spec, different engine (Python scalars vs Catalyst
-expressions).  The langid/perplexity model classes are pure Python and shared
-deliberately — the pipeline test validates the Spark *plumbing* around them;
-their own behavior is unit-tested separately.
+expressions).  The language-ID, perplexity and feature kernels are frozen
+here in their straightforward per-page form (`ref_classify`, `ref_ppl`,
+`ref_features`) — a per-language marker loop with seven script regexes,
+one numpy pass per page, one regex per word — so a rewrite of the engine's
+fast kernels that changes any output fails the gates instead of moving the
+oracle with it.  Only the frozen model tables (markers, ranges, bigram
+log-probs, stop words) are shared.
 
 Regex notes: Spark uses Java regex where `\\s` is ASCII-only, so this oracle
 uses the explicit ASCII whitespace class everywhere.
@@ -16,10 +20,12 @@ from __future__ import annotations
 import re
 import unicodedata
 
+import numpy as np
+
 from data_quality_spark import rules as R
-from data_quality_spark.functions.textstats import STOPWORDS
-from data_quality_spark.langid import _HeuristicLangModel
-from data_quality_spark.perplexity import _MAX_CHARS, _CharBigramLM
+from data_quality_spark.functions.textstats import FEATURE_COLS, STOPWORDS
+from data_quality_spark.langid import _CHAR_RANGES, _MARKERS, UNKNOWN
+from data_quality_spark.perplexity import _MAX_CHARS, _TABLE
 from data_quality_spark.scrub import scrub_str
 from data_quality_spark.decide import ALLOWED_LANGS, MAX_PERPLEXITY
 
@@ -101,8 +107,99 @@ def rule_verdicts(text: str | None) -> dict[str, bool]:
     return v
 
 
-_langmodel = _HeuristicLangModel()
-_lm = _CharBigramLM()
+# --- frozen reference kernels ------------------------------------------------
+
+_RE_LETTER = re.compile(r"[^\W\d_]")
+_RE_RANGES = tuple((lang, re.compile(f"[{chr(lo)}-{chr(hi)}]")) for lang, lo, hi in _CHAR_RANGES)
+_TOK_STRIP = ".,;:!?()[]\"'"
+_MARKER_SETS = {k: frozenset(v) for k, v in _MARKERS.items()}
+
+
+def ref_classify(s: str) -> tuple[str, float]:
+    """(lang, conf) of the heuristic language model, one language at a time."""
+    head = s[:2000]
+    n = len(_RE_LETTER.findall(head))
+    if n:
+        for lang, rex in _RE_RANGES:
+            hits = len(rex.findall(head))
+            if hits / n > 0.30:
+                return lang, round(hits / n, 4)
+    toks = head.split()[:400]
+    if not toks:
+        return UNKNOWN, 0.0
+    best_lang, best_hits = UNKNOWN, 0
+    for lang, mset in _MARKER_SETS.items():
+        hits = 0
+        for w in toks:
+            if w.strip(_TOK_STRIP).lower() in mset:
+                hits += 1
+        if hits > best_hits:
+            best_lang, best_hits = lang, hits
+    if best_hits == 0:
+        return UNKNOWN, 0.0
+    return best_lang, round(min(1.0, best_hits / max(1, len(toks)) * 5.0), 4)
+
+
+_RE_WS_RUN = re.compile(r"\s+", re.UNICODE)
+
+
+def ref_ppl(s: str) -> float:
+    """Char-bigram perplexity of one page, scored on its own."""
+    ns = _RE_WS_RUN.sub("_", s.lower())
+    if len(ns) < 2:
+        return float("inf")
+    u = np.frombuffer(ns.encode("utf-16-le"), dtype="<u2").astype("int64")
+    if len(u) < 2:
+        return float("inf")
+    cls = np.full(u.shape, 27, dtype="int64")
+    alpha = (u >= 97) & (u <= 122)
+    cls[alpha] = u[alpha] - 97
+    cls[u == 95] = 26
+    lp = _TABLE[cls[:-1], cls[1:]]
+    avg_log2 = float(lp.sum()) / (len(u) - 1)
+    return round(2.0 ** (-avg_log2), 4)
+
+
+_RE_SYM = re.compile(r"[^\w \t\n\x0b\f\r]|_")
+_RE_CJK = re.compile("[\u3040-\u30FF\u4E00-\u9FFF\uAC00-\uD7AF]")
+_RE_BULLET = re.compile(r"^[-*•]")
+_RE_ELLIPSIS = re.compile(r"(\.\.\.|…)[ \t\x0b\f\r]*$")
+
+
+def ref_features(t: str | None) -> tuple:
+    """FEATURE_COLS of one page: Java-\\s words, one regex per word."""
+    if t is None:
+        return tuple([None] * len(FEATURE_COLS))
+    ws = _words(t)
+    lws = [w.lower() for w in ws]
+    nw = len(ws)
+    g2 = list(zip(lws, lws[1:])) if nw >= 2 else []
+    g3 = list(zip(lws, lws[1:], lws[2:])) if nw >= 3 else []
+    lines = t.split("\n")
+    return (
+        len(t),
+        nw,
+        sum(len(w) for w in ws),
+        sum(1 for w in lws if w in _STOPSET),
+        len(set(lws)),
+        len(g2),
+        len(set(g2)),
+        len(g3),
+        len(set(g3)),
+        len(_RE_SYM.findall(t)),
+        len(_RE_CJK.findall(t)),
+        sum(1 for w in ws if _RE_LETTER.search(w)),
+        len(lines),
+        sum(1 for l in lines if _RE_BULLET.match(l.strip(" "))),
+        sum(1 for l in lines if _RE_ELLIPSIS.search(l)),
+    )
+
+
+def ref_analysis(t: str | None) -> tuple:
+    """One row of `analyze.analyze_text`: features, lang, conf, ppl."""
+    if t is None or not t.strip():
+        return (*ref_features(t), UNKNOWN, 0.0, float("inf"))
+    return (*ref_features(t), *ref_classify(t), ref_ppl(t[:_MAX_CHARS]))
 
 
 def label_row(text: str | None) -> dict:
@@ -111,8 +208,8 @@ def label_row(text: str | None) -> dict:
     if text is None or not text.strip():
         lang, ppl = "und", float("inf")
     else:
-        lang, _conf = _langmodel._classify(text)
-        ppl = _lm._ppl(text[:_MAX_CHARS])
+        lang, _conf = ref_classify(text)
+        ppl = ref_ppl(text[:_MAX_CHARS])
     lang_ok = lang in ALLOWED_LANGS
     ppl_ok = (ppl <= MAX_PERPLEXITY) if lang == "en" else True
     keep = all(verdicts.values()) and lang_ok and ppl_ok
