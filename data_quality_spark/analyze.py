@@ -61,7 +61,8 @@ def analyze_text(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(cols, columns=_COLS)
 
 
-def with_analysis(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach feature columns + lang_detected + lang_conf + ppl in one pass."""
-    out = df.withColumn("__a", analyze_text(F.col(text_col)))
+def with_analysis(df: DataFrame) -> DataFrame:
+    """Attach feature columns + lang_detected + lang_conf + ppl of `text`
+    in one pass."""
+    out = df.withColumn("__a", analyze_text(F.col("text")))
     return out.select("*", "__a.*").drop("__a")

@@ -26,16 +26,11 @@ def ppl_ok_expr(lang_col: Column, ppl_col: Column) -> Column:
     return F.when(lang_col == "en", ppl_col <= F.lit(MAX_PERPLEXITY)).otherwise(F.lit(True))
 
 
-def with_decision(
-    df: DataFrame,
-    rule_prefix: str = "rule_",
-    lang_col: str = "lang_detected",
-    ppl_col: str = "ppl",
-) -> DataFrame:
+def with_decision(df: DataFrame) -> DataFrame:
     """Attach keep + reasons columns.  Expects rule_*, lang_detected, ppl."""
-    lang_ok = lang_ok_expr(F.col(lang_col))
-    ppl_ok = ppl_ok_expr(F.col(lang_col), F.col(ppl_col))
-    heur_keep = rules.keep_expr(rule_prefix)
+    lang_ok = lang_ok_expr(F.col("lang_detected"))
+    ppl_ok = ppl_ok_expr(F.col("lang_detected"), F.col("ppl"))
+    heur_keep = rules.keep_expr()
     keep = heur_keep & lang_ok & ppl_ok
     extra = F.filter(
         F.array(
@@ -44,5 +39,5 @@ def with_decision(
         ),
         lambda x: x.isNotNull(),
     )
-    reasons = F.concat(rules.reasons_expr(rule_prefix), extra)
+    reasons = F.concat(rules.reasons_expr(), extra)
     return df.withColumn("keep", keep).withColumn("reasons", reasons)

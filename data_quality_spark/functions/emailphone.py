@@ -11,27 +11,18 @@ ships disabled — a non-deterministic network side effect has no place in
 a reproducible pipeline run.
 
 Phone — the reference wraps libphonenumber (`phone/.../PhoneNumberHandlerBase.
-java:54-423`).  We provide regex-based structural validation + E164/intl/
-national formatting for NANP (+1) and generic international numbers as
-native expressions; when the `phonenumbers` PyPI port (same Google metadata)
-is installed, a pandas UDF upgrade path gives full parity — gated behind an
-import-try.
+java:54-423`).  We provide regex-based structural validation for NANP (+1)
+and generic international numbers as native expressions; region metadata
+lives in `phone_metadata.py`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 # --- email -----------------------------------------------------------------
 
-# RFC-ish split of user/domain (EmailValidator.USER_REGEX / IP_DOMAIN_REGEX
-# semantics, `email/CommonCheck/EmailValidator.java:27-41`), RE2-safe.
-EMAIL_USER_PATTERN = r"^[A-Za-z0-9!#$%&'*+/=?^_`{|}~.-]+$"
 EMAIL_PATTERN = r"^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$"
 
 VALID = "VALID"
@@ -114,72 +105,3 @@ def is_valid_phone(c: Column, region: str = "US") -> Column:
     if region == "US":
         return c.rlike(_NANP_PATTERN)
     return c.rlike(_INTL_PATTERN) | c.rlike(_NANP_PATTERN)
-
-
-def format_e164(c: Column, region: str = "US") -> Column:
-    """E164 formatting (`PhoneNumberHandlerBase.formatE164`): for NANP,
-    +1 + 10 digits; null when invalid."""
-    d = phone_digits(c)
-    ten = F.when(
-        (F.length(d) == 11) & d.startswith("1"), F.substring(d, 2, 10)
-    ).otherwise(d)
-    return F.when(is_valid_phone(c, region), F.concat(F.lit("+1"), ten))
-
-
-def format_national(c: Column, region: str = "US") -> Column:
-    """National format '(NXX) NXX-XXXX'."""
-    d = phone_digits(c)
-    ten = F.when(
-        (F.length(d) == 11) & d.startswith("1"), F.substring(d, 2, 10)
-    ).otherwise(d)
-    return F.when(
-        is_valid_phone(c, region),
-        F.concat(
-            F.lit("("), F.substring(ten, 1, 3), F.lit(") "),
-            F.substring(ten, 4, 3), F.lit("-"), F.substring(ten, 7, 4),
-        ),
-    )
-
-
-def phone_region(c: Column) -> Column:
-    """Coarse region extraction from the country code (+1 → US/CA, etc.)."""
-    d = phone_digits(c)
-    return (
-        F.when(c.startswith("+1") | ((F.length(d) == 11) & d.startswith("1")), "US")
-        .when(c.startswith("+44"), "GB")
-        .when(c.startswith("+49"), "DE")
-        .when(c.startswith("+33"), "FR")
-        .when(c.startswith("+34"), "ES")
-        .when(c.startswith("+86"), "CN")
-        .when(c.startswith("+81"), "JP")
-        .when((F.length(d) == 10) & is_valid_phone(c, "US"), "US")
-        .otherwise(F.lit(None).cast("string"))
-    )
-
-
-def libphonenumber_validate(c: Column, region: str = "US") -> Column:
-    """Full-parity path via the `phonenumbers` PyPI port when available
-    (same Google metadata as the reference's libphonenumber wrapper);
-    falls back to the structural regex validator."""
-    try:
-        import phonenumbers  # noqa: F401
-
-        @F.pandas_udf(StringType())
-        def _validate(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            import phonenumbers as pn
-
-            def one(v):
-                if v is None:
-                    return None
-                try:
-                    num = pn.parse(str(v), region)
-                    return "VALID" if pn.is_valid_number(num) else "INVALID"
-                except pn.NumberParseException:
-                    return "INVALID"
-
-            for s in batches:
-                yield s.map(one)
-
-        return _validate(c)
-    except ImportError:
-        return F.when(is_valid_phone(c, region), "VALID").otherwise("INVALID")

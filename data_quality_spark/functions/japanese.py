@@ -7,12 +7,7 @@ normalization (`jp/numbers/JapaneseNumberNormalizer.java:19`).
 
 Here: transliteration and number normalization are deterministic map/rule
 kernels (pure Python, no dictionary jars) exposed as Arrow UDFs.
-Tokenization prefers `fugashi`/`sudachipy` (public PyPI kuromoji analogs)
-when installed; otherwise a built-in **kuromoji-lite** lattice — a
-miniature IPADIC-inspired lexicon + Viterbi with same-class-run unknown
-words — reproduces the reference TextTokenizerTest vectors exactly
-(full-dictionary coverage beyond the lexicon still needs the real
-dictionaries; that residual gap is data, not code).
+Tokenization is not ported (no query needs it).
 """
 
 from __future__ import annotations
@@ -20,9 +15,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import StringType
 
 # --- katakana → romaji (Hepburn-ish, digraphs first) ------------------------
 
@@ -138,123 +132,3 @@ def katakana_to_romaji(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
 def normalize_japanese_numbers(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     for s in batches:
         yield s.map(normalize_japanese_numbers_str)
-
-
-def katakana_to_hiragana(col: Column) -> Column:
-    """Native translate: katakana block ↔ hiragana block are offset-aligned
-    (ToHiragana analog) — pure JVM, no UDF."""
-    kata = "".join(chr(cp) for cp in range(0x30A1, 0x30F7))
-    hira = "".join(chr(cp - 0x60) for cp in range(0x30A1, 0x30F7))
-    return F.translate(col, kata, hira)
-
-
-# --- kuromoji-lite tokenization (TextTokenizer.java:21-40 analog) -----------
-# A miniature IPADIC-inspired lexicon: high-frequency particles — including
-# the compound particles IPADIC lists as single entries (について, として) —
-# auxiliaries, the honorific prefix お/ご, and common content words.  The
-# COSTS are simple unigram weights of our own, not copied from any
-# dictionary; unknown text falls back to maximal same-char-class runs (the
-# standard unknown-word device).  Small, but a real lattice: enough to
-# reproduce the reference TextTokenizerTest vectors exactly without the
-# kuromoji jars; fugashi/sudachipy take over when installed.
-
-_JP_LEXICON: dict[str, int] = {
-    # particles (single + IPADIC compound entries)
-    "の": 10, "は": 10, "が": 10, "を": 10, "に": 10, "で": 12, "と": 12,
-    "も": 12, "へ": 12, "か": 14, "から": 12, "まで": 12, "より": 14,
-    "について": 15, "として": 15, "における": 15, "という": 15,
-    # auxiliaries / frequent verb forms
-    "たい": 12, "ない": 12, "ます": 12, "です": 12, "でした": 14,
-    "ました": 14, "ください": 14, "する": 14, "した": 14, "して": 14,
-    "いる": 14, "ある": 14, "なる": 16,
-    # honorific prefixes
-    "お": 18, "ご": 18,
-    # common content words (fixture + frequent)
-    "価格": 20, "営業": 20, "問い合わせ": 20, "寿司": 20, "食べ": 20,
-    "会社": 20, "日本": 20, "東京": 20, "情報": 20, "電話": 20,
-}
-_JP_MAX_WORD = max(len(w) for w in _JP_LEXICON)
-_JP_UNK_BASE, _JP_UNK_PER_CHAR = 50, 20
-
-
-def _jp_char_class(ch: str) -> str:
-    cp = ord(ch)
-    if 0x4E00 <= cp <= 0x9FFF or cp in (0x3005,):  # kanji + 々
-        return "kanji"
-    if 0x3040 <= cp <= 0x309F:
-        return "hira"
-    if 0x30A0 <= cp <= 0x30FF or cp == 0x30FC:  # katakana + ー
-        return "kata"
-    if ch.isascii() and (ch.isalnum()):
-        return "latin"
-    return "other"  # punctuation etc. → single-char tokens
-
-
-def kuromoji_lite_tokenize(s: str) -> list[str]:
-    """Viterbi over the lexicon lattice with same-class-run unknown words;
-    whitespace delimits but never becomes a token (kuromoji behavior on
-    the reference fixtures).  Deterministic: min cost, ties to the longer
-    leading token."""
-    tokens: list[str] = []
-    for chunk in s.split():
-        n = len(chunk)
-        # dp[i] = (cost, token_len_ending_here)
-        INF = float("inf")
-        dp: list[float] = [INF] * (n + 1)
-        back: list[int] = [0] * (n + 1)
-        dp[0] = 0.0
-        for i in range(n):
-            if dp[i] == INF:
-                continue
-            cands: list[tuple[int, int]] = []  # (length, cost)
-            for ln in range(1, min(_JP_MAX_WORD, n - i) + 1):
-                w = chunk[i : i + ln]
-                c = _JP_LEXICON.get(w)
-                if c is not None:
-                    cands.append((ln, c))
-            cls = _jp_char_class(chunk[i])
-            if cls == "other":
-                run = 1
-            else:
-                run = 1
-                while i + run < n and _jp_char_class(chunk[i + run]) == cls:
-                    run += 1
-            cands.append((run, _JP_UNK_BASE + _JP_UNK_PER_CHAR * run))
-            for ln, c in cands:
-                j, total = i + ln, dp[i] + c
-                # strict < keeps the FIRST (shorter-prefix) relaxation; to
-                # prefer longer leading tokens on ties, accept equal cost
-                # with a longer incoming token
-                if total < dp[j] or (total == dp[j] and ln > back[j]):
-                    dp[j], back[j] = total, ln
-        # reconstruct
-        out: list[str] = []
-        j = n
-        while j > 0:
-            ln = back[j]
-            out.append(chunk[j - ln : j])
-            j -= ln
-        tokens.extend(reversed(out))
-    return tokens
-
-
-def kuromoji_lite_tokenized_string(s: str, delimiter: str = " ") -> str:
-    """`getTokenizedString` analog (TextTokenizerBase.java)."""
-    return delimiter.join(kuromoji_lite_tokenize(s))
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def tokenize_japanese(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Morphological tokenization via fugashi/sudachipy when installed
-    (kuromoji analogs, lazy per-worker singleton — `TextTokenizer.java:25-40`
-    pattern); fallback: the kuromoji-lite lattice above (reference
-    TextTokenizerTest vectors reproduced exactly — tests/test_japanese.py)."""
-    try:
-        from fugashi import Tagger  # noqa: F401  (not in sandbox)
-
-        tagger = Tagger()
-        tok = lambda s: [w.surface for w in tagger(s)]
-    except ImportError:
-        tok = kuromoji_lite_tokenize
-    for s in batches:
-        yield s.map(lambda v: None if v is None else tok(v))

@@ -1,10 +1,10 @@
 """Blocking-key scalar functions and fingerprint keyers.
 
 Reference: `record/linkage/genkey/impl/windowkey/AlgoBox.java:75-394` (the
-blocking-key function library: pick_Char, first_N_*, soundex, fingerprint,
-nGram key, …) and `FingerprintKeyer.java:43-59` / `NGramFingerprintKeyer.
-java:43-69`.  All native column expressions — blocking keys run on every
-row of the corpus, so they must stay inside whole-stage codegen.
+blocking-key function library; the first/last-N-chars and phonetic keys are
+ported) and `FingerprintKeyer.java:43-59`.  Native column expressions where
+Spark has the primitives — blocking keys run on every row of the corpus, so
+they must stay inside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -37,33 +37,7 @@ def fingerprint_key(c: Column) -> Column:
     return F.array_join(F.array_sort(F.array_distinct(tokens)), " ")
 
 
-def ngram_fingerprint_key(c: Column, n: int = 2) -> Column:
-    """NGramFingerprintKeyer: lower → strip punct+space → sorted set of
-    char n-grams → join → fold (`windowkey/NGramFingerprintKeyer.java:43-69`)."""
-    cleaned = remove_diacritics(
-        F.regexp_replace(F.lower(c), r"[\p{Punct}\p{Cntrl}\s]", "")
-    )
-    ln = F.length(cleaned)
-    grams = F.when(
-        ln >= n,
-        F.array_sort(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), ln - (n - 1)),
-                    lambda i: cleaned.substr(i, F.lit(n)),
-                )
-            )
-        ),
-    ).otherwise(F.array(cleaned))
-    return F.array_join(grams, "")
-
-
 # --- AlgoBox scalar key functions ------------------------------------------
-
-
-def pick_char(c: Column, positions: list[int]) -> Column:
-    """AlgoBox.pick_Char (1-based positions)."""
-    return F.concat(*[F.substring(c, p, 1) for p in positions])
 
 
 def first_n_chars(c: Column, n: int) -> Column:
@@ -72,42 +46,6 @@ def first_n_chars(c: Column, n: int) -> Column:
 
 def last_n_chars(c: Column, n: int) -> Column:
     return F.substring(c, -n, n)
-
-
-def first_n_chars_each_word(c: Column, n: int) -> Column:
-    """AlgoBox.first_N_Char_EW."""
-    words = F.filter(F.split(c, r"\s+"), lambda x: x != F.lit(""))
-    return F.array_join(F.transform(words, lambda w: F.substring(w, 1, n)), "")
-
-
-def first_n_consonants(c: Column, n: int) -> Column:
-    return F.substring(F.regexp_replace(c, r"[^bcdfghjklmnpqrstvwxyzBCDFGHJKLMNPQRSTVWXYZ]", ""), 1, n)
-
-
-def first_n_vowels(c: Column, n: int) -> Column:
-    return F.substring(F.regexp_replace(c, r"[^aeiouAEIOU]", ""), 1, n)
-
-
-def soundex_key(c: Column) -> Column:
-    return F.soundex(c)
-
-
-def add_left_char(c: Column, ch: str) -> Column:
-    return F.concat(F.lit(ch), c)
-
-
-def add_right_char(c: Column, ch: str) -> Column:
-    return F.concat(c, F.lit(ch))
-
-
-def use_default(c: Column, default: str) -> Column:
-    return F.when(c.isNull() | (F.trim(c) == ""), F.lit(default)).otherwise(c)
-
-
-def compose_key(*parts: Column) -> Column:
-    """Blocking-key chains are just expression composition
-    (`genkey/BlockingKeyHandler.java:70-101`)."""
-    return F.concat(*parts)
 
 
 # --- Phonetic blocking keys (AlgoBox metaphone/doublemetaphone/cologne,

@@ -21,41 +21,6 @@ def collapse_duplicate_chars(c: Column) -> Column:
     return F.regexp_replace(c, r"(.)\1+", "$1")
 
 
-def collapse_duplicate_of(c: Column, ch: str) -> Column:
-    """Collapse runs of one specific char (DuplicateCharEraser ctor arg)."""
-    import re as _re
-
-    esc = _re.escape(ch)
-    return F.regexp_replace(c, f"({esc})\\1+", "$1")
-
-
-def trim_whitespace(c: Column) -> Column:
-    """StringTrimmer: full Unicode-space trim (Java trim only cuts ≤ U+0020;
-    the reference also strips NBSP variants, `StringTrimmer.java:58-126`)."""
-    return F.regexp_replace(c, r"^[\s   ]+|[\s   ]+$", "")
-
-
-def trim_char(c: Column, ch: str) -> Column:
-    import re as _re
-
-    esc = _re.escape(ch)
-    return F.regexp_replace(c, f"^(?:{esc})+|(?:{esc})+$", "")
-
-
-def full_to_half_width(c: Column) -> Column:
-    """CharWidthConverter full→half for the ASCII range (offset 0xFEE0) +
-    ideographic space (`converters/character/CharWidthConverter.java:43-55`)."""
-    full = "".join(chr(cp) for cp in range(0xFF01, 0xFF5F)) + "　"
-    half = "".join(chr(cp - 0xFEE0) for cp in range(0xFF01, 0xFF5F)) + " "
-    return F.translate(c, full, half)
-
-
-def half_to_full_width(c: Column) -> Column:
-    full = "".join(chr(cp) for cp in range(0xFF01, 0xFF5F)) + "　"
-    half = "".join(chr(cp - 0xFEE0) for cp in range(0xFF01, 0xFF5F)) + " "
-    return F.translate(c, half, full)
-
-
 def nfkc_str(v: str | None) -> str | None:
     """Scalar NFKC (the per-row contract; exposed for oracles/tests)."""
     import unicodedata
@@ -70,11 +35,6 @@ def nfkc_normalize(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield s.map(nfkc_str)
 
 
-def title_case(c: Column) -> Column:
-    """StringHandler title case (`common/character/StringHandler.java`)."""
-    return F.initcap(c)
-
-
 def acronym(c: Column, sep: str = "") -> Column:
     """Acronym builder (`common/character/Acronym.java:31`): first char of
     each token, upper-cased."""
@@ -85,34 +45,6 @@ def acronym(c: Column, sep: str = "") -> Column:
 
 
 # --- unit conversions (converters/DurationConverter, DistanceConverter) ----
-
-_DISTANCE_TO_METERS = {
-    "mm": 0.001, "cm": 0.01, "dm": 0.1, "m": 1.0, "dam": 10.0, "hm": 100.0,
-    "km": 1000.0, "in": 0.0254, "ft": 0.3048, "yd": 0.9144, "mi": 1609.344,
-}
-
-_DURATION_TO_SECONDS = {
-    "ms": 0.001, "s": 1.0, "min": 60.0, "h": 3600.0, "day": 86400.0,
-    "week": 604800.0,
-}
-
-
-def convert_distance(c: Column, from_unit: str, to_unit: str) -> Column:
-    """DistanceConverter (`converters/DistanceConverter.java:36,68`)."""
-    factor = _DISTANCE_TO_METERS[from_unit] / _DISTANCE_TO_METERS[to_unit]
-    return c.cast("double") * F.lit(factor)
-
-
-def convert_duration(c: Column, from_unit: str, to_unit: str) -> Column:
-    """DurationConverter (`converters/DurationConverter.java:31,106`)."""
-    factor = _DURATION_TO_SECONDS[from_unit] / _DURATION_TO_SECONDS[to_unit]
-    return c.cast("double") * F.lit(factor)
-
-
-def reformat_date(c: Column, from_fmt: str, to_fmt: str) -> Column:
-    """DateCalendarConverter format path (`converters/DateCalendarConverter.
-    java:178`): parse with one pattern, format with another."""
-    return F.date_format(F.to_timestamp(c, from_fmt), to_fmt)
 
 
 def julian_day(c: Column) -> Column:

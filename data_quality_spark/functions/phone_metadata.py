@@ -2,8 +2,8 @@
 
 Reference: `PhoneNumberHandlerBase` wraps libphonenumber's offline metadata
 (`dataquality-phone/.../PhoneNumberHandlerBase.java:193-380` —
-getCountryCodeForRegion, getPhoneNumberType, getGeocoderDescriptionForNumber,
-getCarrierNameForNumber, plus the timezone mapper).  The full Google
+getPhoneNumberType, getGeocoderDescriptionForNumber, getCarrierNameForNumber,
+the country code, plus the timezone mapper).  The full Google
 metadata is tens of MB of compiled tables; this module re-expresses the
 functions over PUBLIC data subsets as broadcast literal maps (pure Spark
 expressions — no UDF, no join, no shuffle):
@@ -18,8 +18,8 @@ expressions — no UDF, no join, no shuffle):
 
 Carrier lookup (`getCarrierNameForNumber`) is NOT derivable from NANP
 numbers at all (number portability); the full-parity path goes through the
-`phonenumbers` PyPI port when installed (`emailphone.libphonenumber_validate`
-pattern) and otherwise returns null — documented, not faked.
+`phonenumbers` PyPI port when installed and otherwise returns null —
+documented, not faked.
 """
 
 from __future__ import annotations
@@ -427,15 +427,6 @@ COUNTRY_CODES: dict[int, tuple[str, str, str]] = {
     420: ("CZ", "Czechia", "Europe/Prague"),
     972: ("IL", "Israel", "Asia/Jerusalem"),
 }
-
-_REGION_TO_CODE = {region: code for code, (region, _n, _t) in COUNTRY_CODES.items()}
-_REGION_TO_CODE["CA"] = 1  # NANP shares +1
-
-
-def get_country_code_for_region(region: str) -> int | None:
-    """`getCountryCodeForRegion` analog (driver-side scalar)."""
-    return _REGION_TO_CODE.get(region.upper())
-
 
 def _nanp_area_code(c: Column) -> Column:
     """Area code of a valid NANP number, else null."""

@@ -48,46 +48,6 @@ def words(col: Column) -> Column:
     return F.filter(F.split(col, r"\s+"), lambda w: w != F.lit(""))
 
 
-def word_count(col: Column) -> Column:
-    """Number of whitespace-separated words."""
-    return F.size(words(col))
-
-
-def char_count(col: Column) -> Column:
-    """Code-point length (reference: TextLengthStatistics code-point count)."""
-    return F.length(col)
-
-
-def mean_word_length(col: Column) -> Column:
-    """Mean code-point length of words; null for empty texts."""
-    w = words(col)
-    total = F.aggregate(w, F.lit(0), lambda acc, x: acc + F.length(x))
-    return F.when(F.size(w) > 0, total / F.size(w))
-
-
-def symbol_ratio(col: Column) -> Column:
-    """Fraction of code points that are neither letter, digit nor whitespace."""
-    sym = F.length(F.regexp_replace(col, r"[\p{L}\p{N}\s]", ""))
-    return F.when(F.length(col) > 0, sym / F.length(col)).otherwise(F.lit(0.0))
-
-
-def stopword_count(col: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    """Number of words whose lower-case form is in the stop-word set."""
-    stop_arr = lit_array(stopwords, "string")
-    return F.size(F.filter(words(col), lambda w: F.array_contains(stop_arr, F.lower(w))))
-
-
-def stopword_fraction(col: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    wc = word_count(col)
-    return F.when(wc > 0, stopword_count(col, stopwords) / wc).otherwise(F.lit(0.0))
-
-
-def distinct_word_ratio(col: Column) -> Column:
-    """distinct words / words — low values indicate repetition spam."""
-    w = F.transform(words(col), lambda x: F.lower(x))
-    return F.when(F.size(w) > 0, F.size(F.array_distinct(w)) / F.size(w))
-
-
 def ngrams_from_words(w: Column, n: int) -> Column:
     """Array of word n-grams (space-joined) from a word-array column.
 
@@ -110,61 +70,15 @@ def ngrams_from_words(w: Column, n: int) -> Column:
     return F.when(cnt >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
-def word_ngrams(col: Column, n: int) -> Column:
-    """Array of lower-cased word n-grams of a text column (native expr)."""
-    w = F.transform(words(col), lambda x: F.lower(x))
-    return ngrams_from_words(w, n)
-
-
-def duplicate_ngram_fraction(col: Column, n: int) -> Column:
-    """1 - distinct n-grams / n-grams; 0.0 when fewer than n words.
-
-    The repetition-spam feature (Gopher 'duplicate n-gram fraction').
-    """
-    g = word_ngrams(col, n)
-    return F.when(
-        F.size(g) > 0, 1.0 - F.size(F.array_distinct(g)) / F.size(g)
-    ).otherwise(F.lit(0.0))
-
-
-def lines(col: Column) -> Column:
-    return F.split(col, r"\n")
-
-
-def line_count(col: Column) -> Column:
-    return F.size(lines(col))
-
-
-def max_line_length(col: Column) -> Column:
-    return F.array_max(F.transform(lines(col), lambda l: F.length(l)))
-
-
-def bullet_line_fraction(col: Column) -> Column:
-    """Fraction of lines starting with a bullet marker (-, *, •)."""
-    ls = lines(col)
-    bullet = F.size(F.filter(ls, lambda l: F.trim(l).rlike(r"^[-*•]")))
-    return F.when(F.size(ls) > 0, bullet / F.size(ls)).otherwise(F.lit(0.0))
-
-
-def ellipsis_line_fraction(col: Column) -> Column:
-    """Fraction of lines ending with an ellipsis ('...' or '…')."""
-    ls = lines(col)
-    ell = F.size(F.filter(ls, lambda l: l.rlike(r"(\.\.\.|…)\s*$")))
-    return F.when(F.size(ls) > 0, ell / F.size(ls)).otherwise(F.lit(0.0))
-
-
-# Scalar feature columns shared by the rule registry.  Two implementations
-# produce them identically:
-# - `with_text_features`: Catalyst expressions (used by the oracle-checked
-#   profiling queries — every value reproducible in DuckDB SQL);
-# - `compute_features_py`: the per-page Python kernel the fused Arrow UDF
-#   `analyze.analyze_text` runs (the pipeline hot path).  Spark's
-#   higher-order array functions are interpreted, ~µs per array element;
-#   thirteen features × hundreds of words per doc made the native rule
-#   stage the scaling bottleneck (it alone ran 3-5× slower than
-#   langid+ppl+scrub combined and scaled at 1.5×/4-cores vs their 2.5×).
-# Equality of the two implementations is pytest-asserted on the fixture
-# corpus (test_rules_feature_parity) and a fuzz corpus.
+# Scalar feature columns shared by the rule registry and the quality score.
+# `with_text_features` computes them as Catalyst expressions (the profiling
+# queries, whose values DuckDB SQL reproduces); the pipeline gets the same
+# values from `compute_features_py`, the per-page kernel inside the fused
+# Arrow UDF `analyze.analyze_text`, because Spark's higher-order array
+# functions are interpreted (~µs per array element) and thirteen features
+# over hundreds of words per page made the native stage the pipeline's
+# scaling bottleneck.  The two are kept equal by test_feature_parity and the
+# fuzz corpus.
 FEATURE_COLS: tuple[str, ...] = (
     "_nchars", "_nw", "_sum_wlen", "_n_stop", "_n_distinct",
     "_n_g2", "_n_g2_distinct", "_n_g3", "_n_g3_distinct",
@@ -173,10 +87,11 @@ FEATURE_COLS: tuple[str, ...] = (
 
 _CJK_CLASS = r"[\x{3040}-\x{30FF}\x{4E00}-\x{9FFF}\x{AC00}-\x{D7AF}]"
 
-def with_text_features(df, text_col: str = "text"):
-    """Attach the scalar text-feature columns (see FEATURE_COLS) as native
-    expressions (chained projections so each expensive array is built once)."""
-    c = F.col(text_col)
+def with_text_features(df):
+    """Attach the scalar text-feature columns (see FEATURE_COLS) of `text`
+    as native expressions (chained projections so each expensive array is
+    built once)."""
+    c = F.col("text")
     cjk_count = F.when(
         c.rlike(_CJK_CLASS),
         F.length(c) - F.length(F.regexp_replace(c, _CJK_CLASS, "")),
@@ -288,24 +203,3 @@ def compute_features_py(t: str | None) -> tuple:
         sum(map(bool, map(_RE_ELLIPSIS.search, lines))),
     )
 
-
-def cjk_ratio(col: Column) -> Column:
-    """Fraction of code points that are CJK ideographs / kana / hangul.
-
-    Word-based heuristics are meaningless for unsegmented scripts; rules use
-    this to switch to char-count bounds (same RE2-safe ranges as the
-    pattern profiler).
-    """
-    cjk = F.length(
-        F.regexp_replace(
-            col, r"[^\x{3040}-\x{30FF}\x{4E00}-\x{9FFF}\x{AC00}-\x{D7AF}]", ""
-        )
-    )
-    return F.when(F.length(col) > 0, cjk / F.length(col)).otherwise(F.lit(0.0))
-
-
-def alpha_word_fraction(col: Column) -> Column:
-    """Fraction of words containing at least one alphabetic character (C4 rule)."""
-    w = words(col)
-    alpha = F.size(F.filter(w, lambda x: x.rlike(r"\p{L}")))
-    return F.when(F.size(w) > 0, alpha / F.size(w)).otherwise(F.lit(0.0))

@@ -45,9 +45,7 @@ DATE_FORMATS: tuple[str, ...] = (
     "yyyy-MM-dd HH:mm:ss",
     "yyyy-MM-dd'T'HH:mm:ss",
 )
-TIME_FORMATS: tuple[str, ...] = ("HH:mm:ss", "HH:mm", "h:mm a")
 
-TYPE_ORDER: tuple[str, ...] = ("EMPTY", "BOOLEAN", "INTEGER", "DOUBLE", "DATE", "TIME", "STRING")
 
 # ---------------------------------------------------------------------------
 # Date/time pattern recognition table (format → validating regex).
@@ -551,9 +549,16 @@ DATETIME_GROUPS: tuple[tuple[str, tuple[tuple[str, str], ...]], ...] = tuple(
 )
 
 
+# Any character that is not whitespace, whitespace being Java's `\s`
+# spelled out: `F.trim` strips only U+0020, DuckDB `trim` strips U+0020 and
+# Unicode spaces such as U+00A0 but not tab or newline, and RE2's `\s` lacks
+# VT.  The one definition of "blank": `is_empty` and the DuckDB oracles use it.
+NON_BLANK_CHAR = r"[^ \t\n\x0B\f\r]"
+
+
 def is_empty(col: Column) -> Column:
     """Null or all-whitespace (TypeInferenceUtils.java:157-159)."""
-    return col.isNull() | (F.trim(col) == F.lit(""))
+    return col.isNull() | ~col.rlike(NON_BLANK_CHAR)
 
 
 def is_boolean(col: Column) -> Column:

@@ -15,9 +15,7 @@ from pyspark.sql.observation import Observation
 from .rules import RULE_NAMES
 
 
-def observe_rule_metrics(
-    df: DataFrame, prefix: str = "rule_", name: str = "dq_rule_metrics"
-) -> tuple[DataFrame, Observation]:
+def observe_rule_metrics(df: DataFrame, name: str = "dq_rule_metrics") -> tuple[DataFrame, Observation]:
     """Attach an Observation counting pass/fail per rule + keep/drop totals.
 
     Read `observation.get` AFTER an action has materialized the DataFrame.
@@ -27,7 +25,7 @@ def observe_rule_metrics(
     obs = Observation(name)
     aggs = [F.count(F.lit(1)).alias("rows_total")]
     for rule in RULE_NAMES:
-        aggs.append(F.sum(F.when(F.col(prefix + rule), 1).otherwise(0)).alias(f"{rule}_pass"))
+        aggs.append(F.sum(F.when(F.col("rule_" + rule), 1).otherwise(0)).alias(f"{rule}_pass"))
     if "keep" in df.columns:
         aggs.append(F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept_total"))
     return df.observe(obs, *aggs), obs

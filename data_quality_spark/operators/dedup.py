@@ -4,7 +4,7 @@ Four tiers, all deterministic and engine-agnostic (hashes derived from md5,
 which Spark and DuckDB/Python compute identically — no JVM-specific
 hash functions in anything the oracle must reproduce):
 
-- exact: hash-groupBy on normalized text (one shuffle of (hash, id) pairs
+- exact: md5 of `normalized_text`, counted distinct (one shuffle of hashes
   only — never shuffles the documents themselves);
 - n-gram Jaccard: shingle sets + pairwise intersection within candidate
   groups;
@@ -42,32 +42,6 @@ from pyspark.sql import functions as F
 def normalized_text(col: Column) -> Column:
     """Normalization for exact dedup: lower + collapse whitespace + trim."""
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-
-
-def exact_duplicate_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Groups of exact duplicates (normalized). Output: (text_hash,
-    group_size, min_id) for groups with >1 member; min_id is the canonical
-    survivor (deterministic)."""
-    h = F.md5(normalized_text(F.col(text_col))).alias("text_hash")
-    return (
-        df.select(h, F.col(id_col).alias("id"))
-        .groupBy("text_hash")
-        .agg(F.count(F.lit(1)).alias("group_size"), F.min("id").alias("min_id"))
-        .filter(F.col("group_size") > 1)
-    )
-
-
-def drop_exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Keep one row (min id) per normalized text.  Implemented as a
-    min-id-per-hash semi-join so only (hash, id) shuffles, not documents."""
-    h = F.md5(normalized_text(F.col(text_col)))
-    keep_ids = (
-        df.select(h.alias("text_hash"), F.col(id_col).alias("__id"))
-        .groupBy("text_hash")
-        .agg(F.min("__id").alias("__keep_id"))
-        .select(F.col("__keep_id").alias(id_col))
-    )
-    return df.join(keep_ids, on=id_col, how="inner")
 
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,7 @@ match cost (`genkey/BlockingKeyHandler.java:81`), and an in-memory
 match-or-merge loop per block (`matchmerge/mfb/MFB.java:113-147`).
 
 Spark re-expression:
-- matchers that have JVM built-ins (levenshtein, soundex, exact) are column
+- matchers that have JVM built-ins (levenshtein, q-grams) are column
   expressions; phonetic/Jaro family run in ONE Arrow pandas UDF per pair
   batch (pure-Python implementations — deterministic, no native deps);
 - blocking = `repartition(block_key)`-shaped self-join on the key;
@@ -33,25 +33,11 @@ from pyspark.sql.types import DoubleType
 # ---------------------------------------------------------------------------
 
 
-def exact_weight(a: Column, b: Column) -> Column:
-    """ExactMatcher (`attribute/ExactMatcher.java:21`)."""
-    return F.when(a == b, 1.0).otherwise(0.0)
-
-
-def exact_ignore_case_weight(a: Column, b: Column) -> Column:
-    return F.when(F.lower(a) == F.lower(b), 1.0).otherwise(0.0)
-
-
 def levenshtein_weight(a: Column, b: Column) -> Column:
     """LevenshteinMatcher: 1 - dist/maxLen (`attribute/LevenshteinMatcher.
     java:32-44`); both empty → 1.0."""
     mx = F.greatest(F.length(a), F.length(b))
     return F.when(mx == 0, 1.0).otherwise(1.0 - F.levenshtein(a, b) / mx)
-
-
-def soundex_weight(a: Column, b: Column) -> Column:
-    """SoundexMatcher: phonetic code equality (`attribute/SoundexMatcher.java:23`)."""
-    return F.when(F.soundex(a) == F.soundex(b), 1.0).otherwise(0.0)
 
 
 def qgram_weight(a: Column, b: Column, q: int = 2) -> Column:
@@ -187,23 +173,6 @@ _PY_MATCHERS = {
 _NULL_SAFE = {"metaphone", "double_metaphone", "soundex_fr"}
 
 
-def register_matcher(name: str, fn, null_safe: bool = False) -> None:
-    """Pluggable CUSTOM matcher registry (the reference's
-    `AttributeMatcherFactory.createMatcher(CUSTOM, className)` surface,
-    `record/linkage/attribute/AttributeMatcherFactory.java`): any
-    `fn(str, str) -> float in [0,1]` becomes addressable by name in
-    `py_matcher_weight`, `tokenized_weight` (as a base matcher), and
-    `mfb_match_merge` attr configs.  `null_safe=True` hands the fn raw
-    Nones (it implements its own null semantics); otherwise null inputs
-    short-circuit to 0.0."""
-    if not callable(fn):
-        raise TypeError("matcher must be callable")
-    _PY_MATCHERS[name] = fn
-    MFB_MATCHERS[name] = fn
-    if null_safe:
-        _NULL_SAFE.add(name)
-
-
 def py_matcher_weight(kind: str, a: Column, b: Column) -> Column:
     """Arrow-batched pairwise weight for the Python-side matchers."""
     fn = _PY_MATCHERS[kind]
@@ -225,55 +194,6 @@ def py_matcher_weight(kind: str, a: Column, b: Column) -> Column:
             yield pd.Series(out, dtype="float64")
 
     return _w(a, b)
-
-
-def _sorted_tokens(c: Column) -> Column:
-    return F.array_join(
-        F.array_sort(F.filter(F.split(c, r"\s+"), lambda x: x != F.lit(""))), " "
-    )
-
-
-def anyorder_weight(a: Column, b: Column, base: str = "levenshtein") -> Column:
-    """Tokenized ANYORDER mode approximation: compare sorted-token forms
-    (`AbstractAttributeMatcher.java:100-119` runs Hungarian assignment over
-    token pairs; sorting is the deterministic O(n log n) approximation that
-    agrees whenever tokens match exactly — documented divergence for
-    partial-token matches)."""
-    sa, sb = _sorted_tokens(a), _sorted_tokens(b)
-    if base == "exact":
-        return F.when(sa == sb, 1.0).otherwise(0.0)
-    return levenshtein_weight(sa, sb)
-
-
-# ---------------------------------------------------------------------------
-# Record-level matcher (SimpleVSR semantics)
-# ---------------------------------------------------------------------------
-
-
-def vsr_record_weight(
-    weights: list[tuple[Column, float]],
-    blocked: list[tuple[Column, float]] | None = None,
-) -> Column:
-    """Weighted sum of attribute weights, with blocked-attribute
-    short-circuit: if any blocked attribute scores below its threshold the
-    record weight is 0 (`SimpleVSRRecordMatcher.java:37-65`)."""
-    total = sum(w for _c, w in weights)
-    s = None
-    for c, w in weights:
-        term = c * F.lit(w / total)
-        s = term if s is None else s + term
-    if blocked:
-        gate = F.lit(True)
-        for c, thr in blocked:
-            gate = gate & (c >= F.lit(thr))
-        return F.when(gate, s).otherwise(F.lit(0.0))
-    return s
-
-
-def combined_record_weight(*rule_weights: Column) -> Column:
-    """CombinedRecordMatcher: max over rules (`record/CombinedRecordMatcher.
-    java:45-52`)."""
-    return F.greatest(*rule_weights)
 
 
 # ---------------------------------------------------------------------------
@@ -902,8 +822,7 @@ _TOKEN_MODES = {"anyorder": _anyorder, "sameplace": _sameplace, "sameorder": _sa
 
 def tokenized_weight(kind: str, mode: str, a: Column, b: Column) -> Column:
     """Exact tokenized matching weight (ANYORDER = true Hungarian
-    assignment — supersedes the round-1 sorted-token approximation in
-    `anyorder_weight`, which remains as the cheap native-expression path).
+    assignment over token pairs, `AbstractAttributeMatcher.java:100-119`).
     `kind` picks the base matcher from MFB_MATCHERS; Arrow-batched."""
     base = MFB_MATCHERS[kind]
     mode_fn = _TOKEN_MODES[mode]

@@ -17,7 +17,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -112,18 +111,6 @@ def extract_media_features(df: DataFrame, use_real_decoder: bool = False) -> Dat
             yield pd.DataFrame(out)
 
     return df.mapInPandas(gen, schema=FEATURE_SCHEMA)
-
-
-def media_dedup_by_hash(df: DataFrame) -> DataFrame:
-    """Exact media dedup on content hash — native sha2 over the binary
-    column, groupBy on the (tiny) digest only."""
-    h = F.sha2(F.col("payload"), 256).alias("digest")
-    return (
-        df.select(h, F.col("media_id"))
-        .groupBy("digest")
-        .agg(F.count(F.lit(1)).alias("copies"), F.min("media_id").alias("canonical_id"))
-        .filter(F.col("copies") > 1)
-    )
 
 
 _SYNTH_MAGICS = [b"\xff\xd8\xff\xe0", b"\x89PNG\r\n\x1a\n", b"RIFF1234WAVE", b"ID3\x04"]

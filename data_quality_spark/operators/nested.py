@@ -158,70 +158,6 @@ def nested_quality(
     )
 
 
-def nested_type_discovery(df: DataFrame, column: str) -> DataFrame:
-    """Per-leaf type-vote counts keyed by dotted path — the
-    `AvroDataTypeDiscoveryAnalyzer` shadow-record analog
-    (`statistics/type/AvroDataTypeDiscoveryAnalyzer.java:100-153`): string
-    leaves are classified by the type-inference lattice; typed leaves report
-    their physical type (Avro logical-type honoring analog).
-
-    Output: (path, data_type, cnt).
-    """
-    dtype = dict(zip(df.columns, [f.dataType for f in df.schema.fields]))[column]
-    pairs: list[Column] = []
-
-    def add(col: Column, dt: T.DataType, path: str) -> None:
-        if isinstance(dt, T.StructType):
-            for f in dt.fields:
-                add(col.getField(f.name), f.dataType, f"{path}.{f.name}")
-        elif isinstance(dt, T.ArrayType):
-            if isinstance(dt.elementType, T.StringType):
-                pairs.append(
-                    F.struct(
-                        F.lit(path).alias("path"),
-                        F.transform(col, lambda e: ti.classify(e)).alias("types"),
-                    )
-                )
-            else:
-                pairs.append(
-                    F.struct(
-                        F.lit(path).alias("path"),
-                        F.transform(
-                            col, lambda e: F.lit(dt.elementType.simpleString().upper())
-                        ).alias("types"),
-                    )
-                )
-        elif isinstance(dt, T.MapType):
-            add_col = F.map_values(col)
-            add(add_col, T.ArrayType(dt.valueType), path)
-        elif isinstance(dt, T.StringType):
-            pairs.append(
-                F.struct(
-                    F.lit(path).alias("path"),
-                    F.array(ti.classify(col)).alias("types"),
-                )
-            )
-        else:
-            pairs.append(
-                F.struct(
-                    F.lit(path).alias("path"),
-                    F.array(
-                        F.when(col.isNull(), F.lit("EMPTY")).otherwise(
-                            F.lit(dt.simpleString().upper())
-                        )
-                    ).alias("types"),
-                )
-            )
-
-    add(F.col(column), dtype, column)
-    exploded = df.select(F.explode(F.array(*pairs)).alias("p")).select(
-        F.col("p.path").alias("path"), F.explode("p.types").alias("data_type")
-    )
-    return exploded.groupBy("path", "data_type").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-
-
 def json_quality(
     df: DataFrame, json_col: str, schema: str | T.DataType, expected: dict[str, str] | None = None
 ) -> DataFrame:

@@ -1,5 +1,5 @@
-"""Column profiling operators: type voting, pattern frequency, cardinality,
-numeric summary, histogram, quantiles, text length, top-k frequency.
+"""Column profiling operators: type voting, pattern frequency, top-k
+frequency, histogram, quantiles, and the composed whole-table profile.
 
 Each mirrors one reference analyzer (SURVEY.md §2.3/2.4) as a single
 DataFrame aggregation — partial aggregation (map-side combine) replaces the
@@ -149,36 +149,6 @@ def word_pattern_frequency(df: DataFrame, column: str) -> DataFrame:
     )
 
 
-def datetime_pattern_expr(col, patterns: tuple[tuple[str, str], ...] | None = None):
-    """Matched date/time pattern per value (DateTimePatternRecognizer,
-    `statistics/frequency/recognition/DateTimePatternRecognizer.java:47-63`):
-    REGEX-table recognition exactly like the reference's
-    SystemDateTimePatternManager (format → validating regex, first match
-    wins; null when none).  Every test is a codegen'd rlike; the cheap
-    prefilter gates the cascade (SystemDateTimePatternManager.java:94-95
-    device).  Default table = the full DATE_REGEXES/TIME_REGEXES
-    recognition table (181 date + 47 time patterns as of round 5,
-    `functions/typeinfer.py`)."""
-    if patterns is not None:
-        cascade = F.when(F.lit(False), F.lit(None).cast("string"))
-        for fmt, rx in patterns:
-            cascade = cascade.when(col.rlike(rx), F.lit(fmt))
-        return cascade.otherwise(F.lit(None).cast("string"))
-    # Structural dispatch (DateRegexesGrouped.txt device): one cheap gate
-    # regex picks the family, then only that family's patterns run —
-    # ~1 gate + ~5 regexes per value instead of the full 40-entry table.
-    # Gates are pairwise exclusive, so this is exactly the flat first-match
-    # cascade the DuckDB oracle executes.
-    null_s = F.lit(None).cast("string")
-    dispatch = F.when(F.lit(False), null_s)
-    for gate, fam in ti.DATETIME_GROUPS:
-        sub = F.when(F.lit(False), null_s)
-        for fmt, rx in fam:
-            sub = sub.when(col.rlike(rx), F.lit(fmt))
-        dispatch = dispatch.when(col.rlike(gate), sub.otherwise(null_s))
-    return dispatch.otherwise(null_s)
-
-
 def _sql_escape(x: str) -> str:
     """Escape a regex/name for embedding in a Spark SQL single-quoted
     literal (backslashes and quotes are escape-processed by the parser)."""
@@ -186,18 +156,23 @@ def _sql_escape(x: str) -> str:
 
 
 def datetime_pattern_sql_case(col_name: str) -> str:
-    """The SAME two-level gate dispatch as `datetime_pattern_expr`, as one
-    Spark-SQL CASE string over a column name.  Semantically identical
-    (generated from the same DATETIME_GROUPS table) but far cheaper on
-    the driver: building the ~200-branch cascade with chained `when()`
-    Columns cost ~1.1 s of py4j round-trips plus ~4 s of analysis and
-    doomed >64 KB codegen attempts PER PLAN (janino failures are not
-    cached, so every execution re-paid the compile-and-fall-back); the
-    parsed CASE analyzes and codegens clean — measured 6.35 s → 0.68 s
-    warm on the sf0.01 fixture (round 5).  Execution itself was never
-    the cost (0.2 s on a cached plan): this removes a fixed driver-side
-    constant, which is also why it matters for the BENCH numbers but
-    would amortize away at real scale anyway."""
+    """Matched date/time pattern per value (DateTimePatternRecognizer,
+    `statistics/frequency/recognition/DateTimePatternRecognizer.java:47-63`)
+    as one Spark-SQL CASE string over a column name: REGEX-table
+    recognition like the reference's SystemDateTimePatternManager (format
+    → validating regex, first match wins; NULL when none) over the full
+    DATE_REGEXES/TIME_REGEXES table (`functions/typeinfer.py`).
+
+    Structural dispatch (DateRegexesGrouped.txt device): one cheap gate
+    regex picks the family, then only that family's patterns run.  Gates
+    are pairwise exclusive, so this is exactly the flat first-match
+    cascade the DuckDB oracle executes.  Parsed SQL rather than chained
+    `when()` Columns, which are far costlier on the driver: building the
+    ~200-branch cascade that way cost ~1.1 s of py4j round-trips plus
+    ~4 s of analysis and doomed >64 KB codegen attempts PER PLAN (janino
+    failures are not cached, so every execution re-paid the
+    compile-and-fall-back); the parsed CASE analyzes and codegens clean —
+    measured 6.35 s → 0.68 s warm on the sf0.01 fixture (round 5)."""
     outer = []
     for gate, fam in ti.DATETIME_GROUPS:
         inner = " ".join(
@@ -245,41 +220,6 @@ def value_frequency_topk(df: DataFrame, column: str, k: int) -> DataFrame:
     """
     counts = df.groupBy(F.col(column).alias("value")).agg(F.count(F.lit(1)).alias("cnt"))
     return counts.orderBy(F.desc("cnt"), F.asc("value")).limit(k)
-
-
-# ---------------------------------------------------------------------------
-# Cardinality (exact + HLL)
-# ---------------------------------------------------------------------------
-
-
-def cardinality(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Exact distinct + HLL approx (rsd=0.2 — the reference default,
-    CardinalityHLLAnalyzer.java:36) per column, one aggregate."""
-    aggs = []
-    for c in columns:
-        aggs.append(F.countDistinct(F.col(c)).alias(f"{c}_distinct"))
-        aggs.append(F.approx_count_distinct(F.col(c), rsd=0.2).alias(f"{c}_approx_distinct"))
-    return df.agg(*aggs)
-
-
-# ---------------------------------------------------------------------------
-# Numeric summary (SummaryAnalyzer) — only numeric-valid values contribute
-# ---------------------------------------------------------------------------
-
-
-def summary_stats(df: DataFrame, column: str) -> DataFrame:
-    """min/max/mean/variance/sum over values valid as DOUBLE
-    (SummaryAnalyzer.java:46-70: non-numeric values are skipped)."""
-    s = F.col(column).cast("string")
-    v = F.when(ti.is_integer(s) | ti.is_double(s), F.col(column).cast("double"))
-    return df.agg(
-        F.min(v).alias("min_val"),
-        F.max(v).alias("max_val"),
-        F.avg(v).alias("mean_val"),
-        F.var_samp(v).alias("var_val"),
-        F.sum(v).alias("sum_val"),
-        F.count(v).alias("count_val"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -378,27 +318,3 @@ def profile_table(
         ]
     )
     return wide.select(F.explode(stacked).alias("p")).select("p.*")
-
-
-# ---------------------------------------------------------------------------
-# Text length (TextLengthAnalyzer — code-point semantics, with/without blanks)
-# ---------------------------------------------------------------------------
-
-
-def text_length_stats(df: DataFrame, column: str) -> DataFrame:
-    """min/max/sum/avg code-point length, ignoring-blank variants included
-    (TextLengthStatistics.java:51-109)."""
-    c = F.col(column).cast("string")
-    ln = F.length(c)
-    blank = ti.is_empty(c)
-    ln_nb = F.when(~blank, ln)
-    return df.agg(
-        F.min(ln).alias("min_len"),
-        F.max(ln).alias("max_len"),
-        F.sum(ln).alias("sum_len"),
-        F.avg(ln).alias("avg_len"),
-        F.min(ln_nb).alias("min_len_nonblank"),
-        F.max(ln_nb).alias("max_len_nonblank"),
-        F.avg(ln_nb).alias("avg_len_nonblank"),
-        F.count(F.lit(1)).alias("row_cnt"),
-    )

@@ -23,12 +23,6 @@ def hash_uniform(key: Column, seed: int = 42) -> Column:
     )
 
 
-def sample_fraction(df: DataFrame, fraction: float, key_col: str, seed: int = 42) -> DataFrame:
-    """Bernoulli sample by hash-uniform — reproducible across runs/engines
-    (unlike `df.sample`, which depends on partition layout)."""
-    return df.filter(hash_uniform(F.col(key_col), seed) < fraction)
-
-
 def reservoir_k(df: DataFrame, k: int, key_col: str, seed: int = 42) -> DataFrame:
     """Exact-k uniform sample: smallest k hash-uniforms.
 
@@ -59,14 +53,6 @@ def weighted_reservoir_k(
         .limit(k)
         .drop("__s")
     )
-
-
-def stratified_sample(
-    df: DataFrame, strata_col: str, fraction: float, key_col: str, seed: int = 42
-) -> DataFrame:
-    """Equal-rate sample within every stratum (hash-uniform is independent
-    of the stratum, so rates hold per group without a shuffle)."""
-    return sample_fraction(df, fraction, key_col, seed)
 
 
 def stratified_reservoir_k(
@@ -122,9 +108,3 @@ def stratified_reservoir_k(
             F.col("_rn").cast("bigint").alias("rank_in_stratum"),
         )
     )
-
-
-def top_n(df: DataFrame, n: int, order_col: str, ascending: bool = True) -> DataFrame:
-    """DataSamplingBridge TopN mode (`sampling/DataSamplingBridge.java:76-88`)."""
-    col = F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    return df.orderBy(col).limit(n)

@@ -88,20 +88,6 @@ def standardize_fuzzy(
     return joined.withColumn(out_col, F.coalesce(F.col("__std"), F.col(column))).drop("__std")
 
 
-def standardize_record(
-    df: DataFrame, mappings: dict[str, dict[str, list[str]]]
-) -> DataFrame:
-    """Multi-column standardization (SynonymRecordSearcher analog): apply
-    each column's dictionary in one projection."""
-    cols = []
-    for c in df.columns:
-        if c in mappings:
-            cols.append(standardize_expr(F.col(c), mappings[c]).alias(c))
-        else:
-            cols.append(F.col(c))
-    return df.select(*cols)
-
-
 # --- Lucene search-mode parity (SynonymIndexSearcher modes) -----------------
 #
 # The reference exposes six search modes over the synonym index
@@ -114,15 +100,6 @@ def standardize_record(
 # Lucene's BM25 rank is index-statistics-dependent and intentionally NOT
 # replicated — hit SETS mirror SynonymIndexSearcherTest, ordering is
 # coverage-then-docid).
-
-SYNONYM_SEARCH_MODES = (
-    "MATCH_ANY",
-    "MATCH_PARTIAL",
-    "MATCH_ALL",
-    "MATCH_EXACT",
-    "MATCH_ANY_FUZZY",
-    "MATCH_ALL_FUZZY",
-)
 
 
 def _an_tokens(s: str) -> list[str]:

@@ -1,5 +1,6 @@
-"""Survivorship (golden record): the reference's Drools rule functions
-(`survivorship/model/RuleDefinition.java:193-221`) as aggregate expressions.
+"""Survivorship (golden record): the reference's Drools rule functions that
+the queries use (`survivorship/model/RuleDefinition.java:193-221`) as
+aggregate expressions.
 
 No rule engine: every rule is a deterministic aggregate, composed per
 attribute in ONE groupBy.agg — conflict resolution is the aggregate's own
@@ -30,27 +31,6 @@ def longest(c: Column) -> Column:
     )
 
 
-def shortest(c: Column) -> Column:
-    return F.substring(
-        F.min(F.concat(F.lpad(F.length(c).cast("string"), 9, "0"), c)), 10, 1_000_000
-    )
-
-
-def most_recent(c: Column, ts: Column) -> Column:
-    """MostRecent: value at max timestamp; tie → greatest value."""
-    return F.max(F.struct(ts.alias("t"), c.alias("v")))["v"]
-
-
-def most_ancient(c: Column, ts: Column) -> Column:
-    return F.min(F.struct(ts.alias("t"), c.alias("v")))["v"]
-
-
-def most_common(c: Column) -> Column:
-    """MostCommon via built-in `mode()` — ties are engine-resolved; use
-    `most_common_deterministic` when a stable tiebreak is required."""
-    return F.mode(c)
-
-
 def most_common_deterministic(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
     """Exact MostCommon with greatest-value tiebreak (deterministic): two
     aggregations (value counts → argmax via struct max), both
@@ -58,67 +38,4 @@ def most_common_deterministic(df: DataFrame, group_cols: list[str], value_col: s
     counts = df.groupBy(*group_cols, value_col).agg(F.count(F.lit(1)).alias("cnt"))
     return counts.groupBy(*group_cols).agg(
         F.max(F.struct(F.col("cnt"), F.col(value_col).alias("v")))["v"].alias("survivor")
-    )
-
-
-def most_complete_row(df: DataFrame, group_cols: list[str], value_cols: list[str]) -> DataFrame:
-    """MostComplete: the row with the most non-null attributes survives
-    wholesale; tie → smallest first value (`action/MostCompleteAction`)."""
-    completeness = None
-    for c in value_cols:
-        term = F.when(F.col(c).isNotNull(), 1).otherwise(0)
-        completeness = term if completeness is None else completeness + term
-    ranked = df.withColumn("_complete", completeness)
-    agg = ranked.groupBy(*group_cols).agg(
-        F.max(
-            F.struct(
-                F.col("_complete"),
-                *[F.col(c).alias(f"v_{c}") for c in value_cols],
-            )
-        ).alias("best")
-    )
-    return agg.select(
-        *group_cols, *[F.col(f"best.v_{c}").alias(c) for c in value_cols]
-    )
-
-
-def fill_empty(c: Column, default: str) -> Column:
-    """FillEmpty: first non-empty value else default."""
-    non_empty = F.when(c.isNotNull() & (F.trim(c) != ""), c)
-    return F.coalesce(F.max(non_empty), F.lit(default))
-
-
-def exclude_values(c: Column, excluded: list[str]) -> Column:
-    """ExcludeValues: max over values not in the exclusion list."""
-    return F.max(F.when(~c.isin(*excluded), c))
-
-
-def match_regex(c: Column, pattern: str) -> Column:
-    """MatchRegex: max over values matching the pattern."""
-    return F.max(F.when(c.rlike(pattern), c))
-
-
-def prefer_true(c: Column) -> Column:
-    """PreferTrue (MFBRecordMerger boolean rules)."""
-    return F.max(c.cast("boolean"))
-
-
-def prefer_false(c: Column) -> Column:
-    return F.min(c.cast("boolean"))
-
-
-def concatenate(c: Column, sep: str = ",") -> Column:
-    """CONCATENATE merge: sorted-distinct join (deterministic, unlike the
-    reference's encounter-order concat — documented divergence)."""
-    return F.array_join(F.array_sort(F.collect_set(c)), sep)
-
-
-def survive(
-    df: DataFrame,
-    group_cols: list[str],
-    rules: dict[str, Column],
-) -> DataFrame:
-    """One groupBy applying a dict of alias → aggregate-rule column."""
-    return df.groupBy(*group_cols).agg(
-        *[col.alias(name) for name, col in rules.items()]
     )

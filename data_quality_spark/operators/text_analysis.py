@@ -17,31 +17,29 @@ from ..functions import textstats as ts
 BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0B\f\r]+"
 
 
-def whitespace_token_count(col: Column) -> Column:
-    return ts.word_count(col)
-
-
 def bpe_token_count(col: Column) -> Column:
     """Count of BPE-style pre-tokens via regexp_count (JVM, codegen'd) —
     the cheap `len(tokenizer(text))` estimator used for token budgeting."""
     return F.regexp_count(col, F.lit(BPE_TOKEN_PATTERN))
 
 
-def quality_score(col: Column) -> Column:
+def quality_score() -> Column:
     """Composite [0,1] prose-quality score: mean of five bounded signals
     (stopword density, distinct-word ratio, alpha-word ratio, symbol
-    cleanliness, length sweet-spot).  Monotone, deterministic, rule-free —
-    the scalar companion to the boolean rule registry."""
-    w = ts.words(col)
-    nw = F.size(w)
-    stop_frac = ts.stopword_fraction(col)
+    cleanliness, length sweet-spot) over the `ts.with_text_features`
+    columns.  Monotone, deterministic, rule-free — the scalar companion to
+    the boolean rule registry.  NULL for NULL text (`_nchars` is NULL
+    exactly then)."""
+    nw, nchars = F.col("_nw"), F.col("_nchars")
+    stop_frac = F.when(nw > 0, F.col("_n_stop") / nw).otherwise(F.lit(0.0))
     s1 = F.least(stop_frac * 2.5, F.lit(1.0))                      # stopword density
-    s2 = ts.distinct_word_ratio(col)                               # vocabulary spread
-    s3 = ts.alpha_word_fraction(col)                               # real words
-    s4 = F.lit(1.0) - F.least(ts.symbol_ratio(col) * 3.0, F.lit(1.0))  # cleanliness
+    s2 = F.when(nw > 0, F.col("_n_distinct") / nw)                 # vocabulary spread
+    s3 = F.when(nw > 0, F.col("_n_alpha_w") / nw).otherwise(F.lit(0.0))  # real words
+    sym = F.when(nchars > 0, F.col("_n_sym") / nchars).otherwise(F.lit(0.0))
+    s4 = F.lit(1.0) - F.least(sym * 3.0, F.lit(1.0))               # cleanliness
     s5 = F.when((nw >= 50) & (nw <= 5000), 1.0).when(nw > 0, 0.5).otherwise(0.0)
     score = (s1 + F.coalesce(s2, F.lit(0.0)) + s3 + s4 + s5) / 5.0
-    return F.when(col.isNull(), None).otherwise(score)
+    return F.when(nchars.isNull(), None).otherwise(score)
 
 
 def char_shingle_fingerprint(
@@ -121,17 +119,16 @@ def benchmark_contamination(
     )
 
 
-def doc_signature_table(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-doc signature row: token counts, quality score, fingerprint.
-    One projection — all signals share one scan."""
-    c = F.col(text_col)
-    return df.select(
-        F.col(id_col),
-        whitespace_token_count(c).cast("long").alias("ws_tokens"),
+def doc_signature_table(df: DataFrame) -> DataFrame:
+    """Per-doc signature row of `documents(doc_id, text)`: token counts,
+    quality score, fingerprint.  One projection — all signals share one
+    scan."""
+    c = F.col("text")
+    return ts.with_text_features(df).select(
+        F.col("doc_id"),
+        F.col("_nw").cast("long").alias("ws_tokens"),
         bpe_token_count(c).cast("long").alias("bpe_tokens"),
-        quality_score(c).alias("quality"),
+        quality_score().alias("quality"),
         char_shingle_fingerprint(c).alias("fingerprint"),
     )
 
@@ -165,27 +162,18 @@ def dup_line_metrics(col: Column, id_expr: Column) -> list[Column]:
     ]
 
 
-def top_ngram_stats(
-    df: DataFrame, text_col: str, id_col: str, n: int
-) -> DataFrame:
-    """Most frequent word n-gram per document plus the character mass it
-    covers (the Gopher `top-n-gram character fraction` repetition
-    signal) — single-n convenience wrapper over
-    :func:`top_ngram_stats_multi` (one implementation owns the
-    tiebreak/no-NULL conventions)."""
-    return top_ngram_stats_multi(df, text_col, id_col, (n,))
-
-
 def top_ngram_stats_multi(
     df: DataFrame, text_col: str, id_col: str, ns: tuple[int, ...] = (2, 3)
 ) -> DataFrame:
-    """Fused multi-n variant of :func:`top_ngram_stats`: tags each gram
-    with its n in ONE per-row array, so all n values share a single
-    explode, a single count aggregation, and a single rank window —
-    the per-n formulation joined per n costs ~3x the exchanges (its
-    branch subtrees are multi-consumer diamonds that recompute; measured
-    12 exchanges -> 3).  `explode_outer` keeps gram-less docs alive, so
-    no second corpus pass is needed for the base table."""
+    """Most frequent word n-gram per document for each n in `ns`, plus the
+    character mass it covers (the Gopher `top-n-gram character fraction`
+    repetition signal).  Each gram is tagged with its n in ONE per-row
+    array, so all n values share a single explode, a single count
+    aggregation, and a single rank window — the per-n formulation joined
+    per n costs ~3x the exchanges (its branch subtrees are multi-consumer
+    diamonds that recompute; measured 12 exchanges -> 3).  `explode_outer`
+    keeps gram-less docs alive, so no second corpus pass is needed for the
+    base table."""
     from pyspark.sql.window import Window
 
     from ..functions.textstats import ngrams_from_words

@@ -18,10 +18,10 @@ Scale notes (10^12 pages):
   ride the scan, no shuffle.
 - `url_duplicate_groups` shuffles `(canonical_key, id)` pairs only
   (partial-agg combine applies); page payloads never move.
-- the canonical key is also the right PRE-shuffle dedup key for
-  `drop_exact_duplicates`-style keep-first semantics, and the
-  `registered_domain` output is the salting domain key `skew.py`
-  expects (a handful of giant hosts dominate real crawls).
+- the canonical key is also the right PRE-shuffle key for keep-first
+  exact dedup, and the `registered_domain` output is the grouping key
+  `skew.salted_groupby_count` salts (a handful of giant hosts dominate
+  real crawls).
 """
 
 from __future__ import annotations

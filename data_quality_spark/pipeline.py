@@ -19,17 +19,17 @@ from .analyze import with_analysis
 from .session import get_spark
 
 
-def apply_quality_pipeline(pages: DataFrame, text_col: str = "text") -> DataFrame:
+def apply_quality_pipeline(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → + rule_*, lang_detected, ppl,
     scrubbed_text, keep, reasons.
 
     Column-pruning note: `html` is never referenced, so the parquet scan
     never reads it (verified via .explain ReadSchema) — critical at 100 TB.
     """
-    df = with_analysis(pages, text_col)          # ONE Arrow pass: features+lang+ppl
-    df = rules.attach_rules(df, text_col=text_col)
+    df = with_analysis(pages)          # ONE Arrow pass: features+lang+ppl
+    df = rules.attach_rules(df)
     df = df.drop("lang_conf")
-    df = df.withColumn("scrubbed_text", scrub.scrub_expr(F.col(text_col)))
+    df = df.withColumn("scrubbed_text", scrub.scrub_expr(F.col("text")))
     df = decide.with_decision(df)
     return df
 

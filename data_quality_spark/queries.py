@@ -14,6 +14,7 @@ Conventions for oracle parity (the driver hash-compares values):
 from __future__ import annotations
 
 import os
+from types import ModuleType
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,8 +48,8 @@ def _register(name: str, oracle: str | None = None):
     return deco
 
 
-def _pinned_sql(name: str) -> str | None:
-    """Pinned VALUES oracle by constant name, or None while it hasn't been
+def _pinned_sql(get: Callable[[ModuleType], str]) -> str | None:
+    """Pinned VALUES oracle `get(pinned_oracles)`, or None while it hasn't been
     generated yet — scripts/pin_oracles.py imports QUERIES to produce the
     pins, so a missing constant must degrade to rows-only, not ImportError.
     NOTE the pins are sf0.01 snapshots (the driver gate's scale): a gate
@@ -56,8 +57,8 @@ def _pinned_sql(name: str) -> str | None:
     try:
         from . import pinned_oracles
 
-        return getattr(pinned_oracles, name, None)
-    except ImportError:
+        return get(pinned_oracles)
+    except (ImportError, AttributeError):
         return None
 
 
@@ -111,7 +112,7 @@ _SQL_STOPLIST = "[" + ", ".join(f"'{w}'" for w in ts.STOPWORDS) + "]"
 )
 def doc_textstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read_wide(spark, sf_dir, "documents")
-    feat = ts.with_text_features(docs, "text")
+    feat = ts.with_text_features(docs)
     return feat.select(
         "doc_id",
         F.col("_nchars").cast("long").alias("n_chars"),
@@ -155,7 +156,7 @@ def doc_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-expressible subset of the rule registry over `documents`
     (the full registry incl. CJK gating runs in the pipeline query)."""
     docs = _read_wide(spark, sf_dir, "documents")
-    feat = ts.with_text_features(docs, "text")
+    feat = ts.with_text_features(docs)
     nw, nchars = F.col("_nw"), F.col("_nchars")
     mwl = F.col("_sum_wlen") / nw
     ng2, dg2 = F.col("_n_g2"), F.col("_n_g2_distinct")
@@ -187,7 +188,7 @@ def doc_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_rule_hit_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ValueQualityStatistics-style accounting: one partial+final aggregate."""
     docs = _read_wide(spark, sf_dir, "documents")
-    feat = ts.with_text_features(docs, "text")
+    feat = ts.with_text_features(docs)
     nw = F.col("_nw")
     return feat.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -205,9 +206,15 @@ def doc_rule_hit_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Type inference / value quality (DataTypeAnalyzer / ValueQualityAnalyzer)
 # ---------------------------------------------------------------------------
 
+
+def _sql_empty(v: str) -> str:
+    """DuckDB twin of `ti.is_empty` over the SQL expression `v`."""
+    return f"({v} IS NULL OR NOT regexp_matches({v}, '{ti.NON_BLANK_CHAR}'))"
+
+
 _SQL_CLASSIFY = """
     CASE
-      WHEN v IS NULL OR trim(v) = '' THEN 'EMPTY'
+      WHEN """ + _sql_empty("v") + """ THEN 'EMPTY'
       WHEN regexp_matches(v, '^(?i)(true|false)$') THEN 'BOOLEAN'
       WHEN regexp_matches(v, '^[-+－＋]?[0-9０-９]+$') THEN 'INTEGER'
       WHEN regexp_matches(v, '^[-+－＋]?(([0-9０-９]+|[0-9]{1,3}(,[0-9]{3})+|[0-9]{1,3}(\\.[0-9]{3})+|[0-9]{1,3}( [0-9]{3})+)([.,][0-9０-９]+)?)([eE][-+]?[0-9]+)?%?$') THEN 'DOUBLE'
@@ -242,17 +249,17 @@ def type_profile_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "value_quality_customer",
-    """
+    f"""
     WITH stacked AS (
       SELECT 'c_custkey' AS column_name, CAST(c_custkey AS VARCHAR) AS v FROM customer
       UNION ALL
       SELECT 'c_name', c_name FROM customer
     )
     SELECT column_name,
-      CAST(sum(CASE WHEN v IS NULL OR trim(v) = '' THEN 1 ELSE 0 END) AS BIGINT) AS empty_cnt,
-      CAST(sum(CASE WHEN NOT (v IS NULL OR trim(v) = '')
+      CAST(sum(CASE WHEN {_sql_empty("v")} THEN 1 ELSE 0 END) AS BIGINT) AS empty_cnt,
+      CAST(sum(CASE WHEN NOT {_sql_empty("v")}
                      AND regexp_matches(v, '^[-+－＋]?[0-9０-９]+$') THEN 1 ELSE 0 END) AS BIGINT) AS valid_cnt,
-      CAST(sum(CASE WHEN NOT (v IS NULL OR trim(v) = '')
+      CAST(sum(CASE WHEN NOT {_sql_empty("v")}
                      AND NOT regexp_matches(v, '^[-+－＋]?[0-9０-９]+$') THEN 1 ELSE 0 END) AS BIGINT) AS invalid_cnt
     FROM stacked GROUP BY 1
     """,
@@ -356,8 +363,8 @@ def dominant_type_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Pattern frequency (GenericCharPatternRecognizer)
 # ---------------------------------------------------------------------------
 
-_SQL_PATTERN = """
-    CASE WHEN v IS NULL OR trim(v) = '' THEN '(EMPTY)'
+_SQL_PATTERN = f"""
+    CASE WHEN {_sql_empty("v")} THEN '(EMPTY)'
     ELSE regexp_replace(regexp_replace(regexp_replace(v,
       '[a-z]', 'a', 'g'), '[A-Z]', 'A', 'g'), '[0-9]', '9', 'g')
     END
@@ -847,17 +854,19 @@ def mx_verify_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def survivorship_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Largest/Smallest/MostAncient/MostRecent/Longest survivorship rules
     (`survivorship/model/RuleDefinition.java:193-221`) as one groupBy.agg —
-    Longest uses a length-prefixed max for a deterministic tiebreak."""
+    Longest uses a length-prefixed max for a deterministic tiebreak; the
+    order date is its own timestamp, so MostAncient/MostRecent are its
+    smallest/largest value."""
+    from .operators import survivorship as sv
+
     o = _read(spark, sf_dir, "orders")
-    prio = F.col("o_orderpriority")
+    price, date = F.col("o_totalprice"), F.col("o_orderdate")
     return o.groupBy("o_orderstatus").agg(
-        F.max("o_totalprice").alias("largest_price"),
-        F.min("o_totalprice").alias("smallest_price"),
-        F.min("o_orderdate").alias("most_ancient"),
-        F.max("o_orderdate").alias("most_recent"),
-        F.substring(
-            F.max(F.concat(F.lpad(F.length(prio).cast("string"), 3, "0"), prio)), 4, 1000
-        ).alias("longest_priority"),
+        sv.largest(price).alias("largest_price"),
+        sv.smallest(price).alias("smallest_price"),
+        sv.smallest(date).alias("most_ancient"),
+        sv.largest(date).alias("most_recent"),
+        sv.longest(F.col("o_orderpriority")).alias("longest_priority"),
         F.count(F.lit(1)).alias("group_size"),
     )
 
@@ -1281,13 +1290,13 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + BPE-ish token counting (token-budget estimators)."""
-    from .operators.text_analysis import bpe_token_count, whitespace_token_count
+    from .operators.text_analysis import bpe_token_count
 
     docs = _read_wide(spark, sf_dir, "documents")
     c = F.col("text")
     return docs.select(
         "doc_id",
-        whitespace_token_count(c).cast("long").alias("ws_tokens"),
+        F.size(ts.words(c)).cast("long").alias("ws_tokens"),
         bpe_token_count(c).cast("long").alias("bpe_tokens"),
     )
 
@@ -1509,7 +1518,7 @@ def record_clusters_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mfb_oracle_sql() -> str | None:
-    return _pinned_sql("MFB_CLUSTERS_PARTS_SQL")
+    return _pinned_sql(lambda p: p.MFB_CLUSTERS_PARTS_SQL)
 
 
 @_register("mfb_clusters_parts", _mfb_oracle_sql())
@@ -1722,7 +1731,7 @@ def reservoir_orders_k20(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _weighted_reservoir_oracle_sql() -> str | None:
-    return _pinned_sql("WEIGHTED_RESERVOIR_ORDERS_SQL")
+    return _pinned_sql(lambda p: p.WEIGHTED_RESERVOIR_ORDERS_SQL)
 
 
 @_register("weighted_reservoir_orders", _weighted_reservoir_oracle_sql())
@@ -2220,17 +2229,14 @@ def phonetic_linkage_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "json_quality_props",
-    """
+    f"""
     SELECT '_j.k' AS path,
-      CAST(sum(CASE WHEN json_extract_string(props, '$.k') IS NOT NULL
-                     AND trim(json_extract_string(props, '$.k')) <> ''
+      CAST(sum(CASE WHEN NOT {_sql_empty("json_extract_string(props, '$.k')")}
                      AND regexp_matches(json_extract_string(props, '$.k'), '^[-+－＋]?[0-9０-９]+$')
                THEN 1 ELSE 0 END) AS BIGINT) AS valid_cnt,
-      CAST(sum(CASE WHEN json_extract_string(props, '$.k') IS NULL
-                     OR trim(json_extract_string(props, '$.k')) = ''
+      CAST(sum(CASE WHEN {_sql_empty("json_extract_string(props, '$.k')")}
                THEN 1 ELSE 0 END) AS BIGINT) AS empty_cnt,
-      CAST(sum(CASE WHEN json_extract_string(props, '$.k') IS NOT NULL
-                     AND trim(json_extract_string(props, '$.k')) <> ''
+      CAST(sum(CASE WHEN NOT {_sql_empty("json_extract_string(props, '$.k')")}
                      AND NOT regexp_matches(json_extract_string(props, '$.k'), '^[-+－＋]?[0-9０-９]+$')
                THEN 1 ELSE 0 END) AS BIGINT) AS invalid_cnt
     FROM events
@@ -2412,7 +2418,7 @@ def _media_oracle_sql() -> str:
     instead of silently regenerating both sides of the compare (same device
     as the frozen synonym-search hit lists).  Falls back to the live replay
     only while pins are being regenerated."""
-    return _pinned_sql("MEDIA_FEATURES_SQL") or _media_replay_sql()
+    return _pinned_sql(lambda p: p.MEDIA_FEATURES_SQL) or _media_replay_sql()
 
 
 @_register("media_features", _media_oracle_sql())
@@ -2869,7 +2875,7 @@ def quality_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.text_analysis import quality_score
 
     docs = _read_wide(spark, sf_dir, "documents")
-    return docs.select("doc_id", quality_score(F.col("text")).alias("quality"))
+    return ts.with_text_features(docs).select("doc_id", quality_score().alias("quality"))
 
 
 @_register(
@@ -2945,7 +2951,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_ivf_oracle_sql() -> str | None:
-    return _pinned_sql("ANN_IVF_TOP3_SQL")
+    return _pinned_sql(lambda p: p.ANN_IVF_TOP3_SQL)
 
 
 @_register("ann_ivf_top3", _ann_ivf_oracle_sql())
@@ -2979,7 +2985,7 @@ def _sql_classify_full() -> str:
     tpref = ti.TIME_PREFILTER_PATTERN.replace("'", "''")
     return f"""
     CASE
-      WHEN v IS NULL OR trim(v) = '' THEN 'EMPTY'
+      WHEN {_sql_empty("v")} THEN 'EMPTY'
       WHEN regexp_matches(v, '{b}') THEN 'BOOLEAN'
       WHEN regexp_matches(v, '{i}') THEN 'INTEGER'
       WHEN regexp_matches(v, '{d}') THEN 'DOUBLE'
@@ -3031,7 +3037,7 @@ def profile_customer_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _flagship_oracle_sql() -> str | None:
-    return _pinned_sql("QUALITY_PIPELINE_DOCS_SQL")
+    return _pinned_sql(lambda p: p.QUALITY_PIPELINE_DOCS_SQL)
 
 
 @_register("quality_pipeline_docs", _flagship_oracle_sql())
@@ -3630,7 +3636,7 @@ def domain_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.urltools import domain_quality_profile
 
     docs = _read_wide(spark, sf_dir, "documents")
-    feat = ts.with_text_features(docs, "text")
+    feat = ts.with_text_features(docs)
     nw, nchars = F.col("_nw"), F.col("_nchars")
     mwl = F.col("_sum_wlen") / nw
     ng2, dg2 = F.col("_n_g2"), F.col("_n_g2_distinct")
@@ -3645,7 +3651,7 @@ def domain_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = feat.select(
         _synth_url_expr().alias("url"),
         keep.alias("keep"),
-        quality_score(F.col("text")).alias("quality"),
+        quality_score().alias("quality"),
     )
     return domain_quality_profile(pages, "url", "keep", "quality")
 
@@ -4260,14 +4266,14 @@ def token_budget_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     regexp_count device as `doc_token_counts`
     (`operators/text_analysis.py`).  No reference analog —
     training-pipeline extension."""
-    from .operators.text_analysis import bpe_token_count, whitespace_token_count
+    from .operators.text_analysis import bpe_token_count
 
     docs = _read(spark, sf_dir, "documents")
     t = F.coalesce(F.col("text"), F.lit(""))
     return (
         docs.select(
             "lang",
-            whitespace_token_count(t).alias("_ws"),
+            F.size(ts.words(t)).alias("_ws"),
             bpe_token_count(t).alias("_bpe"),
             F.length(t).alias("_ch"),
         )

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .functions import textstats as ts
+from .functions import typeinfer as ti
 
 # Frozen rule thresholds (Gopher-style bounds adapted to the fixture corpus).
 MIN_WORDS = 10
@@ -126,10 +127,7 @@ def _r_ellipsis_lines(c: Column) -> Column:
 
 
 def _r_non_empty(c: Column) -> Column:
-    # Reference empty semantics: null or all-whitespace is "empty"
-    # (`TypeInferenceUtils.java:157-159`), whitespace being Java's \s
-    # (`F.trim` strips only U+0020).
-    return c.isNotNull() & c.rlike(r"[^ \t\n\x0B\f\r]")
+    return ~ti.is_empty(c)
 
 
 RULES: tuple[Rule, ...] = (
@@ -150,51 +148,31 @@ RULES: tuple[Rule, ...] = (
 RULE_NAMES: tuple[str, ...] = tuple(r.name for r in RULES)
 
 
-def attach_rules(
-    df_with_features: DataFrame,
-    text_col: str = "text",
-    prefix: str = "rule_",
-    drop_features: bool = True,
-) -> DataFrame:
-    """Rule booleans from already-attached feature columns (cheap scalar
-    expressions — one projection, codegen'd)."""
-    c = F.col(text_col)
+def attach_rules(df_with_features: DataFrame) -> DataFrame:
+    """`rule_<name>` booleans from already-attached feature columns (cheap
+    scalar expressions — one projection, codegen'd); the feature columns
+    are dropped."""
+    c = F.col("text")
     # a NULL page fails every rule, including those that pass empty text
     cols = [
-        (c.isNotNull() & F.coalesce(r.expr(c), F.lit(False))).alias(prefix + r.name)
+        (c.isNotNull() & F.coalesce(r.expr(c), F.lit(False))).alias("rule_" + r.name)
         for r in RULES
     ]
-    out = df_with_features.select("*", *cols)
-    if drop_features:
-        out = out.drop(*ts.FEATURE_COLS)
-    return out
+    return df_with_features.select("*", *cols).drop(*ts.FEATURE_COLS)
 
 
-def keep_expr(prefix: str = "rule_") -> Column:
+def keep_expr() -> Column:
     """Conjunction of all rule verdicts."""
     out = F.lit(True)
     for name in RULE_NAMES:
-        out = out & F.col(prefix + name)
+        out = out & F.col("rule_" + name)
     return out
 
 
-def reasons_expr(prefix: str = "rule_") -> Column:
+def reasons_expr() -> Column:
     """Array of names of failed rules (stable rule-registry order)."""
     pairs = [
-        F.when(~F.col(prefix + name), F.lit(name)) for name in RULE_NAMES
+        F.when(~F.col("rule_" + name), F.lit(name)) for name in RULE_NAMES
     ]
     return F.filter(F.array(*pairs), lambda x: x.isNotNull())
 
-
-def rule_hit_counts(df_with_rules: DataFrame, prefix: str = "rule_") -> DataFrame:
-    """Per-rule pass/fail counts — `ValueQualityStatistics` accounting.
-
-    One `agg` with 2N counters: executed as a single partial+final aggregate
-    (mergeable, like `ValueQualityStatistics.mergeCounts`).
-    """
-    aggs = []
-    for name in RULE_NAMES:
-        col = F.col(prefix + name)
-        aggs.append(F.sum(F.when(col, 1).otherwise(0)).alias(f"{name}_pass"))
-        aggs.append(F.sum(F.when(~col, 1).otherwise(0)).alias(f"{name}_fail"))
-    return df_with_rules.agg(*aggs)

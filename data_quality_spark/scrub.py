@@ -5,32 +5,24 @@ Reference semantics: an ordered chain of ``Pattern.matcher(value)
 `dataquality-common/.../regex/ChainResponsibilityHandler.java:36-51`): each
 rule rewrites the output of the previous one, order matters.
 
-Two equivalent implementations, both pure per-row functions:
-
-- :func:`scrub_expr` — a native ``regexp_replace`` cascade (JVM, codegen'd,
-  zero Python): the hot path at 100 TB.
-- :func:`scrub_udf` — the same ordered substitutions as ONE compiled-regex
-  pandas UDF (Arrow-batched).  Used for parity testing and as the extension
-  point for rules that need Python (e.g. checksum-validated credit cards).
-
-The pytest suite asserts the two produce byte-identical output on the
-fixture corpus, and that output is byte-identical across parallelism levels.
+:func:`scrub_expr` is the pipeline's scrub: a native ``regexp_replace``
+cascade (JVM, codegen'd, zero Python).  :func:`scrub_str` applies the same
+ordered substitutions with Python `re`; it is the reference the tests and
+the pure-Python oracle compare the cascade against, byte for byte, on the
+fixture corpus, and the output is byte-identical across parallelism levels.
 
 Patterns are deliberately restricted to a regex subset with identical
 semantics in Java regex, Python `re`, and RE2 (no backrefs, no lookbehind,
-explicit ASCII classes) so Spark, the pandas UDF, and the DuckDB oracle
-agree byte-for-byte.
+explicit ASCII classes) so Spark, Python, and the DuckDB oracle agree
+byte-for-byte.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 # Ordered scrub rules: (name, pattern, replacement).  ORDER MATTERS —
 # e.g. emails must be scrubbed before bare domains, IPs before phone-ish
@@ -75,9 +67,3 @@ def scrub_str(s: str | None) -> str | None:
         s = cre.sub(rep, s)
     return s
 
-
-@F.pandas_udf(StringType())
-def scrub_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Arrow-batched scrub — identical output to scrub_expr, byte for byte."""
-    for texts in batches:
-        yield texts.map(scrub_str)

@@ -1,34 +1,19 @@
-"""Skew handling: salted domain keys + repartition helpers.
+"""Skew handling: two-phase salted aggregation.
 
 The reference's own answer to quadratic blow-up is blocking keys + a
 block-size cap of 1000 with cross-block post-merge
 (`genkey/BlockingKeyHandler.java:81`, `StringsClusterAnalyzer.java:57`).
 At web scale the analog problem is domain skew: one mega-domain can hold
-10^9 pages.  We salt the domain key so no single reducer owns a mega-domain,
-and rely on AQE skew-join splitting for joins.
+10^9 pages.  We salt the grouping key so no single reducer owns a
+mega-domain, and rely on AQE skew-join splitting for joins.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_SALT_BUCKETS = 64
-
-
-def domain_expr(url_col: Column) -> Column:
-    """Registrable host part of the url (cheap native parse)."""
-    return F.parse_url(url_col, F.lit("HOST"))
-
-
-def salted_key(key_col: Column, salt_col: Column, buckets: int = DEFAULT_SALT_BUCKETS) -> Column:
-    """key + '#' + (hash(salt) % buckets) — bounds any one key's partition share.
-
-    `salt_col` should be a high-cardinality column (e.g. url) so the salt is
-    deterministic per row (never `rand()` — that breaks retry determinism).
-    """
-    salt = F.pmod(F.xxhash64(salt_col), F.lit(buckets))
-    return F.concat_ws("#", key_col, salt.cast("string"))
 
 
 def salted_groupby_count(
@@ -50,14 +35,3 @@ def salted_groupby_count(
         .agg(F.count(F.lit(1)).alias("_c"))
     )
     return phase1.groupBy(key_col).agg(F.sum("_c").cast("long").alias("cnt"))
-
-
-def repartition_by_salted_domain(
-    df: DataFrame, url_col: str = "url", buckets: int = DEFAULT_SALT_BUCKETS, num_partitions: int | None = None
-) -> DataFrame:
-    """Repartition so mega-domains spread over `buckets` partitions."""
-    key = salted_key(domain_expr(F.col(url_col)), F.col(url_col), buckets)
-    out = df.withColumn("_salted_domain", key)
-    if num_partitions:
-        return out.repartition(num_partitions, "_salted_domain")
-    return out.repartition("_salted_domain")

@@ -6,10 +6,6 @@ inference uses different rules, so `read_csv_inferred` reads everything as
 string and applies OUR lattice (DataTypeOccurences voting: most frequent
 non-EMPTY type ≥50% of non-empty values, INTEGER⊂DOUBLE) — giving the same
 verdicts as the reference's `DataTypeAnalyzer` pipeline, then casts.
-
-JDBC/parquet/json are thin wrappers for completeness (`ResultSetIterator`,
-`AvroUtils.streamAvroFile` analogs); Avro needs the spark-avro package at
-submit time (`--packages org.apache.spark:spark-avro_2.13:<ver>`).
 """
 
 from __future__ import annotations
@@ -70,21 +66,3 @@ def read_csv_inferred(
     raw = spark.read.option("header", header).option("sep", sep).csv(path)
     types = infer_column_types(raw, sample_rows)
     return apply_inferred_types(raw, types), types
-
-
-def read_jdbc(spark: SparkSession, url: str, table: str, **options) -> DataFrame:
-    """JDBC source (`record/linkage/iterator/ResultSetIterator.java` analog).
-    Partition with (partitionColumn, lowerBound, upperBound, numPartitions)
-    options — a single unpartitioned JDBC read is a scale bug."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Partitioned parquet sink (Iceberg `writeTo(...).partitionedBy` analog
-    when no catalog is configured)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)

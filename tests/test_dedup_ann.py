@@ -29,14 +29,6 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_exact_dedup(docs):
-    groups = dedup.exact_duplicate_groups(docs, "text", "doc_id").collect()
-    assert len(groups) == 1
-    assert groups[0]["group_size"] == 3 and groups[0]["min_id"] == 0
-    kept = dedup.drop_exact_duplicates(docs, "text", "doc_id")
-    assert sorted(r["doc_id"] for r in kept.collect()) == [0, 3, 4, 5]
-
-
 def test_jaccard(docs, spark):
     s = docs.select("doc_id", dedup.word_shingles(F.col("text"), 3).alias("sh"))
     a = s.filter(F.col("doc_id") == 0).alias("a")

@@ -1,5 +1,4 @@
-"""Japanese text operators — transliteration, number normalization,
-kana conversion, tokenization fallback."""
+"""Japanese text operators — transliteration and number normalization."""
 
 import pyspark.sql.functions as F
 
@@ -33,36 +32,11 @@ def test_normalize_numbers_in_text():
     )
 
 
-def test_kuromoji_lite_reference_vectors():
-    """The kuromoji-lite lattice reproduces TextTokenizerTest's expected
-    tokenizations exactly (jp/tokenization/TextTokenizerTest.java:27-41)
-    — compound particle について kept whole, verb stem 食べ split from
-    auxiliary たい, honorific お split, latin runs preserved, punctuation
-    as tokens, whitespace delimiting but never emitted."""
-    vectors = {
-        "Talend Readlime Bigdata Platformの価格については、営業までお問い合わせください。": [
-            "Talend", "Readlime", "Bigdata", "Platform", "の", "価格",
-            "について", "は", "、", "営業", "まで", "お", "問い合わせ",
-            "ください", "。",
-        ],
-        "お寿司が食べたい。": ["お", "寿司", "が", "食べ", "たい", "。"],
-        "おsushiが食べたい。": ["お", "sushi", "が", "食べ", "たい", "。"],
-    }
-    for text, want in vectors.items():
-        assert JP.kuromoji_lite_tokenize(text) == want, text
-        assert JP.kuromoji_lite_tokenized_string(text) == " ".join(want)
-
-
 def test_spark_udfs(spark):
     df = spark.createDataFrame([("カタカナ テスト",), ("三百円",)], "t string")
     rows = df.select(
         JP.katakana_to_romaji(F.col("t")).alias("r"),
         JP.normalize_japanese_numbers(F.col("t")).alias("n"),
-        JP.katakana_to_hiragana(F.col("t")).alias("h"),
-        JP.tokenize_japanese(F.col("t")).alias("tok"),
     ).collect()
     assert rows[0]["r"] == "katakana tesuto"
     assert rows[1]["n"] == "300円"
-    assert rows[0]["h"] == "かたかな てすと"
-    assert rows[0]["tok"] == ["カタカナ", "テスト"]
-    assert rows[1]["tok"] == ["三百円"]

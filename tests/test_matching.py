@@ -14,20 +14,8 @@ def _pair(spark, a, b):
 
 def test_native_matchers(spark):
     df = _pair(spark, "kitten", "sitting")
-    r = df.select(
-        M.exact_weight(F.col("a"), F.col("b")).alias("exact"),
-        M.levenshtein_weight(F.col("a"), F.col("b")).alias("lev"),
-        M.soundex_weight(F.col("a"), F.col("b")).alias("sdx"),
-    ).collect()[0]
-    assert r["exact"] == 0.0
+    r = df.select(M.levenshtein_weight(F.col("a"), F.col("b")).alias("lev")).collect()[0]
     assert r["lev"] == pytest.approx(1 - 3 / 7)
-    assert r["sdx"] == 0.0
-    r2 = _pair(spark, "Robert", "Rupert").select(
-        M.soundex_weight(F.col("a"), F.col("b")).alias("sdx"),
-        M.exact_ignore_case_weight(F.lit("ABC"), F.lit("abc")).alias("ic"),
-    ).collect()[0]
-    assert r2["sdx"] == 1.0  # classic soundex pair R163
-    assert r2["ic"] == 1.0
 
 
 def test_qgram_weight(spark):
@@ -56,19 +44,6 @@ def test_py_matcher_udf(spark):
     ).collect()[0]
     assert r["j"] == pytest.approx(0.944444, abs=1e-5)
     assert r["jw"] == pytest.approx(0.961111, abs=1e-5)
-
-
-def test_vsr_record_weight(spark):
-    df = spark.createDataFrame([(0.9, 0.8), (0.9, 0.1)], "w1 double, w2 double")
-    # equal weights; w2 blocked below 0.5 → record weight 0
-    out = df.select(
-        M.vsr_record_weight(
-            [(F.col("w1"), 1.0), (F.col("w2"), 1.0)],
-            blocked=[(F.col("w2"), 0.5)],
-        ).alias("w")
-    ).collect()
-    assert out[0]["w"] == pytest.approx(0.85)
-    assert out[1]["w"] == 0.0
 
 
 def test_candidate_pairs_and_clustering(spark):
@@ -155,28 +130,3 @@ def test_tokenized_weight_spark(spark):
     assert rows[1]["any"] == 1.0 and rows[1]["same"] == 1.0
     assert rows[2]["any"] == 0.0
 
-
-def test_custom_matcher_registry(spark):
-    """CUSTOM matcher surface: any python fn pluggable by name, usable in
-    the pair scorer, the tokenized modes, and the MFB queue."""
-    from data_quality_spark.operators.matching import (
-        _mfb_queue,
-        py_matcher_weight,
-        register_matcher,
-        tokenized_weight,
-    )
-
-    register_matcher("prefix2", lambda a, b: 1.0 if a[:2] == b[:2] else 0.0)
-    df = spark.createDataFrame([("abcd", "abzz"), ("abcd", "xyz")], "a string, b string")
-    rows = df.select(
-        py_matcher_weight("prefix2", F.col("a"), F.col("b")).alias("w"),
-        tokenized_weight("prefix2", "anyorder", F.col("a"), F.col("b")).alias("t"),
-    ).collect()
-    assert [r["w"] for r in rows] == [1.0, 0.0]
-    assert [r["t"] for r in rows] == [1.0, 0.0]
-    masters = _mfb_queue(
-        [{"id": 0, "ts": 0, "v": "abcd"}, {"id": 1, "ts": 0, "v": "abzz"}],
-        [{"col": "v", "matcher": "prefix2", "weight": 1.0, "merge": "longest"}],
-        0.9,
-    )
-    assert len(masters) == 1 and masters[0]["ids"] == {0, 1}

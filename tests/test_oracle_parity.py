@@ -63,3 +63,42 @@ def test_token_budget_parity_on_vertical_tab(spark, tmp_path):
     name = "token_budget_by_lang"
     problems = compare(spark, name, QUERIES[name], ORACLES[name], str(tmp_path))
     assert not problems, problems
+
+
+def test_empty_parity_on_whitespace_only_values(spark, tmp_path):
+    """"Blank" is Java's `\\s` on both engines: names made of tab, newline,
+    VT or CRLF are EMPTY (DuckDB `trim` and `F.trim` strip only U+0020),
+    and a no-break space is not (DuckDB `trim` strips it, Java `\\s` does
+    not)."""
+    import os
+
+    import duckdb
+
+    for name in os.listdir(SF_DIR):
+        if name != "customer.parquet":
+            (tmp_path / name).symlink_to(os.path.join(SF_DIR, name))
+    duckdb.execute(
+        f"""COPY (
+          SELECT c_custkey,
+            CASE c_custkey % 50
+              WHEN 0 THEN chr(9)
+              WHEN 1 THEN chr(10)
+              WHEN 2 THEN chr(11)
+              WHEN 3 THEN chr(13) || chr(10)
+              WHEN 4 THEN chr(160)
+              ELSE c_name END AS c_name,
+            c_nationkey, c_acctbal, c_mktsegment
+          FROM '{SF_DIR}/customer.parquet'
+        ) TO '{tmp_path}/customer.parquet' (FORMAT parquet)"""
+    )
+    for name in ("type_profile_customer", "value_quality_customer", "pattern_freq_cname"):
+        problems = compare(spark, name, QUERIES[name], ORACLES[name], str(tmp_path))
+        assert not problems, problems
+    blank = duckdb.execute(
+        f"SELECT count(*) FROM '{tmp_path}/customer.parquet' WHERE c_custkey % 50 IN (0, 1, 2, 3)"
+    ).fetchone()[0]
+    got = {
+        r["column_name"]: r["empty_cnt"]
+        for r in QUERIES["value_quality_customer"](spark, str(tmp_path)).collect()
+    }
+    assert got["c_name"] == blank > 0

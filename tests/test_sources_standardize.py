@@ -4,7 +4,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from data_quality_spark.operators import standardize as ST
-from data_quality_spark.operators.matching import anyorder_weight
+from data_quality_spark.operators.matching import tokenized_weight
 from data_quality_spark.sources.readers import read_csv_inferred
 
 SYNS = {
@@ -62,14 +62,6 @@ def test_standardize_fuzzy(spark):
     assert got["beth"] == "Elizabeth"   # exact synonym
 
 
-def test_standardize_record(spark):
-    df = spark.createDataFrame([("bob", "DE")], "name string, cc string")
-    out = ST.standardize_record(
-        df, {"name": SYNS, "cc": {"Germany": ["de", "ger"]}}
-    ).collect()[0]
-    assert (out["name"], out["cc"]) == ("Robert", "Germany")
-
-
 def test_mask_same_class(spark):
     df = spark.createDataFrame([("Ab3 x-9",), ("Ab3 x-9",)], "v string")
     got = [r["m"] for r in df.select(ST.mask_same_class(F.col("v")).alias("m")).collect()]
@@ -83,11 +75,11 @@ def test_mask_same_class(spark):
 def test_anyorder_weight(spark):
     df = spark.createDataFrame([("john smith", "Smith john")], "a string, b string")
     r = df.select(
-        anyorder_weight(F.lower(F.col("a")), F.lower(F.col("b")), "exact").alias("w"),
-        anyorder_weight(F.lower(F.col("a")), F.lower(F.col("b")), "levenshtein").alias("lw"),
+        tokenized_weight("exact", "anyorder", F.lower(F.col("a")), F.lower(F.col("b"))).alias("w"),
+        tokenized_weight("levenshtein", "anyorder", F.lower(F.col("a")), F.lower(F.col("b"))).alias("lw"),
     ).collect()[0]
     assert r["w"] == 1.0   # same tokens, any order → exact match
-    assert r["lw"] == 1.0  # sorted lower-cased forms identical
+    assert r["lw"] == 1.0  # every token pairs with an identical one
 
 
 # --- Lucene search-mode parity (SynonymIndexSearcher modes) -----------------

@@ -18,7 +18,7 @@ def test_classify_basic(spark):
         spark,
         ["42", "-7", "＋１２", "3.14", "1,234.5", "1.234,5", "2e10", "45%",
          "true", "FALSE", "2024-01-31", "1/31/2024", "20240131", "12:34:56",
-         "hello", "", "   ", None],
+         "hello", "", "   ", "\t", "\n", "\x0b", "\r\n", "\xa0", None],
     )
     assert got["42"] == "INTEGER"
     assert got["-7"] == "INTEGER"
@@ -38,6 +38,10 @@ def test_classify_basic(spark):
     assert got["hello"] == "STRING"
     assert got[""] == "EMPTY"
     assert got["   "] == "EMPTY"
+    # blank is Java's \s: tab, newline, VT, FF, CR, space — not NBSP
+    for v in ("\t", "\n", "\x0b", "\r\n"):
+        assert got[v] == "EMPTY", repr(v)
+    assert got["\xa0"] == "STRING"
     assert got[None] == "EMPTY"
 
 
@@ -88,7 +92,7 @@ def test_datetime_regex_table_breadth(spark):
     recognize; garbage does not (regex-table semantics like the
     reference's SystemDateTimePatternManager — structural validation,
     day/month ranges enforced, calendar validity not)."""
-    from data_quality_spark.operators.profiling import datetime_pattern_expr
+    from data_quality_spark.operators.profiling import datetime_pattern_sql_case
     from pyspark.sql import functions as F
 
     cases = {
@@ -112,7 +116,7 @@ def test_datetime_regex_table_breadth(spark):
     df = spark.createDataFrame([(v,) for v in cases], "v string")
     got = {
         r["v"]: r["p"]
-        for r in df.select("v", datetime_pattern_expr(F.col("v")).alias("p")).collect()
+        for r in df.select("v", F.expr(datetime_pattern_sql_case("v")).alias("p")).collect()
     }
     for v, expected in cases.items():
         assert got[v] == expected, (v, got[v], expected)
@@ -126,7 +130,7 @@ def test_datetime_locale_families(spark):
     both engines — the reference's in-group ordering)."""
     from pyspark.sql import functions as F
 
-    from data_quality_spark.operators.profiling import datetime_pattern_expr
+    from data_quality_spark.operators.profiling import datetime_pattern_sql_case
 
     cases = {
         "4 marzo 2021": "d MMMM yyyy (it)",
@@ -146,7 +150,7 @@ def test_datetime_locale_families(spark):
     df = spark.createDataFrame([(v,) for v in cases], "v string")
     got = {
         r["v"]: r["p"]
-        for r in df.select("v", datetime_pattern_expr(F.col("v")).alias("p")).collect()
+        for r in df.select("v", F.expr(datetime_pattern_sql_case("v")).alias("p")).collect()
     }
     for v, expected in cases.items():
         assert got[v] == expected, (v, got[v], expected)
