@@ -31,18 +31,27 @@ def _fits(v, elem_type: str) -> bool:
     return isinstance(v, int) and -_INT_BOUND[elem_type] <= v < _INT_BOUND[elem_type]
 
 
-def lit_array(values, elem_type: str) -> Column:
-    """`array<elem_type>` literal ("int", "bigint", "double" or "string";
-    None elements allowed), built with the same few py4j calls at any length."""
+def sql_array(values, elem_type: str) -> str:
+    """SQL text of an `array<elem_type>` literal ("int", "bigint", "double"
+    or "string"; None elements allowed): `from_json('<json>', 'array<T>')`
+    with the JSON's quotes and backslashes escaped for the SQL parser, so
+    it can stand inside a larger parsed SQL fragment."""
     if elem_type not in (*_INT_BOUND, "double", "string"):
-        raise ValueError(f"lit_array: unsupported element type {elem_type!r}")
+        raise ValueError(f"sql_array: unsupported element type {elem_type!r}")
     vals = list(values)
     bad = [v for v in vals if not _fits(v, elem_type)]
     if bad:
-        raise ValueError(f"lit_array: not valid array<{elem_type}> elements: {bad[:3]!r}")
+        raise ValueError(f"sql_array: not valid array<{elem_type}> elements: {bad[:3]!r}")
     if elem_type == "double":
         vals = [None if v is None else float(v) for v in vals]
-    return F.from_json(F.lit(json.dumps(vals)), f"array<{elem_type}>")
+    text = json.dumps(vals).replace("\\", "\\\\").replace("'", "\\'")
+    return f"from_json('{text}', 'array<{elem_type}>')"
+
+
+def lit_array(values, elem_type: str) -> Column:
+    """`sql_array` as a Column, built with the same few py4j calls at any
+    length."""
+    return F.expr(sql_array(values, elem_type))
 
 
 def lit_map(mapping: dict, key_type: str, value_type: str) -> Column:

@@ -114,12 +114,12 @@ def iso_to_hijri_tabular(c: Column) -> Column:
     )
 
 
-def iso_to_hijri_umalqura(c: Column) -> Column:
-    """ISO date → Umm al-Qura Hijri 'yyyy-MM-dd AH' with REFERENCE parity:
-    the month table is the JDK's java.time HijrahChronology data
-    (1300-1600 AH ≈ 1882-2077 CE; see functions/umalqura_table.py,
-    regenerable via scripts/gen_umalqura.py), i.e. the same authority the
-    reference's DateCalendarConverter consults
+def iso_to_hijri_umalqura(col: str) -> Column:
+    """ISO date (the SQL expression `col`) → Umm al-Qura Hijri 'yyyy-MM-dd
+    AH' with REFERENCE parity: the month table is the JDK's java.time
+    HijrahChronology data (1300-1600 AH ≈ 1882-2077 CE; see
+    functions/umalqura_table.py, regenerable via scripts/gen_umalqura.py),
+    i.e. the same authority the reference's DateCalendarConverter consults
     (`converters/DateCalendarConverter.java:32-39`).
 
     O(1) pure-expression lookup, no join and no UDF: a mean-lunation
@@ -132,41 +132,35 @@ def iso_to_hijri_umalqura(c: Column) -> Column:
     itself is undefined there; the arithmetic `iso_to_hijri_tabular`
     remains for unbounded input).
 
-    The 3,612-entry table is ONE folded literal (`literals.lit_array`).
-    Built one `F.lit` per entry, `umalqura_convert_orders` took 1.62 s to
-    build (15,000+ py4j calls); now 0.18 s (~550), with plan 0.085 →
-    0.028 s and execute unchanged (sf0.01, local[4], 4-vCPU Xeon, warm
-    medians; BENCH/BASELINE.md "Driver literal build")."""
-    from .literals import lit_array
+    The 3,612-entry table is ONE folded literal (`literals.sql_array`) and
+    the whole conversion one parsed SQL fragment.  Built one `F.lit` per
+    entry, `umalqura_convert_orders` took 1.62 s to build (15,000+ py4j
+    calls); as Column operators around the folded literal 0.18 s (549);
+    as one fragment 61 calls (sf0.01, local[4], 4-vCPU Xeon, warm
+    medians; BENCH/BASELINE.md "Driver literal build" and "Driver build
+    without jobs")."""
+    from .literals import sql_array
     from .umalqura_table import MAX_IDX_DRIFT, MEAN_LUNATION, MONTH_STARTS, START_HY
 
     assert MAX_IDX_DRIFT <= 1, "three-way select needs regeneration for drift > 1"
     n = len(MONTH_STARTS)
     t0 = MONTH_STARTS[0]
-    arr = lit_array(MONTH_STARTS, "int")
-    d = F.unix_date(F.to_date(c))
-    g = F.floor((d - F.lit(t0)) / F.lit(MEAN_LUNATION)).cast("int")
-    g = F.greatest(F.lit(0), F.least(F.lit(n - 1), g))
+    arr = sql_array(MONTH_STARTS, "int")
+    d = f"unix_date(to_date({col}))"
+    g = f"greatest(0, least({n - 1}, CAST(floor(({d} - ({t0})) / {MEAN_LUNATION!r}D) AS INT)))"
     idx = (
-        F.when(d >= F.element_at(arr, F.least(g + 2, F.lit(n))), F.least(g + 1, F.lit(n - 1)))
-        .when(d >= F.element_at(arr, g + 1), g)
-        .otherwise(F.greatest(g - 1, F.lit(0)))
+        f"CASE WHEN {d} >= element_at({arr}, least({g} + 2, {n})) THEN least({g} + 1, {n - 1}) "
+        f"WHEN {d} >= element_at({arr}, {g} + 1) THEN {g} ELSE greatest({g} - 1, 0) END"
     )
-    start = F.element_at(arr, idx + 1)
-    hy = (F.lit(START_HY) + F.floor(idx / F.lit(12))).cast("int")
-    hm = (idx % 12 + 1).cast("int")
-    hd = (d - start + 1).cast("int")
+    hy = f"CAST({START_HY} + floor(({idx}) / 12) AS INT)"
+    hm = f"CAST(({idx}) % 12 + 1 AS INT)"
+    hd = f"CAST({d} - element_at({arr}, ({idx}) + 1) + 1 AS INT)"
     # conservative table end: last month assumed 29 days (shortest legal)
-    in_range = (d >= F.lit(t0)) & (d <= F.lit(MONTH_STARTS[-1] + 28))
-    out = F.concat(
-        F.lpad(hy.cast("string"), 4, "0"),
-        F.lit("-"),
-        F.lpad(hm.cast("string"), 2, "0"),
-        F.lit("-"),
-        F.lpad(hd.cast("string"), 2, "0"),
-        F.lit(" AH"),
+    return F.expr(
+        f"CASE WHEN {d} >= ({t0}) AND {d} <= {MONTH_STARTS[-1] + 28} THEN concat("
+        f"lpad(CAST({hy} AS STRING), 4, '0'), '-', lpad(CAST({hm} AS STRING), 2, '0'), '-', "
+        f"lpad(CAST({hd} AS STRING), 2, '0'), ' AH') ELSE CAST(NULL AS STRING) END"
     )
-    return F.when(in_range, out).otherwise(F.lit(None).cast("string"))
 
 
 def iso_to_minguo(c: Column) -> Column:

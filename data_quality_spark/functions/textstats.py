@@ -20,10 +20,7 @@ column; results are invariant under repartitioning and parallelism level.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from .literals import lit_array
+from .literals import sql_array
 
 # Stop-word list — the analog of the reference's dictionary-membership rule
 # (WordNetDictionary.isValidTerm, `dataquality-wordnet/.../WordNetDictionary.
@@ -43,95 +40,84 @@ STOPWORDS: tuple[str, ...] = (
 )
 
 
-def words(col: Column) -> Column:
-    """Array of non-empty whitespace-separated tokens (code-point aware)."""
-    return F.filter(F.split(col, r"\s+"), lambda w: w != F.lit(""))
+def words_sql(v: str) -> str:
+    """SQL: array of the non-empty whitespace-separated tokens (code-point
+    aware) of the SQL expression `v`."""
+    return f"filter(split({v}, '\\\\s+'), w -> w != '')"
 
 
-def ngrams_from_words(w: Column, n: int) -> Column:
-    """Array of word n-grams (space-joined) from a word-array column.
+def ngrams_sql(w: str, n: int) -> str:
+    """SQL: array of word n-grams (n >= 2, space-joined) of the word-array
+    SQL expression `w`.
 
     O(len) via shifted-slice `zip_with` (not O(len²) per-position slicing).
     Empty array when fewer than n words.  `w` should already be case-folded
     if case-insensitive n-grams are wanted.
     """
-    cnt = F.size(w)
-    grams = F.zip_with(
-        F.slice(w, 1, cnt - (n - 1)),
-        F.slice(w, 2, cnt - (n - 1)),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    for k in range(3, n + 1):
-        grams = F.zip_with(
-            grams,
-            F.slice(w, k, cnt - (n - 1)),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    return F.when(cnt >= n, grams).otherwise(F.array().cast("array<string>"))
+    cnt = f"size({w}) - {n - 1}"
+    grams = f"slice({w}, 1, {cnt})"
+    for k in range(2, n + 1):
+        grams = f"zip_with({grams}, slice({w}, {k}, {cnt}), (a, b) -> concat_ws(' ', a, b))"
+    return f"CASE WHEN size({w}) >= {n} THEN {grams} ELSE CAST(array() AS array<string>) END"
 
 
 # Scalar feature columns shared by the rule registry and the quality score.
-# `with_text_features` computes them as Catalyst expressions (the profiling
-# queries, whose values DuckDB SQL reproduces); the pipeline gets the same
-# values from `compute_features_py`, the per-page kernel inside the fused
-# Arrow UDF `analyze.analyze_text`, because Spark's higher-order array
-# functions are interpreted (~µs per array element) and thirteen features
+# `with_text_features` computes all fifteen natively, as parsed SQL (the
+# contract queries, whose values DuckDB SQL reproduces); the pipeline gets
+# the same values from `compute_features_py`, the per-page kernel inside the
+# fused Arrow UDF `analyze.analyze_text`, because Spark's higher-order array
+# functions are interpreted (~µs per array element) and fifteen features
 # over hundreds of words per page made the native stage the pipeline's
-# scaling bottleneck.  The two are kept equal by test_feature_parity and the
-# fuzz corpus.
+# scaling bottleneck.  test_feature_parity and test_fuzz_parity compare the
+# two column for column.
 FEATURE_COLS: tuple[str, ...] = (
     "_nchars", "_nw", "_sum_wlen", "_n_stop", "_n_distinct",
     "_n_g2", "_n_g2_distinct", "_n_g3", "_n_g3_distinct",
     "_n_sym", "_n_cjk", "_n_alpha_w", "_n_lines", "_n_bullet", "_n_ellipsis",
 )
 
-_CJK_CLASS = r"[\x{3040}-\x{30FF}\x{4E00}-\x{9FFF}\x{AC00}-\x{D7AF}]"
+_CJK_CLASS = r"[\\x{3040}-\\x{30FF}\\x{4E00}-\\x{9FFF}\\x{AC00}-\\x{D7AF}]"
+
 
 def with_text_features(df):
     """Attach the scalar text-feature columns (see FEATURE_COLS) of `text`
-    as native expressions (chained projections so each expensive array is
-    built once)."""
-    c = F.col("text")
-    cjk_count = F.when(
-        c.rlike(_CJK_CLASS),
-        F.length(c) - F.length(F.regexp_replace(c, _CJK_CLASS, "")),
-    ).when(c.isNotNull(), F.lit(0))
-    step1 = df.select(
+    as native expressions: four chained projections, so each expensive
+    array is built once, each one parsed SQL fragment per column (a few
+    py4j calls per column instead of ~10 per Column operator)."""
+    step1 = df.selectExpr(
         "*",
-        F.length(c).alias("_nchars"),
-        words(c).alias("__ws"),
-        F.length(F.regexp_replace(c, r"[\p{L}\p{N}\s]", "")).alias("_n_sym"),
-        cjk_count.alias("_n_cjk"),
-        F.split(c, r"\n").alias("__lines"),
+        "length(text) AS _nchars",
+        f"{words_sql('text')} AS __ws",
+        r"length(regexp_replace(text, '[\\p{L}\\p{N}\\s]', '')) AS _n_sym",
+        f"CASE WHEN text RLIKE '{_CJK_CLASS}' "
+        f"THEN length(text) - length(regexp_replace(text, '{_CJK_CLASS}', '')) "
+        "WHEN text IS NOT NULL THEN 0 END AS _n_cjk",
+        r"split(text, '\\n') AS __lines",
     )
-    ws = F.col("__ws")
-    lines = F.col("__lines")
-    step2 = step1.select(
+    step2 = step1.selectExpr(
         "*",
-        F.transform(ws, lambda x: F.lower(x)).alias("__lws"),
-        F.size(ws).alias("_nw"),
-        F.aggregate(ws, F.lit(0), lambda a, x: a + F.length(x)).alias("_sum_wlen"),
-        F.size(F.filter(ws, lambda x: x.rlike(r"\p{L}"))).alias("_n_alpha_w"),
-        F.size(lines).alias("_n_lines"),
-        F.size(F.filter(lines, lambda l: F.trim(l).rlike(r"^[-*•]"))).alias("_n_bullet"),
-        F.size(F.filter(lines, lambda l: l.rlike(r"(\.\.\.|…)\s*$"))).alias("_n_ellipsis"),
+        "transform(__ws, x -> lower(x)) AS __lws",
+        "size(__ws) AS _nw",
+        "aggregate(__ws, 0, (a, x) -> a + length(x)) AS _sum_wlen",
+        r"size(filter(__ws, x -> x RLIKE '\\p{L}')) AS _n_alpha_w",
+        "size(__lines) AS _n_lines",
+        "size(filter(__lines, l -> trim(l) RLIKE '^[-*•]')) AS _n_bullet",
+        r"size(filter(__lines, l -> l RLIKE '(\\.\\.\\.|…)\\s*$')) AS _n_ellipsis",
     )
-    lws = F.col("__lws")
-    stop_arr = lit_array(STOPWORDS, "string")
-    step3 = step2.select(
+    step3 = step2.selectExpr(
         "*",
-        F.size(F.filter(lws, lambda x: F.array_contains(stop_arr, x))).alias("_n_stop"),
-        F.size(F.array_distinct(lws)).alias("_n_distinct"),
+        f"size(filter(__lws, x -> array_contains({sql_array(STOPWORDS, 'string')}, x))) AS _n_stop",
+        "size(array_distinct(__lws)) AS _n_distinct",
         # NULL text keeps NULL n-gram counts, as in compute_features_py
-        F.when(lws.isNotNull(), ngrams_from_words(lws, 2)).alias("__g2"),
-        F.when(lws.isNotNull(), ngrams_from_words(lws, 3)).alias("__g3"),
+        f"CASE WHEN __lws IS NOT NULL THEN {ngrams_sql('__lws', 2)} END AS __g2",
+        f"CASE WHEN __lws IS NOT NULL THEN {ngrams_sql('__lws', 3)} END AS __g3",
     )
-    step4 = step3.select(
+    step4 = step3.selectExpr(
         "*",
-        F.size("__g2").alias("_n_g2"),
-        F.size(F.array_distinct("__g2")).alias("_n_g2_distinct"),
-        F.size("__g3").alias("_n_g3"),
-        F.size(F.array_distinct("__g3")).alias("_n_g3_distinct"),
+        "size(__g2) AS _n_g2",
+        "size(array_distinct(__g2)) AS _n_g2_distinct",
+        "size(__g3) AS _n_g3",
+        "size(array_distinct(__g3)) AS _n_g3_distinct",
     )
     return step4.drop("__ws", "__lws", "__g2", "__g3", "__lines")
 

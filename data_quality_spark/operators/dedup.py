@@ -49,12 +49,13 @@ def normalized_text(col: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct lower-cased word n-gram shingles (array<string>)."""
-    from ..functions.textstats import ngrams_from_words, words
+def word_shingles(text_col: str, n: int = 3) -> Column:
+    """Distinct lower-cased word n-gram shingles (array<string>) of the
+    column `text_col`."""
+    from ..functions.textstats import ngrams_sql, words_sql
 
-    w = F.transform(words(col), lambda x: F.lower(x))
-    return F.array_distinct(ngrams_from_words(w, n))
+    w = f"transform({words_sql(text_col)}, x -> lower(x))"
+    return F.expr(f"array_distinct({ngrams_sql(w, n)})")
 
 
 def jaccard_similarity(a: Column, b: Column) -> Column:
@@ -119,7 +120,7 @@ def minhash_signature_df(
     """
     ex = df.select(
         F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("s"),
+        F.explode(word_shingles(text_col, shingle_n)).alias("s"),
     )
     hash_cols = [
         F.xxhash64(F.concat(F.lit(f"{i}:"), F.col("s"))).alias(f"h{i}")
@@ -157,7 +158,7 @@ def minhash_signature_df_portable(
     only the oracle-checked contract query uses this."""
     ex = df.select(
         F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("s"),
+        F.explode(word_shingles(text_col, shingle_n)).alias("s"),
     )
     hash_cols = [
         F.md5(F.concat(F.lit(f"{i}:"), F.col("s"))).alias(f"h{i}")

@@ -114,7 +114,7 @@ def pattern_frequency(df: DataFrame, column: str) -> DataFrame:
     )
 
 
-def word_pattern_expr(col):
+def word_pattern_expr(column: str):
     """Word-level pattern (WordPatternRecognizer,
     `statistics/frequency/recognition/WordPatternRecognizer.java:82,174-189`):
     each token → its class tag, joined with the original separators reduced
@@ -124,7 +124,7 @@ def word_pattern_expr(col):
     [Word] capitalized; [word] all lower; [Ideogram]+ CJK run;
     [alnum] mixed letters+digits; anything else kept verbatim (punct).
     """
-    from ..functions.textstats import words as _words
+    from ..functions.textstats import words_sql
 
     def tag(w):
         return (
@@ -137,13 +137,13 @@ def word_pattern_expr(col):
             .otherwise(w)
         )
 
-    return F.array_join(F.transform(_words(col), tag), " ")
+    return F.array_join(F.transform(F.expr(words_sql(f"CAST({column} AS STRING)")), tag), " ")
 
 
 def word_pattern_frequency(df: DataFrame, column: str) -> DataFrame:
     """Word-pattern → frequency table. Output: (pattern, cnt)."""
     return (
-        df.select(word_pattern_expr(F.col(column).cast("string")).alias("pattern"))
+        df.select(word_pattern_expr(column).alias("pattern"))
         .groupBy("pattern")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

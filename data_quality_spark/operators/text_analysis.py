@@ -90,12 +90,12 @@ def benchmark_contamination(
 
     bench_sh = (
         benchmark.select(
-            F.explode(word_shingles(F.col(text_col), n)).alias("_sh")
+            F.explode(word_shingles(text_col, n)).alias("_sh")
         ).distinct()
     )
     doc_sh = df.select(
         F.col(id_col).alias("_id"),
-        F.explode_outer(word_shingles(F.col(text_col), n)).alias("_sh"),
+        F.explode_outer(word_shingles(text_col, n)).alias("_sh"),
     )
     hits = (
         doc_sh.join(F.broadcast(bench_sh), "_sh", "left_semi")
@@ -104,7 +104,7 @@ def benchmark_contamination(
     )
     totals = df.select(
         F.col(id_col).alias("_id"),
-        F.size(word_shingles(F.col(text_col), n)).cast("bigint").alias("n_shingles"),
+        F.size(word_shingles(text_col, n)).cast("bigint").alias("n_shingles"),
     )
     return totals.join(hits, "_id", "left").select(
         F.col("_id").alias(id_col),
@@ -176,17 +176,12 @@ def top_ngram_stats_multi(
     base table."""
     from pyspark.sql.window import Window
 
-    from ..functions.textstats import ngrams_from_words
+    from ..functions.textstats import ngrams_sql, words_sql
 
-    lws = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != ""
-    )
+    lws = words_sql(f"lower({text_col})")
 
     def tag(n: int):
-        return F.transform(
-            ngrams_from_words(lws, n),
-            lambda g: F.struct(F.lit(n).alias("n"), g.alias("g")),
-        )
+        return F.expr(f"transform({ngrams_sql(lws, n)}, g -> named_struct('n', {n}, 'g', g))")
 
     tagged = F.concat(*[tag(n) for n in ns])
     exploded = df.select(

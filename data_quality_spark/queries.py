@@ -62,8 +62,28 @@ def _pinned_sql(get: Callable[[ModuleType], str]) -> str | None:
         return None
 
 
+# Declared schema of every input table (tests/test_oracle_parity.py checks
+# each against the inferred one): given a schema, `spark.read` launches no
+# schema-inference job while a query is built.
+TABLE_DDL: dict[str, str] = {
+    "customer": "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING",
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+    "events": "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, value DOUBLE, props STRING",
+    "lineitem": "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, l_quantity DOUBLE, "
+    "l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, l_linestatus STRING, "
+    "l_shipdate TIMESTAMP_NTZ",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "orders": "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, "
+    "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING",
+    "part": "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, p_retailprice DOUBLE",
+    "region": "r_regionkey INT, r_name STRING",
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+}
+
+
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+    return spark.read.schema(TABLE_DDL[table]).parquet(os.path.join(sf_dir, f"{table}.parquet"))
 
 
 def _read_wide(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -76,7 +96,7 @@ def _read_wide(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """
     df = _read(spark, sf_dir, table)
     p = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < p:
+    if df._jdf.rdd().getNumPartitions() < p:
         df = df.repartition(p)
     return df
 
@@ -113,14 +133,14 @@ _SQL_STOPLIST = "[" + ", ".join(f"'{w}'" for w in ts.STOPWORDS) + "]"
 def doc_textstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read_wide(spark, sf_dir, "documents")
     feat = ts.with_text_features(docs)
-    return feat.select(
+    return feat.selectExpr(
         "doc_id",
-        F.col("_nchars").cast("long").alias("n_chars"),
-        F.col("_nw").cast("long").alias("n_words"),
-        F.col("_sum_wlen").cast("long").alias("sum_word_len"),
-        F.col("_n_distinct").cast("long").alias("n_distinct_words"),
-        F.col("_n_stop").cast("long").alias("n_stopwords"),
-        F.col("_n_sym").cast("long").alias("n_symbols"),
+        "CAST(_nchars AS BIGINT) AS n_chars",
+        "CAST(_nw AS BIGINT) AS n_words",
+        "CAST(_sum_wlen AS BIGINT) AS sum_word_len",
+        "CAST(_n_distinct AS BIGINT) AS n_distinct_words",
+        "CAST(_n_stop AS BIGINT) AS n_stopwords",
+        "CAST(_n_sym AS BIGINT) AS n_symbols",
     )
 
 
@@ -210,6 +230,13 @@ def doc_rule_hit_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_empty(v: str) -> str:
     """DuckDB twin of `ti.is_empty` over the SQL expression `v`."""
     return f"({v} IS NULL OR NOT regexp_matches({v}, '{ti.NON_BLANK_CHAR}'))"
+
+
+def _sql_trim(v: str) -> str:
+    """DuckDB twin of `F.trim` over the SQL expression `v`: one-argument
+    `trim` also strips U+00A0, U+3000 and the other Unicode spaces, Spark's
+    only U+0020."""
+    return f"trim({v}, ' ')"
 
 
 _SQL_CLASSIFY = """
@@ -624,11 +651,11 @@ def text_length_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "fingerprint_dedup_pname",
-    """
+    f"""
     WITH k AS (
       SELECT array_to_string(list_sort(list_distinct(
         list_filter(regexp_split_to_array(
-          regexp_replace(lower(trim(p_name)), '[^a-z0-9 ]', '', 'g'),
+          regexp_replace(lower({_sql_trim("p_name")}), '[^a-z0-9 ]', '', 'g'),
           ' +'), x -> x <> ''))), ' ') AS fp
       FROM part
     )
@@ -930,7 +957,7 @@ def minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import minhash_signature, word_shingles
 
     docs = _read_wide(spark, sf_dir, "documents")
-    sh = word_shingles(F.col("text"), 3)
+    sh = word_shingles("text", 3)
     sig = minhash_signature(sh, 4)
     return (
         docs.select("doc_id", sh.alias("sh"), sig.alias("sig"))
@@ -966,7 +993,7 @@ def jaccard_adjacent_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import jaccard_similarity, word_shingles
 
     docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    s = docs.select(F.col("doc_id"), word_shingles(F.col("text"), 3).alias("sh"))
+    s = docs.select(F.col("doc_id"), word_shingles("text", 3).alias("sh"))
     a = s.alias("a")
     b = s.alias("b")
     return (
@@ -1110,7 +1137,9 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     SELECT
       CAST(count(*) AS BIGINT) AS n_rows,
-      CAST(count(DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))) AS BIGINT) AS n_distinct_norm
+      CAST(count(DISTINCT md5("""
+    + _sql_trim("regexp_replace(lower(text), '\\s+', ' ', 'g')")
+    + """)) AS BIGINT) AS n_distinct_norm
     FROM documents
     """,
 )
@@ -1296,7 +1325,7 @@ def doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = F.col("text")
     return docs.select(
         "doc_id",
-        F.size(ts.words(c)).cast("long").alias("ws_tokens"),
+        F.expr(f"size({ts.words_sql('text')})").cast("long").alias("ws_tokens"),
         bpe_token_count(c).cast("long").alias("bpe_tokens"),
     )
 
@@ -1386,10 +1415,10 @@ QUERIES["ann_lsh_top3"] = ann_lsh_top3
 # Record linkage (operators/matching.py) — fuzzy self-join within blocks
 # ---------------------------------------------------------------------------
 
-_SQL_FP_PNAME = """
+_SQL_FP_PNAME = f"""
     array_to_string(list_sort(list_distinct(
       list_filter(regexp_split_to_array(
-        regexp_replace(lower(trim(p_name)), '[^a-z0-9 ]', '', 'g'), ' +'),
+        regexp_replace(lower({_sql_trim("p_name")}), '[^a-z0-9 ]', '', 'g'), ' +'),
         x -> x <> ''))), ' ')
 """
 
@@ -1784,13 +1813,13 @@ def keyer_profile_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "normalize_profile_parts",
-    """
+    f"""
     WITH c AS (
       SELECT p_partkey, p_name, string_split(p_name, '') AS ch FROM part
     )
     SELECT p_partkey,
       array_to_string(list_filter(ch, (x, i) -> i = 1 OR ch[i-1] <> x), '') AS collapsed,
-      trim(p_name) AS trimmed,
+      {_sql_trim("p_name")} AS trimmed,
       upper(p_name) AS uppered
     FROM c
     """,
@@ -2109,7 +2138,7 @@ def umalqura_convert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _read(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 2000)
     return o.select(
         "o_orderkey",
-        iso_to_hijri_umalqura(F.col("o_orderdate")).alias("hijri_umalqura"),
+        iso_to_hijri_umalqura("o_orderdate").alias("hijri_umalqura"),
     )
 
 
@@ -3223,7 +3252,7 @@ def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cross-document line dedup (CCNet boilerplate removal; operators/dedup.py)
 # ---------------------------------------------------------------------------
 
-_LINE_DEDUP_SQL = """
+_LINE_DEDUP_SQL = f"""
     WITH pages AS (
       SELECT doc_id,
         '=== site' || CAST(doc_id % 7 AS VARCHAR) || ' header ===' || chr(10)
@@ -3232,7 +3261,7 @@ _LINE_DEDUP_SQL = """
       FROM documents
     ),
     l2 AS (
-      SELECT doc_id, s.ord AS ord, s.line AS line, trim(s.line) AS k
+      SELECT doc_id, s.ord AS ord, s.line AS line, {_sql_trim("s.line")} AS k
       FROM (
         SELECT doc_id,
           unnest(list_transform(string_split(text, chr(10)),
@@ -4270,10 +4299,11 @@ def token_budget_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents")
     t = F.coalesce(F.col("text"), F.lit(""))
+    ws = ts.words_sql("coalesce(text, '')")
     return (
         docs.select(
             "lang",
-            F.size(ts.words(t)).alias("_ws"),
+            F.expr(f"size({ws})").alias("_ws"),
             bpe_token_count(t).alias("_bpe"),
             F.length(t).alias("_ch"),
         )

@@ -3,8 +3,9 @@
 Scale notes (100 TB / 1000-executor target):
 - AQE on: runtime shuffle-partition coalescing + skew-join splitting — the
   first line of defense against domain-level skew in web corpora.
-- Arrow on with a bounded batch size so model-backed pandas UDFs (langid,
-  perplexity, scrub) stream bounded memory per task.
+- Arrow on with a bounded batch size so the fused analysis UDF
+  (`analyze.analyze_text`: features, langid, perplexity) streams bounded
+  memory per task; scrub is a JVM expression cascade.
 - shuffle.partitions sized for local[32] tests; on a real cluster this is
   overridden by --conf (AQE coalescing makes the initial number forgiving).
 """

@@ -30,7 +30,7 @@ def docs(spark):
 
 
 def test_jaccard(docs, spark):
-    s = docs.select("doc_id", dedup.word_shingles(F.col("text"), 3).alias("sh"))
+    s = docs.select("doc_id", dedup.word_shingles("text", 3).alias("sh"))
     a = s.filter(F.col("doc_id") == 0).alias("a")
     b = s.filter(F.col("doc_id") == 3).alias("b")
     j = (

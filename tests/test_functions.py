@@ -174,7 +174,7 @@ def test_hijri_umalqura_java_time_vectors(spark):
         "2200-01-01": None,
     }
     df = spark.createDataFrame([(k, v) for k, v in cases.items()], "d string, want string")
-    for r in df.select("want", iso_to_hijri_umalqura(F.col("d")).alias("h")).collect():
+    for r in df.select("want", iso_to_hijri_umalqura("d").alias("h")).collect():
         assert r["h"] == r["want"], (r["want"], r["h"])
 
 
@@ -203,7 +203,7 @@ def test_hijri_umalqura_dense_table_replay(spark):
             )
     df = spark.createDataFrame(rows, "d string, want string")
     bad = df.select(
-        "d", "want", iso_to_hijri_umalqura(F.col("d")).alias("h")
+        "d", "want", iso_to_hijri_umalqura("d").alias("h")
     ).filter("h IS DISTINCT FROM want")
     assert bad.count() == 0, bad.limit(5).collect()
 

@@ -1,9 +1,11 @@
 """Every queries() entry with an oracle must match it exactly at sf0.01 —
 the local mirror of the driver's CORRECTNESS gate."""
 
+from pathlib import Path
+
 import pytest
 
-from data_quality_spark.queries import ORACLES, QUERIES
+from data_quality_spark.queries import ORACLES, QUERIES, TABLE_DDL, _read
 
 from .parity import compare
 
@@ -102,3 +104,78 @@ def test_empty_parity_on_whitespace_only_values(spark, tmp_path):
         for r in QUERIES["value_quality_customer"](spark, str(tmp_path)).collect()
     }
     assert got["c_name"] == blank > 0
+
+
+def test_trim_parity_on_unicode_space_edges(spark, tmp_path):
+    """Spark `F.trim` strips only U+0020 and DuckDB's one-argument `trim`
+    also strips U+00A0 and U+3000, so every oracle `trim` twinning an
+    `F.trim` spells `trim(v, ' ')`: part names and document texts that
+    start or end with NBSP or U+3000 keep parity."""
+    import os
+
+    import duckdb
+
+    for name in os.listdir(SF_DIR):
+        if name not in ("part.parquet", "documents.parquet"):
+            (tmp_path / name).symlink_to(os.path.join(SF_DIR, name))
+    duckdb.execute(
+        f"""COPY (
+          SELECT p_partkey,
+            CASE p_partkey % 7
+              WHEN 0 THEN chr(160) || p_name
+              WHEN 1 THEN p_name || chr(12288)
+              WHEN 2 THEN chr(12288) || ' ' || p_name || ' ' || chr(160)
+              ELSE p_name END AS p_name,
+            p_brand, p_type, p_size, p_retailprice
+          FROM '{SF_DIR}/part.parquet'
+        ) TO '{tmp_path}/part.parquet' (FORMAT parquet)"""
+    )
+    # docs 0-2 are a footer line wrapped in U+3000 (rare as is, frequent
+    # once stripped); doc 3 is the same line bare, a duplicate once stripped
+    duckdb.execute(
+        f"""COPY (
+          SELECT doc_id, t AS text, lang, source, CAST(length(t) AS BIGINT) AS n_chars
+          FROM (
+            SELECT *, CASE
+              WHEN doc_id < 3 THEN chr(12288) || 'copyright 1' || chr(12288)
+              WHEN doc_id = 3 THEN 'copyright 1'
+              WHEN doc_id % 5 = 0 THEN chr(160) || text || chr(12288)
+              ELSE text END AS t
+            FROM '{SF_DIR}/documents.parquet'
+          )
+        ) TO '{tmp_path}/documents.parquet' (FORMAT parquet)"""
+    )
+    for name in (
+        "normalize_profile_parts",
+        "fingerprint_dedup_pname",
+        "exact_dedup_norm_docs",
+        "line_dedup_docs",
+    ):
+        problems = compare(spark, name, QUERIES[name], ORACLES[name], str(tmp_path))
+        assert not problems, problems
+
+
+@pytest.mark.parametrize(
+    "sf_dir",
+    [
+        "/root/testdata/sf0.001",
+        SF_DIR,
+        "/root/testdata/sf0.1",
+        str(Path(__file__).resolve().parent.parent / "perfbench" / "data" / "sf0.01"),
+    ],
+)
+def test_declared_schemas_match_inferred(spark, sf_dir):
+    """`_read` reads every table through its declared DDL (no inference
+    job); the DDL must be exactly what inference gives on every tier."""
+    import os
+
+    from pyspark.sql.types import _parse_datatype_string
+
+    tables = sorted(f.removesuffix(".parquet") for f in os.listdir(sf_dir))
+    assert tables == sorted(TABLE_DDL)
+    for t in tables:
+        inferred = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).schema
+        assert _parse_datatype_string(TABLE_DDL[t]) == inferred, t
+        assert _read(spark, sf_dir, t).schema == inferred, t
+    with pytest.raises(KeyError):
+        _read(spark, sf_dir, "no_such_table")

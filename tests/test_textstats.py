@@ -70,7 +70,7 @@ def test_distinct_word_ratio(feats):
 def test_word_ngrams(spark):
     def grams(ws):
         df = spark.createDataFrame([(ws,)], "w array<string>")
-        return df.select(ts.ngrams_from_words(F.col("w"), 2).alias("g")).collect()[0]["g"]
+        return df.select(F.expr(ts.ngrams_sql("w", 2)).alias("g")).collect()[0]["g"]
 
     assert grams(["a", "b", "c", "d"]) == ["a b", "b c", "c d"]
     assert grams(["a"]) == []
@@ -109,5 +109,5 @@ def test_null_text_features(feats):
 def test_word_pattern_expr(spark):
     from data_quality_spark.operators.profiling import word_pattern_expr
 
-    got = _one(spark, "John SMITH bought 42 items, 中文 x9y", word_pattern_expr)
+    got = _one(spark, "John SMITH bought 42 items, 中文 x9y", lambda _: word_pattern_expr("text"))
     assert got == "[Word] [WORD] [word] [Number] items, [Ideogram] [alnum]"
