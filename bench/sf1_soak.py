@@ -15,6 +15,10 @@ duplicate-heavy corpus — the web-crawl regime, and the harder case for
 the banding joins.  Other tables are referenced from sf0.1 unchanged
 (the soak queries only read `documents`).
 
+The last row is no query: one 10k-member near-dup cluster (the
+mega-cluster case of VERDICT r5 #7), its members chained in a seeded
+random order, through `cluster_matches` + `cluster_survivors`.
+
 Run: `python bench/sf1_soak.py`   (~2-4 min; do not run pytest
 concurrently).  Appends a dated section to BENCH/BASELINE.md.
 """
@@ -31,6 +35,8 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 OUT_DIR = "/tmp/dqs_sf1"
+MASTER = "local[32]"
+MEGA_CLUSTER_SIZE = 10_000
 SOAK_QUERIES = [
     "quality_pipeline_docs",
     "exact_dedup_docs",
@@ -110,6 +116,30 @@ def synth_sf1(spark) -> None:
     open(marker, "w").close()
 
 
+def mega_cluster_survivors(spark):
+    """One `MEGA_CLUSTER_SIZE`-member component: a chain over the ids in
+    a seeded random order, edges in random order, each member scored by
+    `id % 997`; one survivor is kept."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from data_quality_spark.operators.dedup import cluster_survivors
+    from data_quality_spark.operators.matching import cluster_matches
+
+    rng = np.random.default_rng(7)
+    ids = rng.permutation(MEGA_CLUSTER_SIZE)
+    chain = np.stack([ids[:-1], ids[1:]], axis=1)
+    rng.shuffle(chain)
+    edges = spark.createDataFrame(
+        pd.DataFrame({"id_a": chain[:, 0], "id_b": chain[:, 1]}, dtype="int64")
+    )
+    labeled = cluster_matches(edges).select(
+        F.col("id").alias("doc_id"), "cluster_id", (F.col("id") % 997).alias("_q")
+    )
+    return cluster_survivors(labeled, "_q", "doc_id", "cluster_id")
+
+
 def stage_stats(ui_url: str, app_id: str) -> tuple[int, int, int]:
     """(n_stages, memoryBytesSpilled, diskBytesSpilled) across all stages.
 
@@ -132,7 +162,7 @@ def main() -> None:
     # the soak needs the status REST API for the per-stage spill counters
     spark = get_spark(
         app_name="dqs-sf1-soak",
-        master="local[32]",
+        master=MASTER,
         extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4040"},
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -152,11 +182,13 @@ def main() -> None:
     # warm-up (codegen + python workers)
     force(QUERIES["quality_pipeline_docs"](spark, "/root/testdata/sf0.001"))
 
+    builds = [(name, lambda name=name: QUERIES[name](spark, OUT_DIR)) for name in SOAK_QUERIES]
+    builds.append(("mega_cluster_10k", lambda: mega_cluster_survivors(spark)))
     rows = []
-    for name in SOAK_QUERIES:
+    for name, build in builds:
         s0, m0, d0 = stage_stats(ui_url, app_id)
         t0 = time.perf_counter()
-        n = force(QUERIES[name](spark, OUT_DIR))
+        n = force(build())
         wall = time.perf_counter() - t0
         s1, m1, d1 = stage_stats(ui_url, app_id)
         spark.catalog.clearCache()
@@ -166,7 +198,7 @@ def main() -> None:
     total = round(sum(r[1] for r in rows), 2)
     lines = [
         "",
-        f"## sf1 soak ({time.strftime('%Y-%m-%d')}) — 50k docs, local[32]",
+        f"## sf1 soak ({time.strftime('%Y-%m-%d')}) — 50k docs, {MASTER}",
         "",
         f"Input: {n_docs} documents (~10x the bench tier; near-dup-heavy by",
         "construction — see bench/sf1_soak.py).  Spill columns come from the",

@@ -14,13 +14,17 @@ from pyspark.sql import functions as F
 
 # Latin-1 diacritic folding (FingerprintKeyer.asciify analog) via translate —
 # covers the Latin-1 supplement range the reference folds.
-_DIACRITICS_SRC = "àáâãäåçèéêëìíîïñòóôõöùúûüýÿÀÁÂÃÄÅÇÈÉÊËÌÍÎÏÑÒÓÔÕÖÙÚÛÜÝ"
-_DIACRITICS_DST = "aaaaaaceeeeiiiinooooouuuuyyAAAAAACEEEEIIIINOOOOOUUUUY"
+DIACRITICS_SRC = "àáâãäåçèéêëìíîïñòóôõöùúûüýÿÀÁÂÃÄÅÇÈÉÊËÌÍÎÏÑÒÓÔÕÖÙÚÛÜÝ"
+DIACRITICS_DST = "aaaaaaceeeeiiiinooooouuuuyyAAAAAACEEEEIIIINOOOOOUUUUY"
+
+# Java's `[\p{Punct}\p{Cntrl}]` (ASCII only without UNICODE_CHARACTER_CLASS)
+# spelled as explicit ranges, so the same class means the same under RE2
+PUNCT_CNTRL = r"[!-/:-@\[-`{-~\x00-\x1f\x7f]"
 
 
 def remove_diacritics(c: Column) -> Column:
     """AlgoBox.removeDiacriticalMarks (Latin-1 coverage via translate)."""
-    return F.translate(c, _DIACRITICS_SRC, _DIACRITICS_DST)
+    return F.translate(c, DIACRITICS_SRC, DIACRITICS_DST)
 
 
 def fingerprint_key(c: Column) -> Column:
@@ -31,7 +35,7 @@ def fingerprint_key(c: Column) -> Column:
     and produce different keys for 'Émile Zola' vs 'Emile Zola'.
     Folding first is the better blocking key; documented divergence)."""
     cleaned = remove_diacritics(
-        F.regexp_replace(F.lower(F.trim(c)), r"[\p{Punct}\p{Cntrl}]", "")
+        F.regexp_replace(F.lower(F.trim(c)), PUNCT_CNTRL, "")
     )
     tokens = F.filter(F.split(cleaned, r"\s+"), lambda x: x != F.lit(""))
     return F.array_join(F.array_sort(F.array_distinct(tokens)), " ")

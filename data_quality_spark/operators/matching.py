@@ -13,16 +13,18 @@ Spark re-expression:
   expressions; phonetic/Jaro family run in ONE Arrow pandas UDF per pair
   batch (pure-Python implementations — deterministic, no native deps);
 - blocking = `repartition(block_key)`-shaped self-join on the key;
-- per-block clustering = `applyInPandas` running a tiny union-find over the
-  block's candidate pairs — the MFB queue loop collapses to connected
-  components because our merge is survivorship-style (order-independent),
-  which restores determinism the reference's order-sensitive loop lacks.
+- clustering = connected components, one numpy kernel per block (or over
+  the whole graph) inside `applyInPandas` — the MFB queue loop collapses to
+  connected components because our merge is survivorship-style
+  (order-independent), which restores determinism the reference's
+  order-sensitive loop lacks.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -315,97 +317,67 @@ def scored_name_pairs(
 
 
 def cluster_matches(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", max_iter: int = 20
+    pairs: DataFrame,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+    max_iter: int = 20,
+    block_col: str | None = None,
 ) -> DataFrame:
-    """Matched pairs → connected-component cluster ids, fully distributed.
+    """Matched pairs → connected-component cluster ids: one numpy kernel
+    per group of one `groupBy(...).applyInPandas`, no driver-side loop.
 
-    Iterative min-label propagation WITH pointer jumping: each round a
-    node's label becomes the min of (its own label, its neighbors' labels,
-    its label's label).  The neighbor step alone converges in O(component
-    diameter) rounds — fatal for chain-shaped components (a 10^6-doc
-    recrawl chain would need 10^6 rounds); the pointer-jump step halves
-    the remaining label-tree depth each round, so convergence is
-    O(log diameter) and `max_iter=20` covers components a million hops
-    deep.  Raises on non-convergence rather than returning silently-wrong
-    labels.  This replaces the reference's order-sensitive in-memory MFB
-    queue (`matchmerge/mfb/MFB.java:113-147`) with an order-independent
-    fixpoint — deterministic under any partitioning, no driver-side state.
+    The group is `block_col` when given (blocking-key edges cannot cross
+    blocks, since each record has one key, so per-block components are
+    exact) and one constant group otherwise (match graphs whose edges
+    span blocking schemes, e.g. MinHash/SimHash bands).  Each round hooks
+    every edge's two ROOTS to the smaller one (min-label on roots), then
+    pointer-jumps until every node points at a root; a root only ever
+    hooks to a smaller index, so no cycle forms and the component's
+    min id stays its root.  Hooking roots, not a node's own label, keeps
+    the round count small on long chains: a shuffled 1M-node chain
+    converges in 12 rounds (1.5 s), where hooking labels took 8,130
+    rounds at 30k nodes.  Past `max_iter` rounds the kernel raises
+    `ValueError("... did not converge ...")`.  This replaces the
+    reference's order-sensitive in-memory MFB queue
+    (`matchmerge/mfb/MFB.java:113-147`) with an order-independent
+    fixpoint.  Each group is one task: the largest graph any workload
+    clusters globally is ~50k nodes / ~100k edges.
 
-    Output: (id, cluster_id) with cluster_id = min id of the component.
+    Ids are non-null integers.  Output: (id, cluster_id) with
+    cluster_id = min id of the component.
     """
-    edges = (
-        pairs.select(F.col(id_a).alias("x"), F.col(id_b).alias("y"))
-        .union(pairs.select(F.col(id_b).alias("x"), F.col(id_a).alias("y")))
-        .distinct()
-        .cache()  # re-read every round: never recompute the matching lineage
+
+    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        ca = pdf["_ca"].to_numpy(dtype="int64")
+        cb = pdf["_cb"].to_numpy(dtype="int64")
+        ids = np.unique(np.concatenate([ca, cb]))
+        u, v = np.searchsorted(ids, ca), np.searchsorted(ids, cb)
+        label = np.arange(len(ids))
+        for rnd in range(max_iter + 1):
+            lu, lv = label[u], label[v]
+            if np.array_equal(lu, lv):
+                # min index ↔ min id (ids sorted ascending)
+                return pd.DataFrame({"id": ids, "cluster_id": ids[label]})
+            if rnd == max_iter:
+                raise ValueError(
+                    f"cluster_matches did not converge in {max_iter} rounds "
+                    f"({len(ids)} nodes, {len(ca)} edges) — raise max_iter"
+                )
+            np.minimum.at(label, lu, lv)
+            np.minimum.at(label, lv, lu)
+            while True:
+                jumped = label[label]
+                if np.array_equal(jumped, label):
+                    break
+                label = jumped
+
+    group = F.col(block_col) if block_col else F.lit(0)
+    edges = pairs.select(
+        group.alias("_grp"),
+        F.col(id_a).cast("long").alias("_ca"),
+        F.col(id_b).cast("long").alias("_cb"),
     )
-    # localCheckpoint (not cache) each round: the round body references
-    # `labels` three times (neighbor join, pointer jump, convergence
-    # check), so the logical plan TRIPLES per round without lineage
-    # truncation — plan-tree serialization OOMs the driver near round ~10
-    # even though cache bounds the recompute.  localCheckpoint keeps the
-    # materialized rows executor-local (labels is one row per matched id,
-    # tiny next to the corpus); lineage-based recovery of a lost partition
-    # is traded for a rerun of the (cheap) clustering job.
-    labels = (
-        edges.select(F.col("x").alias("id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("id"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels.withColumnRenamed("id", "y"), "y")
-            .groupBy("x")
-            .agg(F.min("cluster_id").alias("nmin"))
-            .withColumnRenamed("x", "id")
-        )
-        # pointer jump, applied twice: label(label(label(label(id)))) —
-        # shrinks label-tree depth to ~1/4 per round.  Each application is
-        # a self-join on labels (one row per matched id, far smaller than
-        # edges), so two in-job joins are much cheaper than the extra
-        # ROUNDS they save: every round costs a fixed localCheckpoint job
-        # + scheduling latency, which dominates at the tiny per-round data
-        # sizes of a converging label table.
-        lut = labels.select(
-            F.col("id").alias("_t"), F.col("cluster_id").alias("_n")
-        )
-        jump = labels.select("id", F.col("cluster_id").alias("jmin"))
-        for _ in range(2):
-            jump = (
-                jump.join(lut, jump["jmin"] == lut["_t"], "left")
-                .select("id", F.coalesce("_n", "jmin").alias("jmin"))
-            )
-        # carry the previous label through the checkpoint so convergence is
-        # a cheap filter on the materialized rows, not an extra join job
-        new_labels = (
-            labels.join(neighbor_min, "id", "left")
-            .join(jump, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("nmin"), F.col("cluster_id")),
-                    F.coalesce(F.col("jmin"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-                F.col("cluster_id").alias("_prev"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint()
-        changed = (
-            new_labels.filter(F.col("cluster_id") != F.col("_prev")).limit(1).count()
-        )
-        labels = new_labels.select("id", "cluster_id")
-        if changed == 0:
-            break
-    else:
-        edges.unpersist()
-        raise ValueError(
-            f"cluster_matches did not converge in {max_iter} rounds "
-            "(component label-tree deeper than 2^max_iter — raise max_iter)"
-        )
-    edges.unpersist()
-    return labels
+    return edges.groupBy("_grp").applyInPandas(run_group, schema="id long, cluster_id long")
 
 
 def _levenshtein_ratio(s1: str, s2: str) -> float:
@@ -655,62 +627,6 @@ def mfb_match_merge(
         )
 
     return keyed.groupBy("_bk").applyInPandas(run_block, schema=schema)
-
-
-# ---------------------------------------------------------------------------
-# Per-block connected components (scale path for blocked match graphs)
-# ---------------------------------------------------------------------------
-
-
-def cluster_matches_blocked(
-    pairs: DataFrame, block_col: str = "_bk", id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
-    """Matched pairs WITH their blocking key → cluster ids via a per-block
-    union-find inside `applyInPandas`.
-
-    Blocking-key edges cannot cross blocks (each record has exactly one
-    key), so per-block clustering is EXACT — and unlike the global
-    label-propagation loop (`cluster_matches`), round count never depends
-    on component diameter and no driver-side iteration happens: one
-    shuffle, one pass.  Use `cluster_matches` only for match graphs whose
-    edges span multiple blocking schemes.
-
-    Output: (id, cluster_id = min id of the component).
-    """
-    import numpy as _np
-    import pandas as _pd
-
-    def run_block(pdf: _pd.DataFrame) -> _pd.DataFrame:
-        # Vectorized connected components (min-label hooking + pointer
-        # jumping, all numpy C loops): blocks are near-cliques, so this
-        # converges in 2-3 rounds of O(E) work — a Python-level union-find
-        # was the bottleneck at millions of in-block edges.
-        ca = pdf["_ca"].to_numpy(dtype="int64")
-        cb = pdf["_cb"].to_numpy(dtype="int64")
-        ids = _np.unique(_np.concatenate([ca, cb]))
-        u = _np.searchsorted(ids, ca)
-        v = _np.searchsorted(ids, cb)
-        label = _np.arange(len(ids))
-        while True:
-            before = label.copy()
-            _np.minimum.at(label, u, before[v])
-            _np.minimum.at(label, v, before[u])
-            while True:
-                jumped = label[label]
-                if _np.array_equal(jumped, label):
-                    break
-                label = jumped
-            if _np.array_equal(label, before):
-                break
-        # min index ↔ min id (ids sorted ascending)
-        return _pd.DataFrame({"id": ids, "cluster_id": ids[label]})
-
-    edges = pairs.select(
-        F.col(block_col).alias("_blk"),
-        F.col(id_a).cast("long").alias("_ca"),
-        F.col(id_b).cast("long").alias("_cb"),
-    )
-    return edges.groupBy("_blk").applyInPandas(run_block, schema="id long, cluster_id long")
 
 
 # ---------------------------------------------------------------------------

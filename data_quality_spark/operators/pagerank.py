@@ -20,7 +20,9 @@ Scale shape (10^8-domain graphs): each round is one join of ranks onto
 edges by src (both sides keyed on domain — AQE/bucketing co-locates
 round over round) plus one map-side-combined sum by dst; `ranks` is
 `localCheckpoint`ed every `checkpoint_every` rounds to truncate plan
-lineage (the `cluster_matches` lesson, `operators/matching.py`).
+lineage: each round's plan references the previous `ranks`, so without
+truncation the plan tree grows with every round and analysing and
+serialising it soon dominates the round's own work.
 
 Reference analog: none — link-graph extension over
 `urltools.outlink_domain_edges`.

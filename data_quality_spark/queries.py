@@ -20,6 +20,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions import keyers as kz
 from .functions import textstats as ts
 from .functions import typeinfer as ti
 from .functions.literals import lit_array
@@ -230,6 +231,26 @@ def doc_rule_hit_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_empty(v: str) -> str:
     """DuckDB twin of `ti.is_empty` over the SQL expression `v`."""
     return f"({v} IS NULL OR NOT regexp_matches({v}, '{ti.NON_BLANK_CHAR}'))"
+
+
+# printable ASCII without the quote: the code points `_sql_levenshtein` maps to
+_LEV_CODES = "".join(c for c in map(chr, range(33, 127)) if c != "'")
+
+
+def _sql_levenshtein(a: str, b: str) -> str:
+    """DuckDB twin of Spark's `levenshtein` over the SQL expressions `a`, `b`:
+    DuckDB counts edits of UTF-8 BYTES (`smäll`/`small` is 2), Spark of
+    code points (1).  Both sides are mapped, one code point to one ASCII
+    character, over the pair's distinct characters first: an injective
+    map keeps the distance.  More distinct characters than `_LEV_CODES`
+    raises in DuckDB."""
+    chars = f"array_to_string(list_distinct(string_split({a} || {b}, '')), '')"
+    codes = f"substr('{_LEV_CODES}', 1, length({chars}))"
+    return (
+        f"CASE WHEN length({chars}) > {len(_LEV_CODES)} "
+        "THEN error('levenshtein: too many distinct characters') "
+        f"ELSE levenshtein(translate({a}, {chars}, {codes}), translate({b}, {chars}, {codes})) END"
+    )
 
 
 def _sql_trim(v: str) -> str:
@@ -1415,10 +1436,14 @@ QUERIES["ann_lsh_top3"] = ann_lsh_top3
 # Record linkage (operators/matching.py) — fuzzy self-join within blocks
 # ---------------------------------------------------------------------------
 
+# DuckDB twin of `keyers.fingerprint_key`: the same ASCII punct/control
+# class and diacritic table; control characters are stripped, so the only
+# whitespace left to split on is U+0020
 _SQL_FP_PNAME = f"""
     array_to_string(list_sort(list_distinct(
-      list_filter(regexp_split_to_array(
-        regexp_replace(lower({_sql_trim("p_name")}), '[^a-z0-9 ]', '', 'g'), ' +'),
+      list_filter(regexp_split_to_array(translate(
+        regexp_replace(lower({_sql_trim("p_name")}), '{kz.PUNCT_CNTRL}', '', 'g'),
+        '{kz.DIACRITICS_SRC}', '{kz.DIACRITICS_DST}'), ' +'),
         x -> x <> ''))), ' ')
 """
 
@@ -1437,7 +1462,7 @@ _SQL_FP_PNAME = f"""
     )
     SELECT id_a, id_b,
       CASE WHEN greatest(length(name_a), length(name_b)) = 0 THEN 1.0
-           ELSE 1.0 - levenshtein(name_a, name_b) / greatest(length(name_a), length(name_b))
+           ELSE 1.0 - {_sql_levenshtein("name_a", "name_b")} / greatest(length(name_a), length(name_b))
       END AS lev_weight,
       CASE WHEN name_a = name_b THEN 1.0 ELSE 0.0 END AS exact_weight
     FROM pairs
@@ -1470,7 +1495,7 @@ _CLUSTERS_ORACLE = f"""
     ), edges AS (
       SELECT id_a, id_b FROM pairs
       WHERE CASE WHEN greatest(length(name_a), length(name_b)) = 0 THEN 1.0
-            ELSE 1.0 - levenshtein(name_a, name_b)
+            ELSE 1.0 - {_sql_levenshtein("name_a", "name_b")}
                        / greatest(length(name_a), length(name_b)) END >= 0.8
     ), sym AS (
       SELECT id_a AS x, id_b AS y FROM edges
@@ -1495,9 +1520,10 @@ def record_clusters_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     device: StringsClusterAnalyzer dedupes identical values before the
     quadratic in-block match).  Identical names collapse to one
     representative (trivially connected at weight 1.0), the quadratic
-    levenshtein match runs over DISTINCT names only, per-block union-find
-    (`cluster_matches_blocked`) labels the representative graph, and
-    members rejoin by name equality.  Web corpora repeat values heavily —
+    levenshtein match runs over DISTINCT names only, per-block connected
+    components (`cluster_matches(..., block_col="_bk")`, one numpy kernel
+    per blocking key) label the representative graph, and members rejoin
+    by name equality.  Web corpora repeat values heavily —
     at sf0.1 this cuts the scored pairs from ~3.1M to a few thousand with
     bit-identical output to the pair-everything formulation.
 
@@ -1507,7 +1533,7 @@ def record_clusters_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.keyers import fingerprint_key
     from .operators.matching import (
         candidate_pairs,
-        cluster_matches_blocked,
+        cluster_matches,
         levenshtein_weight,
     )
 
@@ -1524,7 +1550,7 @@ def record_clusters_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a_rep_id").alias("id_a"),
         F.col("b_rep_id").alias("id_b"),
     ).where(levenshtein_weight(F.col("a_p_name"), F.col("b_p_name")) >= 0.8)
-    rep_labels = cluster_matches_blocked(edges).withColumnRenamed("id", "rep_id")
+    rep_labels = cluster_matches(edges, block_col="_bk").withColumnRenamed("id", "rep_id")
     # members join their representative's component; reps without an edge
     # but with exact duplicates form their own cluster (rep_id label) —
     # exactly the ids the pair-everything formulation emits.
@@ -1580,7 +1606,7 @@ def mfb_clusters_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "tokenized_weight_parts",
-    """
+    f"""
     WITH t AS (
       SELECT p_partkey,
         list_filter(regexp_split_to_array(p_name, ' '), x -> x <> '') AS toks
@@ -1592,7 +1618,7 @@ def mfb_clusters_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
       1.0 AS anyorder_w,
       list_sum(list_transform(generate_series(1, least(len(toks), len(rtoks))),
         i -> CASE WHEN greatest(length(toks[i]), length(rtoks[i])) = 0 THEN 1.0
-             ELSE 1.0 - levenshtein(toks[i], rtoks[i])
+             ELSE 1.0 - {_sql_levenshtein("toks[i]", "rtoks[i]")}
                         / greatest(length(toks[i]), length(rtoks[i])) END))
       / greatest(len(toks), len(rtoks)) AS sameplace_w
     FROM r
@@ -3375,8 +3401,9 @@ def dedup_clusters_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure labels them (the per-block CC shortcut of
     `record_clusters_parts` cannot).  This is the whole-corpus dedup-graph
     case of a web crawl, where near-dup pairs from MinHash/SimHash banding
-    chain across buckets.  Spark side: `cluster_matches` — iterative
-    min-label propagation with pointer jumping, O(log diameter) rounds
+    chain across buckets.  Spark side: `cluster_matches` with no block
+    column — root hooking plus pointer jumping in one numpy kernel over
+    the whole edge list, one task, no Spark job while it is built
     (`operators/matching.py`; replaces the reference's in-memory queue,
     `matchmerge/mfb/MFB.java:113-147`).  Oracle side: DuckDB recursive-CTE
     transitive closure — an INDEPENDENT formulation of the same fixpoint.
@@ -4417,10 +4444,10 @@ def dedup_survivors_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebraic ``max(struct(len, -id, id))`` aggregate — map-side combine
     applies, so a boilerplate mega-cluster never funnels through a
     per-cluster window; the identical struct-max runs in the oracle.
-    Cluster labels come from the SAME pointer-jumping CC (Spark) /
-    recursive-CTE closure (DuckDB) pair as `dedup_clusters_global`
-    (`operators/dedup.py:cluster_survivors`,
-    `operators/matching.py:cluster_matches`)."""
+    Cluster labels come from the SAME connected-components kernel
+    (Spark, `operators/matching.py:cluster_matches`) / recursive-CTE
+    closure (DuckDB) pair as `dedup_clusters_global`; the survivor step
+    is `operators/dedup.py:cluster_survivors`."""
     from .operators.dedup import cluster_survivors
 
     docs = _read(spark, sf_dir, "documents")

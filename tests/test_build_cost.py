@@ -14,8 +14,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 # queries whose build runs Spark jobs by design, with the reason
 BUILD_JOBS_EXEMPT = {
-    "dedup_clusters_global": "connected components: a checkpoint and a convergence job per round",
-    "dedup_survivors_docs": "the same connected components over the survivor edges",
+    "dedup_survivors_docs": "cluster_survivors checkpoints its two-consumer input eagerly",
     "domain_pagerank": "fixed-point PageRank: a checkpoint job per iteration",
     "ann_ivf_top3": "k-means trains its centroids on a data-dependent sample",
     "avro_nested_quality": "reads the Avro container header for the writer schema",

@@ -81,14 +81,39 @@ def test_cluster_long_chain_pointer_jumping(spark):
     assert got == {i: 0 for i in range(61)}
 
 
-def test_cluster_matches_raises_on_nonconvergence(spark):
-    import pytest
+def _shuffled_chain(n, seed):
+    """Edges of a path over ids 0..n-1 visited in a seeded random order,
+    listed in random order: the long-diameter shape root hooking must
+    collapse in few rounds."""
+    import numpy as np
+    import pandas as pd
 
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
-    )
-    with pytest.raises(ValueError, match="did not converge"):
-        M.cluster_matches(pairs, max_iter=2)
+    rng = np.random.default_rng(seed)
+    ids = rng.permutation(n)
+    edges = np.stack([ids[:-1], ids[1:]], axis=1)
+    rng.shuffle(edges)
+    return pd.DataFrame({"id_a": edges[:, 0], "id_b": edges[:, 1]}, dtype="int64")
+
+
+def test_cluster_matches_raises_on_nonconvergence(spark):
+    from pyspark.errors import PythonException
+
+    # a shuffled 41-node chain takes 4 rounds; the kernel raises at execution
+    pairs = spark.createDataFrame(_shuffled_chain(41, seed=1))
+    with pytest.raises(PythonException, match="did not converge"):
+        M.cluster_matches(pairs, max_iter=2).collect()
+
+
+def test_cluster_shuffled_100k_chain_converges(spark):
+    # hooking a node's own label instead of its root took 15,641 rounds here
+    pairs = spark.createDataFrame(_shuffled_chain(100_000, seed=3))
+    r = M.cluster_matches(pairs).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct("id").alias("ids"),
+        F.max("cluster_id").alias("hi"),
+        F.min("cluster_id").alias("lo"),
+    ).collect()[0]
+    assert (r["n"], r["ids"], r["lo"], r["hi"]) == (100_000, 100_000, 0, 0)
 
 
 def test_tokenized_modes_exact_vectors():

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from data_quality_spark.operators.matching import (
     _mfb_queue,
-    cluster_matches_blocked,
+    cluster_matches,
     mfb_match_merge,
 )
 
@@ -123,13 +123,15 @@ def test_cluster_matches_blocked_exact(spark):
         [("b1", 1, 2), ("b1", 2, 3), ("b1", 5, 6), ("b2", 10, 11)],
         "_bk string, id_a long, id_b long",
     )
-    out = {r["id"]: r["cluster_id"] for r in cluster_matches_blocked(pairs).collect()}
+    out = {r["id"]: r["cluster_id"] for r in cluster_matches(pairs, block_col="_bk").collect()}
     assert out == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 10: 10, 11: 10}
 
 
 def test_cluster_blocked_agrees_with_python_oracle(spark):
-    """Per-block union-find must produce the exact connected components a
-    pure-Python union-find computes over the same edges."""
+    """Connected components, per block and over the whole graph, must be
+    the exact components a pure-Python union-find computes over the same
+    edges: random in-block graphs plus seeded shuffled chains (node ids in
+    random order along the chain, edges in random order)."""
     import random
 
     rng = random.Random(7)
@@ -139,8 +141,15 @@ def test_cluster_blocked_agrees_with_python_oracle(spark):
         for _ in range(15):
             a, b = rng.sample(ids, 2)
             pairs.append((f"b{blk}", min(a, b), max(a, b)))
+    for blk, n in enumerate((2, 41, 300), start=10):
+        ids = list(range(blk * 1000, blk * 1000 + n))
+        rng.shuffle(ids)
+        chain = [(f"b{blk}", a, b) for a, b in zip(ids, ids[1:])]
+        rng.shuffle(chain)
+        pairs.extend(chain)
     df = spark.createDataFrame(pairs, "_bk string, id_a long, id_b long")
-    blocked = {(r["id"], r["cluster_id"]) for r in cluster_matches_blocked(df).collect()}
+    blocked = {(r["id"], r["cluster_id"]) for r in cluster_matches(df, block_col="_bk").collect()}
+    whole = {(r["id"], r["cluster_id"]) for r in cluster_matches(df).collect()}
 
     parent = {}
 
@@ -160,6 +169,7 @@ def test_cluster_blocked_agrees_with_python_oracle(spark):
             parent[rb] = ra
     expected = {(i, find(i)) for i in parent}
     assert blocked == expected
+    assert whole == expected
 
 
 def test_most_trusted_source(spark):

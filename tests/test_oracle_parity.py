@@ -155,6 +155,44 @@ def test_trim_parity_on_unicode_space_edges(spark, tmp_path):
         assert not problems, problems
 
 
+def test_fingerprint_parity_on_unicode_names(spark, tmp_path):
+    """`keyers.fingerprint_key` strips Java's ASCII `[\\p{Punct}\\p{Cntrl}]`
+    and folds Latin-1 diacritics; its oracle must do the same, not strip
+    everything outside `[a-z0-9 ]`, and count levenshtein edits in code
+    points as Spark does, not in UTF-8 bytes.  The `part` copy adds, beside every
+    original row, a variant name carrying an accent (one edit away, so the
+    same block and a match edge once folded), an upper-case accent, ASCII
+    punctuation, U+3000 or NBSP between words, a control character, or
+    quotes and a backslash."""
+    import os
+
+    import duckdb
+
+    for name in os.listdir(SF_DIR):
+        if name != "part.parquet":
+            (tmp_path / name).symlink_to(os.path.join(SF_DIR, name))
+    duckdb.execute(
+        f"""COPY (
+          SELECT * FROM '{SF_DIR}/part.parquet'
+          UNION ALL
+          SELECT p_partkey + 100000 AS p_partkey,
+            CASE p_partkey % 7
+              WHEN 0 THEN regexp_replace(p_name, 'a', 'ä')
+              WHEN 1 THEN regexp_replace(p_name, 'e', 'É')
+              WHEN 2 THEN regexp_replace(p_name, ' ', ', ') || '!'
+              WHEN 3 THEN regexp_replace(p_name, ' ', chr(12288))
+              WHEN 4 THEN regexp_replace(p_name, ' ', chr(160))
+              WHEN 5 THEN regexp_replace(p_name, ' ', chr(1) || ' ')
+              ELSE chr(34) || p_name || chr(39) || chr(92) END AS p_name,
+            p_brand, p_type, p_size, p_retailprice
+          FROM '{SF_DIR}/part.parquet'
+        ) TO '{tmp_path}/part.parquet' (FORMAT parquet)"""
+    )
+    for name in ("keyer_profile_parts", "record_linkage_parts", "record_clusters_parts"):
+        problems = compare(spark, name, QUERIES[name], ORACLES[name], str(tmp_path))
+        assert not problems, problems
+
+
 @pytest.mark.parametrize(
     "sf_dir",
     [
