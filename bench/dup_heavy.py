@@ -30,8 +30,6 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-UI_PORT = 4055
-
 
 def build_corpus(spark, base: int, copies: int):
     """base seeded pages × `copies` near-duplicates, deterministic."""
@@ -64,8 +62,11 @@ def build_corpus(spark, base: int, copies: int):
     )
 
 
-def shuffle_write_bytes(app_id: str) -> int:
-    url = f"http://localhost:{UI_PORT}/api/v1/applications/{app_id}/stages?status=complete"
+def shuffle_write_bytes(ui_url: str, app_id: str) -> int:
+    """Total shuffle write of the completed stages.  `ui_url` is
+    `spark.sparkContext.uiWebUrl`: Spark moves the UI to the next free port
+    when its port is busy, so a fixed port could read another app's UI."""
+    url = f"{ui_url}/api/v1/applications/{app_id}/stages?status=complete"
     with urllib.request.urlopen(url, timeout=10) as r:
         stages = json.loads(r.read())
     return sum(s.get("shuffleWriteBytes", 0) for s in stages)
@@ -93,7 +94,6 @@ def main() -> None:
             "spark.sql.autoBroadcastJoinThreshold": "-1",
             "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
             "spark.ui.enabled": "true",
-            "spark.ui.port": str(UI_PORT),
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -115,9 +115,10 @@ def main() -> None:
     cold_sec, n_pairs = run()
     # two warm reps, best kept: the shared host has multi-second noise
     # windows (±3×) that a single rep can land in
-    base_shuffle = shuffle_write_bytes(spark.sparkContext.applicationId)
+    sc = spark.sparkContext
+    base_shuffle = shuffle_write_bytes(sc.uiWebUrl, sc.applicationId)
     warm_sec, n_pairs2 = run()
-    warm_shuffle = shuffle_write_bytes(spark.sparkContext.applicationId) - base_shuffle
+    warm_shuffle = shuffle_write_bytes(sc.uiWebUrl, sc.applicationId) - base_shuffle
     warm2_sec, n_pairs3 = run()
     warm_sec = min(warm_sec, warm2_sec)
     assert n_pairs == n_pairs2 == n_pairs3, (n_pairs, n_pairs2, n_pairs3)

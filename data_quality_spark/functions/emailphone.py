@@ -12,8 +12,7 @@ a reproducible pipeline run.
 
 Phone — the reference wraps libphonenumber (`phone/.../PhoneNumberHandlerBase.
 java:54-423`).  We provide regex-based structural validation for NANP (+1)
-and generic international numbers as native expressions; region metadata
-lives in `phone_metadata.py`.
+numbers as native expressions; region metadata lives in `phone_metadata.py`.
 """
 
 from __future__ import annotations
@@ -48,25 +47,19 @@ def is_valid_email(c: Column) -> Column:
 
 def email_verify(
     c: Column,
-    domain_whitelist: tuple[str, ...] | None = None,
     domain_blacklist: tuple[str, ...] | None = None,
     tld_whitelist: tuple[str, ...] | None = None,
     local_part_regex: str | None = None,
-    lowercase_correction: bool = False,
 ) -> Column:
     """The checker chain as a when() cascade — first failing checker wins,
-    mirroring `EmailVerify.checkEmail` ordering (syntax → domains → TLD →
-    local part), with the optional case-correction step returning CORRECTED
+    mirroring `EmailVerify.checkEmail` ordering (syntax → domain → TLD →
+    local part), ending with the case-correction step that returns
+    CORRECTED for an address that is not lower case
     (`email/checkerImpl/LocalPartRegexCheckerImpl.java`)."""
     verdict = F.when(~is_valid_email(c), F.lit(INVALID))
     if domain_blacklist:
         verdict = verdict.when(
             F.lower(email_domain(c)).isin(*[d.lower() for d in domain_blacklist]),
-            F.lit(INVALID),
-        )
-    if domain_whitelist:
-        verdict = verdict.when(
-            ~F.lower(email_domain(c)).isin(*[d.lower() for d in domain_whitelist]),
             F.lit(INVALID),
         )
     if tld_whitelist:
@@ -78,16 +71,12 @@ def email_verify(
         verdict = verdict.when(
             ~email_local_part(c).rlike(local_part_regex), F.lit(INVALID)
         )
-    if lowercase_correction:
-        verdict = verdict.when(c != F.lower(c), F.lit(CORRECTED))
-    return verdict.otherwise(F.lit(VALID))
-
+    return verdict.when(c != F.lower(c), F.lit(CORRECTED)).otherwise(F.lit(VALID))
 
 # --- phone -----------------------------------------------------------------
 
-# Structural patterns (RE2-safe). NANP: +1 NXX NXX XXXX.
+# Structural pattern (RE2-safe). NANP: +1 NXX NXX XXXX.
 _NANP_PATTERN = r"^\+?1?[-. (]*([2-9][0-9]{2})[-. )]*([0-9]{3})[-. ]*([0-9]{4})$"
-_INTL_PATTERN = r"^\+[1-9][0-9]{0,2}[-. ]*([0-9][-. ]*){6,14}$"
 
 
 def phone_digits(c: Column) -> Column:
@@ -100,8 +89,6 @@ def is_possible_phone(c: Column) -> Column:
     return (n >= 7) & (n <= 15)
 
 
-def is_valid_phone(c: Column, region: str = "US") -> Column:
-    """isValidNumber analog: structural validation per region."""
-    if region == "US":
-        return c.rlike(_NANP_PATTERN)
-    return c.rlike(_INTL_PATTERN) | c.rlike(_NANP_PATTERN)
+def is_valid_phone(c: Column) -> Column:
+    """isValidNumber analog for the US region: NANP structural validation."""
+    return c.rlike(_NANP_PATTERN)

@@ -432,7 +432,7 @@ def _nanp_area_code(c: Column) -> Column:
     """Area code of a valid NANP number, else null."""
     d = phone_digits(c)
     ten = F.when((F.length(d) == 11) & d.startswith("1"), F.substring(d, 2, 10)).otherwise(d)
-    return F.when(is_valid_phone(c, "US"), F.substring(ten, 1, 3).cast("int"))
+    return F.when(is_valid_phone(c), F.substring(ten, 1, 3).cast("int"))
 
 
 def phone_country_code(c: Column) -> Column:
@@ -450,7 +450,7 @@ def phone_country_code(c: Column) -> Column:
         F.when(has_plus & c1.isin(one_digit), c1)
         .when(has_plus & c2.isin(two_digit), c2)
         .when(has_plus & c3.isin(three_digit), c3)
-        .when(is_valid_phone(c, "US"), F.lit(1))
+        .when(is_valid_phone(c), F.lit(1))
         .otherwise(F.lit(None).cast("int"))
     )
 

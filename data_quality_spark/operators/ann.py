@@ -4,17 +4,17 @@
   and broadcast (a query set is small by definition); the corpus side
   never shuffles — each partition scores its rows against the broadcast
   queries and emits only its local top-k, which TakeOrdered merges.
-- Sign-LSH (random hyperplane) bucketed variant: the scale path.  Each
-  vector gets `num_planes` sign bits from deterministic ±1 hyperplanes
-  (seeded, reproducible), grouped into band keys; neighbor candidates are
-  only scored within shared buckets.  At 10^12 rows this turns an O(n·q)
-  scan into O(bucket) work per query.
+- Sign-LSH (random hyperplane) bucketed variant.  Each vector gets
+  `num_planes` sign bits from deterministic ±1 hyperplanes (seeded,
+  reproducible) as one bucket key; neighbor candidates are only scored
+  within shared buckets.  At 10^12 rows this turns an O(n·q) scan into
+  O(bucket) work per query.
 
-Dot products run in a vectorized numpy pandas UDF (Arrow batches): 64-dim
-float ops in numpy beat interpreted per-element Catalyst `zip_with` by
-~100×.  For oracle-checked exactness we also provide a pure-Catalyst
-`cosine_expr` used by the driver-contract query (sequential double fold —
-bit-identical to DuckDB's list fold).
+The LSH plane dots run in one vectorized numpy pandas UDF (Arrow batches,
+`add_lsh_keys`) as exact left folds: ~100× faster than an interpreted
+per-element Catalyst fold and bit-identical to it.  Cosine scoring is the
+pure-Catalyst `cosine_expr` (sequential double fold — bit-identical to
+DuckDB's list fold), so the contract queries are oracle-checked end to end.
 """
 
 from __future__ import annotations
@@ -25,8 +25,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from ..functions.literals import lit_array
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -79,7 +77,7 @@ def brute_force_topk(
 
 
 # ---------------------------------------------------------------------------
-# Sign-LSH bucketing (scale path)
+# Sign-LSH bucketing
 # ---------------------------------------------------------------------------
 
 
@@ -91,150 +89,38 @@ def _planes(dim: int, num_planes: int, seed: int):
     return rng.choice([-1.0, 1.0], size=(num_planes, dim)).astype("float64")
 
 
-def add_lsh_key(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    num_planes: int = 12,
-    seed: int = 42,
-    out_col: str = "lsh_key",
-) -> DataFrame:
-    """Attach the sign-LSH bucket key (bigint of `num_planes` sign bits).
+def add_lsh_keys(df: DataFrame, vec_col: str, planes, probes: int = 0) -> DataFrame:
+    """Attach sign-LSH bucket keys as `lsh_key`, one row per probed bucket:
+    the exact bucket (bit p set iff the dot with plane p is > 0) plus, for
+    `probes` > 0, the buckets reached by flipping the `probes` sign bits
+    whose |margin| is smallest, ties broken by plane index (multi-probe
+    LSH: the most uncertain bits are the likeliest to differ for true
+    near neighbors).
 
-    Vectorized numpy in an Arrow batch: (B, dim) @ (dim, planes) per batch.
-    """
-    from pyspark.sql.types import LongType
-
-    @F.pandas_udf(LongType())
-    def _key(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        import numpy as np
-
-        planes = _planes(dim, num_planes, seed).T  # (dim, planes)
-        weights = (1 << np.arange(num_planes)).astype("int64")
-        for vecs in batches:
-            m = np.asarray(vecs.tolist(), dtype="float64")  # (B, dim)
-            signs = (m @ planes) > 0  # (B, planes)
-            yield pd.Series(signs @ weights)
-
-    return df.withColumn(out_col, _key(F.col(vec_col)))
-
-
-def add_lsh_probe_keys(
-    df: DataFrame,
-    vec_col: str,
-    dim: int = 64,
-    num_planes: int = 10,
-    seed: int = 42,
-    probes: int = 0,
-    out_col: str = "lsh_key",
-) -> DataFrame:
-    """Multi-probe key array: the exact bucket plus the `probes` buckets
-    reached by flipping the sign bits whose hyperplane margin is SMALLEST
-    (classic multi-probe LSH: the most uncertain bits are the likeliest to
-    differ for true near neighbors).  Output: one row per probed bucket."""
+    The plane dots are left folds of float64 adds, `acc = acc + m[:, i] *
+    plane[i]` over the dimensions, vectorized across rows and planes: the
+    same IEEE operations in the same order as Catalyst `aggregate` and
+    DuckDB `list_sum`, so the keys are bit-identical to a SQL oracle (a
+    matmul sums in another order and can flip a near-zero margin)."""
+    import numpy as np
     from pyspark.sql.types import ArrayType, LongType
+
+    pl = np.asarray(planes, dtype="float64")  # (planes, dim)
+    bits = np.int64(1) << np.arange(len(pl), dtype="int64")
 
     @F.pandas_udf(ArrayType(LongType()))
     def _keys(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        import numpy as np
-
-        planes = _planes(dim, num_planes, seed).T  # (dim, planes)
-        weights = (1 << np.arange(num_planes)).astype("int64")
-        for vecs in batches:
-            m = np.asarray(vecs.tolist(), dtype="float64")
-            proj = m @ planes                       # (B, planes): signed margins
-            base = ((proj > 0) @ weights).astype("int64")
-            order = np.argsort(np.abs(proj), axis=1)  # smallest margin first
-            out = []
-            for b in range(m.shape[0]):
-                keys = [int(base[b])]
-                for p in range(min(probes, num_planes)):
-                    keys.append(int(base[b]) ^ int(weights[order[b, p]]))
-                out.append(keys)
-            yield pd.Series(out)
-
-    return df.withColumn(out_col, F.explode(_keys(F.col(vec_col))))
-
-
-def lsh_plane_dots_expr(vec_col: Column, planes) -> list[Column]:
-    """Per-plane dot products as NATIVE sequential-fold expressions.
-
-    The planes are ±1 Rademacher rows, so each product is exact; the fold
-    order matches DuckDB's `list_sum(list_transform(...))` bit-for-bit
-    (the same device as `cosine_expr`).  This is the engine-portable twin
-    of the numpy batch matmul in `add_lsh_key` — used by oracle-checked
-    contract queries; production keeps the vectorized UDF.
-    """
-    # closure factory, NOT a default arg: pyspark inspects the lambda's
-    # parameter count, and a 3rd (defaulted) param breaks arity resolution
-    def _times_plane(a):
-        # binary transform lambda: arg 2 IS the 0-based array index
-        return lambda x, i: x.cast("double") * F.element_at(a, i + 1)
-
-    dots = []
-    for row in planes:
-        arr = lit_array(row, "double")
-        prod = F.transform(vec_col, _times_plane(arr))
-        dots.append(F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v))
-    return dots
-
-
-def lsh_base_key_expr(dots: list[Column]) -> Column:
-    """Sign-bit bucket key from per-plane dots (bigint)."""
-    key = F.lit(0).cast("long")
-    for p, d in enumerate(dots):
-        key = key + F.when(d > 0, F.lit(1 << p)).otherwise(F.lit(0)).cast("long")
-    return key
-
-
-def lsh_probe_keys_expr(dots: list[Column], probes: int) -> Column:
-    """Array of probe keys: the base key plus the buckets reached by
-    flipping the `probes` lowest-|margin| sign bits (ties broken by plane
-    index — the struct sort is lexicographic (|margin|, p) in both Spark
-    and DuckDB)."""
-    base = lsh_base_key_expr(dots)
-    ms = F.array(
-        *[F.struct(F.abs(d).alias("m"), F.lit(p).alias("p")) for p, d in enumerate(dots)]
-    )
-    bit_values = lit_array([1 << p for p in range(len(dots))], "bigint")
-    flips = F.slice(F.array_sort(ms), 1, probes)
-    probe_keys = F.transform(
-        flips, lambda s: base.bitwiseXOR(F.element_at(bit_values, s["p"] + 1))
-    )
-    return F.concat(F.array(base), probe_keys)
-
-
-def add_lsh_key_foldexact(
-    df: DataFrame, vec_col: str, planes, out_col: str = "lsh_key"
-) -> DataFrame:
-    """Corpus-side portable keys, FAST path: a numpy Arrow UDF that
-    accumulates the plane dots with an explicit per-dimension loop —
-    `acc = acc + m[:, i] * plane[p][i]` — i.e. the SAME left-fold of
-    float64 IEEE adds as `lsh_plane_dots_expr` and DuckDB's list_sum, so
-    keys are bit-identical to the oracle, but vectorized across rows
-    (the interpreted Catalyst fold costs ~1µs/element; this is ~100×)."""
-    import numpy as np
-    from pyspark.sql.types import LongType
-
-    pl = [np.asarray(row, dtype="float64") for row in planes]
-    nplanes = len(pl)
-
-    @F.pandas_udf(LongType())
-    def _key(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for vecs in batches:
             m = np.asarray(vecs.tolist(), dtype="float64")  # (B, dim)
-            key = np.zeros(m.shape[0], dtype="int64")
-            for p in range(nplanes):
-                acc = np.zeros(m.shape[0], dtype="float64")
-                row = pl[p]
-                for i in range(m.shape[1]):
-                    # sequential fold per row (vectorized across rows):
-                    # bit-identical to ((0+t0)+t1)+... in any engine
-                    acc = acc + m[:, i] * row[i]
-                key |= (acc > 0).astype("int64") << p
-            yield pd.Series(key)
+            dots = np.zeros((m.shape[0], len(pl)), dtype="float64")
+            for i in range(m.shape[1]):
+                dots = dots + m[:, i, None] * pl[:, i]
+            base = ((dots > 0) * bits).sum(axis=1)
+            flips = np.argsort(np.abs(dots), axis=1, kind="stable")[:, :probes]
+            keys = np.concatenate([base[:, None], base[:, None] ^ bits[flips]], axis=1)
+            yield pd.Series(list(keys))
 
-    return df.withColumn(out_col, _key(F.col(vec_col)))
+    return df.withColumn("lsh_key", F.explode(_keys(F.col(vec_col))))
 
 
 def lsh_topk(
@@ -248,7 +134,6 @@ def lsh_topk(
     num_planes: int = 10,
     seed: int = 42,
     probes: int = 0,
-    portable: bool = False,
 ) -> DataFrame:
     """Approximate top-k: score only within the query's LSH bucket(s).
 
@@ -258,32 +143,13 @@ def lsh_topk(
     candidates, while the corpus side still shuffles nothing (bucket keys
     only, query side broadcast).  Buckets are disjoint, so no candidate
     dedup is needed.  Same output shape as brute_force_topk.
-
-    `portable=True` computes keys with the native sequential-fold
-    expressions (bit-identical to a SQL oracle) instead of the numpy UDF;
-    the bucketing join and scoring below are the same code either way.
     """
-    qbase = queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
+    planes = _planes(dim, num_planes, seed)
+    v = add_lsh_keys(vectors, vec_col, planes)
+    q = add_lsh_keys(
+        queries.select(F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")),
+        "__qvec", planes, probes,
     )
-    if portable:
-        planes = _planes(dim, num_planes, seed)
-        # corpus side: fold-exact numpy keys (bit-identical, vectorized);
-        # query side is tiny — the expression fold is fine and also carries
-        # the margins for multi-probe
-        v = add_lsh_key_foldexact(vectors, vec_col, planes)
-        q = qbase.withColumn(
-            "lsh_key",
-            F.explode(
-                lsh_probe_keys_expr(lsh_plane_dots_expr(F.col("__qvec"), planes), probes)
-            ),
-        )
-    else:
-        v = add_lsh_key(vectors, vec_col, dim, num_planes, seed)
-        if probes > 0:
-            q = add_lsh_probe_keys(qbase, "__qvec", dim, num_planes, seed, probes)
-        else:
-            q = add_lsh_key(qbase, "__qvec", dim, num_planes, seed)
     joined = v.join(F.broadcast(q), on="lsh_key").filter(F.col(id_col) != F.col("__qid"))
     scored = joined.select(
         F.col("__qid").alias("query_id"),
@@ -424,15 +290,10 @@ def embedding_dedup_candidates(
     num_planes: int = 10,
     seed: int = 42,
     min_cosine: float = 0.95,
-    portable: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs: bucket by LSH key, score in-bucket.
-    Output: (id_a, id_b, cosine).  `portable=True` uses the native
-    sequential-fold key expressions (SQL-oracle-replayable)."""
-    if portable:
-        keyed = add_lsh_key_foldexact(vectors, vec_col, _planes(dim, num_planes, seed))
-    else:
-        keyed = add_lsh_key(vectors, vec_col, dim, num_planes, seed)
+    Output: (id_a, id_b, cosine)."""
+    keyed = add_lsh_keys(vectors, vec_col, _planes(dim, num_planes, seed))
     v = keyed.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), "lsh_key"
     )

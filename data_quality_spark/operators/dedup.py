@@ -8,7 +8,8 @@ hash functions in anything the oracle must reproduce):
   only — never shuffles the documents themselves);
 - n-gram Jaccard: shingle sets + pairwise intersection within candidate
   groups;
-- MinHash + LSH: k salted-md5 min-hashes → bands → bucket join; candidate
+- MinHash + LSH: k salted min-hashes (xxhash64, or md5 where an oracle
+  replays them) → bands → bucket join; candidate
   pairs only ever compared within a bucket (the reference's blocking-key
   device, `genkey/BlockingKeyHandler.java:81`, generalized);
 - SimHash: 64-bit weighted-bit fingerprint via a pandas UDF (bit twiddling
@@ -70,26 +71,6 @@ def jaccard_similarity(a: Column, b: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """Array of `num_hashes` min-hash values.
-
-    Hash i of a shingle = md5(i || ':' || shingle) (hex string; lexicographic
-    min over hex = min over the 128-bit value).  Salted-md5 keeps the whole
-    signature reproducible in any engine; the per-element work is
-    vectorizable JVM code (transform + array_min), no UDF.
-    """
-    # NB: the lambda must be unary — a binary lambda makes `transform` pass
-    # the array index as the second argument, silently clobbering the salt.
-    def _hasher(salt: str):
-        return lambda s: F.md5(F.concat(F.lit(salt), s))
-
-    sigs = [
-        F.array_min(F.transform(shingles, _hasher(f"{i}:")))
-        for i in range(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
 def lsh_band_keys(sig: Column, num_bands: int, rows_per_band: int) -> Column:
     """Array of band keys: band_id || md5(concat of that band's rows)."""
     keys = []
@@ -106,15 +87,21 @@ def minhash_signature_df(
     id_col: str,
     shingle_n: int = 3,
     num_hashes: int = 16,
+    portable: bool = False,
 ) -> DataFrame:
-    """(id, sig array<long>, sh array<long> hashed-shingle set) per doc
-    with ≥1 shingle.
+    """(id, sig, sh hashed-shingle set) per doc with ≥1 shingle.
 
-    Scale formulation: explode shingles → `num_hashes` native xxhash64
+    Hash i of a shingle hashes `i:` || shingle; the carried set hashes
+    `sh:` || shingle.  The hash is native xxhash64 (longs) by default;
+    `portable=True` uses salted md5 instead (32-hex signatures, 16-hex set
+    entries), which a SQL oracle recomputes exactly — strings are ~2-4×
+    heavier than longs, so only the oracle-checked contract queries use it.
+
+    Scale formulation: explode shingles → `num_hashes` native hash
     columns (whole-stage codegen — NOT interpreted `transform` lambdas,
     which cost ~1µs/element and dominated the naive plan) → one groupBy
     with map-side combine (per-partition partial min) so the shuffle
-    carries one row of k longs + the distinct-shingle set per doc.
+    carries one row of k hashes + the distinct-shingle set per doc.
     Docs with no shingles (< n words) are excluded by construction —
     they cannot be near-dup candidates.
     """
@@ -122,49 +109,20 @@ def minhash_signature_df(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(text_col, shingle_n)).alias("s"),
     )
+    hash_fn = F.md5 if portable else F.xxhash64
     hash_cols = [
-        F.xxhash64(F.concat(F.lit(f"{i}:"), F.col("s"))).alias(f"h{i}")
+        hash_fn(F.concat(F.lit(f"{i}:"), F.col("s"))).alias(f"h{i}")
         for i in range(num_hashes)
     ]
-    # The carried shingle set is HASHED to longs (xxhash64) before the agg:
-    # Jaccard over hashed shingles equals Jaccard over the strings except
-    # for 64-bit collisions (~n²/2⁶⁵ — negligible), and the shuffle carries
-    # ~8 bytes per distinct shingle instead of the shingle text (~8× less,
-    # and independent of shingle length).  At web scale this is the
-    # difference between shuffling signatures and re-shuffling the corpus.
-    hashed = ex.select("id", F.xxhash64(F.concat(F.lit("sh:"), F.col("s"))).alias("s_h"), *hash_cols)
-    agg = hashed.groupBy("id").agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)],
-        F.collect_set("s_h").alias("sh"),
-    )
-    return agg.select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"), "sh"
-    )
-
-
-def minhash_signature_df_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """Engine-portable twin of `minhash_signature_df`: salted-md5 hex
-    signatures + 16-hex-char hashed-shingle sets, so the FULL near-dup
-    pipeline (banding, bucket cap, self-join, Jaccard verify) can be
-    recomputed exactly by a SQL oracle.  Same explode → codegen-hash →
-    partial-agg-min plan shape as the xxhash64 scale path; strings are
-    ~2-4× heavier than longs, which is why production keeps xxhash64 and
-    only the oracle-checked contract query uses this."""
-    ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(text_col, shingle_n)).alias("s"),
-    )
-    hash_cols = [
-        F.md5(F.concat(F.lit(f"{i}:"), F.col("s"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sh_h = F.substring(F.md5(F.concat(F.lit("sh:"), F.col("s"))), 1, 16)
+    # The carried shingle set is HASHED before the agg: Jaccard over hashed
+    # shingles equals Jaccard over the strings except for 64-bit collisions
+    # (~n²/2⁶⁵ — negligible), and the shuffle carries ~8 bytes per distinct
+    # shingle instead of the shingle text (~8× less, and independent of
+    # shingle length).  At web scale this is the difference between
+    # shuffling signatures and re-shuffling the corpus.
+    sh_h = hash_fn(F.concat(F.lit("sh:"), F.col("s")))
+    if portable:
+        sh_h = F.substring(sh_h, 1, 16)
     hashed = ex.select("id", sh_h.alias("s_h"), *hash_cols)
     agg = hashed.groupBy("id").agg(
         *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)],
@@ -243,10 +201,10 @@ def minhash_near_duplicates(
     persist_signatures: bool = True,
 ) -> DataFrame:
     """Candidates → verify with true n-gram Jaccard ≥ threshold.
-    `portable=True` swaps the xxhash64 signatures for the salted-md5 twin
-    (`minhash_signature_df_portable`) so a SQL oracle can replay the whole
-    pipeline; everything downstream (banding join, cap, verify) is the
-    SAME code either way.
+    `portable=True` swaps the xxhash64 signatures for salted md5 (see
+    `minhash_signature_df`) so a SQL oracle can replay the whole pipeline;
+    everything downstream (banding join, cap, verify) is the SAME code
+    either way.
 
     Candidates come from an (id, band_key)-only banding join; both shingle
     sets then join onto the aggregated pair set by id (each participating
@@ -262,8 +220,7 @@ def minhash_near_duplicates(
     """
     from pyspark import StorageLevel
 
-    sig_fn = minhash_signature_df_portable if portable else minhash_signature_df
-    sigs = sig_fn(df, text_col, id_col, shingle_n, num_hashes)
+    sigs = minhash_signature_df(df, text_col, id_col, shingle_n, num_hashes, portable)
     if persist_signatures:
         sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
     pairs = _lsh_pairs_from_sigs(sigs, num_hashes, num_bands, max_bucket=1000)
@@ -285,11 +242,16 @@ def minhash_near_duplicates(
 def simhash64(text_col: Column) -> Column:
     """64-bit SimHash of lower-cased words, as an Arrow pandas UDF.
 
-    Feature hash = first 16 hex digits of md5(word) (engine-agnostic);
-    bit b of the fingerprint is 1 iff Σ_w (±1 per word's bit b) > 0.
-    Returned as bigint (two's complement).
+    Words split on runs of Java `\\s` (`[ \\t\\n\\x0B\\f\\r]`), the engine's
+    word split (`textstats._RE_WS`); Python `str.split()` would also split
+    on NBSP, U+3000, U+0085, U+001C-U+001F and U+2028, which the SQL
+    oracle does not.  Feature hash = first 16 hex digits of md5(word)
+    (engine-agnostic); bit b of the fingerprint is 1 iff Σ_w (±1 per
+    word's bit b) > 0.  Returned as bigint (two's complement).
     """
     from pyspark.sql.types import LongType
+
+    from ..functions.textstats import _RE_WS
 
     @F.pandas_udf(LongType())
     def _simhash(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -299,7 +261,7 @@ def simhash64(text_col: Column) -> Column:
             if t is None:
                 return None
             counts = [0] * 64
-            for w in t.lower().split():
+            for w in filter(None, _RE_WS.split(t.lower())):
                 h = int.from_bytes(
                     hashlib.md5(w.encode("utf-8")).digest()[:8], "big"
                 )

@@ -254,20 +254,18 @@ def histogram(df: DataFrame, column: str, lo: float, hi: float, num_bins: int) -
 # ---------------------------------------------------------------------------
 
 
-def quantiles(df: DataFrame, column: str, probs: list[float], exact: bool = True) -> DataFrame:
-    """Exact `percentile` (reference QuantileAnalyzer contract) or
-    `approx_percentile` (t-digest contract) — never buffers in the driver."""
+def quantiles(df: DataFrame, column: str, probs: list[float]) -> DataFrame:
+    """Exact `percentile` (reference QuantileAnalyzer contract) — never
+    buffers in the driver.  The t-digest contract is `percentile_approx`
+    (see `queries.quantiles_approx_lquantity`)."""
     x = F.col(column).cast("double")
-    fn = F.percentile if exact else F.percentile_approx
     aggs = [
-        fn(x, F.lit(p)).alias(f"q{str(p).replace('.', '_')}") for p in probs
+        F.percentile(x, F.lit(p)).alias(f"q{str(p).replace('.', '_')}") for p in probs
     ]
     return df.agg(*aggs)
 
 
-def profile_table(
-    df: DataFrame, columns: list[str] | None = None, exact_distinct: bool = False
-) -> DataFrame:
+def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Full per-column profile in ONE aggregate pass — the Spark form of
     `Analyzers.with(quality, type, cardinality, length…)` composing analyzers
     over a single scan (`common/inference/Analyzers.java:48-67`).
@@ -275,10 +273,10 @@ def profile_table(
     Output (long format): one row per column with
       (column_name, n_rows, n_empty, n_distinct, min_len, max_len,
        avg_len, n_boolean, n_integer, n_double, n_date, n_string)
-    where n_distinct is HLL (rsd 0.05) by default or exact with
-    `exact_distinct=True` (the exact form is oracle-comparable; HLL is the
-    100 TB default).  Every counter is partial-aggregation-friendly — a
-    100-column profile of a 100 TB table is one scan + one tiny shuffle.
+    where n_distinct is exact (oracle-comparable; `approx_count_distinct`
+    is the HLL form, see `queries.cardinality_hll`).  Every other counter
+    is partial-aggregation-friendly; the exact distinct counts make Spark
+    expand and shuffle the distinct values once.
     """
     columns = columns or df.columns
     aggs = []
@@ -286,14 +284,11 @@ def profile_table(
         s = F.col(c).cast("string")
         ln = F.length(s)
         cls = ti.classify(s)
-        distinct_agg = (
-            F.countDistinct(s) if exact_distinct else F.approx_count_distinct(s, rsd=0.05)
-        )
         aggs.extend(
             [
                 F.count(F.lit(1)).alias(f"{c}__n_rows"),
                 F.sum(F.when(ti.is_empty(s), 1).otherwise(0)).alias(f"{c}__n_empty"),
-                distinct_agg.alias(f"{c}__n_distinct"),
+                F.countDistinct(s).alias(f"{c}__n_distinct"),
                 F.min(ln).alias(f"{c}__min_len"),
                 F.max(ln).alias(f"{c}__max_len"),
                 F.avg(ln).alias(f"{c}__avg_len"),

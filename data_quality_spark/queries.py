@@ -20,6 +20,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions import emailphone as ep
 from .functions import keyers as kz
 from .functions import textstats as ts
 from .functions import typeinfer as ti
@@ -638,7 +639,7 @@ def histogram_lquantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def quantiles_lquantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _read(spark, sf_dir, "lineitem")
-    return prof.quantiles(li, "l_quantity", [0.25, 0.5, 0.75], exact=True)
+    return prof.quantiles(li, "l_quantity", [0.25, 0.5, 0.75])
 
 
 @_register(
@@ -670,41 +671,33 @@ def text_length_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# DuckDB twin of `keyers.fingerprint_key`: the same ASCII punct/control
+# class and diacritic table; control characters are stripped, so the only
+# whitespace left to split on is U+0020
+_SQL_FP_PNAME = f"""
+    array_to_string(list_sort(list_distinct(
+      list_filter(regexp_split_to_array(translate(
+        regexp_replace(lower({_sql_trim("p_name")}), '{kz.PUNCT_CNTRL}', '', 'g'),
+        '{kz.DIACRITICS_SRC}', '{kz.DIACRITICS_DST}'), ' +'),
+        x -> x <> ''))), ' ')
+"""
+
+
 @_register(
     "fingerprint_dedup_pname",
     f"""
-    WITH k AS (
-      SELECT array_to_string(list_sort(list_distinct(
-        list_filter(regexp_split_to_array(
-          regexp_replace(lower({_sql_trim("p_name")}), '[^a-z0-9 ]', '', 'g'),
-          ' +'), x -> x <> ''))), ' ') AS fp
-      FROM part
-    )
+    WITH k AS (SELECT {_SQL_FP_PNAME} AS fp FROM part)
     SELECT fp, CAST(count(*) AS BIGINT) AS cnt FROM k
     GROUP BY fp HAVING count(*) > 1
     """,
 )
 def fingerprint_dedup_pname(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FingerprintKeyer (trim→lower→strip punct→sort+dedupe tokens→join,
-    `record-linkage/.../windowkey/FingerprintKeyer.java:43-59`) as a pure
-    column expression; groups >1 are near-dup candidates."""
+    """FingerprintKeyer (`keyers.fingerprint_key`,
+    `record-linkage/.../windowkey/FingerprintKeyer.java:43-59`) over
+    `p_name`; groups >1 are near-dup candidates."""
     part = _read(spark, sf_dir, "part")
-    fp = F.array_join(
-        F.array_sort(
-            F.array_distinct(
-                F.filter(
-                    F.split(
-                        F.regexp_replace(F.lower(F.trim(F.col("p_name"))), r"[^a-z0-9 ]", ""),
-                        r" +",
-                    ),
-                    lambda x: x != F.lit(""),
-                )
-            )
-        ),
-        " ",
-    ).alias("fp")
     return (
-        part.select(fp)
+        part.select(kz.fingerprint_key(F.col("p_name")).alias("fp"))
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.col("cnt") > 1)
@@ -735,9 +728,6 @@ def exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Email validation (EmailVerify chain subset as column exprs)
 # ---------------------------------------------------------------------------
 
-_EMAIL_RE = r"^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$"
-
-
 @_register(
     "email_check_customer",
     f"""
@@ -748,8 +738,8 @@ _EMAIL_RE = r"^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$"
       FROM customer
     )
     SELECT
-      CAST(sum(CASE WHEN regexp_matches(good, '{_EMAIL_RE}') THEN 1 ELSE 0 END) AS BIGINT) AS good_valid,
-      CAST(sum(CASE WHEN regexp_matches(bad, '{_EMAIL_RE}') THEN 1 ELSE 0 END) AS BIGINT) AS bad_valid,
+      CAST(sum(CASE WHEN regexp_matches(good, '{ep.EMAIL_PATTERN}') THEN 1 ELSE 0 END) AS BIGINT) AS good_valid,
+      CAST(sum(CASE WHEN regexp_matches(bad, '{ep.EMAIL_PATTERN}') THEN 1 ELSE 0 END) AS BIGINT) AS bad_valid,
       CAST(count(*) AS BIGINT) AS total
     FROM e
     """,
@@ -762,8 +752,8 @@ def email_check_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     good = F.concat(F.regexp_replace(F.lower(F.col("c_name")), r"[^a-z0-9]", ""), F.lit("@example.com"))
     bad = F.concat(F.col("c_name"), F.lit("@example.com"))
     return cust.agg(
-        F.sum(F.when(good.rlike(_EMAIL_RE), 1).otherwise(0)).cast("long").alias("good_valid"),
-        F.sum(F.when(bad.rlike(_EMAIL_RE), 1).otherwise(0)).cast("long").alias("bad_valid"),
+        F.sum(F.when(ep.is_valid_email(good), 1).otherwise(0)).cast("long").alias("good_valid"),
+        F.sum(F.when(ep.is_valid_email(bad), 1).otherwise(0)).cast("long").alias("bad_valid"),
         F.count(F.lit(1)).alias("total"),
     )
 
@@ -783,7 +773,7 @@ def email_check_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), v AS (
       SELECT c_custkey, email,
         CASE
-          WHEN NOT regexp_matches(email, '{_EMAIL_RE}') THEN 'INVALID'
+          WHEN NOT regexp_matches(email, '{ep.EMAIL_PATTERN}') THEN 'INVALID'
           WHEN lower(split_part(email, '@', 2)) = 'spam.biz' THEN 'INVALID'
           WHEN lower(split_part(split_part(email, '@', 2), '.', -1)) NOT IN ('com', 'org') THEN 'INVALID'
           WHEN NOT regexp_matches(split_part(email, '@', 1), '^[a-zA-Z][a-zA-Z0-9._]*$') THEN 'INVALID'
@@ -799,8 +789,6 @@ def email_chain_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitelist → local-part regex → case correction, first failure wins —
     `EmailVerify.checkEmail` ordering) over constructed addresses hitting
     every verdict branch; the oracle replays the chain in SQL."""
-    from .functions.emailphone import email_verify
-
     cust = _read(spark, sf_dir, "customer")
     k = F.col("c_custkey")
     ks = k.cast("string")
@@ -811,12 +799,11 @@ def email_chain_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(k % 5 == 3, F.concat(F.lit("9bad"), ks, F.lit("@example.com")))
         .otherwise(F.lit("not an email"))
     )
-    verdict = email_verify(
+    verdict = ep.email_verify(
         email,
         domain_blacklist=("spam.biz",),
         tld_whitelist=("com", "org"),
         local_part_regex=r"^[a-zA-Z][a-zA-Z0-9._]*$",
-        lowercase_correction=True,
     )
     return (
         cust.select(verdict.alias("verdict"))
@@ -974,22 +961,14 @@ _SQL_SHINGLES3 = """
 )
 def minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (salted md5 — engine-agnostic, SURVEY §2.5
-    QGramsMatcher/NGramFingerprintKeyer lineage)."""
-    from .operators.dedup import minhash_signature, word_shingles
+    QGramsMatcher/NGramFingerprintKeyer lineage): the near-dup pipeline's
+    own signature builder, first four hashes."""
+    from .operators.dedup import minhash_signature_df
 
     docs = _read_wide(spark, sf_dir, "documents")
-    sh = word_shingles("text", 3)
-    sig = minhash_signature(sh, 4)
-    return (
-        docs.select("doc_id", sh.alias("sh"), sig.alias("sig"))
-        .filter(F.size("sh") > 0)
-        .select(
-            "doc_id",
-            F.col("sig")[0].alias("mh0"),
-            F.col("sig")[1].alias("mh1"),
-            F.col("sig")[2].alias("mh2"),
-            F.col("sig")[3].alias("mh3"),
-        )
+    sigs = minhash_signature_df(docs, "text", "doc_id", 3, 4, portable=True)
+    return sigs.select(
+        F.col("id").alias("doc_id"), *[F.col("sig")[i].alias(f"mh{i}") for i in range(4)]
     )
 
 
@@ -1075,10 +1054,10 @@ def _minhash_near_dups_oracle_sql() -> str:
 @_register("minhash_near_dups", _minhash_near_dups_oracle_sql())
 def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline (banding + bucket cap + verify),
-    HASH-VERIFIED end-to-end via the portable salted-md5 signature twin —
-    the banding join, cap, and Jaccard verify are the same code the
-    xxhash64 scale path runs (`operators/dedup.py`); the oracle replays
-    every stage in SQL.  Jaccard = int/int division, bit-identical."""
+    HASH-VERIFIED end-to-end via salted-md5 signatures (`portable=True`)
+    — the banding join, cap, and Jaccard verify are the same code the
+    xxhash64 default runs (`operators/dedup.py`); the oracle replays every
+    stage in SQL.  Jaccard = int/int division, bit-identical."""
     from .operators.dedup import minhash_near_duplicates
 
     docs = _read_wide(spark, sf_dir, "documents")
@@ -1096,7 +1075,7 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SIMHASH_ORACLE = r"""
     WITH w AS (
       SELECT doc_id,
-        unnest(list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '')) AS word
+        unnest(list_filter(regexp_split_to_array(lower(text), '[ \t\n\x0B\f\r]+'), x -> x <> '')) AS word
       FROM documents
     ), h AS (
       SELECT doc_id, ('0x' || substr(md5(word), 1, 16))::UBIGINT AS hv FROM w
@@ -1143,9 +1122,8 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     sparse on large corpora, where 8-bit bands (radius-7 mode) pack
     ≥ n/256 docs per bucket and go quadratic — that mode stays available
     for bounded inputs and is recall-tested at radius 7 in the unit suite.
-    Word split caveat: both sides split on ASCII whitespace runs ('\\s+'
-    vs Python .split() — agrees unless text carries exotic Unicode
-    spaces)."""
+    Both sides split words on runs of Java `\\s` (`[ \\t\\n\\x0B\\f\\r]`),
+    the engine's word split."""
     from .operators.dedup import simhash_candidates
 
     docs = _read_wide(spark, sf_dir, "documents")
@@ -1279,11 +1257,10 @@ def _ann_lsh_oracle_sql() -> str:
 @_register("ann_lsh_top3", _ann_lsh_oracle_sql())
 def ann_lsh_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH bucketed top-3 with multi-probe (3 lowest-|margin| bit
-    flips).  HASH-VERIFIED: the portable key path computes plane dots as
-    native sequential folds (±1 Rademacher planes, seed 42 — exact
-    products, fold order matching DuckDB list_sum), and the oracle replays
-    keys, probes, bucket join, and cosine ranking end-to-end.  The numpy
-    scale path shares the bucketing/scoring code (recall measured in
+    flips).  HASH-VERIFIED: `ann.add_lsh_keys` computes the plane dots as
+    sequential folds (±1 Rademacher planes, seed 42 — exact products, fold
+    order matching DuckDB list_sum), and the oracle replays keys, probes,
+    bucket join, and cosine ranking end-to-end (recall measured in
     tests/test_dedup_ann.py)."""
     from .operators.ann import lsh_topk
 
@@ -1291,7 +1268,7 @@ def ann_lsh_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
-    out = lsh_topk(emb, queries, 3, num_planes=6, probes=3, portable=True)
+    out = lsh_topk(emb, queries, 3, num_planes=6, probes=3)
     return out.select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
 
 
@@ -1312,16 +1289,16 @@ def _embedding_near_dups_oracle_sql() -> str:
 @_register("embedding_near_dups", _embedding_near_dups_oracle_sql())
 def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate candidates (sign-LSH bucketed,
-    min_cosine verify).  HASH-VERIFIED via the portable native-fold key
-    path; the oracle rebuilds keys, bucket self-join, and the cosine
-    threshold.  0.35: the synthetic embeddings are near-orthogonal random
-    vectors (no planted dups), so a production-style 0.9 threshold yields
-    zero rows; 0.35 surfaces the true closest pairs and keeps the check
-    meaningful at every sf tier."""
+    min_cosine verify).  HASH-VERIFIED via the sequential-fold keys of
+    `ann.add_lsh_keys`; the oracle rebuilds keys, bucket self-join, and
+    the cosine threshold.  0.35: the synthetic embeddings are
+    near-orthogonal random vectors (no planted dups), so a
+    production-style 0.9 threshold yields zero rows; 0.35 surfaces the
+    true closest pairs and keeps the check meaningful at every sf tier."""
     from .operators.ann import embedding_dedup_candidates
 
     emb = _read_wide(spark, sf_dir, "embeddings")
-    return embedding_dedup_candidates(emb, num_planes=6, min_cosine=0.35, portable=True)
+    return embedding_dedup_candidates(emb, num_planes=6, min_cosine=0.35)
 
 
 # ---------------------------------------------------------------------------
@@ -1435,18 +1412,6 @@ QUERIES["ann_lsh_top3"] = ann_lsh_top3
 # ---------------------------------------------------------------------------
 # Record linkage (operators/matching.py) — fuzzy self-join within blocks
 # ---------------------------------------------------------------------------
-
-# DuckDB twin of `keyers.fingerprint_key`: the same ASCII punct/control
-# class and diacritic table; control characters are stripped, so the only
-# whitespace left to split on is U+0020
-_SQL_FP_PNAME = f"""
-    array_to_string(list_sort(list_distinct(
-      list_filter(regexp_split_to_array(translate(
-        regexp_replace(lower({_sql_trim("p_name")}), '{kz.PUNCT_CNTRL}', '', 'g'),
-        '{kz.DIACRITICS_SRC}', '{kz.DIACRITICS_DST}'), ' +'),
-        x -> x <> ''))), ' ')
-"""
-
 
 @_register(
     "record_linkage_parts",
@@ -1885,8 +1850,6 @@ def normalize_profile_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def phone_profile_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phone validation counts over synthesized NANP-shaped numbers
     (PhoneNumberHandlerBase.isValid/isPossible analogs)."""
-    from .functions.emailphone import is_possible_phone, is_valid_phone
-
     cust = _read(spark, sf_dir, "customer")
     phone = F.concat(
         F.lit("("), (F.lit(200) + F.col("c_custkey") % 800).cast("string"),
@@ -1894,8 +1857,8 @@ def phone_profile_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("-"), (F.lit(1000) + F.col("c_custkey") % 9000).cast("string"),
     )
     return cust.agg(
-        F.sum(F.when(is_valid_phone(phone), 1).otherwise(0)).cast("long").alias("valid_cnt"),
-        F.sum(F.when(is_possible_phone(phone), 1).otherwise(0)).cast("long").alias("possible_cnt"),
+        F.sum(F.when(ep.is_valid_phone(phone), 1).otherwise(0)).cast("long").alias("valid_cnt"),
+        F.sum(F.when(ep.is_possible_phone(phone), 1).otherwise(0)).cast("long").alias("possible_cnt"),
         F.count(F.lit(1)).alias("total"),
     )
 
@@ -3078,17 +3041,16 @@ def _profile_oracle_sql() -> str:
 
 @_register("profile_customer_table", _profile_oracle_sql())
 def profile_customer_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass composite profile (Analyzers.with analog), exact-distinct
-    variant so the ENTIRE row — counts, lengths, full type classification
-    incl. the 40-entry date/time tables — hash-verifies against a DuckDB
-    oracle generated from the same pattern constants.  (The HLL-distinct
-    production default is exercised by cardinality_hll.)  The double-typed
-    c_acctbal column is excluded: float→string rendering differs across
-    engines, which is a formatting artifact, not a profiling semantic."""
+    """One-pass composite profile (Analyzers.with analog) with exact
+    distinct counts, so the ENTIRE row — counts, lengths, full type
+    classification incl. the 40-entry date/time tables — hash-verifies
+    against a DuckDB oracle generated from the same pattern constants.
+    (HLL distinct counting is exercised by cardinality_hll.)  The
+    double-typed c_acctbal column is excluded: float→string rendering
+    differs across engines, which is a formatting artifact, not a
+    profiling semantic."""
     cust = _read(spark, sf_dir, "customer")
-    return prof.profile_table(
-        cust, ["c_custkey", "c_name", "c_nationkey", "c_mktsegment"], exact_distinct=True
-    )
+    return prof.profile_table(cust, ["c_custkey", "c_name", "c_nationkey", "c_mktsegment"])
 
 
 def _flagship_oracle_sql() -> str | None:

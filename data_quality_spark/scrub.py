@@ -24,6 +24,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .functions.emailphone import EMAIL_PATTERN
+
 # Ordered scrub rules: (name, pattern, replacement).  ORDER MATTERS —
 # e.g. emails must be scrubbed before bare domains, IPs before phone-ish
 # digit runs.
@@ -31,8 +33,8 @@ SCRUB_RULES: tuple[tuple[str, str, str], ...] = (
     # URLs carrying credentials (user:pass@host) — BEFORE email: the
     # pass@host substring would otherwise be eaten by the email rule
     ("cred_url", r"[a-z]+://[^\s/@]+:[^\s/@]+@[^\s]+", "<CRED_URL>"),
-    # email addresses
-    ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
+    # email addresses: EmailValidator's pattern without its anchors
+    ("email", EMAIL_PATTERN.strip("^$"), "<EMAIL>"),
     # IPv4
     ("ipv4", r"\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b", "<IP>"),
     # ssn-shaped ids — BEFORE phone: the 3-2-4 digit shape also matches the

@@ -481,42 +481,40 @@ def _encode_datum(schema, value, out: io.BytesIO) -> None:
 # ---------------------------------------------------------------------------
 
 
+def _block_span(buf, pos: int) -> tuple[int, int, int]:
+    """(record count, body start, body end) of the block at `pos`."""
+    try:
+        n_recs, pos = _read_long(buf, pos)
+        n_bytes, pos = _read_long(buf, pos)
+    except IndexError as exc:
+        raise ValueError("truncated Avro block (EOF mid-varint)") from exc
+    return n_recs, pos, pos + n_bytes
+
+
+def _decode_block(buf, n_recs: int, start: int, end: int, schema, codec: str, sync: bytes) -> list:
+    """Records of the block whose body is `buf[start:end]`; checks the sync
+    marker that must follow it."""
+    if len(buf) < end + 16:
+        raise ValueError("truncated Avro block")
+    if bytes(buf[end : end + 16]) != sync:
+        raise ValueError("sync marker mismatch (corrupt block)")
+    block = _decompress_block(bytes(buf[start:end]), codec)
+    records, bpos = [], 0
+    for _ in range(n_recs):
+        rec, bpos = _decode_datum(schema, block, bpos)
+        records.append(rec)
+    return records
+
+
 def decode_container(payload: bytes) -> tuple[dict, list]:
     """Full OCF decode: (schema, records).  Pure function of the bytes —
     safe inside executors."""
-    if payload[:4] != MAGIC:
-        raise ValueError("not an Avro object container file")
-    pos = 4
-    meta = {}
-    while True:
-        count, pos = _read_long(payload, pos)
-        if count == 0:
-            break
-        if count < 0:
-            _size, pos = _read_long(payload, pos)
-            count = -count
-        for _ in range(count):
-            k, pos = _read_bytes(payload, pos)
-            v, pos = _read_bytes(payload, pos)
-            meta[k.decode("utf-8")] = v
-    sync = payload[pos : pos + 16]
-    pos += 16
-    schema = resolve_names(json.loads(meta["avro.schema"].decode("utf-8")))
-    codec = meta.get("avro.codec", b"null").decode("utf-8")
+    schema, codec, sync, pos = _parse_header(io.BytesIO(payload))
     records = []
     while pos < len(payload):
-        n_recs, pos = _read_long(payload, pos)
-        n_bytes, pos = _read_long(payload, pos)
-        block = payload[pos : pos + n_bytes]
-        pos += n_bytes
-        if payload[pos : pos + 16] != sync:
-            raise ValueError("sync marker mismatch (corrupt block)")
-        pos += 16
-        block = _decompress_block(block, codec)
-        bpos = 0
-        for _ in range(n_recs):
-            rec, bpos = _decode_datum(schema, block, bpos)
-            records.append(rec)
+        n_recs, start, end = _block_span(payload, pos)
+        records.extend(_decode_block(payload, n_recs, start, end, schema, codec, sync))
+        pos = end + 16
     return schema, records
 
 
@@ -634,28 +632,9 @@ def avro_schema_to_ddl(schema: dict) -> str:
     return inner
 
 
-def read_schema(payload: bytes) -> dict:
-    """Header-only schema parse (no block decoding) — cheap on the driver."""
-    if payload[:4] != MAGIC:
-        raise ValueError("not an Avro object container file")
-    pos = 4
-    while True:
-        count, pos = _read_long(payload, pos)
-        if count == 0:
-            break
-        if count < 0:
-            _size, pos = _read_long(payload, pos)
-            count = -count
-        for _ in range(count):
-            k, pos = _read_bytes(payload, pos)
-            v, pos = _read_bytes(payload, pos)
-            if k == b"avro.schema":
-                return json.loads(v.decode("utf-8"))
-    raise ValueError("no avro.schema in container metadata")
-
-
 def _parse_header(f) -> tuple[dict, str, bytes, int]:
-    """Read (schema, codec, sync, header_end_offset) from an open file.
+    """Read (schema, codec, sync, header_end_offset) from an object with
+    `read(n)` and `seek(0)` (an open file, `io.BytesIO`, `_HadoopStream`).
     Grows the read buffer if the header exceeds the initial 1 MB (legal:
     huge schemas / user metadata) instead of failing on a short slice."""
     f.seek(0)
@@ -788,25 +767,13 @@ def read_avro_split(
                         # truncated mid-varint must surface as the intended
                         # ValueError, not an IndexError out of _read_long.
                         ensure(pos + 20)
-                        try:
-                            n_recs, p2 = _read_long(buf, pos)
-                            n_bytes, p2 = _read_long(buf, p2)
-                        except IndexError as exc:
-                            raise ValueError("truncated Avro block (EOF mid-varint)") from exc
-                        if not ensure(p2 + n_bytes + 16):
-                            raise ValueError("truncated Avro block")
-                        block = bytes(buf[p2 : p2 + n_bytes])
-                        p2 += n_bytes
-                        if bytes(buf[p2 : p2 + 16]) != sync:
-                            raise ValueError("sync marker mismatch (corrupt block)")
-                        p2 += 16
-                        block = _decompress_block(block, codec)
-                        bpos = 0
-                        rows = []
-                        for _ in range(n_recs):
-                            rec, bpos = _decode_datum(schema, block, bpos)
-                            rows.append(json.dumps(rec, ensure_ascii=False))
-                        pos = p2
+                        n_recs, start_b, end_b = _block_span(buf, pos)
+                        ensure(end_b + 16)
+                        rows = [
+                            json.dumps(rec, ensure_ascii=False)
+                            for rec in _decode_block(buf, n_recs, start_b, end_b, schema, codec, sync)
+                        ]
+                        pos = end_b + 16
                         # one DataFrame per BLOCK: memory stays bounded by the
                         # block size, not the whole (possibly multi-GB) split
                         if rows:
@@ -815,13 +782,48 @@ def read_avro_split(
     return rdf.mapInPandas(gen, schema="path string, json string")
 
 
+class _HadoopStream:
+    """`read(n)` / `seek(pos)` over a Hadoop `FSDataInputStream`, so
+    `_parse_header` reads a header on the driver without a Spark job."""
+
+    def __init__(self, stream):
+        self._stream = stream
+
+    def read(self, n: int) -> bytes:
+        return bytes(self._stream.readNBytes(n))
+
+    def seek(self, pos: int) -> None:
+        self._stream.seek(pos)
+
+
+def _first_data_file(spark: SparkSession, path: str):
+    """(Hadoop `FileSystem`, `Path`) of the first data file under `path`
+    (a file, a directory searched recursively, or a glob) by sorted name,
+    skipping names that start with `.` or `_` as `read_avro_split` does."""
+    jvm = spark._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(path)
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    files = []
+    for status in fs.globStatus(pattern) or []:
+        listing = fs.listFiles(status.getPath(), True)
+        while listing.hasNext():
+            p = listing.next().getPath()
+            if not p.getName().startswith((".", "_")):
+                files.append((p.toString(), p))
+    if not files:
+        raise FileNotFoundError(path)
+    return fs, min(files, key=lambda f: f[0])[1]
+
+
 def read_avro_typed(spark: SparkSession, path: str) -> DataFrame:
     """OCF → fully-typed DataFrame: decode to JSON, then from_json with the
-    DDL derived from the file's own writer schema (schema comes from ONE
-    file's header on the driver — header-only parse, no block decode)."""
-    first = spark.read.format("binaryFile").load(path).select("content").limit(1).collect()
-    if not first:
-        raise FileNotFoundError(path)
-    ddl = avro_schema_to_ddl(read_schema(bytes(first[0]["content"])))
+    DDL derived from the writer schema in the header of the first data
+    file (`_first_data_file`), read on the driver with no Spark job."""
+    fs, first = _first_data_file(spark, path)
+    stream = fs.open(first)
+    try:
+        schema, _codec, _sync, _end = _parse_header(_HadoopStream(stream))
+    finally:
+        stream.close()
     raw = read_avro(spark, path)
-    return raw.select(F.from_json("json", ddl).alias("r")).select("r.*")
+    return raw.select(F.from_json("json", avro_schema_to_ddl(schema)).alias("r")).select("r.*")

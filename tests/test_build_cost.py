@@ -17,10 +17,9 @@ BUILD_JOBS_EXEMPT = {
     "dedup_survivors_docs": "cluster_survivors checkpoints its two-consumer input eagerly",
     "domain_pagerank": "fixed-point PageRank: a checkpoint job per iteration",
     "ann_ivf_top3": "k-means trains its centroids on a data-dependent sample",
-    "avro_nested_quality": "reads the Avro container header for the writer schema",
 }
 
-PY4J_BUDGET = {"doc_textstats": 400, "umalqura_convert_orders": 120}
+PY4J_BUDGET = {"ann_lsh_top3": 1200, "doc_textstats": 400, "umalqura_convert_orders": 120}
 
 
 def _in_job_group(sc, group, build):
@@ -54,7 +53,9 @@ def test_build_launches_no_job(spark):
 @pytest.mark.parametrize("name", sorted(PY4J_BUDGET))
 def test_build_py4j_budget(spark, monkeypatch, name):
     """`with_text_features` and `iso_to_hijri_umalqura` cost a few calls
-    per parsed fragment; built as Column trees they cost ~1,300 and ~550."""
+    per parsed fragment; built as Column trees they cost ~1,300 and ~550.
+    `ann_lsh_top3` computes its query-side LSH keys in the same UDF as the
+    corpus side; as a Column-tree fold they cost ~1,500 more."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     calls = []

@@ -1,5 +1,5 @@
-"""Guard: every top-level definition in `data_quality_spark/` has a caller
-outside the tests.
+"""Guards: every top-level definition in `data_quality_spark/` has a caller
+outside the tests, and every `bool` option is used both ways.
 
 A definition (function, class, or module-level name) counts as used when
 some non-test file reaches it by name (a `Name` load, an attribute, or a
@@ -7,7 +7,15 @@ some non-test file reaches it by name (a `Name` load, an attribute, or a
 and other strings are not references.  A query function registered with
 `@_register(...)` is reached through the `QUERIES` registry.  The few
 definitions that are kept without such a caller are listed in `EXEMPT`
-with the reason."""
+with the reason.
+
+A parameter with a `bool` default, in a function that non-test code calls,
+is an option: those calls must pass it at least two distinct values, or
+the branch for the other value is a second path that nothing selects.  Calls are
+matched by function name; an omitted argument counts as the default, and
+an argument that is not a literal (or a `*args`/`**kwargs` call) counts as
+using both values.  Options kept without such callers are listed in
+`OPTION_EXEMPT` with the reason."""
 
 import ast
 import fnmatch
@@ -36,6 +44,12 @@ EXEMPT = {
     "perplexity._MAX_CHARS": "perfbench times this kernel",
     "operators.matching.cluster_matches": "perfbench patches it to count connected-components jobs",
     "operators.pagerank.pagerank_fixed": "perfbench patches it to count PageRank jobs",
+}
+
+
+OPTION_EXEMPT = {
+    "operators.multimodal.extract_media_features.use_real_decoder":
+        "library-gated swap-in for a real image decoder; ROADMAP leaves library-gated paths out of scope",
 }
 
 
@@ -117,6 +131,58 @@ def _exempt(qualname: str) -> bool:
     return any(fnmatch.fnmatchcase(qualname, pat) for pat in EXEMPT)
 
 
+def _bool_options(fn) -> dict[str, tuple[int | None, bool]]:
+    """{name: (positional index or None, default)} of `fn`'s parameters
+    whose default is a `bool` literal."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    out = {}
+    for arg, d in zip(positional[len(positional) - len(a.defaults):], a.defaults):
+        if isinstance(d, ast.Constant) and isinstance(d.value, bool):
+            out[arg.arg] = (positional.index(arg), d.value)
+    for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+        if isinstance(d, ast.Constant) and isinstance(d.value, bool):
+            out[arg.arg] = (None, d.value)
+    return out
+
+
+def _passed(call: ast.Call, name: str, index: int | None, default: bool):
+    """The literal value `call` gives parameter `name`, or None when it is
+    not a literal."""
+    if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
+        return None
+    value = next((k.value for k in call.keywords if k.arg == name), None)
+    if value is None and index is not None and index < len(call.args):
+        value = call.args[index]
+    if value is None:
+        return default
+    return value.value if isinstance(value, ast.Constant) else None
+
+
+def single_valued_options(root: Path, package: str = PACKAGE, reference_paths=REFERENCE_PATHS) -> list[str]:
+    """`module.function.param` of every `bool`-default parameter of a
+    function under `root/package` that files under `reference_paths` call,
+    where all those calls pass it the same literal value."""
+    pkg = root / package
+    calls: dict[str, list[ast.Call]] = {}
+    for path in _python_files(root, reference_paths):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append(node)
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or fn.name not in calls:
+                continue
+            for name, (index, default) in _bool_options(fn).items():
+                values = {_passed(c, name, index, default) for c in calls[fn.name]}
+                if None not in values and len(values) < 2:
+                    found.append(f"{_module_name(path, pkg)}.{fn.name}.{name}")
+    return sorted(found)
+
+
 def test_guard_finds_unreferenced_definitions(tmp_path):
     pkg = tmp_path / "pkg"
     (pkg / "sub").mkdir(parents=True)
@@ -167,3 +233,46 @@ def test_exemptions_name_existing_definitions():
     }
     missing = [pat for pat in EXEMPT if not fnmatch.filter(defined, pat)]
     assert not missing, f"EXEMPT names definitions that no longer exist: {missing}"
+
+
+def test_option_guard_finds_single_valued_options(tmp_path):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (tmp_path / "tests").mkdir()
+    (pkg / "core.py").write_text(
+        "def both(x, fast=False):\n    return x\n"
+        "def only_default(x, fast=False):\n    return x\n"
+        "def only_true(x, *, strict=False, n=3):\n    return x\n"
+        "def positional(x, exact=True):\n    return x\n"
+        "def computed(x, exact=True):\n    return x\n"
+        "def uncalled(x, exact=True):\n    return x\n"
+        "def only_tests(x, exact=True):\n    return x\n"
+    )
+    (pkg / "use.py").write_text(
+        "import pkg.core as c\n"
+        "c.both(1)\nc.both(2, fast=True)\n"
+        "c.only_default(1)\nc.only_default(2, fast=False)\n"
+        "c.only_true(1, strict=True)\n"
+        "c.positional(1, False)\nc.positional(2)\n"
+        "c.computed(1, exact=len('ab') > 1)\n"
+    )
+    (tmp_path / "tests" / "test_core.py").write_text("from pkg.core import only_tests\nonly_tests(1, False)\n")
+    assert single_valued_options(tmp_path, "pkg", ("pkg",)) == [
+        "core.only_default.fast", "core.only_true.strict",
+    ]
+    # a file outside the reference paths is not a caller; one inside is
+    assert single_valued_options(tmp_path, "pkg", ("pkg", "tests")) == [
+        "core.only_default.fast", "core.only_tests.exact", "core.only_true.strict",
+    ]
+
+
+def test_every_bool_option_is_used_both_ways():
+    found = [q for q in single_valued_options(ROOT) if q not in OPTION_EXEMPT]
+    assert not found, (
+        f"{len(found)} bool options receive one value from every production caller; make the "
+        f"chosen behaviour the only one and delete the parameter: {found}"
+    )
+
+
+def test_option_exemptions_name_existing_options():
+    assert set(OPTION_EXEMPT) <= set(single_valued_options(ROOT))

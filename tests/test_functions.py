@@ -48,7 +48,6 @@ def test_email_verify_chain(spark):
         c,
         domain_blacklist=("spam.net",),
         tld_whitelist=("com", "edu"),
-        lowercase_correction=True,
     )
     for email, want in cases.items():
         assert _one(spark, email, expr) == want, email

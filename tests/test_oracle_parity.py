@@ -188,9 +188,39 @@ def test_fingerprint_parity_on_unicode_names(spark, tmp_path):
           FROM '{SF_DIR}/part.parquet'
         ) TO '{tmp_path}/part.parquet' (FORMAT parquet)"""
     )
-    for name in ("keyer_profile_parts", "record_linkage_parts", "record_clusters_parts"):
+    for name in (
+        "fingerprint_dedup_pname", "keyer_profile_parts", "record_linkage_parts", "record_clusters_parts",
+    ):
         problems = compare(spark, name, QUERIES[name], ORACLES[name], str(tmp_path))
         assert not problems, problems
+
+
+def test_simhash_parity_on_unicode_spaces(spark, tmp_path):
+    """`simhash64` splits words on Java `\\s` as its oracle does.  The
+    `documents` copy adds, beside every original row, a variant whose
+    spaces are VT (a word break in Java and Python, not in RE2 `\\s`) or a
+    character Python `str.split()` breaks on and neither engine does:
+    NBSP, U+3000, U+001C, U+0085, U+2028."""
+    import os
+
+    import duckdb
+
+    for name in os.listdir(SF_DIR):
+        if name != "documents.parquet":
+            (tmp_path / name).symlink_to(os.path.join(SF_DIR, name))
+    duckdb.execute(
+        f"""COPY (
+          SELECT * FROM '{SF_DIR}/documents.parquet'
+          UNION ALL
+          SELECT doc_id + 100000 AS doc_id,
+            replace(text, ' ', chr([11, 160, 12288, 28, 133, 8232][doc_id % 6 + 1])) AS text,
+            lang, source, n_chars
+          FROM '{SF_DIR}/documents.parquet'
+        ) TO '{tmp_path}/documents.parquet' (FORMAT parquet)"""
+    )
+    name = "simhash_near_dups"
+    problems = compare(spark, name, QUERIES[name], ORACLES[name], str(tmp_path))
+    assert not problems, problems
 
 
 @pytest.mark.parametrize(
