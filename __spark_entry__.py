@@ -20,80 +20,71 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # Evidence-priority ordering: the driver's correctness gate samples the FIRST
-# 50 entries of queries(), so this list IS the round-5 sample — weakest prior
-# driver evidence first: (a) queries NEW or CHANGED this round (no driver row
-# exists for their current form: the six round-5 crawl-QA/PII/survivor queries; the
-# datetime query whose recognition table grew 48→228 formats; the HTML
-# extraction query with numeric charrefs; the four registered_domain
-# consumers on the generated public-suffix table; the four classify()
-# consumers whose type verdicts could shift with the wider date/time tables),
-# then (b) every ORACLE-BACKED query NOT sampled in round 4 (their newest
-# green row is r3 or older — the first-50 rotation rule), then (c) the
-# pinned-VALUES-oracle entries, whose pins can silently drift and therefore
-# always carry the weakest standing evidence.  The 38 entries outside the
-# sample have an r4
-# hash-green row on unchanged code or (HLL / approx-quantile) can only ever
-# be rows-checked.
+# 50 entries of queries(), so this list IS the round-6 sample, weakest
+# driver evidence first.  No query below has a driver row for its current
+# form: (a) queries whose oracle text or synthetic fixture changed in round
+# 6 (fixtures parsed from one SQL text on both engines, Java's `\s` and
+# Spark's `lower` spelled out in the oracles, the parsed-SQL text features,
+# the shared rule fragments, trim and fingerprint oracles), then (b) queries
+# whose Spark build path changed with the same oracle (parsed-SQL Hijri
+# conversion, one connected-components kernel, one LSH key kernel, the
+# Avro header read, deleted option branches), then (c) three pinned-VALUES
+# entries, whose pins can drift silently.  Every other entry has an r5 row
+# on unchanged code, is pinned, or (HLL / approx-quantile) is rows-only.
 _PRIORITY = [
-    # (a) new or changed in round 5
-    "pii_text_scrub_docs",  # NEW: email+IPv4 text scrub
-    "dedup_survivors_docs",  # NEW: keep-best-per-cluster survivor selection
-    "script_profile_docs",  # NEW: per-script codepoint profile
-    "mojibake_docs",  # NEW: encoding-artifact QA
-    "robots_meta_pages",  # NEW: robots-meta compliance signal
-    "token_budget_by_lang",  # NEW: training-mix token rollup
-    "datetime_patterns_orders",  # 228-format table + SQL-CASE dispatch + 16-arm fixture
-    "html_extract_pages",  # numeric character references + fixture refs
-    "url_canonical_dedup",  # generated PSL + sentinel-probe registered_domain
-    "domain_quality_stats",  # same registered_domain rewrite
-    "outlink_graph_pages",  # same + call-site host binding
-    "domain_pagerank",  # same + edges persist
-    "type_profile_customer",  # classify() gained date/time formats
-    "value_quality_customer",  # classify() gained date/time formats
-    "dominant_type_votes",  # classify() gained date/time formats
-    "profile_customer_table",  # classify() gained date/time formats
-    # (b) not sampled in round 4 — newest green row is r3 or older
+    # (a) oracle text or fixture changed in round 6
+    "url_canonical_dedup",
+    "domain_quality_stats",
+    "outlink_graph_pages",
+    "domain_pagerank",
+    "html_extract_pages",
+    "card_scrub_docs",
+    "line_dedup_docs",
+    "script_profile_docs",
+    "mojibake_docs",
+    "robots_meta_pages",
+    "pii_text_scrub_docs",
+    "scrub_docs",
+    "email_chain_customer",
+    "mx_verify_customer",
+    "phone_profile_customers",
+    "dominant_type_votes",
+    "fuzzy_standardize_names",
     "doc_textstats",
     "doc_quality_rules",
     "doc_rule_hit_counts",
-    "pattern_freq_cname",
-    "pattern_freq_props",
-    "word_pattern_freq_pname",
-    "topk_event_types",
-    "cardinality_exact",
-    "summary_lquantity",
-    "histogram_lquantity",
-    "quantiles_lquantity",
-    "text_length_docs",
-    "fingerprint_dedup_pname",
-    "exact_dedup_docs",
-    "email_check_customer",
-    "email_chain_customer",
-    "survivorship_orders",
-    "sample_docs_k50",
-    "minhash_docs",
-    "standardize_nation",
-    "fuzzy_standardize_names",
-    "mask_customer_names",
-    "events_hourly_windows",
     "quality_score_docs",
-    "salted_event_counts",
-    "top_order_per_status",
-    # (c) pinned-oracle entries — pins can drift, keep them under the
-    # gate.  The two
-    # by-nature rows-only entries (cardinality_hll,
-    # quantiles_approx_lquantity) are deliberately OUTSIDE the sample:
-    # a no-oracle slot produces no value-hash evidence, so spending 2
-    # of the 50 gate slots on them would displace verifiable queries
-    # (their rows-only adjudication is already on record since r4).
+    "doc_signatures",
+    "doc_token_counts",
+    "exact_dedup_norm_docs",
+    "fingerprint_dedup_pname",
+    "keyer_profile_parts",
+    "record_linkage_parts",
+    "record_clusters_parts",
+    "normalize_profile_parts",
+    "word_pattern_freq_pname",
+    "minhash_docs",
+    "minhash_near_dups",
+    "jaccard_adjacent_docs",
+    "simhash_near_dups",
+    "top_ngram_docs",
+    "contamination_docs",
+    # (b) Spark build path changed in round 6, same oracle
+    "umalqura_convert_orders",
+    "token_budget_by_lang",
+    "dedup_clusters_global",
+    "dedup_survivors_docs",
+    "ann_lsh_top3",
+    "embedding_near_dups",
+    "avro_nested_quality",
+    "email_check_customer",
+    "phone_metadata_customers",
+    "profile_customer_table",
+    "quantiles_lquantity",
+    # (c) pinned-VALUES oracles
     "quality_pipeline_docs",
     "mfb_clusters_parts",
     "ann_ivf_top3",
-    "media_features",
-    "synonym_search_modes",
-    "weighted_reservoir_orders",
-    "mx_verify_customer",
-    "umalqura_convert_orders",
 ]
 
 

@@ -5,6 +5,7 @@ from pathlib import Path
 
 import pytest
 
+from data_quality_spark import queries as q
 from data_quality_spark.queries import ORACLES, QUERIES, TABLE_DDL, _read
 
 from .parity import compare
@@ -221,6 +222,154 @@ def test_simhash_parity_on_unicode_spaces(spark, tmp_path):
     name = "simhash_near_dups"
     problems = compare(spark, name, QUERIES[name], ORACLES[name], str(tmp_path))
     assert not problems, problems
+
+
+def _sf_copy(path, **selects):
+    """`path` as a copy of the sf0.01 tier: each table named in `selects`
+    is the result of its DuckDB SELECT over `{src}` (the original table),
+    every other table a symlink."""
+    import os
+
+    import duckdb
+
+    path.mkdir(exist_ok=True)
+    for name in os.listdir(SF_DIR):
+        table = name.removesuffix(".parquet")
+        if table in selects:
+            sql = selects[table].format(src=f"'{SF_DIR}/{name}'")
+            duckdb.execute(f"COPY ({sql}) TO '{path}/{name}' (FORMAT parquet)")
+        else:
+            (path / name).symlink_to(os.path.join(SF_DIR, name))
+    return str(path)
+
+
+def test_word_parity_on_vertical_tab(spark, tmp_path):
+    """Java `\\s` matches VT and RE2's does not: every oracle word split,
+    symbol class and BPE class that twins a Java `\\s` spells it out
+    (`queries._SQL_JAVA_WS`).  The `documents` copy adds, beside every
+    original row, a variant with VT between words, in punctuation runs or
+    at the ends."""
+    sf = _sf_copy(
+        tmp_path,
+        documents="""SELECT * FROM {src} UNION ALL
+          SELECT doc_id + 100000,
+            CASE doc_id % 3
+              WHEN 0 THEN replace(text, ' ', chr(11))
+              WHEN 1 THEN chr(11) || text || '!' || chr(11) || '?x' || chr(11)
+              ELSE text END AS text,
+            lang, source, n_chars
+          FROM {src}""",
+    )
+    for name in (
+        "doc_textstats", "doc_quality_rules", "doc_rule_hit_counts", "quality_score_docs",
+        "domain_quality_stats", "doc_signatures", "doc_token_counts", "exact_dedup_norm_docs",
+    ):
+        problems = compare(spark, name, QUERIES[name], ORACLES[name], sf)
+        assert not problems, problems
+
+
+def test_lower_parity_on_dotted_capital_i_and_new_capitals(spark, tmp_path):
+    """Spark lowers U+0130 to `i` + U+0307 and DuckDB to `i`, and DuckDB
+    leaves the Unicode 14-16 capitals (U+2C2F, ...) unchanged, so every
+    oracle `lower` twinning an `F.lower` is `queries._sql_lower`.  The
+    copies hold, beside the original rows, `İ`/`i` and `Ⱟ`/`ⱟ` pairs that
+    collide under one engine's lowering and not under the other's.
+    `doc_textstats` gets no U+2C2F: Java 17's `\\p{L}` predates it, so
+    its symbol count differs for another reason."""
+    dotted = """SELECT * FROM {src} UNION ALL
+          SELECT doc_id + 100000, t, lang, source, length(t) FROM (
+            SELECT *, ['İt is', 'it is', 'İn the İnn', text || ' İN İn in'][doc_id % 4 + 1] AS t
+            FROM {src})"""
+    capitals = """SELECT * FROM {src} UNION ALL
+          SELECT doc_id + 100000, t, lang, source, length(t) FROM (
+            SELECT *, [chr(11311) || ' x', chr(11359) || ' x'][doc_id % 2 + 1] AS t
+            FROM {src})"""
+    parts = """SELECT * FROM {src} UNION ALL
+          SELECT p_partkey + k * 100000, v || ' ' || p_name, p_brand, p_type, p_size, p_retailprice
+          FROM {src}, (SELECT unnest(range(1, 5)) AS k,
+                              unnest(['İx', 'ix', 'x' || chr(11311), 'x' || chr(11359)]) AS v)"""
+    for sf, names in (
+        (_sf_copy(tmp_path / "dotted", documents=dotted), ("doc_textstats", "exact_dedup_norm_docs")),
+        (
+            _sf_copy(tmp_path / "capitals", documents=capitals, part=parts),
+            ("exact_dedup_norm_docs", "fingerprint_dedup_pname", "keyer_profile_parts"),
+        ),
+    ):
+        for name in names:
+            problems = compare(spark, name, QUERIES[name], ORACLES[name], sf)
+            assert not problems, problems
+
+
+def test_lower_map_matches_both_engines(spark):
+    """`queries._LOWER_MAP` is exactly where Spark's and DuckDB's `lower`
+    disagree below U+30000, apart from U+0130, which `_sql_lower` maps
+    first."""
+    import duckdb
+
+    cps = [i for i in range(1, 0x30000) if not 0xD800 <= i <= 0xDFFF]
+    df = spark.createDataFrame([(i, chr(i)) for i in cps], "cp INT, c STRING")
+    spark_lower = dict(df.selectExpr("cp", "lower(c)").collect())
+    duck_lower = dict(
+        duckdb.sql(
+            "SELECT i, lower(chr(CAST(i AS INTEGER))) FROM range(1, 196608) t(i) "
+            "WHERE i NOT BETWEEN 55296 AND 57343"
+        ).fetchall()
+    )
+    differ = {i: spark_lower[i] for i in cps if spark_lower[i] != duck_lower[i]}
+    assert differ.pop(0x130) == "i̇"
+    assert differ == {k: chr(v) for k, v in q._LOWER_MAP.items()}
+    for k, v in q._LOWER_MAP.items():
+        assert duck_lower[k] == chr(k) and duck_lower[v] == chr(v)
+
+
+# every fixture that the query and its oracle parse from the same SQL text
+SHARED_FIXTURES = (
+    f"{q._SQL_SYNTH_URL} AS synth_url",
+    *q._OUTLINK_PAGE_COLS,
+    f"{q._SQL_LINE_DEDUP_PAGE} AS line_dedup_page",
+    f"{q._SQL_HTML_PAGE} AS html_page",
+    f"{q._SQL_HTML_TEXT} AS html_text",
+    f"{q._SQL_CARD_BASE} AS card_base",
+    f"{q._SQL_CARD_PAGE} AS card_page",
+    f"{q._SQL_SCRIPT_MIX} AS script_mix",
+    f"{q._SQL_MOJIBAKE_MIX} AS mojibake_mix",
+    f"{q._SQL_ROBOTS_PAGE} AS robots_page",
+    f"{q._SQL_PII_MIX} AS pii_mix",
+    f"{q._SQL_CHAIN_EMAIL} AS chain_email",
+    f"{q._SQL_MX_EMAIL} AS mx_email",
+    f"{q._SQL_NANP_PHONE} AS nanp_phone",
+    f"{q._SQL_FUZZY_NAME} AS fuzzy_name",
+    *(f"{e} AS {c}" for c, e in q._SQL_VOTE_COLUMNS.items()),
+)
+
+
+def test_shared_fixtures_agree_across_engines(spark, tmp_path):
+    """Each shared fixture text gives the same values in Spark SQL and
+    DuckDB over an edge table: NULL and empty text, text ending in `". "`,
+    non-ASCII text, and keys up to 2^40.  `esc`, `base` and `chk` stand
+    in for the per-engine columns the HTML and card skeletons wrap; `k`
+    and `c_custkey` equal `doc_id`."""
+    import itertools
+
+    import duckdb
+
+    texts = [None, "", "one. two. ", "naïve 你好 İ. ﬁ ", "a\nb. c", "x" * 300]
+    keys = [*range(12), 2**31 - 1, 2**31, 2**40 - 1, 2**40]
+    rows = [(k, k, k, t, t, i % 10) for i, (k, t) in enumerate(itertools.product(keys, texts))]
+    edge = spark.createDataFrame(rows, "doc_id BIGINT, c_custkey BIGINT, k BIGINT, text STRING, esc STRING, chk INT")
+    edge = edge.selectExpr("*", f"{q._SQL_CARD_BASE} AS base")
+    edge.write.parquet(str(tmp_path / "edge"))
+    cols = ["doc_id", "text", *(c.rsplit(" AS ", 1)[1] for c in SHARED_FIXTURES)]
+    got = sorted(map(tuple, edge.selectExpr("doc_id", "text", *SHARED_FIXTURES).collect()), key=repr)
+    want = sorted(
+        duckdb.sql(
+            f"SELECT doc_id, text, {', '.join(SHARED_FIXTURES)} FROM '{tmp_path}/edge/*.parquet'"
+        ).fetchall(),
+        key=repr,
+    )
+    assert len(got) == len(want) == len(rows)
+    for g, w in zip(got, want):
+        assert g == w, [(c, a, b) for c, a, b in zip(cols, g, w) if a != b]
 
 
 @pytest.mark.parametrize(
