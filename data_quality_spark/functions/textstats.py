@@ -39,6 +39,18 @@ STOPWORDS: tuple[str, ...] = (
     "el", "los", "las", "y", "es", "por", "para", "con", "del", "se",
 )
 
+# The capitals (Unicode 14-16) that Spark's `lower` maps and DuckDB's leaves
+# unchanged, with their lowercase forms; tests/test_oracle_parity.py
+# recomputes the pair from both engines over every code point below U+30000.
+# Python 3.11's `str.lower` (Unicode 14.0) leaves 27 of them unchanged too.
+LOWER_MAP = {
+    0x1C89: 0x1C8A, 0x2C2F: 0x2C5F, 0xA7C0: 0xA7C1, 0xA7C7: 0xA7C8, 0xA7C9: 0xA7CA,
+    0xA7CB: 0x0264, 0xA7CC: 0xA7CD, 0xA7D0: 0xA7D1, 0xA7D6: 0xA7D7, 0xA7D8: 0xA7D9,
+    0xA7DA: 0xA7DB, 0xA7DC: 0x019B, 0xA7F5: 0xA7F6,
+    **{c: c + 0x27 for c in range(0x10570, 0x10596) if c not in (0x1057B, 0x1058B, 0x10593)},
+    **{c: c + 0x20 for c in range(0x10D50, 0x10D66)},
+}
+
 
 def words_sql(v: str) -> str:
     """SQL: array of the non-empty whitespace-separated tokens (code-point
@@ -143,6 +155,16 @@ _RE_LETTER_ANY = _re.compile(r"[^\W\d_]")           # ≈ Java \p{L}
 _RE_BULLET = _re.compile(r"^[-*•]")
 _RE_ELLIPSIS = _re.compile(r"(\.\.\.|…)[ \t\x0b\f\r]*$")
 _STOPSET = frozenset(STOPWORDS)
+_RE_LOWER_MAP = _re.compile("[" + "".join(map(chr, LOWER_MAP)) + "]")
+
+
+def spark_lower(t: str) -> str:
+    """Spark's `lower` of `t`: `str.lower` after `LOWER_MAP`, which holds
+    capitals that Python's Unicode tables do not lower.  Text without them
+    (all ASCII text) pays one C-level scan at most."""
+    if not t.isascii() and _RE_LOWER_MAP.search(t) is not None:
+        t = t.translate(LOWER_MAP)
+    return t.lower()
 
 
 def compute_features_py(t: str | None) -> tuple:
@@ -156,10 +178,10 @@ def compute_features_py(t: str | None) -> tuple:
         # never makes or removes whitespace, and final-sigma context stops
         # at whitespace, so the whole-text lower splits into the words' lowers
         ws = t.split()
-        lws = t.lower().split()
+        lws = spark_lower(t).split()
     else:
         ws = [w for w in _RE_WS.split(t) if w]
-        lws = [w.lower() for w in ws]
+        lws = list(map(spark_lower, ws))
     if t.isascii():
         # an ASCII word has a letter iff its lower form has a cased char
         n_alpha = sum(map(str.islower, lws))

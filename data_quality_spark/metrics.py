@@ -14,18 +14,22 @@ from pyspark.sql.observation import Observation
 
 from .rules import RULE_NAMES
 
+# The rule-hit counters as SQL aggregates over the rule_* and keep columns,
+# shared by the batch observation and the streaming windows.
+RULE_COUNTERS: tuple[str, ...] = (
+    "count(1) AS rows_total",
+    *(f"sum(CASE WHEN rule_{name} THEN 1 ELSE 0 END) AS {name}_pass" for name in RULE_NAMES),
+    "sum(CASE WHEN keep THEN 1 ELSE 0 END) AS kept_total",
+)
+
 
 def observe_rule_metrics(df: DataFrame, name: str = "dq_rule_metrics") -> tuple[DataFrame, Observation]:
-    """Attach an Observation counting pass/fail per rule + keep/drop totals.
+    """Attach an Observation counting pass/fail per rule + keep/drop totals
+    (`RULE_COUNTERS`; `df` carries the rule_* and keep columns).
 
     Read `observation.get` AFTER an action has materialized the DataFrame.
     `name` must be unique among concurrently-running observed queries
     (the concurrent-bucket checkpoint path names one per bucket).
     """
     obs = Observation(name)
-    aggs = [F.count(F.lit(1)).alias("rows_total")]
-    for rule in RULE_NAMES:
-        aggs.append(F.sum(F.when(F.col("rule_" + rule), 1).otherwise(0)).alias(f"{rule}_pass"))
-    if "keep" in df.columns:
-        aggs.append(F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept_total"))
-    return df.observe(obs, *aggs), obs
+    return df.observe(obs, *map(F.expr, RULE_COUNTERS)), obs

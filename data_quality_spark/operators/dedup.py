@@ -240,7 +240,8 @@ def minhash_near_duplicates(
 
 
 def simhash64(text_col: Column) -> Column:
-    """64-bit SimHash of lower-cased words, as an Arrow pandas UDF.
+    """64-bit SimHash of words lower-cased as Spark's `lower` does
+    (`textstats.spark_lower`), as an Arrow pandas UDF.
 
     Words split on runs of Java `\\s` (`[ \\t\\n\\x0B\\f\\r]`), the engine's
     word split (`textstats._RE_WS`); Python `str.split()` would also split
@@ -251,7 +252,7 @@ def simhash64(text_col: Column) -> Column:
     """
     from pyspark.sql.types import LongType
 
-    from ..functions.textstats import _RE_WS
+    from ..functions.textstats import _RE_WS, spark_lower
 
     @F.pandas_udf(LongType())
     def _simhash(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -261,7 +262,7 @@ def simhash64(text_col: Column) -> Column:
             if t is None:
                 return None
             counts = [0] * 64
-            for w in filter(None, _RE_WS.split(t.lower())):
+            for w in filter(None, _RE_WS.split(spark_lower(t))):
                 h = int.from_bytes(
                     hashlib.md5(w.encode("utf-8")).digest()[:8], "big"
                 )

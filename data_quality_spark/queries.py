@@ -120,24 +120,14 @@ def _sql_trim(v: str) -> str:
     return f"trim({v}, ' ')"
 
 
-# The capitals (Unicode 14-16) that Spark's `lower` maps and DuckDB's leaves
-# unchanged, with their lowercase forms; tests/test_oracle_parity.py
-# recomputes the pair from both engines over every code point below U+30000.
-_LOWER_MAP = {
-    0x1C89: 0x1C8A, 0x2C2F: 0x2C5F, 0xA7C0: 0xA7C1, 0xA7C7: 0xA7C8, 0xA7C9: 0xA7CA,
-    0xA7CB: 0x0264, 0xA7CC: 0xA7CD, 0xA7D0: 0xA7D1, 0xA7D6: 0xA7D7, 0xA7D8: 0xA7D9,
-    0xA7DA: 0xA7DB, 0xA7DC: 0x019B, 0xA7F5: 0xA7F6,
-    **{c: c + 0x27 for c in range(0x10570, 0x10596) if c not in (0x1057B, 0x1058B, 0x10593)},
-    **{c: c + 0x20 for c in range(0x10D50, 0x10D66)},
-}
-_LOWER_SRC = "".join(map(chr, _LOWER_MAP))
-_LOWER_DST = "".join(map(chr, _LOWER_MAP.values()))
+_LOWER_SRC = "".join(map(chr, ts.LOWER_MAP))
+_LOWER_DST = "".join(map(chr, ts.LOWER_MAP.values()))
 
 
 def _sql_lower(v: str) -> str:
     """DuckDB twin of `F.lower` over the SQL expression `v`: DuckDB lowers
     U+0130 to `i`, Spark to `i` + U+0307, and DuckDB leaves the
-    `_LOWER_MAP` capitals unchanged."""
+    `ts.LOWER_MAP` capitals unchanged."""
     return f"lower(translate(replace({v}, chr(304), 'i' || chr(775)), '{_LOWER_SRC}', '{_LOWER_DST}'))"
 
 

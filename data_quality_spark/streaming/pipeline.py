@@ -18,7 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..metrics import RULE_COUNTERS
 from ..pipeline import apply_quality_pipeline, output_columns
+from ..rules import RULE_NAMES
 from ..schema import PAGES_SCHEMA
 
 
@@ -48,25 +50,16 @@ def windowed_rule_metrics(
     watermark bounds state size (old windows evict) — the streaming form of
     `ValueQualityStatistics` accounting.
     """
-    from ..rules import RULE_NAMES
-
-    aggs = [
-        F.count(F.lit(1)).alias("rows_total"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept_total"),
-    ]
-    for name in RULE_NAMES:
-        aggs.append(
-            F.sum(F.when(F.col(f"rule_{name}"), 1).otherwise(0)).alias(f"{name}_pass")
-        )
     return (
         quality_stream.withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("win"))
-        .agg(*aggs)
+        .agg(*map(F.expr, RULE_COUNTERS))
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
-            *[c for c in ["rows_total", "kept_total"]],
-            *[F.col(f"{n}_pass") for n in RULE_NAMES],
+            "rows_total",
+            "kept_total",
+            *[f"{n}_pass" for n in RULE_NAMES],
         )
     )
 

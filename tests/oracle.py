@@ -9,7 +9,7 @@ here in their straightforward per-page form (`ref_classify`, `ref_ppl`,
 one numpy pass per page, one regex per word — so a rewrite of the engine's
 fast kernels that changes any output fails the gates instead of moving the
 oracle with it.  Only the frozen model tables (markers, ranges, bigram
-log-probs, stop words) are shared.
+log-probs, stop words, the `LOWER_MAP` capitals) are shared.
 
 Regex notes: Spark uses Java regex where `\\s` is ASCII-only, so this oracle
 uses the explicit ASCII whitespace class everywhere.
@@ -23,7 +23,7 @@ import unicodedata
 import numpy as np
 
 from data_quality_spark import rules as R
-from data_quality_spark.functions.textstats import FEATURE_COLS, STOPWORDS
+from data_quality_spark.functions.textstats import FEATURE_COLS, LOWER_MAP, STOPWORDS
 from data_quality_spark.langid import _CHAR_RANGES, _MARKERS, UNKNOWN
 from data_quality_spark.perplexity import _MAX_CHARS, _TABLE
 from data_quality_spark.scrub import scrub_str
@@ -36,6 +36,11 @@ _CJK_RANGES = ((0x3040, 0x30FF), (0x4E00, 0x9FFF), (0xAC00, 0xD7AF))
 
 def _words(text: str) -> list[str]:
     return [w for w in _WS.split(text) if w]
+
+
+def _lower(w: str) -> str:
+    """Spark's `lower`: Python's Unicode tables lack the `LOWER_MAP` capitals."""
+    return w.translate(LOWER_MAP).lower()
 
 
 def _is_symbol(ch: str) -> bool:
@@ -67,7 +72,7 @@ def rule_verdicts(text: str | None) -> dict[str, bool]:
     v["non_empty"] = text.strip(" \t\n\x0b\f\r") != ""
     cjk_gate = _cjk_ratio(text) > R.CJK_GATE_RATIO
     ws = _words(text)
-    lws = [w.lower() for w in ws]
+    lws = [_lower(w) for w in ws]
     wc = len(ws)
 
     def gated(val: bool) -> bool:
@@ -171,7 +176,7 @@ def ref_features(t: str | None) -> tuple:
     if t is None:
         return tuple([None] * len(FEATURE_COLS))
     ws = _words(t)
-    lws = [w.lower() for w in ws]
+    lws = [_lower(w) for w in ws]
     nw = len(ws)
     g2 = list(zip(lws, lws[1:])) if nw >= 2 else []
     g3 = list(zip(lws, lws[1:], lws[2:])) if nw >= 3 else []
@@ -203,7 +208,9 @@ def ref_analysis(t: str | None) -> tuple:
 
 
 def label_row(text: str | None) -> dict:
-    """Full oracle verdict for one document: rules, lang, ppl, keep, scrub."""
+    """Full oracle verdict for one document: rules, lang, ppl, keep, the
+    failed checks' names (rules in registry order, then language, then
+    perplexity), scrub."""
     verdicts = rule_verdicts(text)
     if text is None or not text.strip():
         lang, ppl = "und", float("inf")
@@ -213,10 +220,16 @@ def label_row(text: str | None) -> dict:
     lang_ok = lang in ALLOWED_LANGS
     ppl_ok = (ppl <= MAX_PERPLEXITY) if lang == "en" else True
     keep = all(verdicts.values()) and lang_ok and ppl_ok
+    reasons = [name for name in R.RULE_NAMES if not verdicts[name]]
+    if not lang_ok:
+        reasons.append("language")
+    if not ppl_ok:
+        reasons.append("perplexity")
     return {
         "verdicts": verdicts,
         "lang": lang,
         "ppl": ppl,
         "keep": keep,
+        "reasons": reasons,
         "scrubbed": scrub_str(text),
     }

@@ -6,6 +6,7 @@ from pathlib import Path
 import pytest
 
 from data_quality_spark import queries as q
+from data_quality_spark.functions import textstats as ts
 from data_quality_spark.queries import ORACLES, QUERIES, TABLE_DDL, _read
 
 from .parity import compare
@@ -275,7 +276,10 @@ def test_lower_parity_on_dotted_capital_i_and_new_capitals(spark, tmp_path):
     copies hold, beside the original rows, `İ`/`i` and `Ⱟ`/`ⱟ` pairs that
     collide under one engine's lowering and not under the other's.
     `doc_textstats` gets no U+2C2F: Java 17's `\\p{L}` predates it, so
-    its symbol count differs for another reason."""
+    its symbol count differs for another reason.  Python's `str.lower`
+    leaves 27 of those capitals unchanged: the `simhash_near_dups` copy
+    pairs each page's variant over one of them with its variant over the
+    lowercase form, which collide only when the UDF lowers as Spark does."""
     dotted = """SELECT * FROM {src} UNION ALL
           SELECT doc_id + 100000, t, lang, source, length(t) FROM (
             SELECT *, ['İt is', 'it is', 'İn the İnn', text || ' İN İn in'][doc_id % 4 + 1] AS t
@@ -288,12 +292,20 @@ def test_lower_parity_on_dotted_capital_i_and_new_capitals(spark, tmp_path):
           SELECT p_partkey + k * 100000, v || ' ' || p_name, p_brand, p_type, p_size, p_retailprice
           FROM {src}, (SELECT unnest(range(1, 5)) AS k,
                               unnest(['İx', 'ix', 'x' || chr(11311), 'x' || chr(11359)]) AS v)"""
+    # Unicode 16 capitals (U+1C89, U+A7CB/CC/DA/DC, U+10D50) that Python
+    # 3.11's `str.lower` leaves unchanged, and their lowercase forms
+    python_kept = """SELECT * FROM {src} UNION ALL
+          SELECT doc_id + k * 100000, replace(text, ' ', ' ' || chr(c[doc_id % 6 + 1])), lang, source, n_chars
+          FROM {src}, (SELECT unnest([1, 2]) AS k,
+                              unnest([[7305, 42955, 42956, 42970, 42972, 68944],
+                                      [7306, 612, 42957, 42971, 411, 68976]]) AS c)"""
     for sf, names in (
         (_sf_copy(tmp_path / "dotted", documents=dotted), ("doc_textstats", "exact_dedup_norm_docs")),
         (
             _sf_copy(tmp_path / "capitals", documents=capitals, part=parts),
             ("exact_dedup_norm_docs", "fingerprint_dedup_pname", "keyer_profile_parts"),
         ),
+        (_sf_copy(tmp_path / "python_kept", documents=python_kept), ("simhash_near_dups",)),
     ):
         for name in names:
             problems = compare(spark, name, QUERIES[name], ORACLES[name], sf)
@@ -301,7 +313,7 @@ def test_lower_parity_on_dotted_capital_i_and_new_capitals(spark, tmp_path):
 
 
 def test_lower_map_matches_both_engines(spark):
-    """`queries._LOWER_MAP` is exactly where Spark's and DuckDB's `lower`
+    """`textstats.LOWER_MAP` is exactly where Spark's and DuckDB's `lower`
     disagree below U+30000, apart from U+0130, which `_sql_lower` maps
     first."""
     import duckdb
@@ -317,8 +329,8 @@ def test_lower_map_matches_both_engines(spark):
     )
     differ = {i: spark_lower[i] for i in cps if spark_lower[i] != duck_lower[i]}
     assert differ.pop(0x130) == "i̇"
-    assert differ == {k: chr(v) for k, v in q._LOWER_MAP.items()}
-    for k, v in q._LOWER_MAP.items():
+    assert differ == {k: chr(v) for k, v in ts.LOWER_MAP.items()}
+    for k, v in ts.LOWER_MAP.items():
         assert duck_lower[k] == chr(k) and duck_lower[v] == chr(v)
 
 

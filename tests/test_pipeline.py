@@ -1,6 +1,7 @@
 """End-to-end pipeline gates (FIXTURES.md invariants):
 
-- keep/drop F1 ≥ 0.99 vs the oracle labels
+- keep/drop F1 ≥ 0.99 vs the oracle labels, and keep, every rule verdict
+  and the reasons equal to the oracle's on every page
 - byte-identical scrubbed text per url
 - determinism under different partitioning
 - langid accuracy on the synthesized corpus
@@ -50,6 +51,24 @@ def test_keep_f1(result_and_oracle):
     assert f1 >= 0.99, f"F1={f1:.4f} (tp={tp} fp={fp} fn={fn})"
 
 
+def test_keep_matches(result_and_oracle):
+    got, want = result_and_oracle
+    mismatches = [url for url, w in want.items() if got[url]["keep"] != w["keep"]]
+    assert not mismatches, mismatches[:10]
+
+
+def test_reasons_match(result_and_oracle):
+    """The failed rules in `RULE_NAMES` order, then `language`, then
+    `perplexity`: the rules and the two model gates are one array."""
+    got, want = result_and_oracle
+    mismatches = [
+        (url, got[url]["reasons"], w["reasons"])
+        for url, w in want.items()
+        if list(got[url]["reasons"]) != w["reasons"]
+    ]
+    assert not mismatches, mismatches[:10]
+
+
 def test_scrub_byte_identical(result_and_oracle):
     got, want = result_and_oracle
     for url, w in want.items():
@@ -64,9 +83,7 @@ def test_rule_verdicts_match(result_and_oracle):
         for name, val in w["verdicts"].items():
             if got[url][f"rule_{name}"] != val:
                 mismatches.append((url, name))
-    # allow a tiny tolerance for engine-boundary cases (float ratios at
-    # exactly the threshold), but the corpus is built to avoid them
-    assert len(mismatches) <= N_DOCS * 0.001, mismatches[:10]
+    assert not mismatches, mismatches[:10]
 
 
 def test_langid_on_clean_docs(result_and_oracle):
