@@ -21,45 +21,60 @@ import subprocess
 import sys
 import tempfile
 
-WORKER = r"""
-import json, sys, time
-from data_quality_spark.session import get_spark
-from data_quality_spark.pipeline import apply_quality_pipeline, output_columns
-from pyspark.sql import functions as F
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-cores = int(sys.argv[1])
-pages_path = sys.argv[2]
-spark = get_spark(app_name=f"dqs-scaling-{cores}", master=f"local[{cores}]",
-                  shuffle_partitions=max(32, cores))
-spark.sparkContext.setLogLevel("ERROR")
-pages = spark.read.parquet(pages_path)
-n = pages.count()
 
-def run():
-    out = apply_quality_pipeline(pages).select(*output_columns())
-    cols = [F.col(c).cast("string") for c in out.columns]
-    t0 = time.perf_counter()
-    out.agg(F.count(F.lit(1)),
-            F.sum(F.pmod(F.xxhash64(*cols), F.lit(1_000_003)))).collect()
-    return time.perf_counter() - t0
+def worker(cores: str, pages_path: str) -> None:
+    """One measurement at local[cores]: prints its JSON result line."""
+    import time
 
-cold = run()
-warm = min(run() for _ in range(2))
-print(json.dumps({"cores": cores, "docs": n, "cold_sec": round(cold, 3),
-                  "warm_sec": round(warm, 3),
-                  "docs_per_sec": round(n / warm, 1)}))
-"""
+    from pyspark.sql import functions as F
+
+    from data_quality_spark.pipeline import apply_quality_pipeline, output_columns
+    from data_quality_spark.session import get_spark
+
+    cores = int(cores)
+    spark = get_spark(app_name=f"dqs-scaling-{cores}", master=f"local[{cores}]",
+                      shuffle_partitions=max(32, cores))
+    spark.sparkContext.setLogLevel("ERROR")
+    pages = spark.read.parquet(pages_path)
+    n = pages.count()
+
+    def run():
+        out = apply_quality_pipeline(pages).select(*output_columns())
+        cols = [F.col(c).cast("string") for c in out.columns]
+        t0 = time.perf_counter()
+        out.agg(F.count(F.lit(1)),
+                F.sum(F.pmod(F.xxhash64(*cols), F.lit(1_000_003)))).collect()
+        return time.perf_counter() - t0
+
+    cold = run()
+    warm = min(run() for _ in range(2))
+    print(json.dumps({"cores": cores, "docs": n, "cold_sec": round(cold, 3),
+                      "warm_sec": round(warm, 3),
+                      "docs_per_sec": round(n / warm, 1)}))
+
+
+def synthesize_worker(pages_path: str, n_docs: str) -> None:
+    from data_quality_spark.schema import synthesize_pages
+    from data_quality_spark.session import get_spark
+
+    s = get_spark(master="local[32]")
+    s.sparkContext.setLogLevel("ERROR")
+    synthesize_pages(s, int(n_docs), partitions=64).write.mode("overwrite").parquet(pages_path)
+
+
+WORKERS = {"measure": worker, "synthesize": synthesize_worker}
+
+
+def _worker_cmd(name: str, *args: str) -> list[str]:
+    """Command line that runs WORKERS[name](*args) in a fresh interpreter
+    (and so a fresh JVM)."""
+    return [sys.executable, os.path.abspath(__file__), "--worker", name, *args]
 
 
 def synthesize(pages_path: str, n_docs: int) -> None:
-    code = (
-        "import sys\n"
-        "from data_quality_spark.session import get_spark\n"
-        "from data_quality_spark.schema import synthesize_pages\n"
-        "s = get_spark(master='local[32]'); s.sparkContext.setLogLevel('ERROR')\n"
-        f"synthesize_pages(s, {n_docs}, partitions=64).write.mode('overwrite').parquet({pages_path!r})\n"
-    )
-    subprocess.run([sys.executable, "-c", code], check=True)
+    subprocess.run(_worker_cmd("synthesize", pages_path, str(n_docs)), check=True)
 
 
 def _burn(_):
@@ -89,7 +104,7 @@ def hardware_ceiling(low: int, high: int) -> float:
 
 def measure(cores: int, pages_path: str) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", WORKER, str(cores), pages_path],
+        _worker_cmd("measure", str(cores), pages_path),
         check=True,
         capture_output=True,
         text=True,
@@ -211,4 +226,7 @@ def _write_report(r: dict, here: str) -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--worker"]:
+        WORKERS[sys.argv[2]](*sys.argv[3:])
+    else:
+        main()

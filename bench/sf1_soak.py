@@ -137,7 +137,7 @@ def mega_cluster_survivors(spark):
     labeled = cluster_matches(edges).select(
         F.col("id").alias("doc_id"), "cluster_id", (F.col("id") % 997).alias("_q")
     )
-    return cluster_survivors(labeled, "_q", "doc_id", "cluster_id")
+    return cluster_survivors(labeled, "_q")
 
 
 def stage_stats(ui_url: str, app_id: str) -> tuple[int, int, int]:

@@ -23,6 +23,9 @@ from pyspark.sql import functions as F
 # --- email -----------------------------------------------------------------
 
 EMAIL_PATTERN = r"^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$"
+# local-part checker (`LocalPartRegexCheckerImpl`): a letter, then letters,
+# digits, dots and underscores
+LOCAL_PART_PATTERN = r"^[a-zA-Z][a-zA-Z0-9._]*$"
 
 VALID = "VALID"
 INVALID = "INVALID"
@@ -49,12 +52,11 @@ def email_verify(
     c: Column,
     domain_blacklist: tuple[str, ...] | None = None,
     tld_whitelist: tuple[str, ...] | None = None,
-    local_part_regex: str | None = None,
 ) -> Column:
     """The checker chain as a when() cascade — first failing checker wins,
     mirroring `EmailVerify.checkEmail` ordering (syntax → domain → TLD →
-    local part), ending with the case-correction step that returns
-    CORRECTED for an address that is not lower case
+    local part `LOCAL_PART_PATTERN`), ending with the case-correction step
+    that returns CORRECTED for an address that is not lower case
     (`email/checkerImpl/LocalPartRegexCheckerImpl.java`)."""
     verdict = F.when(~is_valid_email(c), F.lit(INVALID))
     if domain_blacklist:
@@ -67,10 +69,7 @@ def email_verify(
             ~F.lower(email_tld(c)).isin(*[t.lower() for t in tld_whitelist]),
             F.lit(INVALID),
         )
-    if local_part_regex:
-        verdict = verdict.when(
-            ~email_local_part(c).rlike(local_part_regex), F.lit(INVALID)
-        )
+    verdict = verdict.when(~email_local_part(c).rlike(LOCAL_PART_PATTERN), F.lit(INVALID))
     return verdict.when(c != F.lower(c), F.lit(CORRECTED)).otherwise(F.lit(VALID))
 
 # --- phone -----------------------------------------------------------------

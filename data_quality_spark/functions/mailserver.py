@@ -127,7 +127,6 @@ def check_email(
     email: str | None,
     resolver: Callable[[str], list[str]],
     connect: Callable[[str, int], Transport],
-    port: int = SMTP_PORT,
 ) -> bool:
     """`check` (lines 209-307): True iff some exchanger accepts RCPT TO.
 
@@ -153,7 +152,7 @@ def check_email(
     for host in mx_hosts:
         transport = None
         try:
-            transport = connect(host, port)
+            transport = connect(host, SMTP_PORT)
             if get_response(transport) != 220:  # SMTP service ready
                 return False
             _write(transport, f"EHLO {domain}")
@@ -182,10 +181,9 @@ def check_email_result(
     email: str | None,
     resolver: Callable[[str], list[str]],
     connect: Callable[[str, int], Transport],
-    port: int = SMTP_PORT,
 ) -> str:
     """`checkEmail` (lines 375-377): VERIFIED / REJECTED verdict."""
-    return VERIFIED if check_email(email, resolver, connect, port) else REJECTED
+    return VERIFIED if check_email(email, resolver, connect) else REJECTED
 
 
 def live_unavailable(*_a, **_k):
@@ -275,7 +273,6 @@ def verify_emails(
     col: str,
     resolver: Callable[[str], list[str]] = live_unavailable,
     connect: Callable[[str, int], Transport] = live_unavailable,
-    port: int = SMTP_PORT,
 ):
     """DataFrame plan: verdict per DISTINCT address, never per row.
 
@@ -302,9 +299,7 @@ def verify_emails(
             verdicts = []
             for email in pdf["email"]:
                 try:
-                    verdicts.append(
-                        check_email_result(email, resolver, connect, port)
-                    )
+                    verdicts.append(check_email_result(email, resolver, connect))
                 except SMTPCheckError:
                     verdicts.append("ERROR")
             yield pd.DataFrame({"email": pdf["email"], "mx_verdict": verdicts})

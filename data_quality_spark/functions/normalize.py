@@ -35,12 +35,12 @@ def nfkc_normalize(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield s.map(nfkc_str)
 
 
-def acronym(c: Column, sep: str = "") -> Column:
+def acronym(c: Column) -> Column:
     """Acronym builder (`common/character/Acronym.java:31`): first char of
     each token, upper-cased."""
     words = F.filter(F.split(c, r"\s+"), lambda x: x != F.lit(""))
     return F.array_join(
-        F.transform(words, lambda w: F.upper(F.substring(w, 1, 1))), sep
+        F.transform(words, lambda w: F.upper(F.substring(w, 1, 1))), ""
     )
 
 

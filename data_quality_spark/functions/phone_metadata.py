@@ -501,12 +501,13 @@ def phone_timezones(c: Column) -> Column:
     )
 
 
-def phone_carrier_name(c: Column, region: str = "US") -> Column:
+def phone_carrier_name(c: Column) -> Column:
     """`getCarrierNameForNumber` analog.  NANP numbers carry NO carrier
     information (portability), and the mobile-prefix tables for other
     plans are libphonenumber metadata — so this resolves through the
     `phonenumbers` PyPI port when installed and returns null otherwise
-    (documented limitation, not a fake)."""
+    (documented limitation, not a fake).  A number without a country
+    code parses as a US number."""
     try:
         from collections.abc import Iterator
 
@@ -524,7 +525,7 @@ def phone_carrier_name(c: Column, region: str = "US") -> Column:
                 if v is None:
                     return None
                 try:
-                    return pc.name_for_number(pn.parse(str(v), region), "en") or None
+                    return pc.name_for_number(pn.parse(str(v), "US"), "en") or None
                 except pn.NumberParseException:
                     return None
 

@@ -22,6 +22,10 @@ _FRONTV = "EIY"   # front vowels that soften C/G
 _VARSON = "CSPTG"  # H is silent after these
 
 
+# length of every Metaphone and Double Metaphone code
+CODE_LEN = 4
+
+
 def _is_vowel(s: str, i: int) -> bool:
     return 0 <= i < len(s) and s[i] in _VOWELS
 
@@ -31,8 +35,8 @@ def _is_vowel(s: str, i: int) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def metaphone(txt: str | None, max_len: int = 4) -> str:
-    """Metaphone code (≤ `max_len` chars; empty for non-letter input)."""
+def metaphone(txt: str | None) -> str:
+    """Metaphone code (≤ `CODE_LEN` chars; empty for non-letter input)."""
     if txt is None or len(txt) == 0:
         return ""
     if len(txt) == 1:
@@ -54,7 +58,7 @@ def metaphone(txt: str | None, max_len: int = 4) -> str:
     code: list[str] = []
     n = 0
     wdsz = len(w)
-    while len(code) < max_len and n < wdsz:
+    while len(code) < CODE_LEN and n < wdsz:
         c = w[n]
         # collapse doubled letters except C
         if c != "C" and n > 0 and w[n - 1] == c:
@@ -140,7 +144,7 @@ def metaphone(txt: str | None, max_len: int = 4) -> str:
         elif c == "Z":
             code.append("S")
         n += 1
-    return "".join(code)[:max_len]
+    return "".join(code)[:CODE_LEN]
 
 
 # ---------------------------------------------------------------------------
@@ -148,7 +152,7 @@ def metaphone(txt: str | None, max_len: int = 4) -> str:
 # ---------------------------------------------------------------------------
 
 
-def double_metaphone(value: str | None, max_len: int = 4) -> tuple[str, str] | None:
+def double_metaphone(value: str | None) -> tuple[str, str] | None:
     """(primary, alternate) Double Metaphone codes, or None for blank input
     (the commons-codec cleanInput contract the reference matcher relies on:
     blank → null → weight 0)."""
@@ -183,7 +187,7 @@ def double_metaphone(value: str | None, max_len: int = 4) -> tuple[str, str] | N
         add("S")
         i = 1
 
-    while (len(pri) < max_len or len(alt) < max_len) and i < length:
+    while (len(pri) < CODE_LEN or len(alt) < CODE_LEN) and i < length:
         c = ch(i)
         if c in "AEIOUY":
             if i == 0:
@@ -494,11 +498,11 @@ def double_metaphone(value: str | None, max_len: int = 4) -> tuple[str, str] | N
         else:
             i += 1
 
-    return "".join(pri)[:max_len], "".join(alt)[:max_len]
+    return "".join(pri)[:CODE_LEN], "".join(alt)[:CODE_LEN]
 
 
-def double_metaphone_primary(value: str | None, max_len: int = 4) -> str | None:
-    dm = double_metaphone(value, max_len)
+def double_metaphone_primary(value: str | None) -> str | None:
+    dm = double_metaphone(value)
     return None if dm is None else dm[0]
 
 

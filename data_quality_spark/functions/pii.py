@@ -62,8 +62,8 @@ def luhn_check_digit(base: Column) -> Column:
     return (F.lit(10) - _luhn_sum(base, double_odd=True) % 10) % 10
 
 
-def scrub_valid_cards(text: Column, repl: str = "<CARD>") -> Column:
-    """Mask every Luhn-VALID card-shaped substring in `text`, leaving
+def scrub_valid_cards(text: Column) -> Column:
+    """Mask as `<CARD>` every Luhn-VALID card-shaped substring in `text`, leaving
     invalid look-alikes (order ids, serials) untouched.  Candidates are
     collected with `regexp_extract_all`, checksum-filtered, and folded
     into ordered literal replaces — all expression-side."""
@@ -86,7 +86,7 @@ def scrub_valid_cards(text: Column, repl: str = "<CARD>") -> Column:
         F.array_sort(valid),
         text,
         lambda acc, c: F.regexp_replace(
-            acc, F.concat(F.lit(r"\b"), c, F.lit(r"\b")), F.lit(repl)
+            acc, F.concat(F.lit(r"\b"), c, F.lit(r"\b")), F.lit("<CARD>")
         ),
     )
 
@@ -117,13 +117,13 @@ def luhn_check_digit_sql(base: str) -> str:
     return f"((10 - {luhn_sum_sql(base, True)} % 10) % 10)"
 
 
-def scrub_valid_cards_sql(text: str, repl: str = "<CARD>") -> str:
+def scrub_valid_cards_sql(text: str) -> str:
     stripped = "regexp_replace(c, '[- ]', '', 'g')"
     return (
         f"list_reduce(list_prepend({text}, list_sort(list_filter("
         f"list_distinct(regexp_extract_all({text}, '{CARD_CANDIDATE_RX}', 0)), "
         f"c -> {luhn_valid_sql(stripped)}))), "
-        f"(acc, x) -> regexp_replace(acc, '\\b' || x || '\\b', '{repl}', 'g'))"
+        f"(acc, x) -> regexp_replace(acc, '\\b' || x || '\\b', '<CARD>', 'g'))"
     )
 
 
@@ -154,12 +154,12 @@ _OCTET = r"(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])"
 IPV4_RX = rf"\b{_OCTET}\.{_OCTET}\.{_OCTET}\.{_OCTET}\b"
 
 
-def scrub_emails(text: Column, repl: str = "<EMAIL>") -> Column:
-    return F.regexp_replace(text, EMAIL_RX, repl)
+def scrub_emails(text: Column) -> Column:
+    return F.regexp_replace(text, EMAIL_RX, "<EMAIL>")
 
 
-def scrub_ipv4(text: Column, repl: str = "<IP>") -> Column:
-    return F.regexp_replace(text, IPV4_RX, repl)
+def scrub_ipv4(text: Column) -> Column:
+    return F.regexp_replace(text, IPV4_RX, "<IP>")
 
 
 def count_emails(text: Column) -> Column:
@@ -170,12 +170,12 @@ def count_ipv4(text: Column) -> Column:
     return F.regexp_count(text, F.lit(IPV4_RX)).cast("bigint")
 
 
-def scrub_emails_sql(text: str, repl: str = "<EMAIL>") -> str:
-    return f"regexp_replace({text}, '{EMAIL_RX}', '{repl}', 'g')"
+def scrub_emails_sql(text: str) -> str:
+    return f"regexp_replace({text}, '{EMAIL_RX}', '<EMAIL>', 'g')"
 
 
-def scrub_ipv4_sql(text: str, repl: str = "<IP>") -> str:
-    return f"regexp_replace({text}, '{IPV4_RX}', '{repl}', 'g')"
+def scrub_ipv4_sql(text: str) -> str:
+    return f"regexp_replace({text}, '{IPV4_RX}', '<IP>', 'g')"
 
 
 def count_emails_sql(text: str) -> str:

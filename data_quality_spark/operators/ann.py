@@ -5,7 +5,7 @@
   never shuffles — each partition scores its rows against the broadcast
   queries and emits only its local top-k, which TakeOrdered merges.
 - Sign-LSH (random hyperplane) bucketed variant.  Each vector gets
-  `num_planes` sign bits from deterministic ±1 hyperplanes (seeded,
+  `NUM_PLANES` sign bits from deterministic ±1 hyperplanes (seeded,
   reproducible) as one bucket key; neighbor candidates are only scored
   within shared buckets.  At 10^12 rows this turns an O(n·q) scan into
   O(bucket) work per query.
@@ -26,6 +26,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# the `embeddings` table: (vec_id, embedding array<float> of DIM)
+DIM = 64
+# sign-LSH: NUM_PLANES ±1 hyperplanes drawn from SEED
+NUM_PLANES = 6
+SEED = 42
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Sequential-fold double dot product (deterministic, oracle-matched)."""
@@ -44,29 +50,14 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
-def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact top-k cosine neighbors per query via broadcast join.
-
-    Output: (query_id, neighbor_id, rank) — rank 1 = nearest; ties broken
-    by neighbor id (deterministic).  Self-matches excluded.
-    """
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-        )
-    )
-    joined = vectors.crossJoin(q).filter(F.col(id_col) != F.col("__qid"))
-    scored = joined.select(
+def _top_k(candidates: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank) of the k nearest `candidates` (vec_id,
+    embedding, __qid, __qvec) per query: rank 1 = nearest, ties broken by
+    neighbor id (deterministic), self-matches excluded."""
+    scored = candidates.filter(F.col("vec_id") != F.col("__qid")).select(
         F.col("__qid").alias("query_id"),
-        F.col(id_col).alias("neighbor_id"),
-        cosine_expr(F.col(vec_col), F.col("__qvec")).alias("cosine"),
+        F.col("vec_id").alias("neighbor_id"),
+        cosine_expr(F.col("embedding"), F.col("__qvec")).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -76,17 +67,27 @@ def brute_force_topk(
     )
 
 
+def _query_side(queries: DataFrame) -> DataFrame:
+    return queries.select(F.col("query_id").alias("__qid"), F.col("embedding").alias("__qvec"))
+
+
+def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """Exact top-k cosine neighbors of each (query_id, embedding) query
+    among the (vec_id, embedding) `vectors` via broadcast join."""
+    return _top_k(vectors.crossJoin(F.broadcast(_query_side(queries))), k)
+
+
 # ---------------------------------------------------------------------------
 # Sign-LSH bucketing
 # ---------------------------------------------------------------------------
 
 
-def _planes(dim: int, num_planes: int, seed: int):
+def _planes():
     """Deterministic ±1 hyperplanes (Rademacher), reproducible anywhere."""
     import numpy as np
 
-    rng = np.random.RandomState(seed)
-    return rng.choice([-1.0, 1.0], size=(num_planes, dim)).astype("float64")
+    rng = np.random.RandomState(SEED)
+    return rng.choice([-1.0, 1.0], size=(NUM_PLANES, DIM)).astype("float64")
 
 
 def add_lsh_keys(df: DataFrame, vec_col: str, planes, probes: int = 0) -> DataFrame:
@@ -123,60 +124,29 @@ def add_lsh_keys(df: DataFrame, vec_col: str, planes, probes: int = 0) -> DataFr
     return df.withColumn("lsh_key", F.explode(_keys(F.col(vec_col))))
 
 
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    dim: int = 64,
-    num_planes: int = 10,
-    seed: int = 42,
-    probes: int = 0,
-) -> DataFrame:
-    """Approximate top-k: score only within the query's LSH bucket(s).
+def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """Approximate top-k: score only within the query's LSH buckets.
 
-    `probes` > 0 enables multi-probe: each query additionally searches the
-    buckets reached by flipping its lowest-margin sign bits — recall rises
-    toward brute force at the cost of `1 + probes` bucket joins' worth of
-    candidates, while the corpus side still shuffles nothing (bucket keys
-    only, query side broadcast).  Buckets are disjoint, so no candidate
-    dedup is needed.  Same output shape as brute_force_topk.
+    Multi-probe: each query also searches the 3 buckets reached by flipping
+    its lowest-margin sign bits, so recall rises toward brute force at the
+    cost of 4 bucket joins' worth of candidates, while the corpus side
+    still shuffles nothing (bucket keys only, query side broadcast).
+    Buckets are disjoint, so no candidate dedup is needed.  Same output
+    shape as brute_force_topk.
     """
-    planes = _planes(dim, num_planes, seed)
-    v = add_lsh_keys(vectors, vec_col, planes)
-    q = add_lsh_keys(
-        queries.select(F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")),
-        "__qvec", planes, probes,
-    )
-    joined = v.join(F.broadcast(q), on="lsh_key").filter(F.col(id_col) != F.col("__qid"))
-    scored = joined.select(
-        F.col("__qid").alias("query_id"),
-        F.col(id_col).alias("neighbor_id"),
-        cosine_expr(F.col(vec_col), F.col("__qvec")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    planes = _planes()
+    v = add_lsh_keys(vectors, "embedding", planes)
+    q = add_lsh_keys(_query_side(queries), "__qvec", planes, 3)
+    return _top_k(v.join(F.broadcast(q), on="lsh_key"), k)
 
 
-def train_ivf_centroids(
-    vectors: DataFrame,
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    sample: int = 4096,
-    iters: int = 5,
-    seed: int = 42,
-):
-    """IVF coarse quantizer: k-means on a bounded deterministic sample.
+def train_ivf_centroids(vectors: DataFrame):
+    """IVF coarse quantizer: 8 centroids from 5 k-means iterations on a deterministic sample
+    of at most 4,096 vectors.
 
     Sampling uses the hash-uniform order (engine/partitioning invariant);
     Lloyd iterations run in numpy on the driver — the sample is O(k·dim)
-    bounded, never the corpus.  Returns (n_centroids, dim) float64 array.
+    bounded, never the corpus.  Returns an (8, DIM) float64 array.
     """
     import numpy as np
 
@@ -184,18 +154,18 @@ def train_ivf_centroids(
 
     # deterministic sample keyed on the vector content hash
     keyed = vectors.select(
-        F.md5(F.concat_ws(",", F.col(vec_col).cast("array<string>"))).alias("__k"),
-        vec_col,
+        F.md5(F.concat_ws(",", F.col("embedding").cast("array<string>"))).alias("__k"),
+        "embedding",
     )
-    rows = reservoir_k(keyed, sample, "__k", seed=seed).collect()
+    rows = reservoir_k(keyed, 4096, "__k").collect()
     # sort by the content-hash key: collect() order depends on partitioning,
     # and X's row order feeds rng.choice + the mean reductions — sorting
     # makes the trained centroids invariant to cluster size / parallelism
     rows = sorted(rows, key=lambda r: r["__k"])
-    X = np.asarray([r[vec_col] for r in rows], dtype="float64")
-    rng = np.random.RandomState(seed)
-    centroids = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
-    for _ in range(iters):
+    X = np.asarray([r["embedding"] for r in rows], dtype="float64")
+    rng = np.random.RandomState(SEED)
+    centroids = X[rng.choice(len(X), size=min(8, len(X)), replace=False)]
+    for _ in range(5):
         d = ((X[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
         assign = d.argmin(axis=1)
         for c in range(len(centroids)):
@@ -205,10 +175,9 @@ def train_ivf_centroids(
     return centroids
 
 
-def add_ivf_key(
-    df: DataFrame, centroids, vec_col: str = "embedding", out_col: str = "ivf_key"
-) -> DataFrame:
-    """Assign each vector to its nearest centroid (vectorized per batch)."""
+def add_ivf_key(df: DataFrame, centroids) -> DataFrame:
+    """Assign each vector to its nearest centroid as `ivf_key` (vectorized
+    per batch)."""
     from pyspark.sql.types import IntegerType
 
     cent = centroids.copy()
@@ -225,78 +194,43 @@ def add_ivf_key(
             d = -2.0 * (m @ c.T) + c_norm2[None, :]
             yield pd.Series(d.argmin(axis=1).astype("int32"))
 
-    return df.withColumn(out_col, _assign(F.col(vec_col)))
+    return df.withColumn("ivf_key", _assign(F.col("embedding")))
 
 
-def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    centroids=None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF approximate top-k: score only vectors in the query's `nprobe`
-    nearest inverted lists.
+def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """IVF approximate top-k: train 8 centroids, then score only the vectors
+    in each query's 3 nearest inverted lists.
 
     At 10^12 vectors this is the classic scale path: the corpus is
     partitioned by centroid id once (bucketable/Iceberg-partitionable), and
-    each query touches nprobe/n_centroids of the data.  Same output shape
-    as brute_force_topk.
+    each query touches 3/8 of the data.  Same output shape as
+    brute_force_topk.
     """
     import numpy as np
 
-    if centroids is None:
-        centroids = train_ivf_centroids(vectors, vec_col, n_centroids, seed=seed)
-    v = add_ivf_key(vectors, centroids, vec_col)
-    # queries probe their nprobe nearest centroids
-    q_rows = queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-    ).collect()
+    centroids = train_ivf_centroids(vectors)
+    v = add_ivf_key(vectors, centroids)
+    # queries probe their 3 nearest centroids
+    q_rows = _query_side(queries).collect()
     c = np.asarray(centroids, dtype="float64")
     probe_rows = []
     for r in q_rows:
         x = np.asarray(r["__qvec"], dtype="float64")
         d = ((c - x) ** 2).sum(axis=1)
-        for key in np.argsort(d, kind="stable")[:nprobe]:
+        for key in np.argsort(d, kind="stable")[:3]:
             probe_rows.append((r["__qid"], [float(t) for t in r["__qvec"]], int(key)))
     spark = vectors.sparkSession
     q = spark.createDataFrame(
-        probe_rows, f"__qid long, __qvec array<double>, ivf_key int"
+        probe_rows, "__qid long, __qvec array<double>, ivf_key int"
     )
-    joined = v.join(F.broadcast(q), on="ivf_key").filter(F.col(id_col) != F.col("__qid"))
-    scored = joined.select(
-        F.col("__qid").alias("query_id"),
-        F.col(id_col).alias("neighbor_id"),
-        cosine_expr(F.col(vec_col), F.col("__qvec")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _top_k(v.join(F.broadcast(q), on="ivf_key"), k)
 
 
-def embedding_dedup_candidates(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    num_planes: int = 10,
-    seed: int = 42,
-    min_cosine: float = 0.95,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs: bucket by LSH key, score in-bucket.
-    Output: (id_a, id_b, cosine)."""
-    keyed = add_lsh_keys(vectors, vec_col, _planes(dim, num_planes, seed))
-    v = keyed.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), "lsh_key"
-    )
+def embedding_dedup_candidates(vectors: DataFrame) -> DataFrame:
+    """Embedding-cosine near-dup pairs: bucket by LSH key, score in-bucket,
+    keep cosine >= 0.35.  Output: (id_a, id_b, cosine)."""
+    keyed = add_lsh_keys(vectors, "embedding", _planes())
+    v = keyed.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), "lsh_key")
     a, b = v.alias("a"), v.alias("b")
     return (
         a.join(b, "lsh_key")
@@ -306,5 +240,5 @@ def embedding_dedup_candidates(
             F.col("b.id").alias("id_b"),
             cosine_expr(F.col("a.vec"), F.col("b.vec")).alias("cosine"),
         )
-        .filter(F.col("cosine") >= min_cosine)
+        .filter(F.col("cosine") >= 0.35)
     )

@@ -50,13 +50,13 @@ def normalized_text(col: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def word_shingles(text_col: str, n: int = 3) -> Column:
-    """Distinct lower-cased word n-gram shingles (array<string>) of the
+def word_shingles(text_col: str) -> Column:
+    """Distinct lower-cased word 3-gram shingles (array<string>) of the
     column `text_col`."""
     from ..functions.textstats import ngrams_sql, words_sql
 
     w = f"transform({words_sql(text_col)}, x -> lower(x))"
-    return F.expr(f"array_distinct({ngrams_sql(w, n)})")
+    return F.expr(f"array_distinct({ngrams_sql(w, 3)})")
 
 
 def jaccard_similarity(a: Column, b: Column) -> Column:
@@ -85,11 +85,10 @@ def minhash_signature_df(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    shingle_n: int = 3,
     num_hashes: int = 16,
     portable: bool = False,
 ) -> DataFrame:
-    """(id, sig, sh hashed-shingle set) per doc with ≥1 shingle.
+    """(id, sig, sh hashed-shingle set) per doc with ≥1 word 3-shingle.
 
     Hash i of a shingle hashes `i:` || shingle; the carried set hashes
     `sh:` || shingle.  The hash is native xxhash64 (longs) by default;
@@ -102,12 +101,12 @@ def minhash_signature_df(
     which cost ~1µs/element and dominated the naive plan) → one groupBy
     with map-side combine (per-partition partial min) so the shuffle
     carries one row of k hashes + the distinct-shingle set per doc.
-    Docs with no shingles (< n words) are excluded by construction —
+    Docs with no shingles (< 3 words) are excluded by construction —
     they cannot be near-dup candidates.
     """
     ex = df.select(
         F.col(id_col).alias("id"),
-        F.explode(word_shingles(text_col, shingle_n)).alias("s"),
+        F.explode(word_shingles(text_col)).alias("s"),
     )
     hash_fn = F.md5 if portable else F.xxhash64
     hash_cols = [
@@ -194,13 +193,12 @@ def minhash_near_duplicates(
     text_col: str,
     id_col: str,
     threshold: float = 0.7,
-    shingle_n: int = 3,
     num_hashes: int = 16,
-    num_bands: int = 4,
     portable: bool = False,
     persist_signatures: bool = True,
 ) -> DataFrame:
-    """Candidates → verify with true n-gram Jaccard ≥ threshold.
+    """Candidates from 4 LSH bands → verify with true word 3-gram
+    Jaccard ≥ threshold.
     `portable=True` swaps the xxhash64 signatures for salted md5 (see
     `minhash_signature_df`) so a SQL oracle can replay the whole pipeline;
     everything downstream (banding join, cap, verify) is the SAME code
@@ -220,10 +218,10 @@ def minhash_near_duplicates(
     """
     from pyspark import StorageLevel
 
-    sigs = minhash_signature_df(df, text_col, id_col, shingle_n, num_hashes, portable)
+    sigs = minhash_signature_df(df, text_col, id_col, num_hashes, portable)
     if persist_signatures:
         sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    pairs = _lsh_pairs_from_sigs(sigs, num_hashes, num_bands, max_bucket=1000)
+    pairs = _lsh_pairs_from_sigs(sigs, num_hashes, 4, max_bucket=1000)
     return (
         pairs.select(
             "id_a",
@@ -281,33 +279,19 @@ def simhash64(text_col: Column) -> Column:
     return _simhash(text_col)
 
 
-def simhash_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_bands: int | None = None,
-    max_hamming: int = 6,
-    max_bucket: int = 5000,
-) -> DataFrame:
-    """Near-dup pairs by SimHash banding + native bit_count(xor) verify.
-    Output: (id_a, id_b, hamming).
+def simhash_candidates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Near-dup pairs at Hamming distance ≤ 3 by SimHash banding + native
+    bit_count(xor) verify.  Output: (id_a, id_b, hamming).
 
     Recall contract (pigeonhole): two fingerprints at Hamming distance d
-    share a band whenever d ≤ num_bands - 1, so recall is EXACTLY 1.0 for
-    max_hamming ≤ num_bands - 1 (buckets over `max_bucket` excepted — the
-    reference's block-cap device; an over-full band value means boilerplate
-    mass, not discriminative structure).  By default the banding
-    auto-widens to the smallest power-of-two band count ≥ max_hamming + 1,
-    capped at 8 (8 × 8-bit bands).  SCALE NOTE: band width = 64/num_bands
-    bits bounds the key space at 2^width per band — 8-bit bands mean ≥ n/256
-    docs per bucket on ANY corpus, so the candidate-pair count grows
-    quadratically once n ≫ 2^width·max_bucket; prefer the smallest radius
-    (fewest bands) the use case allows.  Measured in
-    tests/test_dedup_ann.py::test_simhash_recall."""
-    if num_bands is None:
-        num_bands = 1
-        while num_bands < max_hamming + 1 and num_bands < 8:
-            num_bands *= 2
+    share one of the 4 16-bit bands whenever d ≤ 3, so recall is EXACTLY
+    1.0 (buckets over 5,000 docs excepted — the reference's block-cap
+    device; an over-full band value means boilerplate mass, not
+    discriminative structure).  SCALE NOTE: the 16-bit band width bounds
+    the key space at 2^16 per band, so the candidate-pair count grows
+    quadratically once n ≫ 2^16·5000.  Measured in
+    tests/test_dedup_ann.py::test_simhash_recall_exhaustive_within_band_guarantee."""
+    num_bands, max_hamming = 4, 3
     h = simhash64(F.col(text_col))
     width = 64 // num_bands
     hashed = df.select(F.col(id_col).alias("id"), h.alias("sh")).cache()
@@ -331,7 +315,7 @@ def simhash_candidates(
     oversize = (
         bands.groupBy("band_key")
         .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter(F.col("bsz") > max_bucket)
+        .filter(F.col("bsz") > 5000)
         .select("band_key")
     )
     bands = bands.join(F.broadcast(oversize), "band_key", "left_anti")
@@ -355,12 +339,7 @@ def simhash_candidates(
 # ---------------------------------------------------------------------------
 
 
-def corpus_line_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_count: int = 5,
-) -> DataFrame:
+def corpus_line_dedup(df: DataFrame) -> DataFrame:
     """Remove boilerplate lines that repeat across the corpus (the CCNet
     line-dedup stage: headers, footers, nav chrome dominate crawled HTML
     text).  Spec — deterministic, order-free, reproduced verbatim by the
@@ -369,16 +348,16 @@ def corpus_line_dedup(
     - a document's lines are `split(text, '\\n')`;
     - a line's dedup key is `trim(line)`; blank keys are NEVER counted or
       removed (paragraph structure survives);
-    - a non-blank line is dropped iff its key occurs >= `min_count` times
+    - a non-blank line is dropped iff its key occurs >= 5 times
       corpus-wide (ALL copies drop — frequency marks boilerplate; CCNet's
       keep-first variant needs a global order, which at 10^12 docs costs
       a sort for no quality gain);
     - survivors rejoin in original order with '\\n'.
 
-    Returns (id, n_lines, n_kept, cleaned_text).
+    Reads (doc_id, text); returns (doc_id, n_lines, n_kept, cleaned_text).
 
     Scale shape: the frequency table aggregates `(trim(line))` keys with
-    map-side combine, then filters to keys with count >= min_count — the
+    map-side combine, then filters to keys with count >= 5 — the
     boilerplate vocabulary, which is tiny relative to the corpus — so AQE
     broadcasts it into the anti-join and document lines never shuffle for
     the join.  The only full-width shuffle is the per-doc reassembly
@@ -387,15 +366,15 @@ def corpus_line_dedup(
     but makes output correctness collision-dependent — exactness wins.)
     """
     lines = df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("_pos", "_line"),
+        F.col("doc_id").alias("_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("_pos", "_line"),
     ).select("_id", "_pos", "_line", F.trim(F.col("_line")).alias("_k"))
 
     frequent = (
         lines.filter(F.col("_k") != "")
         .groupBy("_k")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") >= min_count)
+        .filter(F.col("_c") >= 5)
         .select("_k")
     )
 
@@ -412,13 +391,13 @@ def corpus_line_dedup(
     )
 
     totals = df.select(
-        F.col(id_col).alias("_id"),
-        F.size(F.split(F.col(text_col), "\n")).cast("bigint").alias("n_lines"),
+        F.col("doc_id").alias("_id"),
+        F.size(F.split(F.col("text"), "\n")).cast("bigint").alias("n_lines"),
     )
     return (
         totals.join(reassembled, "_id", "left")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             "n_lines",
             F.coalesce(F.col("n_kept"), F.lit(0).cast("bigint")).alias("n_kept"),
             F.coalesce(F.col("cleaned_text"), F.lit("")).alias("cleaned_text"),
@@ -426,13 +405,9 @@ def corpus_line_dedup(
     )
 
 
-def cluster_survivors(
-    labeled: DataFrame,
-    quality_col: str,
-    id_col: str = "doc_id",
-    cluster_col: str = "cluster_id",
-) -> DataFrame:
-    """Keep-best-per-cluster: for each near-dup cluster, the surviving
+def cluster_survivors(labeled: DataFrame, quality_col: str) -> DataFrame:
+    """Keep-best-per-cluster over (doc_id, cluster_id, `quality_col`)
+    rows: for each near-dup cluster, the surviving
     document is the max-quality member, ties broken by SMALLEST id —
     the end step of a dedup pipeline (clusters come from
     `cluster_matches` over MinHash/SimHash pairs; this decides which
@@ -460,11 +435,8 @@ def cluster_survivors(
     + join — executes once, not twice (the multi-consumer diamond rule,
     CLAUDE.md round 2).
     """
-    q, i, c = F.col(quality_col), F.col(id_col), F.col(cluster_col)
-    labeled = labeled.select(
-        c.alias(cluster_col), i.alias(id_col), q.alias(quality_col)
-    ).localCheckpoint(eager=True)
-    q, i, c = F.col(quality_col), F.col(id_col), F.col(cluster_col)
+    labeled = labeled.select("cluster_id", "doc_id", quality_col).localCheckpoint(eager=True)
+    q, i, c = F.col(quality_col), F.col("doc_id"), F.col("cluster_id")
     best = labeled.groupBy(c.alias("cluster_id")).agg(
         F.max(F.struct(q.alias("q"), (-i).alias("nid"), i.alias("id")))["id"]
         .cast("bigint")
@@ -475,8 +447,8 @@ def cluster_survivors(
         labeled.select(i.alias("_id"), c.alias("cluster_id"))
         .join(best, "cluster_id")
         .select(
-            F.col("_id").cast("bigint").alias(id_col),
-            F.col("cluster_id").cast("bigint").alias(cluster_col),
+            F.col("_id").cast("bigint").alias("doc_id"),
+            F.col("cluster_id").cast("bigint").alias("cluster_id"),
             F.col("cluster_size"),
             (F.col("_id") == F.col("keep_id")).alias("keep"),
         )

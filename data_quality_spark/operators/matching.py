@@ -30,6 +30,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+# blocks over this many rows are dropped before the quadratic in-block
+# match (the reference's block cap, `StringsClusterAnalyzer.java:57`)
+MAX_BLOCK = 1000
+
 # ---------------------------------------------------------------------------
 # Attribute matchers — native where Spark has the primitive
 # ---------------------------------------------------------------------------
@@ -42,9 +46,9 @@ def levenshtein_weight(a: Column, b: Column) -> Column:
     return F.when(mx == 0, 1.0).otherwise(1.0 - F.levenshtein(a, b) / mx)
 
 
-def qgram_weight(a: Column, b: Column, q: int = 2) -> Column:
+def qgram_weight(a: Column, b: Column) -> Column:
     """QGramsMatcher: q-gram profile overlap (`attribute/QGramsMatcher.java:56`)
-    — Jaccard over character q-gram sets, native sequence/transform.
+    — Jaccard over character bigram (q = 2) sets, native sequence/transform.
 
     Short-string guard: when BOTH strings are shorter than q (no grams on
     either side) the weight is exact equality, matching what the
@@ -52,6 +56,8 @@ def qgram_weight(a: Column, b: Column, q: int = 2) -> Column:
     judge finding: the old code scored any two short strings 1.0).
     Documented divergence: mixed lengths (one side < q) score 0 here vs a
     small padded-gram overlap in the reference."""
+
+    q = 2
 
     def grams(c: Column) -> Column:
         n = F.length(c)
@@ -203,12 +209,10 @@ def py_matcher_weight(kind: str, a: Column, b: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def candidate_pairs(
-    df: DataFrame, id_col: str, block_key: Column, max_block: int = 1000
-) -> DataFrame:
+def candidate_pairs(df: DataFrame, id_col: str, block_key: Column) -> DataFrame:
     """Self-join within blocking-key groups: (block_key, id_a, id_b) plus
-    both sides' attributes prefixed a_/b_.  Blocks larger than `max_block`
-    are dropped (the reference's block cap, `StringsClusterAnalyzer.java:57`).
+    both sides' attributes prefixed a_/b_.  Blocks larger than `MAX_BLOCK`
+    are dropped.
     """
     # NO forced repartition on the block key: blocking keys (phonetic,
     # fingerprint) are skew-prone — a hash partition on the key pins each
@@ -224,7 +228,7 @@ def candidate_pairs(
         df.select(block_key.alias("_bk"))
         .groupBy("_bk")
         .agg(F.count(F.lit(1)).alias("_bsz"))
-        .filter(F.col("_bsz") > max_block)
+        .filter(F.col("_bsz") > MAX_BLOCK)
         .select("_bk")
     )
     keyed = keyed.join(F.broadcast(oversize), "_bk", "left_anti")
@@ -238,13 +242,7 @@ def candidate_pairs(
     return a.join(b, "_bk").filter(F.col(f"a_{id_col}") < F.col(f"b_{id_col}"))
 
 
-def scored_name_pairs(
-    df: DataFrame,
-    id_col: str,
-    name_col: str,
-    block_key: Column,
-    max_block: int = 1000,
-) -> DataFrame:
+def scored_name_pairs(df: DataFrame, id_col: str, name_col: str, block_key: Column) -> DataFrame:
     """Blocked pair scoring with identical-value dedup FIRST (the
     reference's own device — StringsClusterAnalyzer dedupes identical
     values before the quadratic in-block match; web corpora repeat values
@@ -253,7 +251,7 @@ def scored_name_pairs(
     the output is bit-identical to pairing every row (checksum-verified
     at sf0.1: 3.1M pairs, 4.8 s → 1.8 s).  Same-name pairs short-circuit
     to weight 1.0 without a matcher call.  Output: (id_a, id_b,
-    lev_weight, exact_weight) with id_a < id_b, blocks over `max_block`
+    lev_weight, exact_weight) with id_a < id_b, blocks over `MAX_BLOCK`
     ROWS dropped (cap counts rows, not distinct names — reference
     semantics, `StringsClusterAnalyzer.java:57`).
 
@@ -272,7 +270,7 @@ def scored_name_pairs(
     oversize = (
         names.groupBy("_bk")
         .agg(F.sum("_k").alias("_n"))
-        .filter(F.col("_n") > max_block)
+        .filter(F.col("_n") > MAX_BLOCK)
         .select("_bk")
     )
     names = names.join(F.broadcast(oversize), "_bk", "left_anti")
@@ -316,14 +314,8 @@ def scored_name_pairs(
 # ---------------------------------------------------------------------------
 
 
-def cluster_matches(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    block_col: str | None = None,
-) -> DataFrame:
-    """Matched pairs → connected-component cluster ids: one numpy kernel
+def cluster_matches(pairs: DataFrame, max_iter: int = 20, block_col: str | None = None) -> DataFrame:
+    """Matched (id_a, id_b) pairs → connected-component cluster ids: one numpy kernel
     per group of one `groupBy(...).applyInPandas`, no driver-side loop.
 
     The group is `block_col` when given (blocking-key edges cannot cross
@@ -374,8 +366,8 @@ def cluster_matches(
     group = F.col(block_col) if block_col else F.lit(0)
     edges = pairs.select(
         group.alias("_grp"),
-        F.col(id_a).cast("long").alias("_ca"),
-        F.col(id_b).cast("long").alias("_cb"),
+        F.col("id_a").cast("long").alias("_ca"),
+        F.col("id_b").cast("long").alias("_cb"),
     )
     return edges.groupBy("_grp").applyInPandas(run_group, schema="id long, cluster_id long")
 
@@ -558,13 +550,11 @@ def mfb_match_merge(
     id_col: str,
     block_key: Column,
     attrs: list[dict],
-    threshold: float = 0.85,
     timestamp_col: str | None = None,
     source_col: str | None = None,
-    max_block: int = 1000,
 ) -> DataFrame:
     """Distributed MFB: fingerprint-style blocking bounds each block at
-    `max_block` rows, then the EXACT sequential match-or-merge queue runs
+    `MAX_BLOCK` rows, then the EXACT sequential match-or-merge queue runs
     per block inside `applyInPandas` (records cannot match across blocks —
     the same bound the reference's block-based grouping applies,
     `grouping/TSwooshGrouping.java:47`).  Golden records out.
@@ -574,6 +564,8 @@ def mfb_match_merge(
     smallest, most_recent, most_ancient, prefer_true, prefer_false,
     concatenate, most_trusted_source (param = source name, needs
     `source_col`)}.
+
+    A record merges into a master at confidence ≥ 0.9.
 
     Output: (block, group_id=min member id, group_size, member_ids,
     <col>_survivor ...).  Deterministic: records are processed in id order
@@ -591,7 +583,7 @@ def mfb_match_merge(
     )
     oversize = (
         keyed.groupBy("_bk").agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > max_block).select("_bk")
+        .filter(F.col("n") > MAX_BLOCK).select("_bk")
     )
     keyed = keyed.join(F.broadcast(oversize), "_bk", "left_anti")
 
@@ -609,7 +601,7 @@ def mfb_match_merge(
             }
             for _, r in pdf.iterrows()
         ]
-        masters = _mfb_queue(records, attrs, threshold)
+        masters = _mfb_queue(records, attrs, 0.9)
         rows = []
         for m in masters:
             ids = sorted(m["ids"])

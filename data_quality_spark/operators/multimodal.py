@@ -4,10 +4,10 @@ Design for a 100 TB training-data pipeline: media lives as opaque `binary`
 columns with a typed metadata struct alongside; all byte-level work
 (decode, resize, frame-sample, feature-extract) runs in `mapInPandas` so
 one Arrow batch of blobs streams through Python per task with bounded
-memory.  The decode kernels themselves need codec libraries that are NOT in
-this container, so they are stubbed behind `NotImplementedError` with a
-deterministic fake for tests — the Spark-side contract (schemas, batch
-shapes, partitioning, metadata extraction) is real and tested.
+memory.  The feature kernel is a deterministic sha256-derived stand-in for
+decode→model-embed (codec libraries are not a dependency) — the Spark-side
+contract (schemas, batch shapes, partitioning, metadata extraction) is real
+and tested.
 """
 
 from __future__ import annotations
@@ -69,22 +69,14 @@ def sniff_mime(payload: bytes | None) -> str | None:
     return "application/octet-stream"
 
 
-def decode_image(payload: bytes):  # pragma: no cover - container lacks codecs
-    """Real decode (PIL/opencv) — NOT available in this container."""
-    raise NotImplementedError(
-        "image decode requires PIL/opencv; install and swap _fake_feature"
-    )
-
-
-def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in feature: sha256-derived unit-less floats.
-    Replaces decode→model-embed in tests; same signature/shape as the real
-    kernel so swapping implementations is a one-liner."""
+def _fake_feature(payload: bytes) -> list[float]:
+    """Deterministic stand-in feature: 8 sha256-derived unit-less floats
+    in place of decode→model-embed."""
     h = hashlib.sha256(payload).digest()
-    return [int.from_bytes(h[4 * i : 4 * i + 4], "big") / 2**32 for i in range(dim)]
+    return [int.from_bytes(h[4 * i : 4 * i + 4], "big") / 2**32 for i in range(8)]
 
 
-def extract_media_features(df: DataFrame, use_real_decoder: bool = False) -> DataFrame:
+def extract_media_features(df: DataFrame) -> DataFrame:
     """media table → per-item features via mapInPandas (Arrow-batched).
 
     Scale contract: each task streams batches of (id, payload) and emits
@@ -102,11 +94,7 @@ def extract_media_features(df: DataFrame, use_real_decoder: bool = False) -> Dat
                     lambda b: None if b is None else hashlib.sha256(b).hexdigest()
                 ),
                 "magic": pdf["payload"].map(sniff_mime),
-                "feature": pdf["payload"].map(
-                    lambda b: None
-                    if b is None
-                    else (decode_image(b) if use_real_decoder else _fake_feature(b))
-                ),
+                "feature": pdf["payload"].map(lambda b: None if b is None else _fake_feature(b)),
             }
             yield pd.DataFrame(out)
 
@@ -117,7 +105,7 @@ _SYNTH_MAGICS = [b"\xff\xd8\xff\xe0", b"\x89PNG\r\n\x1a\n", b"RIFF1234WAVE", b"I
 _SYNTH_KINDS = ["image", "image", "audio", "audio"]
 
 
-def synth_media_spec(i: int, seed: int = 42) -> tuple[str, bytes, str]:
+def synth_media_spec(i: int) -> tuple[str, bytes, str]:
     """The per-id payload SPEC for the synthetic media table: (kind,
     payload, width-meta).  Pure Python (`random.Random` is a platform-
     stable Mersenne Twister), shared by `synthesize_media` AND the driver
@@ -125,13 +113,13 @@ def synth_media_spec(i: int, seed: int = 42) -> tuple[str, bytes, str]:
     hashlib alone, independently of the Spark/Arrow plumbing under test."""
     import random
 
-    rng = random.Random(seed * 7_919 + int(i))
+    rng = random.Random(42 * 7_919 + int(i))
     k = rng.randrange(4)
     body = bytes(rng.getrandbits(8) for _ in range(rng.randrange(64, 256)))
     return _SYNTH_KINDS[k], _SYNTH_MAGICS[k] + body, str(rng.randrange(100, 2000))
 
 
-def synthesize_media(spark, n: int, seed: int = 42) -> DataFrame:
+def synthesize_media(spark, n: int) -> DataFrame:
     """Deterministic fake media table (payload = seeded pseudo-bytes with
     realistic magic numbers) for tests/benches."""
 
@@ -139,7 +127,7 @@ def synthesize_media(spark, n: int, seed: int = 42) -> DataFrame:
         for pdf in batches:
             rows = []
             for i in pdf["id"]:
-                kind, payload, width = synth_media_spec(int(i), seed)
+                kind, payload, width = synth_media_spec(int(i))
                 rows.append((int(i), kind, None, payload, {"w": width}))
             yield pd.DataFrame(
                 rows, columns=["media_id", "kind", "mime", "payload", "meta"]

@@ -13,24 +13,26 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+SEED = 42
 
-def hash_uniform(key: Column, seed: int = 42) -> Column:
+
+def hash_uniform(key: Column) -> Column:
     """Deterministic uniform in [0,1) from a key column: first 13 hex chars
-    of md5(seed:key) → 52-bit fraction (fits a double exactly)."""
-    h = F.md5(F.concat(F.lit(f"{seed}:"), key.cast("string")))
+    of md5(SEED:key) → 52-bit fraction (fits a double exactly)."""
+    h = F.md5(F.concat(F.lit(f"{SEED}:"), key.cast("string")))
     return F.conv(F.substring(h, 1, 13), 16, 10).cast("double") / F.lit(
         float(1 << 52)
     )
 
 
-def reservoir_k(df: DataFrame, k: int, key_col: str, seed: int = 42) -> DataFrame:
+def reservoir_k(df: DataFrame, k: int, key_col: str) -> DataFrame:
     """Exact-k uniform sample: smallest k hash-uniforms.
 
     Physically a TakeOrderedAndProject: each partition keeps its local
     top-k, only k rows per partition reach the driver-side merge — the
     distributed equivalent of Algorithm R's single pass.
     """
-    u = hash_uniform(F.col(key_col), seed).alias("__u")
+    u = hash_uniform(F.col(key_col)).alias("__u")
     return (
         df.select("*", u)
         .orderBy(F.col("__u").asc(), F.col(key_col).asc())
@@ -39,13 +41,11 @@ def reservoir_k(df: DataFrame, k: int, key_col: str, seed: int = 42) -> DataFram
     )
 
 
-def weighted_reservoir_k(
-    df: DataFrame, k: int, key_col: str, weight_col: str, seed: int = 42
-) -> DataFrame:
+def weighted_reservoir_k(df: DataFrame, k: int, key_col: str, weight_col: str) -> DataFrame:
     """A-Res weighted reservoir (the reference's binary-heap sampler,
     `parallel/ReservoirSamplerWithBinaryHeap.java:27`): key = u^(1/w),
     top-k by key."""
-    u = hash_uniform(F.col(key_col), seed)
+    u = hash_uniform(F.col(key_col))
     score = F.pow(u, 1.0 / F.col(weight_col))
     return (
         df.select("*", score.alias("__s"))
@@ -60,12 +60,10 @@ def stratified_reservoir_k(
     k: int,
     strata_col: str,
     key_col: str,
-    seed: int = 42,
-    oversample: float = 4.0,
 ) -> DataFrame:
     """Exact-k uniform sample WITHIN each stratum (language-balanced /
     source-balanced curation draws): rank rows per stratum by
-    ``(md5(seed:key), key)`` and keep the first k — deterministic,
+    ``(md5(SEED:key), key)`` and keep the first k — deterministic,
     partitioning-invariant, engine-reproducible (same device as
     :func:`reservoir_k`).
 
@@ -75,26 +73,26 @@ def stratified_reservoir_k(
 
     1. count each stratum — tiny agg, map-side combined;
     2. broadcast the counts back and prefilter to
-       ``u < least(1, oversample*k/n_s)`` — survivors are
-       ~``oversample*k`` rows per stratum regardless of corpus size
-       (strata at or below ``oversample*k`` rows skip the filter
+       ``u < least(1, 4k/n_s)`` — survivors are
+       ~``4k`` rows per stratum regardless of corpus size
+       (strata at or below ``4k`` rows skip the filter
        entirely via the ``least``);
     3. exact rank among the survivors — the window now runs on a
        bounded, broadcast-sized set.
 
     The prefilter can only change the result if a stratum's k-th
-    smallest uniform exceeds ``oversample*k/n_s`` — a
-    ``P[Binomial(n, ok/n) < k]`` tail event (~e^{-k} at oversample 4);
+    smallest uniform exceeds ``4k/n_s`` — a
+    ``P[Binomial(n, 4k/n) < k]`` tail event (~e^{-k});
     the oracle-parity gate recomputes the exact rank independently, so
     any such drop fails the hash compare rather than passing silently.
     """
-    h = F.md5(F.concat(F.lit(f"{seed}:"), F.col(key_col).cast("string")))
+    h = F.md5(F.concat(F.lit(f"{SEED}:"), F.col(key_col).cast("string")))
     u = F.conv(F.substring(h, 1, 13), 16, 10).cast("double") / F.lit(float(1 << 52))
     base = df.select(
         F.col(strata_col).alias("_st"), F.col(key_col), h.alias("_h"), u.alias("_u")
     )
     counts = base.groupBy("_st").agg(F.count(F.lit(1)).alias("_n"))
-    thr = F.least(F.lit(1.0), F.lit(oversample * k) / F.col("_n"))
+    thr = F.least(F.lit(1.0), F.lit(4.0 * k) / F.col("_n"))
     survivors = base.join(F.broadcast(counts), "_st").filter(F.col("_u") < thr)
     from pyspark.sql.window import Window
 

@@ -27,6 +27,9 @@ from pyspark.sql.window import Window
 
 from ..functions.literals import lit_map
 
+# Lucene FuzzyQuery maxEdits: a fuzzy hit is within this edit distance
+MAX_EDITS = 1
+
 
 def _synonym_to_standard(synonyms: dict[str, list[str]]) -> dict[str, str]:
     """Invert standard→synonyms to synonym→standard (all lower-cased);
@@ -51,18 +54,16 @@ def standardize_fuzzy(
     df: DataFrame,
     column: str,
     synonyms: dict[str, list[str]],
-    max_edits: int = 1,
-    out_col: str | None = None,
 ) -> DataFrame:
-    """Exact map hit first; else nearest dictionary key within `max_edits`
-    (Lucene fuzzy query analog, deterministic tiebreak: smallest distance,
-    then shortest key, then lexicographic).
+    """`column` standardized as `<column>_std`: exact map hit first; else
+    nearest dictionary key within `MAX_EDITS` (Lucene fuzzy query analog,
+    deterministic tiebreak: smallest distance, then shortest key, then
+    lexicographic).
 
     Plan shape: distinct values (small) ⨝ broadcast dict keys → best match →
     broadcast the (value→standard) result back onto the corpus.  The corpus
     itself never shuffles.
     """
-    out_col = out_col or f"{column}_std"
     lookup = _synonym_to_standard(synonyms)
     spark = df.sparkSession
     dict_df = spark.createDataFrame(
@@ -72,7 +73,7 @@ def standardize_fuzzy(
     cand = (
         values.crossJoin(F.broadcast(dict_df))
         .withColumn("dist", F.levenshtein(F.col("val"), F.col("syn")))
-        .filter(F.col("dist") <= max_edits)
+        .filter(F.col("dist") <= MAX_EDITS)
     )
     w = Window.partitionBy("val").orderBy(
         F.asc("dist"), F.asc(F.length("syn")), F.asc("syn")
@@ -85,7 +86,7 @@ def standardize_fuzzy(
     joined = df.join(
         F.broadcast(best), F.lower(F.col(column)) == F.col("val"), "left"
     ).drop("val")
-    return joined.withColumn(out_col, F.coalesce(F.col("__std"), F.col(column))).drop("__std")
+    return joined.withColumn(f"{column}_std", F.coalesce(F.col("__std"), F.col(column))).drop("__std")
 
 
 # --- Lucene search-mode parity (SynonymIndexSearcher modes) -----------------
@@ -95,7 +96,7 @@ def standardize_fuzzy(
 # MATCH_ANY / MATCH_ALL (SHOULD / MUST token clauses over word+synonym
 # token fields), MATCH_PARTIAL (sloppy PhraseQuery, slop=1),
 # MATCH_EXACT (whole-string term on wordterm/synterm), and the _FUZZY
-# variants (per-token FuzzyQuery, maxEdits).  Re-expressed here over the
+# variants (per-token FuzzyQuery, maxEdits = MAX_EDITS).  Re-expressed here over the
 # broadcast dictionary with a deterministic score (query-token coverage;
 # Lucene's BM25 rank is index-statistics-dependent and intentionally NOT
 # replicated — hit SETS mirror SynonymIndexSearcherTest, ordering is
@@ -124,11 +125,11 @@ def _lev_within(a: str, b: str, k: int) -> bool:
     return prev[-1] <= k
 
 
-def _tok_hit(qt: str, field_tokens: list[str], fuzzy: bool, max_edits: int) -> bool:
+def _tok_hit(qt: str, field_tokens: list[str], fuzzy: bool) -> bool:
     if qt in field_tokens:
         return True
     if fuzzy:
-        return any(_lev_within(qt, ft, max_edits) for ft in field_tokens)
+        return any(_lev_within(qt, ft, MAX_EDITS) for ft in field_tokens)
     return False
 
 
@@ -171,13 +172,7 @@ def compile_synonym_entries(entries) -> list[tuple[str, list[str], list[tuple[st
     return out
 
 
-def synonym_match_ids(
-    value: str | None,
-    compiled,
-    mode: str = "MATCH_ANY",
-    max_edits: int = 1,
-    slop: int = 1,
-) -> list[int]:
+def synonym_match_ids(value: str | None, compiled, mode: str = "MATCH_ANY") -> list[int]:
     """Doc ids matching `value` under `mode`, ordered by (coverage desc,
     doc id asc).  Pure Python on the broadcast dictionary — unit-testable
     against SynonymIndexSearcherTest's expected hit sets."""
@@ -197,17 +192,17 @@ def synonym_match_ids(
                 score = 1.0
         elif mode == "MATCH_PARTIAL":
             if any(q == f for f, _ft in fields) or any(
-                _phrase_within_slop(q_tokens, ft, slop) for _f, ft in fields
+                _phrase_within_slop(q_tokens, ft, 1) for _f, ft in fields
             ):
                 score = 1.0
         elif mode in ("MATCH_ANY", "MATCH_ANY_FUZZY"):
             for _f, ft in fields:
-                n = sum(1 for qt in q_tokens if _tok_hit(qt, ft, fuzzy, max_edits))
+                n = sum(1 for qt in q_tokens if _tok_hit(qt, ft, fuzzy))
                 if q_tokens:
                     score = max(score, n / len(q_tokens))
         elif mode in ("MATCH_ALL", "MATCH_ALL_FUZZY"):
             for _f, ft in fields:
-                if all(_tok_hit(qt, ft, fuzzy, max_edits) for qt in q_tokens):
+                if all(_tok_hit(qt, ft, fuzzy) for qt in q_tokens):
                     score = 1.0
         else:
             raise ValueError(f"unknown search mode: {mode}")
@@ -222,12 +217,9 @@ def synonym_search(
     col: str,
     entries,
     mode: str = "MATCH_ANY",
-    max_edits: int = 1,
-    slop: int = 1,
-    out_col: str = "match_ids",
 ) -> DataFrame:
     """Distributed search: every row's value → ordered matching doc-id
-    array.  The compiled dictionary rides the UDF closure (broadcast with
+    array `match_ids`.  The compiled dictionary rides the UDF closure (broadcast with
     the task binary — it is index-on-one-node small by the reference's own
     design); per-batch Arrow transfer, no shuffle, corpus never moves."""
     from pyspark.sql.types import ArrayType, IntegerType
@@ -237,17 +229,15 @@ def synonym_search(
     @F.pandas_udf(ArrayType(IntegerType()))
     def _search(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for vals in batches:
-            yield vals.map(
-                lambda v: synonym_match_ids(v, compiled, mode, max_edits, slop)
-            )
+            yield vals.map(lambda v: synonym_match_ids(v, compiled, mode))
 
-    return df.withColumn(out_col, _search(F.col(col)))
+    return df.withColumn("match_ids", _search(F.col(col)))
 
 
 # --- masking (TextPatternUtil.replaceCharacter analog) ----------------------
 
 
-def mask_same_class(col: Column, seed: int = 42) -> Column:
+def mask_same_class(col: Column) -> Column:
     """Masking: replace each char by a same-class substitute chosen by a
     seeded per-value hash (`common/pattern/TextPatternUtil.java:73-80` uses
     a Random; ours is hash-deterministic so masking is stable per value —
@@ -264,7 +254,7 @@ def mask_same_class(col: Column, seed: int = 42) -> Column:
     # digits: shift the whole string's digits by a per-value offset
     # (first 8 md5 hex chars as an integer, mod 10 — engine-agnostic)
     offset = (
-        F.conv(F.substring(F.md5(F.concat(F.lit(str(seed)), col)), 1, 8), 16, 10)
+        F.conv(F.substring(F.md5(F.concat(F.lit("42"), col)), 1, 8), 16, 10)
         .cast("long")
         % 10
     )

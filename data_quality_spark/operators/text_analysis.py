@@ -42,11 +42,9 @@ def quality_score() -> Column:
     return F.when(nchars.isNull(), None).otherwise(score)
 
 
-def char_shingle_fingerprint(
-    col: Column, shingle_len: int = 16, stride: int = 8, keep: int = 8
-) -> Column:
-    """Document fingerprint: the `keep` smallest md5 hashes of strided
-    character shingles (winnowing-style rolling-hash selection, expressed
+def char_shingle_fingerprint(col: Column) -> Column:
+    """Document fingerprint: the 8 smallest md5 hashes of 16-character
+    shingles at a stride of 8 (winnowing-style rolling-hash selection, expressed
     natively: substr windows → md5 → array_sort → slice).
 
     Two documents sharing most content share most minima — fingerprint
@@ -55,47 +53,42 @@ def char_shingle_fingerprint(
     """
     n = F.length(col)
     positions = F.sequence(
-        F.lit(1), F.greatest(n - (shingle_len - 1), F.lit(1)), F.lit(stride)
+        F.lit(1), F.greatest(n - 15, F.lit(1)), F.lit(8)
     )
-    hashes = F.transform(
-        positions, lambda p: F.md5(F.substring(col, p, shingle_len))
-    )
-    return F.slice(F.array_sort(F.array_distinct(hashes)), 1, keep)
+    hashes = F.transform(positions, lambda p: F.md5(F.substring(col, p, 16)))
+    return F.slice(F.array_sort(F.array_distinct(hashes)), 1, 8)
 
 
 def benchmark_contamination(
     df: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
 ) -> DataFrame:
     """Per-document benchmark-contamination check (the decontamination
-    stage of a training-data pipeline): fraction of each document's
-    distinct word n-grams that also occur in a benchmark/eval corpus.
+    stage of a training-data pipeline): fraction of each (doc_id, text)
+    document's distinct word 3-grams that also occur in a benchmark/eval corpus.
     Documents with high overlap leak evaluation data into training and
     must be dropped.  No reference analog (the reference validates field
     values, not corpus overlap) — this is one of the pipeline extensions.
 
     `benchmark` is a one-column DataFrame of benchmark texts (column
-    `text_col`); its distinct shingle set is broadcast — eval suites are
+    `text`); its distinct shingle set is broadcast — eval suites are
     KBs-to-MBs against a 100 TB corpus, so the corpus side never shuffles
     for the membership test.  The only shuffle is the per-doc hit
     re-aggregation of (id) pairs after the explode.
 
-    Output: (id, n_shingles, n_hits, contamination) with
+    Output: (doc_id, n_shingles, n_hits, contamination) with
     contamination = n_hits / n_shingles (0.0 for docs with no shingles).
     """
     from .dedup import word_shingles
 
     bench_sh = (
         benchmark.select(
-            F.explode(word_shingles(text_col, n)).alias("_sh")
+            F.explode(word_shingles("text")).alias("_sh")
         ).distinct()
     )
     doc_sh = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode_outer(word_shingles(text_col, n)).alias("_sh"),
+        F.col("doc_id").alias("_id"),
+        F.explode_outer(word_shingles("text")).alias("_sh"),
     )
     hits = (
         doc_sh.join(F.broadcast(bench_sh), "_sh", "left_semi")
@@ -103,11 +96,11 @@ def benchmark_contamination(
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
     )
     totals = df.select(
-        F.col(id_col).alias("_id"),
-        F.size(word_shingles(text_col, n)).cast("bigint").alias("n_shingles"),
+        F.col("doc_id").alias("_id"),
+        F.size(word_shingles("text")).cast("bigint").alias("n_shingles"),
     )
     return totals.join(hits, "_id", "left").select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.greatest(F.col("n_shingles"), F.lit(0).cast("bigint")).alias("n_shingles"),
         F.coalesce(F.col("n_hits"), F.lit(0).cast("bigint")).alias("n_hits"),
         F.when(

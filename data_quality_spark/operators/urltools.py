@@ -190,13 +190,9 @@ def host_of(url: Column) -> Column:
     return F.regexp_replace(auth, r"^www\.", "")
 
 
-def domain_quality_profile(
-    df: DataFrame,
-    url_col: str = "url",
-    keep_col: str = "keep",
-    score_col: str = "quality",
-) -> DataFrame:
-    """Per-registered-domain quality rollup: page count, kept count,
+def domain_quality_profile(df: DataFrame) -> DataFrame:
+    """Per-registered-domain quality rollup of (url, keep, quality) pages:
+    page count, kept count,
     keep rate, and the quality-score min/max.  The operational view a
     crawl pipeline uses to blocklist or downsample spammy domains.
 
@@ -218,9 +214,9 @@ def domain_quality_profile(
     # WholeStageCodegen span, so this costs nothing at runtime
     agg = (
         df.select(
-            host_of(F.col(url_col)).alias("_host"),
-            F.col(keep_col).alias("_k"),
-            F.col(score_col).alias("_s"),
+            host_of(F.col("url")).alias("_host"),
+            F.col("keep").alias("_k"),
+            F.col("quality").alias("_s"),
         )
         .select(
             registered_domain(F.col("_host")).alias("domain"), "_k", "_s"
@@ -273,19 +269,17 @@ def outlink_domain_edges(
     )
 
 
-def url_duplicate_groups(
-    df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
-    """Group pages by canonical URL: one row per canonical key with the
+def url_duplicate_groups(df: DataFrame) -> DataFrame:
+    """Group (doc_id, url) pages by canonical URL: one row per canonical key with the
     group size, the number of distinct raw spellings, and the kept
     (minimum-id, i.e. earliest-capture) page id.
 
     Shuffle carries `(canonical_url, id, raw_url)` triples only —
     payloads stay put; counts partial-aggregate map-side.  Keep-first
     uses `min(id)` (deterministic, no ordering shuffle)."""
-    c = canonical_url(F.col(url_col)).alias("canonical_url")
+    c = canonical_url(F.col("url")).alias("canonical_url")
     return (
-        df.select(c, F.col(id_col).alias("_id"), F.col(url_col).alias("_raw"))
+        df.select(c, F.col("doc_id").alias("_id"), F.col("url").alias("_raw"))
         .where(F.col("canonical_url").isNotNull())
         .groupBy("canonical_url")
         .agg(

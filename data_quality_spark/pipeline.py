@@ -70,9 +70,7 @@ def run(
     jars are absent (this sandbox) the CLI degrades gracefully: a clear
     warning, then the parquet-path semantics, so the same command line
     works in both environments.  Bucketed (checkpointed) runs keep the
-    file-based commit protocol in both modes — on a catalog-backed prod
-    deployment each bucket commit maps onto an append snapshot (see
-    sources/iceberg.py docstring).
+    file-based commit protocol in both modes.
     """
     from .sources.iceberg import (
         ICEBERG_RUNTIME_PACKAGE,

@@ -37,13 +37,16 @@ from .functions.literals import lit_array
 from .operators import profiling as prof
 from .operators.text_analysis import BPE_TOKEN_PATTERN
 from .rules import (
+    CJK_GATE_RATIO,
     MAX_DUP_2GRAM_FRACTION,
     MAX_MEAN_WORD_LEN,
     MAX_SYMBOL_RATIO,
+    MAX_WORDS,
     MIN_DISTINCT_WORD_RATIO,
     MIN_MEAN_WORD_LEN,
     MIN_STOPWORD_COUNT,
     MIN_WORDS,
+    RULE_SQL,
 )
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -154,27 +157,42 @@ _SQL_G_CTE = """g AS (
       FROM w
     )"""
 
-# The SQL-expressible subset of the rule registry (rules.py thresholds), one
-# fragment per rule and engine: Spark SQL over the `ts.FEATURE_COLS`
-# columns, DuckDB over `text` and the `w`/`g` CTE lists.
-_RULE_SQL = {
-    "word_count": f"_nw >= {MIN_WORDS}",
-    "mean_word_length": f"_nw > 0 AND _sum_wlen / _nw >= {MIN_MEAN_WORD_LEN}D"
-    f" AND _sum_wlen / _nw <= {MAX_MEAN_WORD_LEN}D",
-    "symbol_ratio": f"_nchars = 0 OR _n_sym / _nchars <= {MAX_SYMBOL_RATIO}D",
-    "stopwords": f"_n_stop >= {MIN_STOPWORD_COUNT}",
-    "dup_2gram": f"_n_g2 = 0 OR 1.0D - _n_g2_distinct / _n_g2 <= {MAX_DUP_2GRAM_FRACTION}D",
-    "distinct_words": f"_nw > 0 AND _n_distinct / _nw >= {MIN_DISTINCT_WORD_RATIO}D",
-}
+# DuckDB twins of the SQL-expressible rules (`rules.RULE_SQL`, guarded the
+# same way) over `text` and the `w`/`g` CTE lists; the contract rule queries
+# run the Spark side by these names.  CJK-dominant text passes the word rules.
+_SQL_CJK_CLASS = r"[\x{3040}-\x{30FF}\x{4E00}-\x{9FFF}\x{AC00}-\x{D7AF}]"
+_SQL_CJK = (
+    f"(length(text) > 0 AND (length(text) - length(regexp_replace(text, '{_SQL_CJK_CLASS}', '', 'g')))"
+    f" / length(text) > {CJK_GATE_RATIO})"
+)
 _SQL_MEAN_WLEN = "list_sum(list_transform(ws, x -> length(x))) / len(ws)"
+
+
+def _sql_words_rule(pred: str) -> str:
+    return f"CASE WHEN {_SQL_CJK} THEN true ELSE {pred} END"
+
+
 _RULE_ORACLE_SQL = {
-    "word_count": f"len(ws) >= {MIN_WORDS}",
-    "mean_word_length": f"len(ws) > 0 AND {_SQL_MEAN_WLEN} >= {MIN_MEAN_WORD_LEN}"
-    f" AND {_SQL_MEAN_WLEN} <= {MAX_MEAN_WORD_LEN}",
-    "symbol_ratio": f"length(text) = 0 OR {_SQL_N_SYM} / length(text) <= {MAX_SYMBOL_RATIO}",
-    "stopwords": f"len(list_filter(lws, x -> list_contains({_SQL_STOPLIST}, x))) >= {MIN_STOPWORD_COUNT}",
-    "dup_2gram": f"len(g2) = 0 OR 1.0 - len(list_distinct(g2)) / len(g2) <= {MAX_DUP_2GRAM_FRACTION}",
-    "distinct_words": f"len(ws) > 0 AND len(list_distinct(lws)) / len(ws) >= {MIN_DISTINCT_WORD_RATIO}",
+    name: f"(text IS NOT NULL AND coalesce({pred}, false))"
+    for name, pred in {
+        "word_count": _sql_words_rule(f"len(ws) >= {MIN_WORDS} AND len(ws) <= {MAX_WORDS}"),
+        "mean_word_length": _sql_words_rule(
+            f"len(ws) > 0 AND {_SQL_MEAN_WLEN} >= {MIN_MEAN_WORD_LEN}"
+            f" AND {_SQL_MEAN_WLEN} <= {MAX_MEAN_WORD_LEN}"
+        ),
+        "symbol_ratio": f"CASE WHEN length(text) > 0 THEN {_SQL_N_SYM} / length(text) <= {MAX_SYMBOL_RATIO}"
+        " ELSE true END",
+        "stopwords": _sql_words_rule(
+            f"len(list_filter(lws, x -> list_contains({_SQL_STOPLIST}, x))) >= {MIN_STOPWORD_COUNT}"
+        ),
+        "dup_2gram": _sql_words_rule(
+            f"CASE WHEN len(g2) > 0 THEN 1.0 - len(list_distinct(g2)) / len(g2) <= {MAX_DUP_2GRAM_FRACTION}"
+            " ELSE true END"
+        ),
+        "distinct_words": _sql_words_rule(
+            f"len(ws) > 0 AND len(list_distinct(lws)) / len(ws) >= {MIN_DISTINCT_WORD_RATIO}"
+        ),
+    }.items()
 }
 _HIT_RULES = ("word_count", "stopwords", "distinct_words")
 
@@ -223,11 +241,11 @@ def doc_textstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def doc_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL-expressible subset of the rule registry over `documents`
-    (the full registry incl. CJK gating runs in the pipeline query)."""
+    """SQL-expressible subset of the rule registry over `documents` (the
+    full registry runs in the pipeline query)."""
     docs = _read_wide(spark, sf_dir, "documents")
     feat = ts.with_text_features(docs)
-    return feat.selectExpr("doc_id", *(f"({e}) AS rule_{r}" for r, e in _RULE_SQL.items()))
+    return feat.selectExpr("doc_id", *(f"{RULE_SQL[r]} AS rule_{r}" for r in _RULE_ORACLE_SQL))
 
 
 @_register(
@@ -246,7 +264,7 @@ def doc_rule_hit_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat = ts.with_text_features(docs)
     return feat.selectExpr(
         "count(1) AS n_docs",
-        *(f"sum(CASE WHEN {_RULE_SQL[r]} THEN 1 ELSE 0 END) AS {r}_pass" for r in _HIT_RULES),
+        *(f"sum(CASE WHEN {RULE_SQL[r]} THEN 1 ELSE 0 END) AS {r}_pass" for r in _HIT_RULES),
     )
 
 
@@ -781,7 +799,7 @@ _SQL_CHAIN_EMAIL = """CASE CAST(c_custkey % 5 AS INTEGER)
           WHEN NOT regexp_matches(email, '{ep.EMAIL_PATTERN}') THEN 'INVALID'
           WHEN lower(split_part(email, '@', 2)) = 'spam.biz' THEN 'INVALID'
           WHEN lower(split_part(split_part(email, '@', 2), '.', -1)) NOT IN ('com', 'org') THEN 'INVALID'
-          WHEN NOT regexp_matches(split_part(email, '@', 1), '^[a-zA-Z][a-zA-Z0-9._]*$') THEN 'INVALID'
+          WHEN NOT regexp_matches(split_part(email, '@', 1), '{ep.LOCAL_PART_PATTERN}') THEN 'INVALID'
           WHEN email <> lower(email) THEN 'CORRECTED'
           ELSE 'VALID' END AS verdict
       FROM e
@@ -799,7 +817,6 @@ def email_chain_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_SQL_CHAIN_EMAIL),
         domain_blacklist=("spam.biz",),
         tld_whitelist=("com", "org"),
-        local_part_regex=r"^[a-zA-Z][a-zA-Z0-9._]*$",
     )
     return (
         cust.select(verdict.alias("verdict"))
@@ -954,7 +971,7 @@ def minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import minhash_signature_df
 
     docs = _read_wide(spark, sf_dir, "documents")
-    sigs = minhash_signature_df(docs, "text", "doc_id", 3, 4, portable=True)
+    sigs = minhash_signature_df(docs, "text", "doc_id", 4, portable=True)
     return sigs.select(
         F.col("id").alias("doc_id"), *[F.col("sig")[i].alias(f"mh{i}") for i in range(4)]
     )
@@ -981,7 +998,7 @@ def jaccard_adjacent_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import jaccard_similarity, word_shingles
 
     docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    s = docs.select(F.col("doc_id"), word_shingles("text", 3).alias("sh"))
+    s = docs.select(F.col("doc_id"), word_shingles("text").alias("sh"))
     a = s.alias("a")
     b = s.alias("b")
     return (
@@ -1055,8 +1072,8 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus, where the scan is the expensive part, the operator's
     # persist-on default is the right one.
     return minhash_near_duplicates(
-        docs, "text", "doc_id", threshold=0.5, num_hashes=8, num_bands=4,
-        portable=True, persist_signatures=False,
+        docs, "text", "doc_id", threshold=0.5, num_hashes=8, portable=True,
+        persist_signatures=False,
     )
 
 
@@ -1081,7 +1098,7 @@ _SIMHASH_ORACLE = f"""
       SELECT doc_id, v, band, (v >> (band * 16)) & 65535 AS bkey
       FROM (SELECT doc_id, v, unnest([0, 1, 2, 3]) AS band FROM fp)
     ), keyed AS (
-      -- mirror the engine's max_bucket=5000 band-bucket cap exactly
+      -- mirror the engine's 5000-doc band-bucket cap exactly
       SELECT * FROM keyed0 k
       WHERE NOT EXISTS (
         SELECT 1 FROM keyed0 g
@@ -1107,15 +1124,13 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     with 4 bands → recall exactly 1.0 by pigeonhole (round-1 judge
     finding: the old radius-16 query only found wide pairs
     probabilistically) AND scale-sane: 16-bit band keys keep buckets
-    sparse on large corpora, where 8-bit bands (radius-7 mode) pack
-    ≥ n/256 docs per bucket and go quadratic — that mode stays available
-    for bounded inputs and is recall-tested at radius 7 in the unit suite.
-    Both sides split words on runs of Java `\\s` (`[ \\t\\n\\x0B\\f\\r]`),
-    the engine's word split."""
+    sparse on large corpora, where 8-bit bands would pack ≥ n/256 docs
+    per bucket and go quadratic.  Both sides split words on runs of Java
+    `\\s` (`[ \\t\\n\\x0B\\f\\r]`), the engine's word split."""
     from .operators.dedup import simhash_candidates
 
     docs = _read_wide(spark, sf_dir, "documents")
-    out = simhash_candidates(docs, "text", "doc_id", max_hamming=3)
+    out = simhash_candidates(docs, "text", "doc_id")
     return out.select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
 
 
@@ -1177,7 +1192,7 @@ def ann_bruteforce_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
-    out = brute_force_topk(emb, queries, 3, "vec_id", "embedding", "query_id")
+    out = brute_force_topk(emb, queries, 3)
     return out.select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
 
 
@@ -1187,7 +1202,7 @@ def _lsh_planes_cte() -> str:
     per-vector dot/key machinery shared by the two sign-LSH oracles."""
     from .operators.ann import _planes
 
-    planes = _planes(64, 6, 42)
+    planes = _planes()
     rows = ", ".join(
         "({}, [{}])".format(p, ", ".join(str(float(x)) for x in row))
         for p, row in enumerate(planes)
@@ -1256,7 +1271,7 @@ def ann_lsh_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
-    out = lsh_topk(emb, queries, 3, num_planes=6, probes=3)
+    out = lsh_topk(emb, queries, 3)
     return out.select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
 
 
@@ -1286,7 +1301,7 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ann import embedding_dedup_candidates
 
     emb = _read_wide(spark, sf_dir, "embeddings")
-    return embedding_dedup_candidates(emb, num_planes=6, min_cosine=0.35)
+    return embedding_dedup_candidates(emb)
 
 
 # ---------------------------------------------------------------------------
@@ -1549,7 +1564,6 @@ def mfb_clusters_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"col": "p_name", "matcher": "jaro_winkler", "weight": 1.0, "merge": "most_common"},
             {"col": "p_retailprice", "matcher": "exact", "weight": 0.0, "merge": "largest"},
         ],
-        threshold=0.9,
     )
     return out.select("block", "group_id", "group_size", "member_ids",
                       "p_name_survivor", "p_retailprice_survivor")
@@ -2428,8 +2442,8 @@ def _media_oracle_sql() -> str:
 @_register("media_features", _media_oracle_sql())
 def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: synthesized media table → mapInPandas feature
-    extraction (deterministic sha256-derived fake decode kernel — real
-    codecs absent in this sandbox, stubbed at `multimodal.py:decode_image`).
+    extraction (deterministic sha256-derived stand-in for the decode
+    kernel, `multimodal._fake_feature`).
     HASH-VERIFIED: the oracle replays the payload spec in pure Python and
     derives every scalar with hashlib, independently of the Spark path.
     The float64 feature vector is u32/2^32 per lane — exact — so its
@@ -2719,8 +2733,8 @@ def synonym_search_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("MATCH_PARTIAL", "partial_ids"),
         ("MATCH_ANY_FUZZY", "any_fuzzy_ids"),
     ]:
-        out = synonym_search(out, "q", _SYN_SEARCH_DOCS, mode=mode, out_col="_m")
-        out = out.withColumn(col_name, F.array_join(F.col("_m"), ",")).drop("_m")
+        out = synonym_search(out, "q", _SYN_SEARCH_DOCS, mode=mode)
+        out = out.withColumn(col_name, F.array_join(F.col("match_ids"), ",")).drop("match_ids")
     return out.select("idx", "cnt", "any_ids", "all_ids", "partial_ids", "any_fuzzy_ids")
 
 
@@ -2778,7 +2792,7 @@ def fuzzy_standardize_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = _read(spark, sf_dir, "customer").filter(F.col("c_custkey") < 600)
     named = cust.selectExpr("c_custkey", f"{_SQL_FUZZY_NAME} AS name")
-    out = standardize_fuzzy(named, "name", _FIRSTNAME_SYNONYMS, max_edits=1)
+    out = standardize_fuzzy(named, "name", _FIRSTNAME_SYNONYMS)
     return out.select("c_custkey", "name", F.col("name_std"))
 
 
@@ -2922,7 +2936,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.sessionize import sessionize_batch
 
     ev = _read(spark, sf_dir, "events").select("user_id", "ts", "value")
-    return sessionize_batch(ev, gap_seconds=1800).select(
+    return sessionize_batch(ev).select(
         "user_id", "session_start", "session_end", "n_events"
     )
 
@@ -2933,9 +2947,9 @@ def _ann_ivf_oracle_sql() -> str | None:
 
 @_register("ann_ivf_top3", _ann_ivf_oracle_sql())
 def ann_ivf_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF coarse-quantizer top-3 (bounded driver k-means, nprobe inverted
-    lists).  Verified against a PINNED regression oracle: the quantizer is
-    deterministic given the fixture (content-hash-sorted sample feeds
+    """IVF coarse-quantizer top-3 (bounded driver k-means, 3 probed
+    inverted lists).  Verified against a PINNED regression oracle: the
+    quantizer is deterministic given the fixture (content-hash-sorted sample feeds
     k-means; checked parallelism-invariant local[4]≡local[32]), so the
     expected sf0.01 rows are embedded — see pinned_oracles.py.  Recall/
     exactness ground truth: ann_bruteforce_top3 + tests."""
@@ -2945,7 +2959,7 @@ def ann_ivf_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
-    out = ivf_topk(emb, queries, 3, n_centroids=8, nprobe=3)
+    out = ivf_topk(emb, queries, 3)
     return out.select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
 
 
@@ -3150,7 +3164,7 @@ def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents")
     pages = docs.select("doc_id", F.expr(_SQL_SYNTH_URL).alias("url"))
-    groups = url_duplicate_groups(pages, "url", "doc_id")
+    groups = url_duplicate_groups(pages)
     host = F.regexp_extract(
         F.col("canonical_url"), r"^[a-z][a-z0-9+.-]*://([^/?#]*)", 1
     )
@@ -3217,7 +3231,7 @@ def line_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents")
     pages = docs.selectExpr("doc_id", f"{_SQL_LINE_DEDUP_PAGE} AS text")
-    out = corpus_line_dedup(pages, "text", "doc_id", min_count=5)
+    out = corpus_line_dedup(pages)
     return out.select(
         "doc_id", "n_lines", "n_kept", F.md5("cleaned_text").alias("clean_md5")
     )
@@ -3365,7 +3379,7 @@ def contamination_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0).select("text")
-    out = benchmark_contamination(docs, bench, "text", "doc_id", n=3)
+    out = benchmark_contamination(docs, bench)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "n_shingles",
@@ -3524,10 +3538,10 @@ def domain_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read_wide(spark, sf_dir, "documents")
     pages = ts.with_text_features(docs).select(
         F.expr(_SQL_SYNTH_URL).alias("url"),
-        F.expr(" AND ".join(f"({e})" for e in _RULE_SQL.values())).alias("keep"),
+        F.expr(" AND ".join(RULE_SQL[r] for r in _RULE_ORACLE_SQL)).alias("keep"),
         quality_score().alias("quality"),
     )
-    return domain_quality_profile(pages, "url", "keep", "quality")
+    return domain_quality_profile(pages)
 
 
 # ---------------------------------------------------------------------------
@@ -3623,7 +3637,7 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sampling import stratified_reservoir_k
 
     docs = _read(spark, sf_dir, "documents")
-    out = stratified_reservoir_k(docs, 20, "lang", "doc_id", seed=42)
+    out = stratified_reservoir_k(docs, 20, "lang", "doc_id")
     return out.select("lang", F.col("doc_id").cast("bigint").alias("doc_id"), "rank_in_stratum")
 
 
@@ -3793,15 +3807,6 @@ def _sql_host_of(u: str) -> str:
     )
 
 
-def _sql_registered_domain(host: str) -> str:
-    """DuckDB twin of urltools.registered_domain over a host expression
-    (delegates to the generator that lives next to the Spark expression
-    so the two engines share one source of truth)."""
-    from .operators.urltools import registered_domain_sql
-
-    return registered_domain_sql(host)
-
-
 def _outlink_target_sql(t: str) -> str:
     """Outlink target URL keyed on the SQL expression `t` (scheme/`www.`/
     case/multi-suffix noise)."""
@@ -3829,17 +3834,17 @@ def _outlink_edges_ctes() -> str:
     """CTE chain `olp_pages, olp_links, olp_edges` producing the outlink
     edge list (src_domain, dst_domain, n_links) — shared by the
     outlink-graph and PageRank oracles."""
-    from .operators.urltools import HREF_RX
+    from .operators.urltools import HREF_RX, registered_domain_sql
 
     return f"""olp_pages AS (
       SELECT doc_id, {", ".join(_OUTLINK_PAGE_COLS)} FROM documents
     ), olp_links AS (
-      SELECT {_sql_registered_domain(_sql_host_of("url"))} AS src_domain,
+      SELECT {registered_domain_sql(_sql_host_of("url"))} AS src_domain,
         unnest(regexp_extract_all(html, '{HREF_RX}', 1)) AS href
       FROM olp_pages
     ), olp_edges AS (
       SELECT src_domain,
-        {_sql_registered_domain(_sql_host_of("href"))} AS dst_domain,
+        {registered_domain_sql(_sql_host_of("href"))} AS dst_domain,
         CAST(count(*) AS BIGINT) AS n_links
       FROM olp_links GROUP BY 1, 2
     )"""
@@ -3873,10 +3878,12 @@ def outlink_graph_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Fixed-point PageRank over the outlink graph (operators/pagerank.py)
 # ---------------------------------------------------------------------------
 
-def _pagerank_oracle_sql(iters: int = 3) -> str:
+def _pagerank_oracle_sql() -> str:
+    from .operators.pagerank import ROUNDS
+
     rounds = []
     prev = "pr0"
-    for r in range(1, iters + 1):
+    for r in range(1, ROUNDS + 1):
         rounds.append(f"""pr{r} AS (
       SELECT n.node,
         CAST(150000 + COALESCE(s.inc, 0) AS BIGINT) AS rank
@@ -3909,7 +3916,7 @@ def _pagerank_oracle_sql(iters: int = 3) -> str:
     """
 
 
-@_register("domain_pagerank", _pagerank_oracle_sql(3))
+@_register("domain_pagerank", _pagerank_oracle_sql())
 def domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three fixed-point PageRank rounds over the outlink domain graph:
     ranks are exact BIGINT micro-units with rational 17/20 damping
@@ -3923,7 +3930,7 @@ def domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = _read(spark, sf_dir, "documents").selectExpr(*_OUTLINK_PAGE_COLS)
     edges = outlink_domain_edges(pages, "html", "url")
-    ranks = pagerank_fixed(edges, iters=3)
+    ranks = pagerank_fixed(edges)
     return ranks.select(F.col("node").alias("domain"), F.col("rank").alias("rank_micro"))
 
 
@@ -4193,4 +4200,4 @@ def dedup_survivors_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.coalesce(F.col("text"), F.lit(""))).cast("bigint").alias("_qlen"),
     )
     labeled = labels.join(qlen, "doc_id")
-    return cluster_survivors(labeled, "_qlen", "doc_id", "cluster_id")
+    return cluster_survivors(labeled, "_qlen")

@@ -89,12 +89,15 @@ RULES: tuple[tuple[str, str], ...] = (
 
 RULE_NAMES: tuple[str, ...] = tuple(name for name, _ in RULES)
 
+# Each rule as the boolean a page gets: a NULL page fails every rule,
+# including those that pass empty text, and a NULL predicate fails.
+RULE_SQL: dict[str, str] = {name: f"(text IS NOT NULL AND coalesce({pred}, false))" for name, pred in RULES}
+
 
 def attach_rules(df_with_features: DataFrame) -> DataFrame:
-    """`rule_<name>` booleans from already-attached feature columns (cheap
-    scalar expressions — one projection, codegen'd); the feature columns
-    are dropped.  A NULL page fails every rule, including those that pass
-    empty text."""
-    return df_with_features.selectExpr(
-        "*", *(f"(text IS NOT NULL AND coalesce({pred}, false)) AS rule_{name}" for name, pred in RULES)
-    ).drop(*ts.FEATURE_COLS)
+    """`rule_<name>` booleans (`RULE_SQL`) from already-attached feature
+    columns (cheap scalar expressions — one projection, codegen'd); the
+    feature columns are dropped."""
+    return df_with_features.selectExpr("*", *(f"{RULE_SQL[n]} AS rule_{n}" for n in RULE_NAMES)).drop(
+        *ts.FEATURE_COLS
+    )

@@ -13,14 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_SALT_BUCKETS = 64
+SALT_BUCKETS = 64
 
 
-def salted_groupby_count(
-    df: DataFrame, key_col: str, salt_src_col: str, buckets: int = DEFAULT_SALT_BUCKETS
-) -> DataFrame:
+def salted_groupby_count(df: DataFrame, key_col: str, salt_src_col: str) -> DataFrame:
     """Two-phase aggregation for skewed keys: count per (key, salt) first
-    (spreads a hot key over `buckets` reducers), then sum per key.
+    (spreads a hot key over `SALT_BUCKETS` reducers), then sum per key.
 
     Result is identical to a plain groupBy().count() — the salting only
     changes the physical shuffle shape.  For counts Spark's own partial
@@ -29,7 +27,7 @@ def salted_groupby_count(
     distinct), and is the template for them.
     Output: (key_col, cnt).
     """
-    salt = F.pmod(F.xxhash64(F.col(salt_src_col)), F.lit(buckets))
+    salt = F.pmod(F.xxhash64(F.col(salt_src_col)), F.lit(SALT_BUCKETS))
     phase1 = (
         df.groupBy(F.col(key_col), salt.alias("_salt"))
         .agg(F.count(F.lit(1)).alias("_c"))

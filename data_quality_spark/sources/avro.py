@@ -523,12 +523,12 @@ def write_container(
     schema: dict,
     records: list,
     codec: str = "null",
-    sync: bytes = b"0123456789abcdef",
     records_per_block: int | None = None,
 ) -> None:
     """Minimal OCF writer (fixtures/tests).  `records_per_block` splits the
     records across multiple sync-delimited blocks — the layout the split
     reader exercises."""
+    sync = b"0123456789abcdef"
     # the header keeps the ORIGINAL schema JSON (references intact, valid
     # Avro); encoding uses a resolved deep copy so named refs round-trip
     schema_json = json.dumps(schema)

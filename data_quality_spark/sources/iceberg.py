@@ -22,10 +22,8 @@ and pass `--format iceberg --table dq.db.pages` to the pipeline CLI.
 
 Checkpoint mapping: the per-bucket commit protocol (checkpoint.py) is
 the file-based analog of snapshot-per-batch; with a catalog present the
-single-write path lands as one Iceberg snapshot via `writeTo(...)`, and
-a bucketed run maps naturally onto per-bucket `append()` snapshots (the
-bucket filter prunes to partitions when the table is bucket-partitioned
-on url-hash).  The protocol itself stays catalog-agnostic.
+single-write path lands as one Iceberg snapshot via `writeTo(...)`.  The
+protocol itself stays catalog-agnostic.
 """
 
 from __future__ import annotations
@@ -82,27 +80,18 @@ def write_output(
     dest: str,
     fmt: str = "parquet",
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """One write seam: partitioned parquet dir, or an Iceberg table write
-    (createOrReplace = one atomic snapshot; mode='append' = append
-    snapshot, the per-bucket commit mapping)."""
+    """One write seam: partitioned parquet dir (overwritten), or an Iceberg
+    table write (createOrReplace = one atomic snapshot)."""
     if fmt == "iceberg":
         writer = df.writeTo(dest).using("iceberg")
         if partition_by:
             from pyspark.sql import functions as F
 
             writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-        if mode == "append":
-            # append to an existing table (creates it on first write)
-            try:
-                writer.append()
-            except Exception:
-                writer.create()
-        else:
-            writer.createOrReplace()
+        writer.createOrReplace()
         return
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(dest)

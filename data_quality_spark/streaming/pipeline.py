@@ -8,8 +8,7 @@ batch rule/model/scrub stages are pure per-row projections, so they lift to
 streaming unchanged; only the metrics aggregation needs watermarked windows.
 
 Ops notes at scale: file-source streaming over an Iceberg/parquet landing
-zone with `maxFilesPerTrigger` gives bounded micro-batches; the same
-bucketed-commit pattern (checkpoint.py) is subsumed by the sink's own
+zone; the same bucketed-commit pattern (checkpoint.py) is subsumed by the sink's own
 checkpointLocation — exactly-once via the streaming commit log.
 """
 
@@ -24,13 +23,8 @@ from ..rules import RULE_NAMES
 from ..schema import PAGES_SCHEMA
 
 
-def read_pages_stream(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_dir)
+def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
 
 
 def streaming_quality(pages_stream: DataFrame) -> DataFrame:

@@ -3,7 +3,7 @@
 built-in windows can't express (SURVEY §2.11: the reference has no streaming
 runtime; its mergeable-accumulator design is what makes this possible).
 
-Each user's events fold into sessions that close after `gap` seconds of
+Each user's events fold into sessions that close after `GAP_SECONDS` of
 inactivity; timeouts emit sessions even when no further events arrive.
 State per key is O(1) (current session aggregates), the GroupState store
 handles spill/recovery, and the watermark bounds retained state.
@@ -26,6 +26,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+# a session closes after this many seconds without an event
+GAP_SECONDS = 1800
+
 SESSION_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -46,61 +49,57 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def _sessionize_fn(gap_seconds: int):
-    gap_us = gap_seconds * 1_000_000
+def _fold_sessions(key, pdfs, state: GroupState):
+    gap_us = GAP_SECONDS * 1_000_000
+    (user_id,) = key
+    out = []
 
-    def fn(key, pdfs, state: GroupState):
-        (user_id,) = key
-        out = []
-
-        def emit(s):
-            out.append(
-                (
-                    user_id,
-                    datetime.utcfromtimestamp(s[0] / 1e6),
-                    datetime.utcfromtimestamp(s[1] / 1e6),
-                    s[2],
-                    s[3],
-                )
+    def emit(s):
+        out.append(
+            (
+                user_id,
+                datetime.utcfromtimestamp(s[0] / 1e6),
+                datetime.utcfromtimestamp(s[1] / 1e6),
+                s[2],
+                s[3],
             )
-
-        if state.hasTimedOut:
-            if state.exists:
-                emit(tuple(state.get))
-                state.remove()
-        else:
-            cur = tuple(state.get) if state.exists else None
-            events = []
-            for pdf in pdfs:
-                for ts, val in zip(pdf["ts"], pdf["value"]):
-                    events.append((int(pd.Timestamp(ts).value // 1000), float(val)))
-            events.sort()
-            for ts_us, val in events:
-                if cur is None:
-                    cur = (ts_us, ts_us, 1, val)
-                elif ts_us - cur[1] > gap_us:
-                    emit(cur)
-                    cur = (ts_us, ts_us, 1, val)
-                else:
-                    cur = (cur[0], max(cur[1], ts_us), cur[2] + 1, cur[3] + val)
-            if cur is not None:
-                state.update(cur)
-                state.setTimeoutTimestamp(cur[1] // 1000 + gap_seconds * 1000)
-        yield pd.DataFrame(
-            out,
-            columns=["user_id", "session_start", "session_end", "n_events", "total_value"],
         )
 
-    return fn
+    if state.hasTimedOut:
+        if state.exists:
+            emit(tuple(state.get))
+            state.remove()
+    else:
+        cur = tuple(state.get) if state.exists else None
+        events = []
+        for pdf in pdfs:
+            for ts, val in zip(pdf["ts"], pdf["value"]):
+                events.append((int(pd.Timestamp(ts).value // 1000), float(val)))
+        events.sort()
+        for ts_us, val in events:
+            if cur is None:
+                cur = (ts_us, ts_us, 1, val)
+            elif ts_us - cur[1] > gap_us:
+                emit(cur)
+                cur = (ts_us, ts_us, 1, val)
+            else:
+                cur = (cur[0], max(cur[1], ts_us), cur[2] + 1, cur[3] + val)
+        if cur is not None:
+            state.update(cur)
+            state.setTimeoutTimestamp(cur[1] // 1000 + GAP_SECONDS * 1000)
+    yield pd.DataFrame(
+        out,
+        columns=["user_id", "session_start", "session_end", "n_events", "total_value"],
+    )
 
 
-def sessionize(events_stream: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+def sessionize(events_stream: DataFrame) -> DataFrame:
     """events(user_id, ts, value) stream → closed sessions stream."""
     return (
-        events_stream.withWatermark("ts", f"{gap_seconds * 2} seconds")
+        events_stream.withWatermark("ts", f"{GAP_SECONDS * 2} seconds")
         .groupBy("user_id")
         .applyInPandasWithState(
-            _sessionize_fn(gap_seconds),
+            _fold_sessions,
             outputStructType=SESSION_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
@@ -109,7 +108,7 @@ def sessionize(events_stream: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     )
 
 
-def sessionize_batch(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+def sessionize_batch(events: DataFrame) -> DataFrame:
     """Batch twin (for validation): classic gap-sessionization via window
     lag — session id = cumulative count of gap-breaks per user."""
     from pyspark.sql.window import Window
@@ -120,7 +119,7 @@ def sessionize_batch(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     epoch = F.col("ts").cast("timestamp").cast("long")
     marked = events.withColumn(
         "_new_session",
-        F.when(epoch - F.lag(epoch, 1, 0).over(w) > gap_seconds, 1).otherwise(0),
+        F.when(epoch - F.lag(epoch, 1, 0).over(w) > GAP_SECONDS, 1).otherwise(0),
     ).withColumn("_session_no", F.sum("_new_session").over(w))
     return (
         marked.groupBy("user_id", "_session_no")

@@ -1,5 +1,5 @@
 """Guards: every top-level definition in `data_quality_spark/` has a caller
-outside the tests, and every `bool` option is used both ways.
+outside the tests, and every option takes two values in production.
 
 A definition (function, class, or module-level name) counts as used when
 some non-test file reaches it by name (a `Name` load, an attribute, or a
@@ -9,13 +9,18 @@ and other strings are not references.  A query function registered with
 definitions that are kept without such a caller are listed in `EXEMPT`
 with the reason.
 
-A parameter with a `bool` default, in a function that non-test code calls,
-is an option: those calls must pass it at least two distinct values, or
-the branch for the other value is a second path that nothing selects.  Calls are
-matched by function name; an omitted argument counts as the default, and
-an argument that is not a literal (or a `*args`/`**kwargs` call) counts as
-using both values.  Options kept without such callers are listed in
-`OPTION_EXEMPT` with the reason."""
+A parameter with a literal default (`bool`, `int`, `float`, `str`, `bytes`,
+`None`, a negative number, or the capitalized name of a module-level
+constant), in a function that non-test code calls, is an option: those
+calls must pass it at least two distinct values, or it is a constant
+spelled as a parameter and the code for any other value is a path that
+nothing selects.  Calls are matched by function name; an omitted argument
+counts as the default, and an argument that is not a literal (or a
+`*args`/`**kwargs` call) counts as using two values.  Code strings run as
+`python -c` are invisible here, so production code calls the package from
+ordinary functions.  Options kept without such callers are listed in
+`OPTION_EXEMPT` with the reason; every entry in either exemption list
+must still exempt something."""
 
 import ast
 import fnmatch
@@ -37,19 +42,23 @@ EXEMPT = {
     "sources.readers.read_csv_inferred": "own VERDICT §2.10 row (CSV with schema inference)",
     "operators.htmltext.extract_text_str": "Python reference the JVM extraction cascade is compared against",
     "scrub.scrub_str": "Python reference the JVM scrub cascade is compared against",
-    "analyze.analyze_text": "perfbench reads the UDF's metrics by this name",
-    "functions.textstats.compute_features_py": "perfbench times this kernel",
-    "langid._get_model": "perfbench times this kernel",
-    "perplexity._get_lm": "perfbench times this kernel",
-    "perplexity._MAX_CHARS": "perfbench times this kernel",
-    "operators.matching.cluster_matches": "perfbench patches it to count connected-components jobs",
-    "operators.pagerank.pagerank_fixed": "perfbench patches it to count PageRank jobs",
 }
 
 
+# Each reason is one of: a safety test needs another value to reach a fault
+# or a bound; a test must build an input shape production has to handle; it
+# selects a reference feature with a VERDICT row; it is a deployment setting.
 OPTION_EXEMPT = {
-    "operators.multimodal.extract_media_features.use_real_decoder":
-        "library-gated swap-in for a real image decoder; ROADMAP leaves library-gated paths out of scope",
+    "checkpoint.run_with_checkpoint.fail_after_bucket":
+        "safety test: the kill/resume fault injection (tests/test_checkpoint.py)",
+    "operators.matching.cluster_matches.max_iter":
+        "safety test: the loud non-convergence raise (tests/test_matching.py)",
+    "sources.avro.write_container.records_per_block":
+        "input shape: multi-block container files for read_avro_split (tests/test_avro.py)",
+    "operators.matching.mfb_match_merge.timestamp_col":
+        "reference feature: the MFB most_recent/most_ancient merge rules (VERDICT §2.5 MFBRecordMerger)",
+    "operators.matching.mfb_match_merge.source_col":
+        "reference feature: the MFB most_trusted_source merge rule (VERDICT §2.5 MFBRecordMerger)",
 }
 
 
@@ -131,24 +140,38 @@ def _exempt(qualname: str) -> bool:
     return any(fnmatch.fnmatchcase(qualname, pat) for pat in EXEMPT)
 
 
-def _bool_options(fn) -> dict[str, tuple[int | None, bool]]:
-    """{name: (positional index or None, default)} of `fn`'s parameters
-    whose default is a `bool` literal."""
+def _literal(node):
+    """A hashable key for `node` when it is a literal (a constant, a negated
+    number, or the name of a module-level constant, spelled in capitals),
+    else None.  The type is part of the key, so `True` and `1` differ."""
+    if isinstance(node, ast.UnaryOp) and isinstance(node.op, ast.USub):
+        inner = _literal(node.operand)
+        return inner and ("-",) + inner
+    if isinstance(node, ast.Constant):
+        return type(node.value).__name__, node.value
+    if isinstance(node, ast.Name) and node.id.isupper():
+        return "name", node.id
+    return None
+
+
+def _options(fn) -> dict[str, tuple[int | None, tuple]]:
+    """{name: (positional index or None, default key)} of `fn`'s parameters
+    whose default is a literal."""
     a = fn.args
     positional = a.posonlyargs + a.args
     out = {}
     for arg, d in zip(positional[len(positional) - len(a.defaults):], a.defaults):
-        if isinstance(d, ast.Constant) and isinstance(d.value, bool):
-            out[arg.arg] = (positional.index(arg), d.value)
+        if (key := _literal(d)) is not None:
+            out[arg.arg] = (positional.index(arg), key)
     for arg, d in zip(a.kwonlyargs, a.kw_defaults):
-        if isinstance(d, ast.Constant) and isinstance(d.value, bool):
-            out[arg.arg] = (None, d.value)
+        if (key := _literal(d)) is not None:
+            out[arg.arg] = (None, key)
     return out
 
 
-def _passed(call: ast.Call, name: str, index: int | None, default: bool):
-    """The literal value `call` gives parameter `name`, or None when it is
-    not a literal."""
+def _passed(call: ast.Call, name: str, index: int | None, default: tuple):
+    """The literal key of the value `call` gives parameter `name`, or None
+    when it is not a literal."""
     if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
         return None
     value = next((k.value for k in call.keywords if k.arg == name), None)
@@ -156,13 +179,14 @@ def _passed(call: ast.Call, name: str, index: int | None, default: bool):
         value = call.args[index]
     if value is None:
         return default
-    return value.value if isinstance(value, ast.Constant) else None
+    return _literal(value)
 
 
-def single_valued_options(root: Path, package: str = PACKAGE, reference_paths=REFERENCE_PATHS) -> list[str]:
-    """`module.function.param` of every `bool`-default parameter of a
-    function under `root/package` that files under `reference_paths` call,
-    where all those calls pass it the same literal value."""
+def option_values(root: Path, package: str = PACKAGE, reference_paths=REFERENCE_PATHS) -> dict[str, set]:
+    """{`module.function.param`: the literal keys production calls pass it}
+    for every literal-default parameter of a function under `root/package`
+    that files under `reference_paths` call; a key of None stands for a
+    value that is not a literal."""
     pkg = root / package
     calls: dict[str, list[ast.Call]] = {}
     for path in _python_files(root, reference_paths):
@@ -171,16 +195,23 @@ def single_valued_options(root: Path, package: str = PACKAGE, reference_paths=RE
                 f = node.func
                 name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
                 calls.setdefault(name, []).append(node)
-    found = []
+    out = {}
     for path in sorted(pkg.rglob("*.py")):
         for fn in ast.walk(ast.parse(path.read_text())):
             if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or fn.name not in calls:
                 continue
-            for name, (index, default) in _bool_options(fn).items():
+            for name, (index, default) in _options(fn).items():
                 values = {_passed(c, name, index, default) for c in calls[fn.name]}
-                if None not in values and len(values) < 2:
-                    found.append(f"{_module_name(path, pkg)}.{fn.name}.{name}")
-    return sorted(found)
+                out[f"{_module_name(path, pkg)}.{fn.name}.{name}"] = values
+    return out
+
+
+def single_valued_options(root: Path, package: str = PACKAGE, reference_paths=REFERENCE_PATHS) -> list[str]:
+    """`module.function.param` of every literal-default parameter of a
+    function under `root/package` that files under `reference_paths` call,
+    where all those calls pass it the same literal value."""
+    return sorted(q for q, values in option_values(root, package, reference_paths).items()
+                  if None not in values and len(values) < 2)
 
 
 def test_guard_finds_unreferenced_definitions(tmp_path):
@@ -225,14 +256,11 @@ def test_every_definition_has_a_production_caller():
 
 
 def test_exemptions_name_existing_definitions():
-    pkg = ROOT / PACKAGE
-    defined = {
-        f"{_module_name(path, pkg)}.{name}"
-        for path in pkg.rglob("*.py")
-        for name, *_ in _definitions(ast.parse(path.read_text()))
-    }
-    missing = [pat for pat in EXEMPT if not fnmatch.filter(defined, pat)]
-    assert not missing, f"EXEMPT names definitions that no longer exist: {missing}"
+    # an entry must name a definition that exists AND has no production
+    # caller: one whose definition gained a caller exempts nothing
+    dead = dead_definitions(ROOT)
+    stale = [pat for pat in EXEMPT if not fnmatch.filter(dead, pat)]
+    assert not stale, f"EXEMPT entries that exempt nothing (gone, or called by production now): {stale}"
 
 
 def test_option_guard_finds_single_valued_options(tmp_path):
@@ -240,6 +268,7 @@ def test_option_guard_finds_single_valued_options(tmp_path):
     pkg.mkdir()
     (tmp_path / "tests").mkdir()
     (pkg / "core.py").write_text(
+        "LIMIT = 5\n"
         "def both(x, fast=False):\n    return x\n"
         "def only_default(x, fast=False):\n    return x\n"
         "def only_true(x, *, strict=False, n=3):\n    return x\n"
@@ -247,6 +276,10 @@ def test_option_guard_finds_single_valued_options(tmp_path):
         "def computed(x, exact=True):\n    return x\n"
         "def uncalled(x, exact=True):\n    return x\n"
         "def only_tests(x, exact=True):\n    return x\n"
+        "def ints(x, k=3, lo=-1, cap=LIMIT):\n    return x\n"
+        "def strs(x, col='doc_id', mode='a', sep=''):\n    return x\n"
+        "def nones(x, path=None, size=None, seed=None):\n    return x\n"
+        "def floats(x, t=0.5, w=1.0):\n    return x\n"
     )
     (pkg / "use.py").write_text(
         "import pkg.core as c\n"
@@ -255,22 +288,30 @@ def test_option_guard_finds_single_valued_options(tmp_path):
         "c.only_true(1, strict=True)\n"
         "c.positional(1, False)\nc.positional(2)\n"
         "c.computed(1, exact=len('ab') > 1)\n"
+        # k: 3 and 4; lo: always -1; cap: LIMIT by name both times
+        "c.ints(1)\nc.ints(2, k=4, lo=-1, cap=LIMIT)\n"
+        # col: always 'doc_id'; mode: 'a' and 'b'; sep: '' and a variable
+        "c.strs(1, 'doc_id', sep=c.LIMIT)\nc.strs(2, mode='b')\n"
+        # path: None and a str; size: always 8; seed: None twice
+        "c.nones(1, size=8)\nc.nones(2, 'out', 8)\n"
+        # t: 0.5 and 0.9; w: 1.0 is not 1 (the type is part of the value)
+        "c.floats(1, w=1)\nc.floats(2, 0.9)\n"
     )
     (tmp_path / "tests" / "test_core.py").write_text("from pkg.core import only_tests\nonly_tests(1, False)\n")
     assert single_valued_options(tmp_path, "pkg", ("pkg",)) == [
-        "core.only_default.fast", "core.only_true.strict",
+        "core.ints.cap", "core.ints.lo", "core.nones.seed", "core.nones.size",
+        "core.only_default.fast", "core.only_true.n", "core.only_true.strict", "core.strs.col",
     ]
     # a file outside the reference paths is not a caller; one inside is
-    assert single_valued_options(tmp_path, "pkg", ("pkg", "tests")) == [
-        "core.only_default.fast", "core.only_tests.exact", "core.only_true.strict",
-    ]
+    assert "core.only_tests.exact" in single_valued_options(tmp_path, "pkg", ("pkg", "tests"))
 
 
-def test_every_bool_option_is_used_both_ways():
+def test_every_option_takes_two_values():
     found = [q for q in single_valued_options(ROOT) if q not in OPTION_EXEMPT]
     assert not found, (
-        f"{len(found)} bool options receive one value from every production caller; make the "
-        f"chosen behaviour the only one and delete the parameter: {found}"
+        f"{len(found)} options receive one value from every production caller; make the "
+        f"value a constant, delete the code only other values reached, and delete the "
+        f"parameter: {found}"
     )
 
 

@@ -30,7 +30,7 @@ def docs(spark):
 
 
 def test_jaccard(docs, spark):
-    s = docs.select("doc_id", dedup.word_shingles("text", 3).alias("sh"))
+    s = docs.select("doc_id", dedup.word_shingles("text").alias("sh"))
     a = s.filter(F.col("doc_id") == 0).alias("a")
     b = s.filter(F.col("doc_id") == 3).alias("b")
     j = (
@@ -58,9 +58,7 @@ def test_minhash_near_duplicates(docs):
 def test_simhash_candidates(docs):
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dedup.simhash_candidates(
-            docs, "text", "doc_id", max_hamming=12
-        ).collect()
+        for r in dedup.simhash_candidates(docs, "text", "doc_id").collect()
     }
     assert pairs[(0, 1)] == 0          # identical text → identical simhash
     assert (0, 3) in pairs             # near dup → small hamming
@@ -83,9 +81,9 @@ def test_ann_bruteforce_vs_lsh_recall(spark):
     bf = ann.brute_force_topk(vecs, queries, 1)
     got = {r["query_id"]: r["neighbor_id"] for r in bf.collect()}
     assert got == {i: i + 20 for i in range(5)}  # planted neighbor is rank 1
-    # LSH with few planes finds the same planted neighbors (identical buckets
-    # are near-guaranteed at 0.05 perturbation with 4 planes)
-    lsh = ann.lsh_topk(vecs, queries, 1, num_planes=4)
+    # LSH finds the same planted neighbors (a shared or probed bucket is
+    # near-guaranteed at 0.05 perturbation)
+    lsh = ann.lsh_topk(vecs, queries, 1)
     got_lsh = {r["query_id"]: r["neighbor_id"] for r in lsh.collect()}
     recall = sum(1 for i in range(5) if got_lsh.get(i) == i + 20) / 5
     assert recall >= 0.8
@@ -99,7 +97,7 @@ def test_embedding_dedup(spark):
     base[10] = base[0] + rng.randn(64).astype("float32") * 0.01  # near-dup
     rows = [(i, [float(x) for x in base[i]]) for i in range(20)]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = ann.embedding_dedup_candidates(vecs, num_planes=4, min_cosine=0.95)
+    pairs = ann.embedding_dedup_candidates(vecs)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (0, 10) in got
     assert len(got) == 1  # random vectors in 64-d are near-orthogonal
@@ -132,22 +130,22 @@ def test_minhash_shuffle_carries_hashed_shingles_only(docs):
 def test_candidate_pairs_cap_no_window(spark):
     from data_quality_spark.operators import matching
 
+    big = matching.MAX_BLOCK + 1
     df = spark.createDataFrame(
-        [(i, f"name {i % 3}") for i in range(30)], "id long, name string"
+        [(i, f"name {i % 3}") for i in range(30)] + [(100 + i, "big") for i in range(big)],
+        "id long, name string",
     )
-    pairs = matching.candidate_pairs(df, "id", F.col("name"), max_block=5)
+    pairs = matching.candidate_pairs(df, "id", F.col("name"))
     plan = pairs._jdf.queryExecution().toString()
     assert "Window" not in plan
-    # blocks of size 10 are all over the cap of 5 -> no pairs survive
-    assert pairs.count() == 0
-    pairs2 = matching.candidate_pairs(df, "id", F.col("name"), max_block=100)
-    assert pairs2.count() == 3 * (10 * 9 // 2)
+    # the block of MAX_BLOCK + 1 rows is over the cap -> none of its pairs
+    # survive; the three blocks of size 10 pair up in full
+    assert pairs.count() == 3 * (10 * 9 // 2)
 
 
 def test_simhash_recall_exhaustive_within_band_guarantee(spark):
-    """Pigeonhole guarantee: with auto-widened banding, ALL pairs at
-    hamming <= max_hamming are found (recall 1.0 vs the exact O(n^2)
-    join) for max_hamming <= 7."""
+    """Pigeonhole guarantee: with 4 bands, ALL pairs at hamming <= 3 are
+    found (recall 1.0 vs the exact O(n^2) join)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     sh = docs.select(F.col("doc_id").alias("id"), dedup.simhash64(F.col("text")).alias("h")).cache()
     a, b = sh.alias("a"), sh.alias("b")
@@ -159,12 +157,12 @@ def test_simhash_recall_exhaustive_within_band_guarantee(spark):
             F.col("b.id").alias("ib"),
             F.bit_count(F.col("a.h").bitwiseXOR(F.col("b.h"))).alias("d"),
         )
-        .filter(F.col("d") <= 7)
+        .filter(F.col("d") <= 3)
         .collect()
     }
     got = {
         (r["id_a"], r["id_b"])
-        for r in dedup.simhash_candidates(docs, "text", "doc_id", max_hamming=7).collect()
+        for r in dedup.simhash_candidates(docs, "text", "doc_id").collect()
     }
     sh.unpersist()
     assert exact, "fixture must contain at least one close pair"
@@ -204,17 +202,20 @@ def test_lsh_multiprobe_recall_improves(spark):
         F.col("vec_id").alias("query_id"), "embedding"
     )
 
-    def recall(probes):
-        got = {
-            r["query_id"]: r["neighbor_id"]
-            for r in ann.lsh_topk(vecs, queries, 1, num_planes=8, probes=probes).collect()
-            if r["rank"] == 1
-        }
-        return sum(1 for q in range(30) if got.get(q) == q + 30) / 30
-
-    r0, r4 = recall(0), recall(4)
-    assert r4 >= r0
-    assert r4 >= 0.9  # probing the 4 most uncertain bits recovers ~all planted pairs
+    # single-bucket recall: the planted pairs whose exact buckets agree
+    keys = {
+        r["vec_id"]: r["lsh_key"]
+        for r in ann.add_lsh_keys(vecs, "embedding", ann._planes()).collect()
+    }
+    r0 = sum(1 for q in range(30) if keys[q] == keys[q + 30]) / 30
+    got = {
+        r["query_id"]: r["neighbor_id"]
+        for r in ann.lsh_topk(vecs, queries, 1).collect()
+        if r["rank"] == 1
+    }
+    r3 = sum(1 for q in range(30) if got.get(q) == q + 30) / 30
+    assert r3 >= r0
+    assert r3 >= 0.9  # probing the 3 most uncertain bits recovers ~all planted pairs
 
 
 def test_benchmark_contamination_semantics(spark):
@@ -230,7 +231,7 @@ def test_benchmark_contamination_semantics(spark):
     bench = df.filter("doc_id = 1").select("text")
     out = {
         r["doc_id"]: r
-        for r in benchmark_contamination(df, bench, "text", "doc_id").collect()
+        for r in benchmark_contamination(df, bench).collect()
     }
     assert out[1]["contamination"] == 1.0
     # doc 2 (9 words -> 7 shingles) shares exactly 'the quick brown' +

@@ -42,6 +42,7 @@ def test_email_verify_chain(spark):
         "bad email@example.com": "INVALID",
         "john@spam.net": "INVALID",        # blacklisted
         "john@other.org": "INVALID",       # TLD not whitelisted
+        "_john@example.com": "INVALID",    # local part must start with a letter
         "John@example.com": "CORRECTED",   # uppercase → corrected
     }
     expr = lambda c: EP.email_verify(

@@ -21,14 +21,14 @@ def test_ivf_topk_recall(spark):
     )
     got = {
         r["query_id"]: r["neighbor_id"]
-        for r in ann.ivf_topk(vecs, queries, 1, n_centroids=8, nprobe=3).collect()
+        for r in ann.ivf_topk(vecs, queries, 1).collect()
     }
     recall = sum(1 for i in range(5) if got.get(i) == i + 100) / 5
     assert recall >= 0.8
     # determinism: same seed → same result
     got2 = {
         r["query_id"]: r["neighbor_id"]
-        for r in ann.ivf_topk(vecs, queries, 1, n_centroids=8, nprobe=3).collect()
+        for r in ann.ivf_topk(vecs, queries, 1).collect()
     }
     assert got == got2
 
@@ -52,7 +52,7 @@ def _events(spark):
 def test_sessionize_batch(spark):
     from data_quality_spark.streaming.sessionize import sessionize_batch
 
-    out = sessionize_batch(_events(spark), gap_seconds=1800)
+    out = sessionize_batch(_events(spark))
     rows = sorted(
         ((r["user_id"], r["n_events"], r["total_value"]) for r in out.collect())
     )
@@ -66,7 +66,7 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
     _events(spark).write.parquet(in_dir)
     stream = spark.readStream.schema("user_id long, ts timestamp, value double").parquet(in_dir)
     q = (
-        sessionize(stream, gap_seconds=1800)
+        sessionize(stream)
         .writeStream.format("memory")
         .queryName("sessions")
         .outputMode("append")
@@ -80,7 +80,7 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
     )
     want = sorted(
         (r["user_id"], r["n_events"], r["total_value"])
-        for r in sessionize_batch(_events(spark), gap_seconds=1800).collect()
+        for r in sessionize_batch(_events(spark)).collect()
     )
     # stream emits closed sessions; with availableNow the final watermark can
     # leave the LAST session per user un-emitted — batch result must be a

@@ -99,7 +99,6 @@ def test_mfb_match_merge_spark(spark):
             {"col": "name", "matcher": "jaro_winkler", "weight": 1.0, "merge": "most_common"},
             {"col": "first", "matcher": "exact", "weight": 0.0, "merge": "longest"},
         ],
-        threshold=0.95,
     )
     got = {r["group_id"]: r for r in out.collect()}
     assert got[1]["group_size"] == 3 and got[1]["member_ids"] == "1,2,3"
@@ -113,8 +112,8 @@ def test_mfb_deterministic_under_partitioning(spark):
     rows = [(i, f"b{i % 7}", f"name{i % 20}") for i in range(200)]
     df = spark.createDataFrame(rows, "id long, bk string, name string")
     attrs = [{"col": "name", "matcher": "exact", "weight": 1.0, "merge": "most_common"}]
-    a = mfb_match_merge(df.repartition(1), "id", F.col("bk"), attrs, 0.9)
-    b = mfb_match_merge(df.repartition(13), "id", F.col("bk"), attrs, 0.9)
+    a = mfb_match_merge(df.repartition(1), "id", F.col("bk"), attrs)
+    b = mfb_match_merge(df.repartition(13), "id", F.col("bk"), attrs)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -183,7 +182,6 @@ def test_most_trusted_source(spark):
         "id",
         F.col("bk"),
         [{"col": "name", "matcher": "exact", "weight": 1.0, "merge": "most_trusted_source", "param": "web"}],
-        threshold=0.9,
         source_col="src",
     ).collect()
     assert len(out) == 1 and out[0]["group_size"] == 2
@@ -199,7 +197,6 @@ def test_most_trusted_source(spark):
         "id",
         F.col("bk"),
         [{"col": "name", "matcher": "jaro_winkler", "weight": 1.0, "merge": "most_trusted_source", "param": "web"}],
-        threshold=0.5,
         source_col="src",
     ).collect()
     assert out2[0]["group_size"] == 2

@@ -1,7 +1,6 @@
 """Nested quality (Avro-path analog), multimodal plumbing, datetime patterns."""
 
 import pyspark.sql.functions as F
-import pytest
 
 from data_quality_spark.operators import multimodal as MM
 from data_quality_spark.operators import nested as NQ
@@ -61,12 +60,6 @@ def test_media_pipeline(spark):
     by_id2 = {r["media_id"]: r for r in feats2.collect()}
     assert all(by_id[i]["sha256"] == by_id2[i]["sha256"] for i in range(50))
     assert all(by_id[i]["feature"] == by_id2[i]["feature"] for i in range(50))
-
-
-def test_media_real_decoder_stub(spark):
-    media = MM.synthesize_media(spark, 3)
-    with pytest.raises(Exception, match="NotImplementedError|image decode"):
-        MM.extract_media_features(media, use_real_decoder=True).collect()
 
 
 def test_media_dedup(spark):

@@ -269,6 +269,28 @@ def test_word_parity_on_vertical_tab(spark, tmp_path):
         assert not problems, problems
 
 
+def test_rule_parity_on_cjk_dominant_text(spark, tmp_path):
+    """The contract rule queries run `rules.RULE_SQL`, whose word rules
+    yield to CJK-dominant text (CJK share of characters > 0.3), and the
+    oracle twins that gate.  The `documents` copy adds, beside every
+    original row, pure CJK text, text half CJK, and short mixes at a CJK
+    share of 3/11 and exactly 0.3 (not gated)."""
+    sf = _sf_copy(
+        tmp_path,
+        documents="""SELECT * FROM {src} UNION ALL
+          SELECT doc_id + 100000, t, lang, source, length(t) FROM (
+            SELECT *, CASE doc_id % 4
+              WHEN 0 THEN repeat('日本語のテキスト 한국어 ', 3)
+              WHEN 1 THEN text || ' ' || repeat('中文', CAST(length(text) / 2 AS INTEGER))
+              WHEN 2 THEN 'abcdefg 中文字'
+              ELSE 'abcdef 中文字' END AS t
+            FROM {src})""",
+    )
+    for name in ("doc_quality_rules", "doc_rule_hit_counts", "domain_quality_stats"):
+        problems = compare(spark, name, QUERIES[name], ORACLES[name], sf)
+        assert not problems, problems
+
+
 def test_lower_parity_on_dotted_capital_i_and_new_capitals(spark, tmp_path):
     """Spark lowers U+0130 to `i` + U+0307 and DuckDB to `i`, and DuckDB
     leaves the Unicode 14-16 capitals (U+2C2F, ...) unchanged, so every

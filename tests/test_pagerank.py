@@ -3,21 +3,17 @@
 from data_quality_spark.operators.pagerank import pagerank_fixed
 
 
-def _run(spark, iters):
+def test_three_rounds_hand_computed(spark):
     edges = spark.createDataFrame(
         [("A", "B", 1), ("B", "A", 1), ("C", "A", 1)],
         ["src_domain", "dst_domain", "n_links"],
     )
-    out = pagerank_fixed(edges, iters=iters)
-    return {r["node"]: r["rank"] for r in out.collect()}
-
-
-def test_two_rounds_hand_computed(spark):
+    got = {r["node"]: r["rank"] for r in pagerank_fixed(edges).collect()}
     # unit 1e6, damping 17/20, base 150000
     # r1: A=150000+850000+850000, B=150000+850000, C=150000
     # r2: A=150000+850000+127500, B=150000+(1850000*17 div 20), C=150000
-    assert _run(spark, 1) == {"A": 1850000, "B": 1000000, "C": 150000}
-    assert _run(spark, 2) == {"A": 1127500, "B": 1722500, "C": 150000}
+    # r3: A=150000+(1722500*17 div 20)+127500, B=150000+(1127500*17 div 20)
+    assert got == {"A": 1741625, "B": 1108375, "C": 150000}
 
 
 def test_weighted_split(spark):
@@ -26,9 +22,11 @@ def test_weighted_split(spark):
         [("D", "A", 3), ("D", "B", 1)],
         ["src_domain", "dst_domain", "n_links"],
     )
-    got = {r["node"]: r["rank"] for r in pagerank_fixed(edges, iters=1).collect()}
-    # D's outflow: 1e6*17*3 div (20*4) = 637500 to A; 1e6*17*1 div 80 = 212500 to B
-    assert got == {"A": 787500, "B": 362500, "D": 150000}
+    got = {r["node"]: r["rank"] for r in pagerank_fixed(edges).collect()}
+    # D has no in-edges, so from round 1 on it holds the base 150000 and
+    # sends 150000*17*3 div (20*4) = 95625 to A and 150000*17*1 div 80 =
+    # 31875 to B; A and B are dangling (their outflow is dropped)
+    assert got == {"A": 245625, "B": 181875, "D": 150000}
 
 
 def test_partitioning_invariance(spark):
@@ -38,9 +36,6 @@ def test_partitioning_invariance(spark):
     ).groupBy("src_domain", "dst_domain").sum("n_links").withColumnRenamed(
         "sum(n_links)", "n_links"
     )
-    a = {r["node"]: r["rank"] for r in pagerank_fixed(edges, iters=4).collect()}
-    b = {
-        r["node"]: r["rank"]
-        for r in pagerank_fixed(edges.repartition(13), iters=4).collect()
-    }
+    a = {r["node"]: r["rank"] for r in pagerank_fixed(edges).collect()}
+    b = {r["node"]: r["rank"] for r in pagerank_fixed(edges.repartition(13)).collect()}
     assert a == b

@@ -54,7 +54,7 @@ def test_standardize_fuzzy(spark):
     df = spark.createDataFrame(
         [("bobb",), ("lis",), ("zzz",), ("beth",)], "name string"
     )
-    out = ST.standardize_fuzzy(df, "name", SYNS, max_edits=1)
+    out = ST.standardize_fuzzy(df, "name", SYNS)
     got = {r["name"]: r["name_std"] for r in out.collect()}
     assert got["bobb"] == "Robert"      # 1 edit from 'bob'/'bobby'
     assert got["lis"] == "Elizabeth"    # 1 edit from 'liz'
@@ -173,7 +173,7 @@ def test_synonym_search_modes_mirror_reference_vectors():
     compiled = compile_synonym_entries(SYN_DOCS)
     for mode, cases in EXPECTED.items():
         for query, want in cases.items():
-            got = set(synonym_match_ids(query, compiled, mode, max_edits=1, slop=1))
+            got = set(synonym_match_ids(query, compiled, mode))
             assert got == want, f"{mode} {query!r}: got {got}, want {want}"
 
 

@@ -42,8 +42,6 @@ def test_reservoir_determinism(spark):
     a = sorted(r["k"] for r in S.reservoir_k(df, 10, "k").collect())
     b = sorted(r["k"] for r in S.reservoir_k(df.repartition(7), 10, "k").collect())
     assert a == b and len(a) == 10
-    c = sorted(r["k"] for r in S.reservoir_k(df, 10, "k", seed=43).collect())
-    assert a != c  # different seed → different sample
 
 
 def test_sample_fraction_rate(spark):
@@ -75,13 +73,13 @@ def test_stratified_reservoir_exact_and_prefilter_safe(spark):
         .otherwise("big")
         .alias("st"),
     )
-    got = S.stratified_reservoir_k(df, 30, "st", "k", seed=7)
+    got = S.stratified_reservoir_k(df, 30, "st", "k")
     rows = sorted((r["st"], r["k"], r["rank_in_stratum"]) for r in got.collect())
 
     # naive oracle: full window, no prefilter
     from pyspark.sql.window import Window
 
-    h = F.md5(F.concat(F.lit("7:"), F.col("k").cast("string")))
+    h = F.md5(F.concat(F.lit("42:"), F.col("k").cast("string")))
     w = Window.partitionBy("st").orderBy(h.asc(), F.col("k").asc())
     naive = (
         df.select("st", "k", F.row_number().over(w).cast("bigint").alias("rank_in_stratum"))

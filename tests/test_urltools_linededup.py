@@ -98,7 +98,7 @@ def test_url_duplicate_groups_keep_first(spark):
     df = spark.createDataFrame(rows, ["doc_id", "url"])
     out = {
         r["canonical_url"]: r
-        for r in url_duplicate_groups(df, "url", "doc_id").collect()
+        for r in url_duplicate_groups(df).collect()
     }
     a = out["http://example.com/a"]
     assert (a["n_urls"], a["n_raw_forms"], a["kept_id"]) == (3, 3, 1)
@@ -114,7 +114,7 @@ def test_corpus_line_dedup_semantics(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     out = {
         r["doc_id"]: r
-        for r in corpus_line_dedup(df, "text", "doc_id", min_count=5).collect()
+        for r in corpus_line_dedup(df).collect()
     }
     assert len(out) == 6
     # boilerplate occurs 10x (>=5): both copies drop, incl. the padded one
@@ -130,6 +130,6 @@ def test_corpus_line_dedup_semantics(spark):
 def test_corpus_line_dedup_all_dropped(spark):
     rows = [(i, "same line") for i in range(6)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = corpus_line_dedup(df, "text", "doc_id", min_count=5).collect()
+    out = corpus_line_dedup(df).collect()
     assert all(r["n_kept"] == 0 and r["cleaned_text"] == "" for r in out)
     assert all(r["n_lines"] == 1 for r in out)
