@@ -123,33 +123,21 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     busy_before = busy_loop_sec()
 
     from data_quality_spark.queries import QUERIES
+    from data_quality_spark.runreport import CORES, checksum, write_result
     from data_quality_spark.session import get_spark
 
-    spark = get_spark(app_name="dqs-bench", master=f"local[{cpus}]")
+    spark = get_spark(app_name="dqs-bench", master=f"local[{CORES}]")
     spark.sparkContext.setLogLevel("ERROR")
-
-    from pyspark.sql import functions as F
-
-    def force(df):
-        """Materialize EVERY column (count() alone lets Catalyst prune the
-        work away): one pass computing a checksum over all columns."""
-        cols = [F.col(c).cast("string") for c in df.columns]
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.pmod(F.xxhash64(*cols), F.lit(1_000_003))).alias("chk"),
-        ).collect()[0]
-        return row["n"]
 
     # Warm-up: fully materialize the flagship pipeline once on the tiny tier
     # so one-time costs (whole-stage-codegen compile, Python UDF worker spawn
     # + imports, JIT) don't pollute per-query timings — at real scale these
     # amortize to zero over hours of work.
-    force(QUERIES["quality_pipeline_docs"](spark, "/root/testdata/sf0.001"))
+    checksum(QUERIES["quality_pipeline_docs"](spark, "/root/testdata/sf0.001"))
 
     # Two runs per query, report the warm one: the first run of each distinct
     # plan pays whole-stage-codegen compilation (constant, amortized at real
@@ -161,8 +149,7 @@ def main() -> None:
         best = float("inf")
         for _ in range(2):
             t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            cnt = force(df)
+            cnt, _ = checksum(fn(spark, sf_dir))
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 3)
         # drop any persisted intermediates (e.g. the MinHash signature
@@ -184,7 +171,7 @@ def main() -> None:
         "sf": float(sf),
         "docs_per_sec": round(n_docs / e2e, 1) if e2e else None,
         "e2e_docs": n_docs,
-        "cpus": int(cpus),
+        "cpus": CORES,
         "n_queries": len(timings),
         # cross-round normalization: busy-loop calibration (min of 3
         # reps before + 3 after the suite); divide `value` by
@@ -199,10 +186,7 @@ def main() -> None:
     # the headline total (BENCH_r04.json parsed:null).  The stdout line
     # stays compact; `queries` carries only the 10 slowest (the ones a
     # reader acts on), `queries_full` points at the rest.
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench", "last_run.json")
-    with open(full_path, "w") as fh:
-        json.dump({**summary, "queries": timings}, fh, indent=1, sort_keys=True)
-        fh.write("\n")
+    write_result("last_run.json", {**summary, "queries": timings})
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
     print(json.dumps({**summary, "queries": slowest, "queries_full": "bench/last_run.json"}))
 

@@ -12,8 +12,8 @@ measurement repeatable: a deterministic 2k×10 near-copy corpus (each
 base doc from the seeded pages generator, copies with a per-copy token
 prefix + one word dropped so true Jaccard stays ≥ the 0.7 verify
 threshold), broadcast joins disabled at both planner and AQE level, warm
-wall time + total shuffle write (Spark UI REST) reported as one JSON
-line.
+wall time + the warm run's shuffle write (`runreport.measure`) reported as
+one JSON line.
 
 Usage: python bench/dup_heavy.py [--base 2000] [--copies 10]
 Writes bench/dup_heavy_result.json.
@@ -25,10 +25,10 @@ import argparse
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from data_quality_spark.runreport import CORES, measure, write_result  # noqa: E402
 
 
 def build_corpus(spark, base: int, copies: int):
@@ -62,21 +62,11 @@ def build_corpus(spark, base: int, copies: int):
     )
 
 
-def shuffle_write_bytes(ui_url: str, app_id: str) -> int:
-    """Total shuffle write of the completed stages.  `ui_url` is
-    `spark.sparkContext.uiWebUrl`: Spark moves the UI to the next free port
-    when its port is busy, so a fixed port could read another app's UI."""
-    url = f"{ui_url}/api/v1/applications/{app_id}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.loads(r.read())
-    return sum(s.get("shuffleWriteBytes", 0) for s in stages)
-
-
 def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--base", type=int, default=2000)
     p.add_argument("--copies", type=int, default=10)
-    p.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    p.add_argument("--cores", type=int, default=CORES)
     a = p.parse_args()
 
     from pyspark.sql import functions as F
@@ -93,34 +83,29 @@ def main() -> None:
             # broadcasts at both the planner and the AQE re-planner
             "spark.sql.autoBroadcastJoinThreshold": "-1",
             "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-            "spark.ui.enabled": "true",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
     corpus = build_corpus(spark, a.base, a.copies).persist()
     n_docs = corpus.count()
 
-    def run() -> tuple[float, int]:
-        t0 = time.perf_counter()
-        pairs = minhash_near_duplicates(
-            corpus, "text", "doc_id", threshold=0.7, persist_signatures=True
-        )
-        n_pairs = pairs.count()
-        dt = time.perf_counter() - t0
+    def run() -> tuple[dict, int]:
+        with measure(spark, "minhash") as step:
+            pairs = minhash_near_duplicates(
+                corpus, "text", "doc_id", threshold=0.7, persist_signatures=True
+            )
+            n_pairs = pairs.count()
         spark.catalog.clearCache()
         corpus.persist()  # clearCache drops the corpus too; re-pin it
         corpus.count()
-        return dt, n_pairs
+        return step, n_pairs
 
-    cold_sec, n_pairs = run()
+    cold, n_pairs = run()
     # two warm reps, best kept: the shared host has multi-second noise
     # windows (±3×) that a single rep can land in
-    sc = spark.sparkContext
-    base_shuffle = shuffle_write_bytes(sc.uiWebUrl, sc.applicationId)
-    warm_sec, n_pairs2 = run()
-    warm_shuffle = shuffle_write_bytes(sc.uiWebUrl, sc.applicationId) - base_shuffle
-    warm2_sec, n_pairs3 = run()
-    warm_sec = min(warm_sec, warm2_sec)
+    warm, n_pairs2 = run()
+    warm2, n_pairs3 = run()
+    warm_sec = min(warm["wall_s"], warm2["wall_s"])
     assert n_pairs == n_pairs2 == n_pairs3, (n_pairs, n_pairs2, n_pairs3)
 
     result = {
@@ -129,15 +114,13 @@ def main() -> None:
         "base_docs": a.base,
         "copies": a.copies,
         "verified_pairs": n_pairs,
-        "cold_sec": round(cold_sec, 2),
+        "cold_sec": round(cold["wall_s"], 2),
         "warm_sec": round(warm_sec, 2),
-        "warm_shuffle_mb": round(warm_shuffle / 1e6, 1),
+        "warm_shuffle_mb": round(warm["shuffle_write_bytes"] / 1e6, 1),
         "cores": a.cores,
         "docs_per_sec": round(n_docs / warm_sec, 1),
     }
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "dup_heavy_result.json"), "w") as f:
-        json.dump(result, f, indent=2)
+    write_result("dup_heavy_result.json", result)
     print(json.dumps(result))
 
 

@@ -9,16 +9,20 @@ This bench isolates the same two operations in the Spark engine on ONE core
 the datetime_patterns_orders fixture recipe) is materialized to parquet
 first so the timed job is scan + classify only; warm runs, best of 3.
 
-Usage: python bench/isdate.py   (appends the section to BENCH/BASELINE.md)
+Usage: python bench/isdate.py   (writes bench/isdate_result.json and
+replaces its section of BENCH/BASELINE.md)
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from data_quality_spark.runreport import splice_baseline, write_result  # noqa: E402
 
 N = 100_000
 OUT = "/tmp/dqs_isdate_vals"
@@ -27,6 +31,7 @@ OUT = "/tmp/dqs_isdate_vals"
 def build(spark) -> None:
     from pyspark.sql import functions as F
 
+    from data_quality_spark.functions.literals import lit_array
     from data_quality_spark.functions.typeinfer import MONTHS_DE, MONTHS_FR
 
     df = spark.range(N).withColumn(
@@ -34,8 +39,8 @@ def build(spark) -> None:
     )
     k = F.col("id")
     d = F.col("d")
-    fr_month = F.element_at(F.array(*[F.lit(m) for m in MONTHS_FR]), F.month(d))
-    de_month = F.element_at(F.array(*[F.lit(m) for m in MONTHS_DE]), F.month(d))
+    fr_month = F.element_at(lit_array(MONTHS_FR, "string"), F.month(d))
+    de_month = F.element_at(lit_array(MONTHS_DE, "string"), F.month(d))
     day_s = F.dayofmonth(d).cast("string")
     year_s = F.year(d).cast("string")
     ds = (
@@ -55,18 +60,13 @@ def build(spark) -> None:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from data_quality_spark.functions import typeinfer as ti
     from data_quality_spark.operators.profiling import datetime_pattern_frequency
+    from data_quality_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[1]")
-        .config("spark.sql.shuffle.partitions", "1")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark(master="local[1]", shuffle_partitions=1)
     spark.sparkContext.setLogLevel("ERROR")
     build(spark)
     vals = spark.read.parquet(OUT)
@@ -95,11 +95,9 @@ def main() -> None:
         "formats": len(ti.DATE_REGEXES) + len(ti.TIME_REGEXES),
     }
     print(json.dumps(res))
-    with open("bench/isdate_result.json", "w") as f:
-        json.dump(res, f)
+    write_result("isdate_result.json", res)
 
-    section = f"""
-## isDate / getDatePatterns throughput (reference floor: PerformanceTest.java)
+    section = f"""## isDate / getDatePatterns throughput (reference floor: PerformanceTest.java)
 
 One core (local[1]), 100k-value mixed column (8 date/time formats + 20%
 non-dates), classifier covering {res['formats']} formats incl. FR/DE/ES/IT/PT/NL
@@ -112,19 +110,7 @@ month names; warm best-of-3, scan included.
 
 Reproduce: `python bench/isdate.py`.
 """
-    md = open("BENCH/BASELINE.md").read()
-    marker = "\n## isDate / getDatePatterns throughput"
-    if marker in md:
-        # replace ONLY this script's own section: truncating to the
-        # marker ate every section appended after it (the sf1 soak
-        # table vanished that way — round-5 review finding); splice
-        # up to the NEXT '## ' heading instead
-        start = md.index(marker)
-        nxt = md.find("\n## ", start + 1)
-        tail = md[nxt:] if nxt != -1 else ""
-        md = md[:start] + tail
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write(md.rstrip("\n") + "\n" + section)
+    splice_baseline("## isDate / getDatePatterns throughput", section)
     print("updated BENCH/BASELINE.md")
 
 

@@ -8,8 +8,12 @@ honestly fixed by the master URL and no JIT/cache state leaks between runs.
 Within each process the job runs twice and the warm run is reported —
 startup costs amortize to zero over a real multi-hour ingest.
 
-Usage: python bench/scaling.py [--docs 500000] [--low 8] [--high 32]
-Writes bench/scaling_result.json and refreshes BENCH/BASELINE.md.
+The synthesizer runs at local[$SPARK_GRAFT_CPUS] (default 32) with two
+partitions per core.
+
+Usage: python bench/scaling.py [--docs 500000] [--low 4] [--high 16]
+Writes bench/scaling_result.json and refreshes its section of
+BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -23,13 +27,11 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_quality_spark import runreport  # noqa: E402
+
 
 def worker(cores: str, pages_path: str) -> None:
     """One measurement at local[cores]: prints its JSON result line."""
-    import time
-
-    from pyspark.sql import functions as F
-
     from data_quality_spark.pipeline import apply_quality_pipeline, output_columns
     from data_quality_spark.session import get_spark
 
@@ -42,11 +44,9 @@ def worker(cores: str, pages_path: str) -> None:
 
     def run():
         out = apply_quality_pipeline(pages).select(*output_columns())
-        cols = [F.col(c).cast("string") for c in out.columns]
-        t0 = time.perf_counter()
-        out.agg(F.count(F.lit(1)),
-                F.sum(F.pmod(F.xxhash64(*cols), F.lit(1_000_003)))).collect()
-        return time.perf_counter() - t0
+        with runreport.measure(spark, "pass") as step:
+            runreport.checksum(out)
+        return step["wall_s"]
 
     cold = run()
     warm = min(run() for _ in range(2))
@@ -59,9 +59,9 @@ def synthesize_worker(pages_path: str, n_docs: str) -> None:
     from data_quality_spark.schema import synthesize_pages
     from data_quality_spark.session import get_spark
 
-    s = get_spark(master="local[32]")
+    s = get_spark(master=f"local[{runreport.CORES}]")
     s.sparkContext.setLogLevel("ERROR")
-    synthesize_pages(s, int(n_docs), partitions=64).write.mode("overwrite").parquet(pages_path)
+    synthesize_pages(s, int(n_docs), partitions=2 * runreport.CORES).write.mode("overwrite").parquet(pages_path)
 
 
 WORKERS = {"measure": worker, "synthesize": synthesize_worker}
@@ -150,17 +150,13 @@ def main() -> None:
         "target": 0.8,
         "meets_target": eff >= 0.8 or (eff / hw) >= 0.8,
     }
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "scaling_result.json"), "w") as f:
-        json.dump(result, f, indent=2)
+    runreport.write_result("scaling_result.json", result)
     print(json.dumps(result))
 
-    _write_report(result, here)
+    _write_report(result)
 
 
-def _write_report(r: dict, here: str) -> None:
-    repo = os.path.dirname(here)
-    os.makedirs(os.path.join(repo, "BENCH"), exist_ok=True)
+def _write_report(r: dict) -> None:
     lines = [
         "# BENCH/BASELINE — scaling evidence (N vs 4N parallelism)",
         "",
@@ -209,20 +205,7 @@ def _write_report(r: dict, here: str) -> None:
             "at higher parallelism.  The criterion is one-sided (≥ 0.8), so the\n"
             "reading is reported as measured rather than clamped.\n",
         )
-    # preserve EVERY section other benches own (isdate floors, sf1 soak,
-    # ...): the scaling block is the file's h1 preamble, so everything
-    # from the first '## ' heading onward belongs to someone else.
-    # (The old form kept only the '## isDate' tail and silently ate the
-    # sf1-soak section that sat before it — round-5 review finding.)
-    path = os.path.join(repo, "BENCH", "BASELINE.md")
-    tail = ""
-    if os.path.exists(path):
-        old = open(path).read()
-        idx = old.find("\n## ")
-        if idx != -1:
-            tail = old[idx:]
-    with open(path, "w") as f:
-        f.write("\n".join(lines) + tail)
+    runreport.splice_baseline("# BENCH/BASELINE", "\n".join(lines))
 
 
 if __name__ == "__main__":

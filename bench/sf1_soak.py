@@ -2,10 +2,10 @@
 
 Round-4's evidence ceiling was ~17 MB of input; this soak raises it one
 order of magnitude and records, per query: wall time, the number of
-stages Spark ran, and the memory/disk SPILL totals from the status REST
-API (`/api/v1/applications/<id>/stages` exposes memoryBytesSpilled /
-diskBytesSpilled per stage).  "No spill, no OOM, stage count flat vs
-sf0.1" is the head-room evidence the 100 TB story rests on.
+stages of its Spark jobs (skipped ones included), and their memory/disk
+SPILL totals, read by `runreport.measure` from the driver's status store.
+"No spill, no OOM, stage count flat vs sf0.1" is the head-room evidence
+the 100 TB story rests on.
 
 The sf1 tier is synthesized deterministically from the driver's own
 sf0.1 documents table (do-not-modify /root/testdata stays untouched):
@@ -19,23 +19,24 @@ The last row is no query: one 10k-member near-dup cluster (the
 mega-cluster case of VERDICT r5 #7), its members chained in a seeded
 random order, through `cluster_matches` + `cluster_survivors`.
 
-Run: `python bench/sf1_soak.py`   (~2-4 min; do not run pytest
-concurrently).  Appends a dated section to BENCH/BASELINE.md.
+Run: `python bench/sf1_soak.py`   (~2-4 min at local[4]; cores from
+$SPARK_GRAFT_CPUS, default 32; do not run pytest concurrently).  Replaces
+its dated section of BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_quality_spark.runreport import CORES, checksum, measure, splice_baseline  # noqa: E402
+
 OUT_DIR = "/tmp/dqs_sf1"
-MASTER = "local[32]"
+MASTER = f"local[{CORES}]"
 MEGA_CLUSTER_SIZE = 10_000
 SOAK_QUERIES = [
     "quality_pipeline_docs",
@@ -140,69 +141,40 @@ def mega_cluster_survivors(spark):
     return cluster_survivors(labeled, "_q")
 
 
-def stage_stats(ui_url: str, app_id: str) -> tuple[int, int, int]:
-    """(n_stages, memoryBytesSpilled, diskBytesSpilled) across all stages.
-
-    `ui_url` comes from `spark.sparkContext.uiWebUrl` — never a hardcoded
-    port: Spark auto-increments past 4040 when it's busy, and a fixed
-    port would read a FOREIGN app's stages (review finding, round 5)."""
-    url = f"{ui_url}/api/v1/applications/{app_id}/stages"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    mem = sum(s.get("memoryBytesSpilled", 0) for s in stages)
-    disk = sum(s.get("diskBytesSpilled", 0) for s in stages)
-    return len(stages), mem, disk
-
-
 def main() -> None:
     from data_quality_spark.queries import QUERIES
     from data_quality_spark.session import get_spark
-    from pyspark.sql import functions as F
 
-    # the soak needs the status REST API for the per-stage spill counters
-    spark = get_spark(
-        app_name="dqs-sf1-soak",
-        master=MASTER,
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4040"},
-    )
+    spark = get_spark(app_name="dqs-sf1-soak", master=MASTER)
     spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
-    ui_url = spark.sparkContext.uiWebUrl
-
-    def force(df):
-        cols = [F.col(c).cast("string") for c in df.columns]
-        return df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.pmod(F.xxhash64(*cols), F.lit(1_000_003))).alias("chk"),
-        ).collect()[0]["n"]
 
     synth_sf1(spark)
     n_docs = spark.read.parquet(os.path.join(OUT_DIR, "documents.parquet")).count()
 
     # warm-up (codegen + python workers)
-    force(QUERIES["quality_pipeline_docs"](spark, "/root/testdata/sf0.001"))
+    checksum(QUERIES["quality_pipeline_docs"](spark, "/root/testdata/sf0.001"))
 
     builds = [(name, lambda name=name: QUERIES[name](spark, OUT_DIR)) for name in SOAK_QUERIES]
     builds.append(("mega_cluster_10k", lambda: mega_cluster_survivors(spark)))
     rows = []
+    failed = 0
     for name, build in builds:
-        s0, m0, d0 = stage_stats(ui_url, app_id)
-        t0 = time.perf_counter()
-        n = force(build())
-        wall = time.perf_counter() - t0
-        s1, m1, d1 = stage_stats(ui_url, app_id)
+        with measure(spark, name) as run:
+            n, _ = checksum(build())
         spark.catalog.clearCache()
-        rows.append((name, round(wall, 2), n, s1 - s0, m1 - m0, d1 - d0))
+        failed += run["failed_tasks"]
+        rows.append((name, round(run["wall_s"], 2), n, run["stages"],
+                     run["memory_spill_bytes"], run["disk_spill_bytes"]))
         print(rows[-1])
 
     total = round(sum(r[1] for r in rows), 2)
     lines = [
-        "",
         f"## sf1 soak ({time.strftime('%Y-%m-%d')}) — 50k docs, {MASTER}",
         "",
         f"Input: {n_docs} documents (~10x the bench tier; near-dup-heavy by",
-        "construction — see bench/sf1_soak.py).  Spill columns come from the",
-        "status REST API per-stage counters; 0 = the whole run fit in memory.",
+        "construction — see bench/sf1_soak.py).  Stages count every stage of",
+        "the query's Spark jobs, skipped ones included; spill columns sum the",
+        "driver status store's per-stage counters; 0 = the whole run fit in memory.",
         "",
         "| query | wall s | out rows | stages | mem spill B | disk spill B |",
         "|---|---|---|---|---|---|",
@@ -210,21 +182,8 @@ def main() -> None:
     for name, wall, n, st, mem, disk in rows:
         lines.append(f"| {name} | {wall} | {n} | {st} | {mem} | {disk} |")
     lines.append("")
-    lines.append(f"Total {total} s, zero task failures, zero OOM.")
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "..", "BENCH", "BASELINE.md"
-    )
-    md = open(path).read()
-    # splice out any previous soak section (up to the next '## ' heading)
-    # instead of blind-appending — the shared BASELINE.md protocol: every
-    # bench owns exactly its own section and preserves the others
-    marker = "\n## sf1 soak"
-    if marker in md:
-        start = md.index(marker)
-        nxt = md.find("\n## ", start + 1)
-        md = md[:start] + (md[nxt:] if nxt != -1 else "")
-    with open(path, "w") as fh:
-        fh.write(md.rstrip("\n") + "\n" + "\n".join(lines) + "\n")
+    lines.append(f"Total {total} s, {failed} failed tasks, zero OOM.")
+    splice_baseline("## sf1 soak", "\n".join(lines))
     print(f"soak total {total}s -> updated BENCH/BASELINE.md")
 
 

@@ -35,12 +35,11 @@ ANALYSIS_SCHEMA = StructType(
     [StructField(n, IntegerType()) for n in FEATURE_COLS]
     + [
         StructField("lang_detected", StringType()),
-        StructField("lang_conf", DoubleType()),
         StructField("ppl", DoubleType()),
     ]
 )
 
-_COLS = list(FEATURE_COLS) + ["lang_detected", "lang_conf", "ppl"]
+_COLS = list(FEATURE_COLS) + ["lang_detected", "ppl"]
 
 
 @F.pandas_udf(ANALYSIS_SCHEMA)
@@ -51,18 +50,17 @@ def analyze_text(texts: pd.Series) -> pd.DataFrame:
     n = len(ts)
     feats = list(zip(*map(compute_features_py, ts))) or [()] * len(FEATURE_COLS)
     live = [i for i, t in enumerate(ts) if t is not None and t.strip()]
-    lang, conf, ppl = [UNKNOWN] * n, [0.0] * n, [float("inf")] * n
+    lang, ppl = [UNKNOWN] * n, [float("inf")] * n
     for i in live:
-        lang[i], conf[i] = model._classify(ts[i])
+        lang[i] = model._classify(ts[i])
     for i, p in zip(live, lm._ppl_batch([ts[i][:_MAX_CHARS] for i in live])):
         ppl[i] = p
     cols = dict(zip(FEATURE_COLS, feats))
-    cols.update(lang_detected=lang, lang_conf=conf, ppl=ppl)
+    cols.update(lang_detected=lang, ppl=ppl)
     return pd.DataFrame(cols, columns=_COLS)
 
 
 def with_analysis(df: DataFrame) -> DataFrame:
-    """Attach feature columns + lang_detected + lang_conf + ppl of `text`
-    in one pass."""
+    """Attach feature columns + lang_detected + ppl of `text` in one pass."""
     out = df.withColumn("__a", analyze_text(F.col("text")))
     return out.select("*", "__a.*").drop("__a")

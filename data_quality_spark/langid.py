@@ -66,10 +66,10 @@ UNKNOWN = "und"
 
 
 class _HeuristicLangModel:
-    """Deterministic fallback model: `_classify(text) -> (lang, conf)`."""
+    """Deterministic fallback model: `_classify(text) -> lang`."""
 
     @staticmethod
-    def _classify(s: str) -> tuple[str, float]:
+    def _classify(s: str) -> str:
         # 1. script detection over the first 2000 code points
         head = s[:2000]
         if not head.isascii() and _RE_ANY_RANGE.search(head):
@@ -78,22 +78,21 @@ class _HeuristicLangModel:
                 for lang, rex in _RE_RANGE:
                     hits = len(rex.findall(head))
                     if hits / n > _SCRIPT_SHARE:
-                        return lang, round(hits / n, 4)
+                        return lang
         # 2. marker-word profile over the first 400 tokens: each token is
         # normalized once and looked up once
         toks = head.split()[:400]
         if not toks:
-            return UNKNOWN, 0.0
+            return UNKNOWN
         norm = map(str.lower, map(str.strip, toks, repeat(_TOK_STRIP)))
         packed = sum(map(_TOKEN_HITS.get, norm, repeat(0)))
         mask = (1 << _HIT_BITS) - 1
         hits = [(packed >> (_HIT_BITS * i)) & mask for i in range(len(_LANGS))]
         best_hits = max(hits)
         if best_hits == 0:
-            return UNKNOWN, 0.0
+            return UNKNOWN
         # first language in _MARKERS order with the most hits
-        best_lang = _LANGS[hits.index(best_hits)]
-        return best_lang, round(min(1.0, best_hits / len(toks) * 5.0), 4)
+        return _LANGS[hits.index(best_hits)]
 
 
 _MODEL = None
@@ -110,9 +109,9 @@ def _get_model():
                 def __init__(self):
                     self._m = fasttext.load_model("lid.176.bin")
 
-                def _classify(self, s: str) -> tuple[str, float]:
-                    lab, p = self._m.predict(s.replace("\n", " "))
-                    return lab[0].replace("__label__", ""), float(p[0])
+                def _classify(self, s: str) -> str:
+                    lab, _p = self._m.predict(s.replace("\n", " "))
+                    return lab[0].replace("__label__", "")
 
             _MODEL = _FastTextModel()
         except ImportError:

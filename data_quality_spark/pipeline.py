@@ -28,7 +28,6 @@ def apply_quality_pipeline(pages: DataFrame) -> DataFrame:
     """
     df = with_analysis(pages)          # ONE Arrow pass: features+lang+ppl
     df = rules.attach_rules(df)
-    df = df.drop("lang_conf")
     df = df.withColumn("scrubbed_text", scrub.scrub_expr(F.col("text")))
     df = decide.with_decision(df)
     return df

@@ -23,7 +23,6 @@ per-engine column (`esc`, `chk`).
 from __future__ import annotations
 
 import os
-from types import ModuleType
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,6 +35,13 @@ from .functions import typeinfer as ti
 from .functions.literals import lit_array
 from .operators import profiling as prof
 from .operators.text_analysis import BPE_TOKEN_PATTERN
+from .pinned_oracles import (
+    ANN_IVF_TOP3_SQL,
+    MEDIA_FEATURES_SQL,
+    MFB_CLUSTERS_PARTS_SQL,
+    QUALITY_PIPELINE_DOCS_SQL,
+    WEIGHTED_RESERVOIR_ORDERS_SQL,
+)
 from .rules import (
     CJK_GATE_RATIO,
     MAX_DUP_2GRAM_FRACTION,
@@ -61,20 +67,6 @@ def _register(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-def _pinned_sql(get: Callable[[ModuleType], str]) -> str | None:
-    """Pinned VALUES oracle `get(pinned_oracles)`, or None while it hasn't been
-    generated yet — scripts/pin_oracles.py imports QUERIES to produce the
-    pins, so a missing constant must degrade to rows-only, not ImportError.
-    NOTE the pins are sf0.01 snapshots (the driver gate's scale): a gate
-    run at any other sf requires regenerating via scripts/pin_oracles.py."""
-    try:
-        from . import pinned_oracles
-
-        return get(pinned_oracles)
-    except (ImportError, AttributeError):
-        return None
 
 
 # Declared schema of every input table (tests/test_oracle_parity.py checks
@@ -1538,11 +1530,7 @@ def record_clusters_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _mfb_oracle_sql() -> str | None:
-    return _pinned_sql(lambda p: p.MFB_CLUSTERS_PARTS_SQL)
-
-
-@_register("mfb_clusters_parts", _mfb_oracle_sql())
+@_register("mfb_clusters_parts", MFB_CLUSTERS_PARTS_SQL)
 def mfb_clusters_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True MFB match-merge (sequential match-or-merge queue with merged-
     record re-enqueue, `matchmerge/mfb/MFB.java:113-147`) per fingerprint
@@ -1750,11 +1738,7 @@ def reservoir_orders_k20(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.orderBy(h.asc(), F.col("o_orderkey").asc()).limit(20)
 
 
-def _weighted_reservoir_oracle_sql() -> str | None:
-    return _pinned_sql(lambda p: p.WEIGHTED_RESERVOIR_ORDERS_SQL)
-
-
-@_register("weighted_reservoir_orders", _weighted_reservoir_oracle_sql())
+@_register("weighted_reservoir_orders", WEIGHTED_RESERVOIR_ORDERS_SQL)
 def weighted_reservoir_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A-Res weighted reservoir.  pow() bit-patterns are libm-dependent, so
     the A-Res KEYS can't be recomputed portably in SQL — but the SELECTED
@@ -2429,17 +2413,10 @@ def _media_replay_sql() -> str:
     """
 
 
-def _media_oracle_sql() -> str:
-    """FROZEN spec-replay oracle: scripts/pin_oracles.py snapshots the
-    pure-Python replay text into pinned_oracles.py, so a drive-by change to
-    the shared payload spec (`synth_media_spec` / `sniff_mime`) FAILS parity
-    instead of silently regenerating both sides of the compare (same device
-    as the frozen synonym-search hit lists).  Falls back to the live replay
-    only while pins are being regenerated."""
-    return _pinned_sql(lambda p: p.MEDIA_FEATURES_SQL) or _media_replay_sql()
-
-
-@_register("media_features", _media_oracle_sql())
+# The oracle is `_media_replay_sql` frozen into pinned_oracles.py: a drive-by
+# change to the shared payload spec (`synth_media_spec` / `sniff_mime`) fails
+# parity instead of silently regenerating both sides of the compare.
+@_register("media_features", MEDIA_FEATURES_SQL)
 def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: synthesized media table → mapInPandas feature
     extraction (deterministic sha256-derived stand-in for the decode
@@ -2941,11 +2918,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_ivf_oracle_sql() -> str | None:
-    return _pinned_sql(lambda p: p.ANN_IVF_TOP3_SQL)
-
-
-@_register("ann_ivf_top3", _ann_ivf_oracle_sql())
+@_register("ann_ivf_top3", ANN_IVF_TOP3_SQL)
 def ann_ivf_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse-quantizer top-3 (bounded driver k-means, 3 probed
     inverted lists).  Verified against a PINNED regression oracle: the
@@ -3026,11 +2999,7 @@ def profile_customer_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prof.profile_table(cust, ["c_custkey", "c_name", "c_nationkey", "c_mktsegment"])
 
 
-def _flagship_oracle_sql() -> str | None:
-    return _pinned_sql(lambda p: p.QUALITY_PIPELINE_DOCS_SQL)
-
-
-@_register("quality_pipeline_docs", _flagship_oracle_sql())
+@_register("quality_pipeline_docs", QUALITY_PIPELINE_DOCS_SQL)
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end quality pipeline over `documents` mapped to the pages
     shape (url=doc://id): rules → langid → perplexity → scrub → decide.

@@ -12,6 +12,11 @@ sequential SparkSessions) and the sorted row sets must be identical —
 a mismatch aborts the pin with a diff.  The pin itself is taken from the
 local[32] run.
 
+`queries.py` imports every pin from `pinned_oracles` by name, and this
+script imports `queries`: a NEW pinned query first needs a placeholder
+constant (`NAME_SQL = ""`) in pinned_oracles.py, which this script then
+overwrites.
+
 NOTE: the pins are sf0.01 snapshots (the scale the driver gate runs at).
 If the gate ever runs at a different sf, regenerate with
 SPARK_GRAFT_PIN_SF_DIR pointing at that directory.

@@ -120,18 +120,15 @@ _TOK_STRIP = ".,;:!?()[]\"'"
 _MARKER_SETS = {k: frozenset(v) for k, v in _MARKERS.items()}
 
 
-def ref_classify(s: str) -> tuple[str, float]:
-    """(lang, conf) of the heuristic language model, one language at a time."""
+def ref_classify(s: str) -> str:
+    """Language of the heuristic language model, one language at a time."""
     head = s[:2000]
     n = len(_RE_LETTER.findall(head))
     if n:
         for lang, rex in _RE_RANGES:
-            hits = len(rex.findall(head))
-            if hits / n > 0.30:
-                return lang, round(hits / n, 4)
+            if len(rex.findall(head)) / n > 0.30:
+                return lang
     toks = head.split()[:400]
-    if not toks:
-        return UNKNOWN, 0.0
     best_lang, best_hits = UNKNOWN, 0
     for lang, mset in _MARKER_SETS.items():
         hits = 0
@@ -140,9 +137,7 @@ def ref_classify(s: str) -> tuple[str, float]:
                 hits += 1
         if hits > best_hits:
             best_lang, best_hits = lang, hits
-    if best_hits == 0:
-        return UNKNOWN, 0.0
-    return best_lang, round(min(1.0, best_hits / max(1, len(toks)) * 5.0), 4)
+    return best_lang
 
 
 _RE_WS_RUN = re.compile(r"\s+", re.UNICODE)
@@ -201,10 +196,10 @@ def ref_features(t: str | None) -> tuple:
 
 
 def ref_analysis(t: str | None) -> tuple:
-    """One row of `analyze.analyze_text`: features, lang, conf, ppl."""
+    """One row of `analyze.analyze_text`: features, lang, ppl."""
     if t is None or not t.strip():
-        return (*ref_features(t), UNKNOWN, 0.0, float("inf"))
-    return (*ref_features(t), *ref_classify(t), ref_ppl(t[:_MAX_CHARS]))
+        return (*ref_features(t), UNKNOWN, float("inf"))
+    return (*ref_features(t), ref_classify(t), ref_ppl(t[:_MAX_CHARS]))
 
 
 def label_row(text: str | None) -> dict:
@@ -215,7 +210,7 @@ def label_row(text: str | None) -> dict:
     if text is None or not text.strip():
         lang, ppl = "und", float("inf")
     else:
-        lang, _conf = ref_classify(text)
+        lang = ref_classify(text)
         ppl = ref_ppl(text[:_MAX_CHARS])
     lang_ok = lang in ALLOWED_LANGS
     ppl_ok = (ppl <= MAX_PERPLEXITY) if lang == "en" else True

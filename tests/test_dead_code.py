@@ -14,7 +14,9 @@ A parameter with a literal default (`bool`, `int`, `float`, `str`, `bytes`,
 constant), in a function that non-test code calls, is an option: those
 calls must pass it at least two distinct values, or it is a constant
 spelled as a parameter and the code for any other value is a path that
-nothing selects.  Calls are matched by function name; an omitted argument
+nothing selects.  A call is matched to a function through the calling
+file's own bindings (its imports, or a bare name inside the defining
+module); any other attribute call matches nothing.  An omitted argument
 counts as the default, and an argument that is not a literal (or a
 `*args`/`**kwargs` call) counts as using two values.  Code strings run as
 `python -c` are invisible here, so production code calls the package from
@@ -182,27 +184,79 @@ def _passed(call: ast.Call, name: str, index: int | None, default: tuple):
     return _literal(value)
 
 
+def _dotted(node) -> list[str] | None:
+    """`a.b.c` of a Name/Attribute chain as ["a", "b", "c"], else None."""
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    return [node.id, *reversed(parts)] if isinstance(node, ast.Name) else None
+
+
+def _bindings(tree: ast.Module, module: str | None, package: str) -> dict[str, list[str]]:
+    """{local name: the package path it is bound to} of the file's imports
+    (absolute, and relative when the file is the package's `module`)."""
+    out = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                path = a.name.split(".")
+                if path[0] == package:
+                    # `import pkg.x as m` binds m to pkg.x; `import pkg.x` binds pkg
+                    out[a.asname or package] = path[1:] if a.asname else []
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                if module is None:
+                    continue
+                base = module.split(".")[: -node.level]
+            elif (node.module or "").split(".")[0] == package:
+                base = []
+            else:
+                continue
+            path = base + [p for p in (node.module or "").split(".") if p][0 if node.level else 1:]
+            for a in node.names:
+                out[a.asname or a.name] = path + [a.name]
+    return out
+
+
 def option_values(root: Path, package: str = PACKAGE, reference_paths=REFERENCE_PATHS) -> dict[str, set]:
     """{`module.function.param`: the literal keys production calls pass it}
     for every literal-default parameter of a function under `root/package`
     that files under `reference_paths` call; a key of None stands for a
-    value that is not a literal."""
+    value that is not a literal.  A call reaches a function through the
+    calling file's bindings only: a bare name inside the defining module, a
+    `from ... import name [as a]`, or `m.name(...)` after `import ...` /
+    `from ... import module as m`, relative imports included."""
     pkg = root / package
+    functions = {}
+    for path in sorted(pkg.rglob("*.py")):
+        tree, module = ast.parse(path.read_text()), _module_name(path, pkg)
+        fn_types = (ast.FunctionDef, ast.AsyncFunctionDef)
+        # a nested function is reached by its bare name inside its module;
+        # a top-level function of the same name wins
+        nested = [fn for fn in ast.walk(tree) if isinstance(fn, fn_types)]
+        top = [fn for _name, _first, _last, fn in _definitions(tree) if isinstance(fn, fn_types)]
+        functions.update((f"{module}.{fn.name}", fn) for fn in nested + top)
     calls: dict[str, list[ast.Call]] = {}
     for path in _python_files(root, reference_paths):
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Call):
-                f = node.func
-                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-                calls.setdefault(name, []).append(node)
-    out = {}
-    for path in sorted(pkg.rglob("*.py")):
-        for fn in ast.walk(ast.parse(path.read_text())):
-            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or fn.name not in calls:
+        module = _module_name(path, pkg) if path.is_relative_to(pkg) else None
+        tree = ast.parse(path.read_text())
+        bound = _bindings(tree, module, package)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or (parts := _dotted(node.func)) is None:
                 continue
-            for name, (index, default) in _options(fn).items():
-                values = {_passed(c, name, index, default) for c in calls[fn.name]}
-                out[f"{_module_name(path, pkg)}.{fn.name}.{name}"] = values
+            if parts[0] in bound:
+                target = ".".join(bound[parts[0]] + parts[1:])
+            elif module is not None and len(parts) == 1:
+                target = f"{module}.{parts[0]}"
+            else:
+                continue
+            if target in functions:
+                calls.setdefault(target, []).append(node)
+    out = {}
+    for target, node_calls in calls.items():
+        for name, (index, default) in _options(functions[target]).items():
+            out[f"{target}.{name}"] = {_passed(c, name, index, default) for c in node_calls}
     return out
 
 
@@ -304,6 +358,35 @@ def test_option_guard_finds_single_valued_options(tmp_path):
     ]
     # a file outside the reference paths is not a caller; one inside is
     assert "core.only_tests.exact" in single_valued_options(tmp_path, "pkg", ("pkg", "tests"))
+
+
+def test_option_guard_resolves_calls_through_imports(tmp_path):
+    # two modules define run(x, fast=False); each is called with one value,
+    # so pooling the calls by bare name would hide both
+    pkg = tmp_path / "pkg"
+    (pkg / "sub").mkdir(parents=True)
+    (pkg / "a.py").write_text("def run(x, fast=False):\n    return x\n")
+    (pkg / "b.py").write_text(
+        "def run(x, fast=False):\n    return x\n"
+        "def helper(x, n=2):\n    return run(x)\n"
+    )
+    (pkg / "sub" / "c.py").write_text(
+        "from ..b import helper as h\n"
+        "h(1)\nh(2, n=2)\n"
+    )
+    (tmp_path / "use.py").write_text(
+        "import subprocess\n"
+        "from pkg.a import run\n"
+        "import pkg.b\n"
+        "from pkg import b as mod_b\n"
+        "run(1, fast=True)\nrun(2, True)\n"
+        "pkg.b.run(3)\nmod_b.run(4, fast=False)\n"
+        # an attribute call on anything else reaches no package function
+        "subprocess.run(['ls'], check=True)\nsubprocess.run(['ls'])\n"
+    )
+    assert single_valued_options(tmp_path, "pkg", ("pkg", "use.py")) == [
+        "a.run.fast", "b.helper.n", "b.run.fast",
+    ]
 
 
 def test_every_option_takes_two_values():

@@ -42,7 +42,7 @@ def _cell(col, v):
     (a batch holding a NULL page makes them float64), floats by bits."""
     if v is None or (isinstance(v, float) and math.isnan(v)):
         return None
-    if col in ("lang_conf", "ppl"):
+    if col == "ppl":
         return float(v).hex()
     return v if col == "lang_detected" else int(v)
 
@@ -112,6 +112,5 @@ def test_production_model_swap(monkeypatch):
     out = analyze_text.func(pd.Series(["eins zwei\ndrei", "  ", None], dtype=object))
     assert seen == ["eins zwei drei"]
     assert out["lang_detected"].tolist() == ["de", "und", "und"]
-    assert out["lang_conf"].tolist() == [0.75, 0.0, 0.0]
     assert out["ppl"].tolist() == [10.0 ** (6.0 / 4), math.inf, math.inf]
     assert perplexity._get_lm()._ppl("a b") == 10.0 ** (4.0 / 3)
